@@ -117,10 +117,8 @@ object JdbcDemo {
 
     val events = graft.streaming.StreamSource.events(s, dir)
       .select(col("user_id"), col("event_id"))
-    val q = events.writeStream
+    val sink = events.writeStream
       .outputMode("append")
-      .option("checkpointLocation",
-        s"${graft.streaming.StreamSource.ckptRoot}/jdbc-${s.sparkContext.applicationId}-${System.nanoTime()}")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // reduce the epoch to one action per key FIRST (map-side combine),
         // then flush batched MERGEs from each partition's own connection
@@ -153,7 +151,8 @@ object JdbcDemo {
             }
           }
       }
-      .start()
+    val q = graft.streaming.StreamSource
+      .checkpointDir(s, s"jdbc-${s.sparkContext.applicationId}").start(sink)
     try q.processAllAvailable() finally q.stop()
 
     s.read.format("jdbc")

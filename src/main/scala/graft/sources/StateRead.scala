@@ -28,24 +28,19 @@ import org.apache.spark.sql.functions._
   */
 object StateRead {
 
-  // tmpfs-backed when available (see StreamSource.ckptRoot) — the state
-  // store is re-read in-process right after the run, never across exits
-  private def ckptDir(name: String): String =
-    s"${graft.streaming.StreamSource.ckptRoot}-stateread/$name-${System.nanoTime()}"
-
   /** q_state_agg_read: the final aggregation state of a streaming
     * groupBy(user_id).agg(count,sum) — one (count,sum) buffer row per key,
     * exactly the RocksDB contents SavepointReader.aggregate() would yield. */
   def aggStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = ckptDir("agg")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-agg")
     val agg = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
-    val q = agg.writeStream.format("memory")
+    val q = ckpt.start(agg.writeStream.format("memory")
       .queryName(s"state_agg_${System.nanoTime()}")
-      .outputMode("update").option("checkpointLocation", ckpt).start()
+      .outputMode("update"))
     q.processAllAvailable(); q.stop()
-    s.read.format("statestore").load(ckpt)
+    s.read.format("statestore").load(ckpt.path)
       .select(col("key.user_id").as("user_id"),
         col("value.count").as("cnt"),
         round(col("value.sum"), 2).as("sum_value"))
@@ -56,15 +51,15 @@ object StateRead {
   /** q_state_dedup_read: the key set of a streaming dropDuplicates state —
     * the seen-keys store, aggregated per user. */
   def dedupStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = ckptDir("dedup")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-dedup")
     val dd = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")
-    val q = dd.writeStream.format("memory")
+    val q = ckpt.start(dd.writeStream.format("memory")
       .queryName(s"state_dedup_${System.nanoTime()}")
-      .outputMode("append").option("checkpointLocation", ckpt).start()
+      .outputMode("append"))
     q.processAllAvailable(); q.stop()
-    s.read.format("statestore").load(ckpt)
+    s.read.format("statestore").load(ckpt.path)
       .select(col("key.user_id").as("user_id"),
         col("key.event_type").as("event_type"))
       .where(col("user_id") >= 0)

@@ -40,10 +40,8 @@ object CdcStream {
     s.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
     try {
-      val q = changelog.writeStream
+      val sink = changelog.writeStream
         .outputMode("append")
-        .option("checkpointLocation",
-          s"${StreamSource.ckptRoot}/cdc-${System.nanoTime()}")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sess = batch.sparkSession
           // net action per key within the batch: the max-offset event
@@ -84,7 +82,7 @@ object CdcStream {
           }
           ()
         }
-        .start()
+      val q = StreamSource.checkpointDir(s, "cdc").start(sink)
       q.processAllAvailable()
       q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)

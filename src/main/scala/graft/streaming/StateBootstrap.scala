@@ -154,15 +154,15 @@ object StateBootstrap {
       // INPUT artifact; see prepMemo)
       val histDir = s"$base/hist"
       ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = s"${StreamSource.ckptRoot}/surgery-${System.nanoTime()}"
+      val ck = StreamSource.checkpointDir(s, "surgery")
       val hist = s.readStream.schema(ev.schema).parquet(histDir)
         .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
       val folded = hist.groupByKey(_.user_id)
         .flatMapGroupsWithState[BootState, UserTotal](
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-      val q1 = folded.toDF().writeStream.format("memory")
+      val q1 = ck.start(folded.toDF().writeStream.format("memory")
         .queryName(s"surgery_hist_${System.nanoTime()}")
-        .outputMode("update").option("checkpointLocation", ck).start()
+        .outputMode("update"))
       try q1.processAllAvailable() finally q1.stop()
 
       // the live half + one flush marker per user — the new query's stream
@@ -173,7 +173,7 @@ object StateBootstrap {
           col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
       ev.where(!cc).unionByName(flush)
         .coalesce(1).write.mode("overwrite").parquet(ld)
-      (cut, ld, ck)
+      (cut, ld, ck.path)
     }
 
     // phase 2+3: read the savepoint, drop the erased users' accumulators
@@ -239,7 +239,7 @@ object StateBootstrap {
       // into the savepoint the rescale takes as INPUT (see prepMemo)
       val histDir = s"$base/hist"
       ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = s"${StreamSource.ckptRoot}/rescale$pOld-${System.nanoTime()}"
+      val ck = StreamSource.checkpointDir(s, s"rescale$pOld")
       s.conf.set(partKey, pOld.toString)
       try {
         val hist = s.readStream.schema(ev.schema).parquet(histDir)
@@ -247,9 +247,9 @@ object StateBootstrap {
         val folded = hist.groupByKey(_.user_id)
           .flatMapGroupsWithState[BootState, UserTotal](
             OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-        val q1 = folded.toDF().writeStream.format("memory")
+        val q1 = ck.start(folded.toDF().writeStream.format("memory")
           .queryName(s"rescale_hist_${System.nanoTime()}")
-          .outputMode("update").option("checkpointLocation", ck).start()
+          .outputMode("update"))
         try q1.processAllAvailable() finally q1.stop()
       } finally s.conf.set(partKey, prev)
 
@@ -260,7 +260,7 @@ object StateBootstrap {
           col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
       ev.where(!cc).unionByName(flush)
         .coalesce(1).write.mode("overwrite").parquet(ld)
-      (cut, ld, ck)
+      (cut, ld, ck.path)
     }
 
     // phase 2: read the p=8 savepoint unmodified (a distributed scan —
@@ -276,7 +276,7 @@ object StateBootstrap {
     // phase 3: the new job at parallelism pNew, seeded, streaming the
     // prepared live half (flush markers included so bootstrap-only keys
     // still report)
-    val ckptB = s"${StreamSource.ckptRoot}/rescale$pNew-${System.nanoTime()}"
+    val ckptB = StreamSource.checkpointDir(s, s"rescale$pNew")
     val name = s"state_rescale_${System.nanoTime()}"
     s.conf.set(partKey, pNew.toString)
     try {
@@ -285,9 +285,9 @@ object StateBootstrap {
       val out = live.groupByKey(_.user_id)
         .flatMapGroupsWithState[BootState, UserTotal](
           OutputMode.Update(), GroupStateTimeout.NoTimeout(), seeded)(foldFn)
-      val q2 = out.toDF().writeStream.format("memory")
+      val q2 = ckptB.start(out.toDF().writeStream.format("memory")
         .queryName(name)
-        .outputMode("update").option("checkpointLocation", ckptB).start()
+        .outputMode("update"))
       try q2.processAllAvailable() finally q2.stop()
     } finally s.conf.set(partKey, prev)
 
@@ -297,7 +297,7 @@ object StateBootstrap {
       .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
       .select(col("user_id"), col("cnt"), round(col("total"), 4).as("total"))
       .orderBy("user_id")
-    (res, ckptA, ckptB)
+    (res, ckptA, ckptB.path)
   }
 
   def rescaleContinue(s: SparkSession, dir: String): DataFrame =

@@ -38,14 +38,14 @@ object StreamBloom {
       .select(col("doc_id"), col("fp"))
     val words = Dedup.bloomWordBits(Dedup.bloomLake(base))
       .groupBy("w").agg(expr("bit_or(m)").as("bits"))
-    val ckpt = s"${StreamSource.ckptRoot}/bloom-${System.nanoTime()}"
+    val ckpt = StreamSource.checkpointDir(s, "bloom")
     val name = s"stream_bloom_${System.nanoTime()}"
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
     try {
-      val q = words.writeStream.format("memory").queryName(name)
-        .outputMode("update").option("checkpointLocation", ckpt).start()
+      val q = ckpt.start(words.writeStream.format("memory").queryName(name)
+        .outputMode("update"))
       try q.processAllAvailable() finally q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     // the checkpoint is the artifact: read the final agg state as the
@@ -53,8 +53,8 @@ object StreamBloom {
     // An empty corpus commits no batch and writes no store — the bitmap
     // is legitimately all-zero then.
     val bm = Array.fill(Dedup.BloomBits / 64)(0L)
-    if (new java.io.File(s"$ckpt/state").isDirectory) {
-      val st = s.read.format("statestore").load(ckpt)
+    if (new java.io.File(s"${ckpt.path}/state").isDirectory) {
+      val st = s.read.format("statestore").load(ckpt.path)
       // the bit_or aggregate's buffer is the single long in the state value
       // struct; if a Spark upgrade ever adds another long bookkeeping field
       // this would silently read the wrong column — fail loudly instead

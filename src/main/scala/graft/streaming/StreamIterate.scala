@@ -42,9 +42,7 @@ object StreamIterate {
     val stepped = s.readStream.schema(loopSchema).parquet(src)
       .select(col("id"), (col("steps_left") - 1).as("steps_left"),
         (col("steps_done") + 1).as("steps_done"))
-    val q = stepped.writeStream
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/iterate-${System.nanoTime()}")
+    val sink = stepped.writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
         val batch = b.persist()
         try {
@@ -57,7 +55,7 @@ object StreamIterate {
           if (fb.limit(1).count() > 0) fb.write.mode("append").parquet(src)
         } finally { batch.unpersist(); () }
       }
-      .start()
+    val q = StreamSource.checkpointDir(s, "iterate").start(sink)
     q.processAllAvailable(); q.stop()
     s.read.parquet(exitDir)
   }

@@ -2,8 +2,9 @@ package graft.streaming
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 
 /** Streaming-side access to the driver's `events` table and the
   * run-to-completion harness used by the Verify entries.
@@ -157,27 +158,63 @@ object StreamSource {
     runToTable(s, df, name, mode, afterStart = () => s.conf.set(key, prev))
   }
 
-  /** Run `df` (a streaming DataFrame) to completion into a memory sink and
-    * return the materialized result. `afterStart` runs as soon as the query
-    * has been planned and started — even when start() itself throws.
-    *
-    * State-store sizing: each shuffle partition materializes one state-store
-    * instance per stateful operator per batch (snapshot + fsync under the
-    * checkpoint dir). For the bounded replays here that fixed cost dominates
-    * the actual work, so streaming queries run with a smaller shuffle
-    * fan-out; production unbounded jobs size this to key cardinality. */
   /** Streaming checkpoint root: tmpfs when the host has one. On a real
     * cluster the checkpoint store is remote (HDFS/object store) with its
-    * own commit path; on this single-JVM host, per-batch fsyncs of tiny
-    * state/offset files onto ext4 are pure fixture overhead taxing every
-    * bounded replay. Crash durability is separately proven by
-    * CheckpointRecoverySpec (own paths); nothing here reads a checkpoint
-    * after process exit. */
+    * own commit path; on this single-JVM host the tiny state/offset files
+    * are fixture overhead on every bounded replay, so they stay in memory.
+    * Crash durability is separately proven by CheckpointRecoverySpec (own
+    * paths); nothing here reads a checkpoint after process exit. */
   val ckptRoot: String = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) "/dev/shm/graft-ckpt" else "/tmp/graft-ckpt"
   }
 
+  /** Spark's plug point for the checkpoint file manager (an internal conf
+    * read from the query's hadoop conf by `CheckpointFileManager.create`). */
+  private[graft] val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** A fresh checkpoint dir for one streaming query; `start` is the only way
+    * to start a query on it. */
+  final class Checkpoint private[StreamSource] (s: SparkSession, val path: String) {
+    /** Start `w` on this dir with [[LocalCheckpointFileManager]] installed,
+      * then give the caller's session its previous value back. The offset,
+      * commit and state logs read the setting from the stream's own session,
+      * cloned inside start(). A file source's log reads it from the caller's
+      * session when the stream thread builds its sources, after start()
+      * returns, so the setting is held until the query has initialized. */
+    def start[T](w: DataStreamWriter[T]): StreamingQuery = {
+      val prev = s.conf.getOption(FileManagerKey)
+      s.conf.set(FileManagerKey, classOf[LocalCheckpointFileManager].getName)
+      try {
+        val q = w.option("checkpointLocation", path).start()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(Long.MaxValue)
+        q
+      } finally prev.fold(s.conf.unset(FileManagerKey))(s.conf.set(FileManagerKey, _))
+    }
+  }
+
+  /** `$ckptRoot/$name-$nanoTime`, written through LocalCheckpointFileManager
+    * by the query that `start`s on it. */
+  def checkpointDir(s: SparkSession, name: String): Checkpoint =
+    new Checkpoint(s, s"$ckptRoot/$name-${System.nanoTime()}")
+
+  /** Run `df` (a streaming DataFrame) to completion into a memory sink and
+    * return the materialized result. `afterStart` runs as soon as the query
+    * has been planned and started — even when start() itself throws.
+    *
+    * State-store sizing: each shuffle partition materializes one state-store
+    * instance per stateful operator per batch (a delta file and its checksum
+    * under the checkpoint dir, plus the load of the previous version). For
+    * the bounded replays here that fixed cost dominates the actual work, so
+    * streaming queries run with a smaller shuffle fan-out; production
+    * unbounded jobs size this to key cardinality.
+    *
+    * Most of that per-batch floor was process forks, not disk: Hadoop's
+    * local filesystem without libhadoop forks `chmod` and `readlink` for
+    * every checkpoint file it creates and renames (~195 forks per batch on
+    * the out-of-order replays). The query therefore starts through
+    * [[checkpointDir]], whose [[LocalCheckpointFileManager]] writes with
+    * java.nio syscalls instead. */
   def runToTable(s: SparkSession, df: DataFrame, name: String,
                  mode: String, afterStart: () => Unit = () => (),
                  // runs after the drain, before stop — the hook that lets
@@ -186,29 +223,19 @@ object StreamSource {
                  onDrained: StreamingQuery => Unit = _ => ()): DataFrame = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     // default 4 (was 8): measured at sf0.1, the replay-driven queries spend
-    // their time in per-partition state-store lifecycle (snapshot + fsync
-    // per stateful op per batch), so halving the fan-out cuts ~10-13% off
-    // every streaming query (q_stream_dyn_session_ooo 7.12->6.22 s warm,
+    // their time in per-partition state-store lifecycle (one store load and
+    // commit per stateful op per batch), so halving the fan-out cuts ~10-13%
+    // off every streaming query (q_stream_dyn_session_ooo 7.12->6.22 s warm,
     // q_stream_tumble 2.21->2.01 s); 2 partitions re-serializes the work
     // and loses the gain. GRAFT_STREAM_SHUFFLE overrides for experiments.
     s.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
     try {
       val q: StreamingQuery =
-        try df.writeStream
-          .format("memory").queryName(name).outputMode(mode)
-          .option("checkpointLocation",
-            s"$ckptRoot/$name-${System.nanoTime()}")
-          .start()
+        try checkpointDir(s, name).start(
+          df.writeStream.format("memory").queryName(name).outputMode(mode))
         finally afterStart()
       q.processAllAvailable()
-      // GRAFT_STREAM_PROGRESS=1: per-batch duration breakdown on stderr
-      // (optimization-round measurement aid; off in normal runs)
-      if (sys.env.contains("GRAFT_STREAM_PROGRESS"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-prof] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-        }
       onDrained(q)
       q.stop()
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)

@@ -343,14 +343,11 @@ object TxFileSink {
     val topic = ensureTopic(s, dir)
     val out = s"/tmp/graft-2pc/${s.sparkContext.applicationId}-" +
       java.lang.Integer.toHexString(dir.hashCode) + "-" + System.nanoTime()
-    val q = graft.sources.FileTopic.readStream(s, topic)
-      .writeStream
-      // engine state on the tmpfs ckpt root; the sink's own 2PC manifests
-      // (the demonstrated contract) stay under `out`
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/2pc-${System.nanoTime()}")
-      .foreachBatch { (b: DataFrame, id: Long) => commitEpoch(b, id, out) }
-      .start()
+    // engine state on the tmpfs ckpt root; the sink's own 2PC manifests
+    // (the demonstrated contract) stay under `out`
+    val q = StreamSource.checkpointDir(s, "2pc").start(
+      graft.sources.FileTopic.readStream(s, topic).writeStream
+        .foreachBatch { (b: DataFrame, id: Long) => commitEpoch(b, id, out) })
     try { q.processAllAvailable() } finally q.stop()
     readCommitted(s, out)
       .select(col("key"), split(col("value"), "\\|").getItem(0).cast("long").as("eid"))
@@ -372,16 +369,14 @@ object TxFileSink {
     // commit machinery rather than small-file churn
     val rollRows = math.max(200L,
       graft.Tables(s, dir, "events").count() / 90).toInt
-    val q = graft.sources.FileTopic.readStream(s, topic)
-      .select(col("key"), col("value"),
-        split(col("value"), "\\|").getItem(1).as("day"))
-      .writeStream
-      .option("checkpointLocation",
-        s"${StreamSource.ckptRoot}/rolling-${System.nanoTime()}")
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        rollingEpoch(b, id, out, "day", "value", maxRowsPerFile = rollRows)
-      }
-      .start()
+    val q = StreamSource.checkpointDir(s, "rolling").start(
+      graft.sources.FileTopic.readStream(s, topic)
+        .select(col("key"), col("value"),
+          split(col("value"), "\\|").getItem(1).as("day"))
+        .writeStream
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          rollingEpoch(b, id, out, "day", "value", maxRowsPerFile = rollRows)
+        })
     try { q.processAllAvailable() } finally q.stop()
     out
   }

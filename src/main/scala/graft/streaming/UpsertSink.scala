@@ -28,9 +28,8 @@ object UpsertSink {
   def runUpsert(s: SparkSession, changelog: DataFrame, name: String): DataFrame = {
     val root = s"/tmp/graft-upsert/$name-${System.nanoTime()}"
     @volatile var current: Option[String] = None
-    val q = changelog.writeStream
+    val sink = changelog.writeStream
       .outputMode("append")
-      .option("checkpointLocation", s"${StreamSource.ckptRoot}/$name-${System.nanoTime()}")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sess = batch.sparkSession
         val seqCol = if (batch.columns.contains("seq")) col("seq") else lit(0L)
@@ -59,7 +58,7 @@ object UpsertSink {
         }
         ()
       }
-      .start()
+    val q = StreamSource.checkpointDir(s, name).start(sink)
     q.processAllAvailable()
     q.stop()
     import s.implicits._

@@ -33,10 +33,8 @@ object StreamProf {
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
     val q = time("start+drain") {
-      val q = agg.writeStream.format("memory").queryName("prof")
-        .outputMode("complete")
-        .option("checkpointLocation", s"/tmp/graft-ckpt/prof-${System.nanoTime()}")
-        .start()
+      val q = StreamSource.checkpointDir(spark, "prof")
+        .start(agg.writeStream.format("memory").queryName("prof").outputMode("complete"))
       q.processAllAvailable(); q
     }
     q.recentProgress.foreach { p =>

@@ -1,10 +1,20 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import graft.streaming.StatefulOps
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{LocalCheckpointFileManager, StatefulOps, StreamSource}
 import graft.streaming.StreamSource.Event
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.execution.streaming.{Offset, Source}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, HDFSMetadataLog}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.sources.StreamSourceProvider
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Checkpoint/recovery for the custom stateful operators: stop a query
   * mid-stream and restart it from the SAME checkpoint — keyed state,
@@ -92,6 +102,102 @@ class CheckpointRecoverySpec extends SparkSpec {
       CheckpointRecoverySpec.sink.toList }
     assert(afterPhase2 === List(10L, 12L),
       s"restored keep-last state not honored: $afterPhase2")
+  }
+
+  /** Three restarts of one keyed aggregation on one checkpoint, phase i
+    * started through graft's manager when `viaGraft(i)`, else through
+    * Spark's stock one. Returns every emitted (user, cnt, sum) row in batch
+    * order, and the final state as `format("statestore")` reads it. */
+  private def aggAcrossRestarts(viaGraft: Seq[Boolean]):
+      (Seq[(Long, Long, Double)], Seq[(Long, Long, Double)]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    val ck = StreamSource.checkpointDir(spark, "test-interop")
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+    val feeds = Seq(
+      Seq(ev(1, 10, 7, "view", 10.0), ev(2, 11, 8, "view", 1.0)),
+      Seq(ev(3, 20, 7, "click", 5.0)),
+      Seq(ev(4, 30, 7, "purchase", 1.0), ev(5, 31, 8, "click", 2.0)))
+    for ((graftMgr, feed) <- viaGraft.zip(feeds)) {
+      val w = input.toDF().groupBy("user_id")
+        .agg(count(lit(1)).as("cnt"), sum("value").as("sum"))
+        .writeStream.outputMode("update")
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          val rows = df.as[(Long, Long, Double)].collect().sortBy(_._1)
+          out.synchronized { out ++= rows }
+          ()
+        }
+      val q = if (graftMgr) ck.start(w)
+        else w.option("checkpointLocation", ck.path).start()
+      input.addData(feed)
+      try q.processAllAvailable() finally q.stop()
+    }
+    val state = spark.read.format("statestore").load(ck.path)
+      .select(col("key.user_id"), col("value.count"), col("value.sum"))
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    (out.synchronized(out.toList), state)
+  }
+
+  test("a checkpoint moves between graft's manager and Spark's stock one, both ways") {
+    val expectOut = Seq((7L, 1L, 10.0), (8L, 1L, 1.0), (7L, 2L, 15.0), (7L, 3L, 16.0), (8L, 2L, 3.0))
+    val expectState = Seq((7L, 3L, 16.0), (8L, 2L, 3.0))
+    for (order <- Seq(Seq(true, false, true), Seq(false, true, false))) {
+      val (emitted, state) = aggAcrossRestarts(order)
+      assert(emitted === expectOut, s"restored state lost across managers $order")
+      assert(state === expectState, s"statestore read of the $order checkpoint")
+    }
+  }
+
+  test("checkpointDir starts the query on graft's manager and restores the session conf") {
+    val key = StreamSource.FileManagerKey
+    assert(spark.conf.getOption(key).isEmpty)
+    val ck = StreamSource.checkpointDir(spark, "test-manager")
+    val q = ck.start(spark.readStream.format(classOf[SlowLogSource].getName).load()
+      .writeStream.format("memory").queryName(s"mgr_${System.nanoTime()}"))
+    try {
+      assert(spark.conf.getOption(key).isEmpty, "the caller's session keeps no new flag")
+      q.processAllAvailable()
+      // the stream's cloned session (a protected member, hence reflection)
+      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      val streamConf = exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+      assert(CheckpointFileManager.create(new Path(ck.path), streamConf)
+        .isInstanceOf[LocalCheckpointFileManager])
+    } finally q.stop()
+    // the stock manager leaves a Hadoop `.<name>.crc` sidecar beside every
+    // file it writes; this one none (`<name>.crc` is Spark's own checksum)
+    val walk = Files.walk(Paths.get(ck.path))
+    val names = try walk.iterator().asScala.map(p => Paths.get(ck.path).relativize(p).toString).toList
+      finally walk.close()
+    assert(names.contains("sources/0/0"))
+    val sidecars = names.filter(n => n.split('/').last.startsWith(".") && n.endsWith(".crc"))
+    assert(sidecars.isEmpty, s"files written through Hadoop's stock local filesystem: $sidecars")
+  }
+}
+
+/** A V1 source that, like the file source, keeps a metadata log under its
+  * checkpoint path, built from the reading session on the stream thread.
+  * It takes a moment to build: unless `Checkpoint.start` waits for the
+  * query to initialize, the caller's session conf is restored before this
+  * log exists. It never has data. */
+class SlowLogSource extends StreamSourceProvider {
+  private val schema = StructType(Seq(StructField("v", LongType)))
+  override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
+      providerName: String, parameters: Map[String, String]): (String, StructType) =
+    ("slow-log", this.schema)
+  override def createSource(sqlContext: SQLContext, metadataPath: String,
+      schema: Option[StructType], providerName: String,
+      parameters: Map[String, String]): Source = {
+    Thread.sleep(300)
+    new HDFSMetadataLog[String](sqlContext.sparkSession, metadataPath).add(0, "built")
+    val s = this.schema
+    new Source {
+      override def schema: StructType = s
+      override def getOffset: Option[Offset] = None
+      override def getBatch(start: Option[Offset], end: Offset): DataFrame =
+        throw new IllegalStateException("no data")
+      override def stop(): Unit = ()
+    }
   }
 }
 
