@@ -44,29 +44,27 @@ object Cep {
 
   /** All strict-contiguity matches of `steps` (one predicate per pattern
     * position) in per-key event-time order. A found match is an immutable
-    * fact, never revised — APPEND mode, so the matcher chains after
-    * sortedEvents (Spark's all-append rule for stacked stateful ops). */
-  def matchPattern(ds: Dataset[Event], steps: Seq[Event => Boolean]): Dataset[Match] = {
-    import ds.sparkSession.implicits._
+    * fact, never revised — APPEND mode. */
+  def patternStep(steps: Seq[Event => Boolean]): KeyedStep[List[Event], Match] = {
     val L = steps.length
     require(L >= 1)
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Event], Match](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[List[Event]]) =>
-          var recent = state.getOption.getOrElse(Nil) // last L-1 events, oldest first
-          val out = scala.collection.mutable.ArrayBuffer.empty[Match]
-          rows.toSeq.sortBy(e => (StatefulOps.micros(e.ts), e.event_id)).foreach { e =>
-            val window = recent :+ e
-            if (window.length == L && window.zip(steps).forall { case (ev, p) => p(ev) })
-              out += Match(key, window.map(_.event_id), Seq.fill(L)(1),
-                window.map(_.value))
-            recent = (window.takeRight(L - 1))
-          }
-          state.update(recent)
-          out.iterator
+    KeyedStep[List[Event], Match] { (key, rows, state) =>
+      var recent = state.getOption.getOrElse(Nil) // last L-1 events, oldest first
+      val out = scala.collection.mutable.ArrayBuffer.empty[Match]
+      rows.toSeq.sortBy(e => (StatefulOps.micros(e.ts), e.event_id)).foreach { e =>
+        val window = recent :+ e
+        if (window.length == L && window.zip(steps).forall { case (ev, p) => p(ev) })
+          out += Match(key, window.map(_.event_id), Seq.fill(L)(1),
+            window.map(_.value))
+        recent = (window.takeRight(L - 1))
       }
+      state.update(recent)
+      out.iterator
+    }
   }
+
+  def matchPattern(ds: Dataset[Event], steps: Seq[Event => Boolean]): Dataset[Match] =
+    patternStep(steps).run(ds)
 
   /** One quantified pattern step: `pred` must hold for `min`..`max`
     * consecutive rows; `greedy` tries the longest repetition first,
@@ -280,7 +278,13 @@ object Cep {
     * batch Datasets — no event-time timeout involved). */
   def matchRecognizeOrderedSkip(ds: Dataset[Event], steps: Seq[QStep],
                                 skip: SkipPolicy): Dataset[Match] =
-    matcher(ds, steps, skip, 0L, eventTimeFlush = false, None)
+    orderedSkipStep(steps, skip).run(ds)
+
+  /** The ordered matcher as a [[KeyedStep]], for running inside the
+    * watermark sorter's operator ([[StatefulOps.sortedThen]]). */
+  def orderedSkipStep(steps: Seq[QStep], skip: SkipPolicy): KeyedStep[CepBuffer, Match] =
+    KeyedStep[CepBuffer, Match](
+      matcherFn(Seq(steps), skip, 0L, eventTimeFlush = false, None))
 
   /** PERMUTE support (ref Pattern API / SQL `PATTERN (PERMUTE(A, B))`,
     * docs/dev/table/sql/queries.md): the pattern matches in ANY of the
@@ -347,9 +351,28 @@ object Cep {
                       bounded: Boolean = false,
                       anchorStart: Boolean = false,
                       anchorEnd: Boolean = false): Dataset[Match] = {
+    // Append: every match emits exactly once and is never revised
+    val timeoutConf = if (eventTimeFlush) GroupStateTimeout.EventTimeTimeout()
+                      else GroupStateTimeout.NoTimeout()
+    import ds.sparkSession.implicits._
+    ds.groupByKey(_.user_id)
+      .flatMapGroupsWithState[CepBuffer, Match](OutputMode.Append(), timeoutConf)(
+        matcherFn(alts, skip, quiesceMs, eventTimeFlush, withinMicros, group,
+          bounded, anchorStart, anchorEnd))
+  }
+
+  /** The matcher's per-key function (see [[matchRecognize]]). */
+  private def matcherFn(alts: Seq[Seq[QStep]],
+                        skip: SkipPolicy, quiesceMs: Long,
+                        eventTimeFlush: Boolean,
+                        withinMicros: Option[Long],
+                        group: Option[(Seq[QStep], Seq[QStep], Int)] = None,
+                        bounded: Boolean = false,
+                        anchorStart: Boolean = false,
+                        anchorEnd: Boolean = false)
+      : (Long, Iterator[Event], GroupState[CepBuffer]) => Iterator[Match] = {
     require((!anchorStart && !anchorEnd) || bounded,
       "anchors require bounded execution — a stream has no last row")
-    import ds.sparkSession.implicits._
     require(alts.nonEmpty && alts.forall(_.nonEmpty))
     // WITHIN bound (ref Pattern#within / SQL `PATTERN (...) WITHIN
     // INTERVAL`): a match's first-to-last event-time span must not exceed
@@ -575,14 +598,7 @@ object Cep {
       (out.toList, tail, tail.length)
     }
 
-    // Append: every match emits exactly once and is never revised — which
-    // also lets the matcher chain AFTER another stateful operator
-    // (sortedEvents) in one query, Spark requires all-append for that
-    val timeoutConf = if (eventTimeFlush) GroupStateTimeout.EventTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepBuffer, Match](
-        OutputMode.Append(), timeoutConf) {
+    {
         (key: Long, rows: Iterator[Event], state: GroupState[CepBuffer]) =>
           val buf0 = state.getOption.map(_.rows.toIndexedSeq).getOrElse(IndexedSeq.empty)
           val hist0 = state.getOption.map(_.hist).getOrElse(0)
@@ -733,9 +749,17 @@ object Cep {
                    withinMs: Long,
                    nots: Map[Int, Event => Boolean] = Map.empty,
                    any: Boolean = false,
-                   append: Boolean = false,
-                   nexts: Map[Int, Event => Boolean] = Map.empty): Dataset[Match] = {
-    import ds.sparkSession.implicits._
+                   nexts: Map[Int, Event => Boolean] = Map.empty): Dataset[Match] =
+    relaxedStep(steps, withinMs, nots, any, nexts).run(ds, OutputMode.Update())
+
+  /** [[matchRelaxed]] as a [[KeyedStep]]. Matches are final facts, never
+    * revised, so Append is sound; it is what running inside the watermark
+    * sorter's operator ([[StatefulOps.sortedThen]]) needs. */
+  def relaxedStep(steps: Seq[Event => Boolean],
+                  withinMs: Long,
+                  nots: Map[Int, Event => Boolean] = Map.empty,
+                  any: Boolean = false,
+                  nexts: Map[Int, Event => Boolean] = Map.empty): KeyedStep[NfaState, Match] = {
     val L = steps.length
     val withinMicros = withinMs * 1000L
     require(L >= 2)
@@ -743,13 +767,7 @@ object Cep {
       s"notFollowedBy positions must name a waiting step in [1, ${L - 1}]")
     require(nexts.keys.forall(i => i >= 1 && i < L),
       s"notNext positions must name a waiting step in [1, ${L - 1}]")
-    // matches are final facts (never revised) so Append is always sound;
-    // it is REQUIRED when chaining after sortedEvents (the _ooo drivers —
-    // Spark only chains stateful operators in append mode)
-    val mode = if (append) OutputMode.Append() else OutputMode.Update()
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[NfaState, Match](
-        mode, GroupStateTimeout.NoTimeout()) {
+    KeyedStep[NfaState, Match] {
         (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
           var partials = state.getOption.map(_.partials.toList).getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[Match]

@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
+
 import graft.streaming.StreamSource.Event
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -19,8 +23,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * micro-batch (we sort the group iterator); cross-batch order relies on the
   * source replaying in order, which holds for file replay and ordered test
   * feeds. Full out-of-order safety buffers rows until the watermark passes
-  * them — that pattern is TemporalSort below (EventTimeTimeout + state
-  * buffer), which the others can be composed with at the cost of latency.
+  * them (EventTimeTimeout + state buffer), at the cost of latency. The
+  * user_id-keyed operators are [[KeyedStep]]s, so `sortedThen` runs the
+  * watermark sorter and the operator as ONE stateful operator, with one
+  * shuffle and one state store per partition. Only the operators keyed by
+  * event_type (topNVersioned, topNChangelog) still run as a second
+  * operator after `sortedEvents`, behind a second shuffle.
   *
   * Scale: state per key is O(1) (keepLast, runningAgg), O(N) (topN) or
   * O(unflushed window) (temporalSort) — all bounded; keys shard across
@@ -40,24 +48,19 @@ object StatefulOps {
   /** Keep-last-row-per-key dedup. Emits the new latest row for a key
     * whenever it changes — each emission is an immutable "the latest
     * advanced to X" fact, monotone in (ts, event_id) per key, so the
-    * operator is declared APPEND (which also lets it chain after
-    * sortedEvents; Spark requires all-append for chained stateful ops).
-    * Single-batch replays emit once per key; multi-batch consumers fold
-    * argmax(ts, event_id) per key. */
-  def keepLast(ds: Dataset[Event]): Dataset[Event] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Event, Event](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[Event], state: GroupState[Event]) =>
-          val latestIn = rows.maxBy(ord)
-          val cur = state.getOption
-          if (cur.isEmpty || Ordering[(Long, Long)].gt(ord(latestIn), ord(cur.get))) {
-            state.update(latestIn)
-            Iterator.single(latestIn)
-          } else Iterator.empty
-      }
+    * operator is declared APPEND. Single-batch replays emit once per key;
+    * multi-batch consumers fold argmax(ts, event_id) per key. */
+  val keepLastStep: KeyedStep[Event, Event] = KeyedStep[Event, Event] {
+    (_, rows, state) =>
+      val latestIn = rows.maxBy(ord)
+      val cur = state.getOption
+      if (cur.isEmpty || Ordering[(Long, Long)].gt(ord(latestIn), ord(cur.get))) {
+        state.update(latestIn)
+        Iterator.single(latestIn)
+      } else Iterator.empty
   }
+
+  def keepLast(ds: Dataset[Event]): Dataset[Event] = keepLastStep.run(ds)
 
   /** Keep-last dedup with IDLE-STATE RETENTION (ref StateTtlConfig /
     * table.exec.state.ttl, docs/dev/table/streaming/query_configuration.md):
@@ -210,24 +213,19 @@ object StatefulOps {
 
   /** Streaming OVER aggregate: per-key running count/sum in event-time
     * order (ROWS UNBOUNDED PRECEDING). One emission per input row. */
-  def runningAgg(ds: Dataset[Event]): Dataset[Running] = {
-    import ds.sparkSession.implicits._
-    // append mode: every input row emits exactly one output row, never
-    // revised — and append is what allows composing after sortedEvents
-    // (chained stateful operators must all be append)
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AggState, Running](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[AggState]) =>
-          var st = state.getOption.getOrElse(AggState(0L, 0.0))
-          val out = rows.toSeq.sortBy(ord).map { e =>
-            st = AggState(st.cnt + 1, st.sum + e.value)
-            Running(key, e.event_id, st.cnt, st.sum)
-          }
-          state.update(st)
-          out.iterator
+  // append mode: every input row emits exactly one output row, never revised
+  val runningAggStep: KeyedStep[AggState, Running] = KeyedStep[AggState, Running] {
+    (key, rows, state) =>
+      var st = state.getOption.getOrElse(AggState(0L, 0.0))
+      val out = rows.toSeq.sortBy(ord).map { e =>
+        st = AggState(st.cnt + 1, st.sum + e.value)
+        Running(key, e.event_id, st.cnt, st.sum)
       }
+      state.update(st)
+      out.iterator
   }
+
+  def runningAgg(ds: Dataset[Event]): Dataset[Running] = runningAggStep.run(ds)
 
   case class BoundedAgg(user_id: Long, event_id: Long, w_cnt: Long, w_sum: Double)
   case class RowsBuf(vals: Seq[Double])
@@ -240,22 +238,20 @@ object StatefulOps {
     * retract-from-left buffer). The window sum is recomputed left-to-right
     * over the (short) buffer instead of add/retract accumulation so float
     * results are order-stable against the batch oracle. */
-  def boundedRowsAgg(ds: Dataset[Event], nPreceding: Int): Dataset[BoundedAgg] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RowsBuf, BoundedAgg](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[RowsBuf]) =>
-          var buf = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
-          val out = rows.toSeq.sortBy(ord).map { e =>
-            val win = (buf :+ e.value).takeRight(nPreceding + 1)
-            buf = win
-            BoundedAgg(key, e.event_id, win.length.toLong, win.sum)
-          }
-          state.update(RowsBuf(buf.takeRight(nPreceding)))
-          out.iterator
+  def boundedRowsStep(nPreceding: Int): KeyedStep[RowsBuf, BoundedAgg] =
+    KeyedStep[RowsBuf, BoundedAgg] { (key, rows, state) =>
+      var buf = state.getOption.map(_.vals.toVector).getOrElse(Vector.empty)
+      val out = rows.toSeq.sortBy(ord).map { e =>
+        val win = (buf :+ e.value).takeRight(nPreceding + 1)
+        buf = win
+        BoundedAgg(key, e.event_id, win.length.toLong, win.sum)
       }
-  }
+      state.update(RowsBuf(buf.takeRight(nPreceding)))
+      out.iterator
+    }
+
+  def boundedRowsAgg(ds: Dataset[Event], nPreceding: Int): Dataset[BoundedAgg] =
+    boundedRowsStep(nPreceding).run(ds)
 
   /** Streaming bounded OVER aggregate, `RANGE BETWEEN interval PRECEDING
     * AND CURRENT ROW`: per-key buffer of (event-time, value) pruned below
@@ -263,23 +259,21 @@ object StatefulOps {
     * (ref operators/over/RowTimeRangeBoundedPrecedingFunction.java:61).
     * The frame is the processed-prefix order (ties included only up to the
     * current (ts, event_id)), matching the interval-join oracle. */
-  def boundedRangeAgg(ds: Dataset[Event], precedingMicros: Long): Dataset[BoundedAgg] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[RangeBuf, BoundedAgg](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[RangeBuf]) =>
-          var buf = state.getOption.map(_.rows.toVector).getOrElse(Vector.empty)
-          val out = rows.toSeq.sortBy(ord).map { e =>
-            val m = micros(e.ts)
-            buf = (buf :+ (m, e.value)).dropWhile(_._1 < m - precedingMicros)
-            BoundedAgg(key, e.event_id, buf.length.toLong,
-              buf.foldLeft(0.0)(_ + _._2))
-          }
-          state.update(RangeBuf(buf))
-          out.iterator
+  def boundedRangeStep(precedingMicros: Long): KeyedStep[RangeBuf, BoundedAgg] =
+    KeyedStep[RangeBuf, BoundedAgg] { (key, rows, state) =>
+      var buf = state.getOption.map(_.rows.toVector).getOrElse(Vector.empty)
+      val out = rows.toSeq.sortBy(ord).map { e =>
+        val m = micros(e.ts)
+        buf = (buf :+ (m, e.value)).dropWhile(_._1 < m - precedingMicros)
+        BoundedAgg(key, e.event_id, buf.length.toLong,
+          buf.foldLeft(0.0)(_ + _._2))
       }
-  }
+      state.update(RangeBuf(buf))
+      out.iterator
+    }
+
+  def boundedRangeAgg(ds: Dataset[Event], precedingMicros: Long): Dataset[BoundedAgg] =
+    boundedRangeStep(precedingMicros).run(ds)
 
   /** `seq` is the change's event-time in micros: downstream keyed sinks use
     * (seq, event_id) for an executor-side last-writer-wins merge instead of
@@ -290,31 +284,27 @@ object StatefulOps {
   /** Changelog-normalize: interpret the keyed stream as upserts and emit a
     * +I / -U / +U changelog (the reference's RowKind flow made explicit as
     * a column — the `__rowkind` convention from SURVEY.md §7.1). Change
-    * facts are immutable once emitted — APPEND mode, so the operator
-    * chains after sortedEvents (all-append rule). */
-  def changelogNormalize(ds: Dataset[Event]): Dataset[Change] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastRow, Change](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[LastRow]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[Change]
-          var cur = state.getOption
-          rows.toSeq.sortBy(ord).foreach { e =>
-            val m = micros(e.ts)
-            cur match {
-              case None =>
-                out += Change(key, e.event_id, "+I", m)
-              case Some(prev) =>
-                out += Change(key, prev.event_id, "-U", prev.ts)
-                out += Change(key, e.event_id, "+U", m)
-            }
-            cur = Some(LastRow(m, e.event_id))
-          }
-          cur.foreach(state.update)
-          out.iterator
+    * facts are immutable once emitted — APPEND mode. */
+  val changelogStep: KeyedStep[LastRow, Change] = KeyedStep[LastRow, Change] {
+    (key, rows, state) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[Change]
+      var cur = state.getOption
+      rows.toSeq.sortBy(ord).foreach { e =>
+        val m = micros(e.ts)
+        cur match {
+          case None =>
+            out += Change(key, e.event_id, "+I", m)
+          case Some(prev) =>
+            out += Change(key, prev.event_id, "-U", prev.ts)
+            out += Change(key, e.event_id, "+U", m)
+        }
+        cur = Some(LastRow(m, e.event_id))
       }
+      cur.foreach(state.update)
+      out.iterator
   }
+
+  def changelogNormalize(ds: Dataset[Event]): Dataset[Change] = changelogStep.run(ds)
 
   // ---------------------------------------------------------------------
   // Processing-time operator variants (ref ProcTimeDeduplicateKeepFirstRow
@@ -478,81 +468,135 @@ object StatefulOps {
     * sessions emit once final; the open session re-emits per batch with
     * its current aggregate (update semantics — the sink keeps the row
     * with the highest cnt per (key, w_start)). */
-  def dynamicSession(ds: Dataset[Event], gapMicros: Event => Long): Dataset[SessOut] = {
-    import ds.sparkSession.implicits._
-    // append-mode snapshot emissions (the sink fold keeps each session's
-    // max-cnt row) — lets the operator chain after sortedEvents
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, SessOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[SessState]) =>
-          var cur = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessOut]
-          rows.toSeq.sortBy(ord).foreach { e =>
-            val m = micros(e.ts)
-            cur match {
-              case Some(s) if m <= s.endMicros =>
-                cur = Some(SessState(s.startMicros,
-                  math.max(s.endMicros, m + gapMicros(e)), s.cnt + 1, s.sum + e.value))
-              case other =>
-                other.foreach(s =>
-                  out += SessOut(key, tsOfMicros(s.startMicros), s.cnt, s.sum))
-                cur = Some(SessState(m, m + gapMicros(e), 1L, e.value))
-            }
-          }
-          cur.foreach { s =>
-            state.update(s)
-            out += SessOut(key, tsOfMicros(s.startMicros), s.cnt, s.sum)
-          }
-          out.iterator
+  // append-mode snapshot emissions (the sink fold keeps each session's
+  // max-cnt row)
+  def dynamicSessionStep(gapMicros: Event => Long): KeyedStep[SessState, SessOut] =
+    KeyedStep[SessState, SessOut] { (key, rows, state) =>
+      var cur = state.getOption
+      val out = scala.collection.mutable.ArrayBuffer.empty[SessOut]
+      rows.toSeq.sortBy(ord).foreach { e =>
+        val m = micros(e.ts)
+        cur match {
+          case Some(s) if m <= s.endMicros =>
+            cur = Some(SessState(s.startMicros,
+              math.max(s.endMicros, m + gapMicros(e)), s.cnt + 1, s.sum + e.value))
+          case other =>
+            other.foreach(s =>
+              out += SessOut(key, tsOfMicros(s.startMicros), s.cnt, s.sum))
+            cur = Some(SessState(m, m + gapMicros(e), 1L, e.value))
+        }
       }
+      cur.foreach { s =>
+        state.update(s)
+        out += SessOut(key, tsOfMicros(s.startMicros), s.cnt, s.sum)
+      }
+      out.iterator
+    }
+
+  def dynamicSession(ds: Dataset[Event], gapMicros: Event => Long): Dataset[SessOut] =
+    dynamicSessionStep(gapMicros).run(ds)
+
+  /** The watermark sorter's held rows for one key (r17, guide §2.3's
+    * narrower-types lever applied to STATE): parallel primitive arrays,
+    * event_type dictionary-coded in a tiny per-key dict, and no `user_id`,
+    * which is the group key. A `List[Event]` state paid a full per-element
+    * encoder round trip (a Gregorian↔Julian rebase per Timestamp, a
+    * UTF8String↔String conversion per event_type) for every held row on
+    * every micro-batch. Stored packed into one byte array. */
+  private[streaming] final class HeldRows(val ids: Array[Long], val tsMicros: Array[Long],
+                                          val values: Array[Double], val codes: Array[Int],
+                                          val dict: Array[String]) {
+    def pack: Array[Byte] = {
+      val n = ids.length
+      val strs = dict.map(_.getBytes(UTF_8))
+      val bb = ByteBuffer.allocate(8 + 28 * n + strs.map(4 + _.length).sum)
+      bb.putInt(n).putInt(strs.length)
+      var i = 0
+      while (i < n) {
+        bb.putLong(ids(i)).putLong(tsMicros(i)).putDouble(values(i)).putInt(codes(i))
+        i += 1
+      }
+      strs.foreach(b => bb.putInt(b.length).put(b))
+      bb.array
+    }
   }
 
-  /** Packed buffered-rows state for the temporal sorter (r17, guide §2.3's
-    * narrower-types lever applied to STATE): the former `List[Event]` state
-    * paid a full per-element encoder round trip — MapObjects struct
-    * (de)serialization, a Gregorian↔Julian rebase per Timestamp and a
-    * UTF8String↔String conversion per event_type — for EVERY buffered row
-    * on EVERY micro-batch, which the r17 JFR profile showed was the
-    * per-batch floor of the _ooo family (the sorter holds the disorder
-    * window's full row set across all ~11 batches). Primitive arrays
-    * encode as flat UnsafeArrayData copies, and event_type is
-    * dictionary-coded (tiny per-key dict) so no per-row string crosses
-    * the encoder. `user_id` is the group key and is not stored. */
-  case class EventBuf(ids: Array[Long], tsMicros: Array[Long],
-                      values: Array[Double], codes: Array[Int],
-                      dict: Array[String])
+  private[streaming] object HeldRows {
+    private val none = new HeldRows(Array.emptyLongArray, Array.emptyLongArray,
+      Array.emptyDoubleArray, Array.emptyIntArray, Array.empty[String])
 
-  /** Watermark-ordered event stream: buffers FULL events per key and
-    * releases them in event-time order once the watermark passes — the
-    * generalized temporal sort that composes in FRONT of the in-order
-    * operators (runningAgg, CEP, dynamicSession), upgrading them from
-    * in-order-arrival to full out-of-order safety at one extra stateful
-    * stage. Spark supports chained stateful operators in a single query;
-    * both stages share the key partitioning, so no extra shuffle. */
-  def sortedEvents(ds: Dataset[Event], delay: String = "10 minutes"): Dataset[Event] = {
-    import ds.sparkSession.implicits._
+    /** The rows packed in `b`; none when `b` is null. */
+    def unpack(b: Array[Byte]): HeldRows = if (b == null) none else {
+      val bb = ByteBuffer.wrap(b)
+      val n = bb.getInt
+      val ids = new Array[Long](n); val tsM = new Array[Long](n)
+      val vals = new Array[Double](n); val codes = new Array[Int](n)
+      val dict = new Array[String](bb.getInt)
+      var i = 0
+      while (i < n) {
+        ids(i) = bb.getLong; tsM(i) = bb.getLong; vals(i) = bb.getDouble; codes(i) = bb.getInt
+        i += 1
+      }
+      for (d <- dict.indices) {
+        val s = new Array[Byte](bb.getInt)
+        bb.get(s)
+        dict(d) = new String(s, UTF_8)
+      }
+      new HeldRows(ids, tsM, vals, codes, dict)
+    }
+  }
+
+  /** One key's state in [[sortedThen]]: the sorter's held rows and the
+    * step's state, each as bytes, null when that half is empty. Binary
+    * fields keep Spark's state deserializer free of `MapObjects`: Spark
+    * resolves the state encoder again for every micro-batch, a
+    * `MapObjects` lambda variable takes a new id each time, and the
+    * generated deserializer then misses the codegen cache and recompiles
+    * once per batch (the former `EventBuf` state, with its `Array[String]`
+    * dict, did exactly that). */
+  case class SortedState(held: Array[Byte], step: Array[Byte])
+
+  /** The watermark sorter and a user_id-keyed step as ONE stateful
+    * operator. Rows are buffered per key and released in (event time,
+    * event_id) order once the watermark passes them (ref
+    * RowTimeSortOperator buffering before order-sensitive operators); the
+    * step then runs on that key's released rows in the same call, the way
+    * the reference chains forward-partitioned operators into one task
+    * (StreamingJobGraphGenerator.isChainable). The output equals
+    * `step.run(sortedEvents(ds))` batch for batch, with one shuffle and one
+    * set of state stores instead of two:
+    *  - the timeout is set at the earliest held row's time;
+    *  - the step runs only when a released row passes its `keep`, and it
+    *    never sees a timeout or the watermark;
+    *  - a key's state is removed only when it holds no rows and the step
+    *    holds no state.
+    * Being the query's only stateful operator, it also passes Spark's
+    * global-watermark correctness check, which the two-operator form trips
+    * (the sorter emits rows older than the watermark by design). */
+  def sortedThen[S, O](ds: Dataset[Event], delay: String)(step: KeyedStep[S, O]): Dataset[O] = {
+    val fn = step.fn
+    val keep = step.keep
+    val codec = new StateCodec(step.stateEnc)
     ds.withWatermark("ts", delay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[EventBuf, Event](
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[SortedState, O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[EventBuf]) =>
+        (key: Long, rows: Iterator[Event], state: GroupState[SortedState]) =>
           val wm = state.getCurrentWatermarkMs()
           val prev = state.getOption.orNull
-          val nPrev = if (prev == null) 0 else prev.ids.length
           val newRows = rows.toArray
+          val prevHeld = HeldRows.unpack(if (prev == null) null else prev.held)
+          val nPrev = prevHeld.ids.length
           val n = nPrev + newRows.length
           val ids = new Array[Long](n); val tsM = new Array[Long](n)
           val vals = new Array[Double](n); val codes = new Array[Int](n)
           val dictB = scala.collection.mutable.ArrayBuffer.empty[String]
           val dictIdx = scala.collection.mutable.HashMap.empty[String, Int]
-          if (prev != null) {
-            System.arraycopy(prev.ids, 0, ids, 0, nPrev)
-            System.arraycopy(prev.tsMicros, 0, tsM, 0, nPrev)
-            System.arraycopy(prev.values, 0, vals, 0, nPrev)
-            System.arraycopy(prev.codes, 0, codes, 0, nPrev)
-            prev.dict.foreach { s => dictIdx(s) = dictB.length; dictB += s }
-          }
+          System.arraycopy(prevHeld.ids, 0, ids, 0, nPrev)
+          System.arraycopy(prevHeld.tsMicros, 0, tsM, 0, nPrev)
+          System.arraycopy(prevHeld.values, 0, vals, 0, nPrev)
+          System.arraycopy(prevHeld.codes, 0, codes, 0, nPrev)
+          prevHeld.dict.foreach { s => dictIdx(s) = dictB.length; dictB += s }
           var i = 0
           while (i < newRows.length) {
             val e = newRows(i)
@@ -570,10 +614,12 @@ object StatefulOps {
           var nHold = 0
           var j = 0
           while (j < n) { if (!isRipe(j)) nHold += 1; j += 1 }
+          var held: Array[Byte] = null
+          var minHoldMs = Long.MaxValue
           if (nHold > 0) {
             val hIds = new Array[Long](nHold); val hTs = new Array[Long](nHold)
             val hVals = new Array[Double](nHold); val hCodes = new Array[Int](nHold)
-            var k = 0; var minHoldMs = Long.MaxValue
+            var k = 0
             j = 0
             while (j < n) {
               if (!isRipe(j)) {
@@ -584,17 +630,41 @@ object StatefulOps {
               }
               j += 1
             }
-            state.update(EventBuf(hIds, hTs, hVals, hCodes, dictB.toArray))
-            state.setTimeoutTimestamp(minHoldMs)
-          } else state.remove()
+            held = new HeldRows(hIds, hTs, hVals, hCodes, dictB.toArray).pack
+          }
           // release ripe rows in (event time, event_id) order — a unique
           // total order, so sort stability is immaterial
           val ripeIdx = (0 until n).filter(isRipe).toArray
-          val sorted = ripeIdx.sortBy(j => (tsM(j), ids(j)))
-          sorted.iterator.map(j =>
+          val released = ripeIdx.sortBy(j => (tsM(j), ids(j))).iterator.map(j =>
             Event(ids(j), tsOfMicros(tsM(j)), key, dictB(codes(j)), vals(j)))
-      }
+          val input = keep.fold(released)(k => released.filter(k))
+          var stepState = if (prev == null) null else prev.step
+          val out =
+            if (!input.hasNext) Vector.empty[O]
+            else {
+              val st = new StepState(codec, stepState, state)
+              // drain the output before reading the step's state back: a
+              // step may update its state lazily, as its output is consumed
+              val o = fn(key, input, st).toVector
+              stepState = st.bytes
+              o
+            }
+          if (held == null && stepState == null) state.remove()
+          else {
+            state.update(SortedState(held, stepState))
+            if (held != null) state.setTimeoutTimestamp(minHoldMs)
+          }
+          out.iterator
+      }(ExpressionEncoder[SortedState](), step.outEnc)
   }
+
+  /** The watermark sorter on its own: [[sortedThen]] with a step that emits
+    * the released rows unchanged. A stateful operator keyed by anything but
+    * user_id (the topN family, keyed by event_type) still follows it as a
+    * second operator, behind a second shuffle; one keyed by user_id belongs
+    * in the sorter's own operator, through sortedThen. */
+  def sortedEvents(ds: Dataset[Event], delay: String = "10 minutes"): Dataset[Event] =
+    sortedThen(ds, delay)(KeyedStep.passThrough)
 
   case class SortedOut(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
   case class SortBuf(rows: List[(Long, Long)]) // (tsMillis, event_id)

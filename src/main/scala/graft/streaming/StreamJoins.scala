@@ -102,8 +102,8 @@ object StreamJoins {
     * retracts it (-D) and re-emits +I (p, e). Consumers fold net>0.
     *
     * State is BOUNDED without timers: rows are processed in event-time
-    * order (chain [[StatefulOps.sortedEvents]] under disorder, as the _ooo
-    * queries do), so an arriving match row's timestamp is a watermark —
+    * order (run it in the watermark sorter's operator,
+    * [[StatefulOps.sortedThen]], under disorder, as the _ooo queries do), so an arriving match row's timestamp is a watermark —
     * pending probes whose window it passes can never match and are
     * dropped; already-seen match rows can never match a FUTURE probe
     * (their time is in its past) so they are not retained at all. A
@@ -111,18 +111,17 @@ object StreamJoins {
     * match stream goes silent — the reference arms the same cleanup timer
     * (CoProcessOperator + state TTL). */
   def connectMatch(ds: Dataset[Event], probeType: String, matchType: String,
-                   windowSec: Long = 3600,
-                   append: Boolean = false): Dataset[ConnOut] = {
-    import ds.sparkSession.implicits._
+                   windowSec: Long = 3600): Dataset[ConnOut] =
+    connectStep(probeType, matchType, windowSec).run(ds, OutputMode.Update())
+
+  /** [[connectMatch]] as a [[KeyedStep]] reading only probe and match rows.
+    * The +I/-D rows are immutable change facts (consumers fold net>0), so
+    * Append is sound; it is what running inside the watermark sorter's
+    * operator ([[StatefulOps.sortedThen]]) needs. */
+  def connectStep(probeType: String, matchType: String,
+                  windowSec: Long = 3600): KeyedStep[ConnState, ConnOut] = {
     val winUs = windowSec * 1000000L
-    // the +I/-D rows are immutable change facts (consumers fold net>0), so
-    // Append is always sound and is required when chaining after the
-    // watermark sorter (the _ooo driver)
-    val mode = if (append) OutputMode.Append() else OutputMode.Update()
-    ds.filter(e => e.event_type == probeType || e.event_type == matchType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ConnState, ConnOut](
-        mode, GroupStateTimeout.NoTimeout()) {
+    KeyedStep[ConnState, ConnOut]({
         (key: Long, rows: Iterator[Event], state: GroupState[ConnState]) =>
           var pending = state.getOption.map(_.pending).getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[ConnOut]
@@ -155,7 +154,7 @@ object StreamJoins {
           }
           state.update(ConnState(pending))
           out.iterator
-      }
+      }, keep = Some(e => e.event_type == probeType || e.event_type == matchType))
   }
 
   case class OuterOut(user_id: Long, p_id: Long, v_id: Option[Long], rowkind: String)

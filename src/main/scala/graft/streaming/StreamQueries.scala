@@ -55,10 +55,9 @@ object StreamQueries {
   def connectOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StreamJoins.connectMatch(ordered, "purchase", "error", 3600,
-      append = true).toDF()
-    StreamSource.runToTableChained(s, out, "stream_connect_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StreamJoins.connectStep("purchase", "error", 3600)).toDF()
+    StreamSource.runToTable(s, out, "stream_connect_ooo", "append")
       .groupBy(col("user_id"), col("p_id"), col("e_id"))
       .agg(sum(when(col("rowkind") === "+I", 1).otherwise(-1)).as("net"))
       .where(col("net") > 0)
@@ -337,14 +336,12 @@ object StreamQueries {
     import StreamSource.Event
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
     val pattern: Seq[Event => Boolean] = Seq(
       _.event_type == "purchase", _.event_type == "view")
-    val out = Cep.matchRelaxed(ordered, pattern,
-      withinMs = 7L * 24 * 3600 * 1000,
-      nots = Map(1 -> ((e: Event) => e.event_type == "error")),
-      append = true).toDF()
-    StreamSource.runToTableChained(s, out, "stream_cep_not_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      Cep.relaxedStep(pattern, withinMs = 7L * 24 * 3600 * 1000,
+        nots = Map(1 -> ((e: Event) => e.event_type == "error")))).toDF()
+    StreamSource.runToTable(s, out, "stream_cep_not_ooo", "append")
       .select(col("user_id"),
         col("ids").getItem(0).as("p_id"),
         col("ids").getItem(1).as("v_id"))
@@ -356,12 +353,11 @@ object StreamQueries {
     import StreamSource.Event
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
     val pattern: Seq[Event => Boolean] = Seq(
       _.event_type == "view", _.event_type == "click", _.event_type == "purchase")
-    val out = Cep.matchRelaxed(ordered, pattern,
-      withinMs = 2L * 24 * 3600 * 1000, any = true, append = true).toDF()
-    StreamSource.runToTableChained(s, out, "stream_cep_any_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      Cep.relaxedStep(pattern, withinMs = 2L * 24 * 3600 * 1000, any = true)).toDF()
+    StreamSource.runToTable(s, out, "stream_cep_any_ooo", "append")
       .select(col("user_id"),
         col("ids").getItem(0).as("a_id"),
         col("ids").getItem(1).as("b_id"),
@@ -573,21 +569,22 @@ object StreamQueries {
 
   /** Out-of-order hardening (round-5 verdict #1): the same stateful
     * operators, fed the OooReplay multi-segment stream whose micro-batches
-    * arrive OUT of event-time order, with the sortedEvents watermark
-    * buffer composed in FRONT — the temporalSort pattern upgrading the
-    * in-order operators to full out-of-order safety (ref
-    * RowTimeSortOperator.java buffering by watermark before
-    * order-sensitive operators). Both stages are keyed, chained
-    * stateful operators in ONE streaming query (all-append). The oracle
+    * arrive OUT of event-time order, with the watermark sorter composed in
+    * FRONT — the temporalSort pattern upgrading the in-order operators to
+    * full out-of-order safety (ref RowTimeSortOperator.java buffering by
+    * watermark before order-sensitive operators). An operator keyed by
+    * user_id runs inside the sorter's own stateful operator
+    * (StatefulOps.sortedThen); the topN twins, keyed by event_type, chain
+    * a second stateful operator after StatefulOps.sortedEvents. The oracle
     * is the SAME SQL as the ordered twin — a hash match proves
     * order-independence of the final answer. */
   def dedupLastOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StatefulOps.keepLast(ordered).toDF()
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.keepLastStep).toDF()
     // multi-batch append emissions: fold to the final latest per key
-    StreamSource.runToTableChained(s, out, "stream_dedup_last_ooo", "append")
+    StreamSource.runToTable(s, out, "stream_dedup_last_ooo", "append")
       .where(col("user_id") >= 0)
       .withColumn("__rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy("user_id")
@@ -600,9 +597,9 @@ object StreamQueries {
   def overOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StatefulOps.runningAgg(ordered).toDF()
-    StreamSource.runToTableChained(s, out, "stream_over_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.runningAggStep).toDF()
+    StreamSource.runToTable(s, out, "stream_over_ooo", "append")
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"), col("run_cnt"),
         round(col("run_sum"), 4).as("run_sum"))
@@ -636,31 +633,31 @@ object StreamQueries {
   def cepPlusOoo(s: SparkSession, dir: String): DataFrame = {
     import StreamSource.Event
     val (src, delaySec) = OooReplay.stream(s, dir)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
     // the replay's per-key FLUSH row (kept here, filtered by the other
     // adapters) breaks the pattern after the last real event, so the
     // NoTimeout ordered matcher resolves every parked attempt without an
-    // event-time timer (unavailable downstream of the sorter)
+    // event-time timer (a step after the sorter never sees a timeout)
     val a: Event => Boolean = e =>
       e.event_type != "error" && e.event_type != "__sentinel" &&
         e.event_type != OooReplay.FlushType
     val b: Event => Boolean = _.event_type == "purchase"
-    val out = Cep.matchRecognizeOrderedSkip(ordered,
-      Seq(Cep.QStep.oneOrMore(a), Cep.QStep.once(b)), Cep.SkipToNextRow).toDF()
-    StreamSource.runToTableChained(s, out, "stream_cep_plus_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      Cep.orderedSkipStep(Seq(Cep.QStep.oneOrMore(a), Cep.QStep.once(b)),
+        Cep.SkipToNextRow)).toDF()
+    StreamSource.runToTable(s, out, "stream_cep_plus_ooo", "append")
       .select(col("user_id"), expr("ids[0]").as("a_id"),
         expr("element_at(ids, -1)").as("b_id"), (size(col("ids")) - 1).as("n_a"))
       .orderBy("user_id", "a_id")
   }
 
   /** Changelog family + session + bounded OVER on the shuffled replay —
-    * same sortedEvents composition, same oracles as the ordered twins. */
+    * same sortedThen composition, same oracles as the ordered twins. */
   def changelogOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StatefulOps.changelogNormalize(ordered).toDF()
-    StreamSource.runToTableChained(s, out, "stream_changelog_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.changelogStep).toDF()
+    StreamSource.runToTable(s, out, "stream_changelog_ooo", "append")
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"), col("rowkind"))
       .orderBy("user_id", "event_id", "rowkind")
@@ -670,11 +667,11 @@ object StreamQueries {
     import StreamSource.Event
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
     val gap: Event => Long =
       e => if (e.event_type == "error") 30L * 60 * 1000000 else 60L * 60 * 1000000
-    val out = StatefulOps.dynamicSession(ordered, gap).toDF()
-    StreamSource.runToTableChained(s, out, "stream_dyn_session_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.dynamicSessionStep(gap)).toDF()
+    StreamSource.runToTable(s, out, "stream_dyn_session_ooo", "append")
       .where(col("user_id") >= 0)
       .groupBy(col("user_id"), col("w_start"))
       .agg(max(struct(col("cnt"), col("sum_value"))).as("fin"))
@@ -686,9 +683,9 @@ object StreamQueries {
   def overRowsBoundedOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StatefulOps.boundedRowsAgg(ordered, 2).toDF()
-    StreamSource.runToTableChained(s, out, "stream_over_rows_b_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.boundedRowsStep(2)).toDF()
+    StreamSource.runToTable(s, out, "stream_over_rows_b_ooo", "append")
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"), col("w_cnt"),
         round(col("w_sum"), 4).as("w_sum"))
@@ -698,9 +695,9 @@ object StreamQueries {
   def overRangeBoundedOoo(s: SparkSession, dir: String): DataFrame = {
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
-    val out = StatefulOps.boundedRangeAgg(ordered, 3600L * 1000000).toDF()
-    StreamSource.runToTableChained(s, out, "stream_over_range_b_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      StatefulOps.boundedRangeStep(3600L * 1000000)).toDF()
+    StreamSource.runToTable(s, out, "stream_over_range_b_ooo", "append")
       .where(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"), col("w_cnt"),
         round(col("w_sum"), 4).as("w_sum"))
@@ -711,11 +708,11 @@ object StreamQueries {
     import StreamSource.Event
     val (raw, delaySec) = OooReplay.stream(s, dir)
     val src = raw.filter(_.event_type != OooReplay.FlushType)
-    val ordered = StatefulOps.sortedEvents(src, s"$delaySec seconds")
     val pattern: Seq[Event => Boolean] = Seq(
       _.event_type == "view", _.event_type == "click", _.event_type == "purchase")
-    val out = Cep.matchPattern(ordered, pattern).toDF()
-    StreamSource.runToTableChained(s, out, "stream_cep_ooo", "append")
+    val out = StatefulOps.sortedThen(src, s"$delaySec seconds")(
+      Cep.patternStep(pattern)).toDF()
+    StreamSource.runToTable(s, out, "stream_cep_ooo", "append")
       .select(col("user_id"),
         col("ids").getItem(0).as("a_id"),
         col("ids").getItem(1).as("b_id"),

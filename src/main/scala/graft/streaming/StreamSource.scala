@@ -137,7 +137,10 @@ object StreamSource {
       .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
   }
 
-  /** runToTable for CHAINED stateful operators (sortedEvents → operator):
+  /** runToTable for CHAINED stateful operators (sortedEvents → operator).
+    * Only the operators keyed by event_type (the topN `_ooo` twins) still
+    * need it: a user_id-keyed operator runs inside the sorter's own
+    * operator (StatefulOps.sortedThen), which passes the check below.
     * Spark's global-watermark correctness check flags any stateful op
     * downstream of one that emits rows older than the watermark, because
     * a downstream op with watermark-based eviction COULD silently drop
@@ -200,7 +203,9 @@ object StreamSource {
 
   /** Run `df` (a streaming DataFrame) to completion into a memory sink and
     * return the materialized result. `afterStart` runs as soon as the query
-    * has been planned and started — even when start() itself throws.
+    * has been planned and started — even when start() itself throws. The
+    * query's checkpoint dir is deleted once it has stopped: the result
+    * lives in the memory sink, and nothing restarts the query.
     *
     * State-store sizing: each shuffle partition materializes one state-store
     * instance per stateful operator per batch (a delta file and its checksum
@@ -230,15 +235,20 @@ object StreamSource {
     // and loses the gain. GRAFT_STREAM_SHUFFLE overrides for experiments.
     s.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    val ckpt = checkpointDir(s, name)
     try {
       val q: StreamingQuery =
-        try checkpointDir(s, name).start(
+        try ckpt.start(
           df.writeStream.format("memory").queryName(name).outputMode(mode))
         finally afterStart()
-      q.processAllAvailable()
-      onDrained(q)
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      try {
+        q.processAllAvailable()
+        onDrained(q)
+      } finally q.stop()
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prev)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt.path))
+    }
     s.table(name)
   }
 }

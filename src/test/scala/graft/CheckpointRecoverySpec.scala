@@ -173,6 +173,22 @@ class CheckpointRecoverySpec extends SparkSpec {
     val sidecars = names.filter(n => n.split('/').last.startsWith(".") && n.endsWith(".crc"))
     assert(sidecars.isEmpty, s"files written through Hadoop's stock local filesystem: $sidecars")
   }
+
+  test("runToTable leaves no checkpoint dir behind, and its result stays readable") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    input.addData(Seq(ev(1, 10, 7, "view", 1.0), ev(2, 20, 7, "view", 2.0)))
+    val name = s"ckpt_lifecycle_${System.nanoTime()}"
+    def dirs(): Seq[String] =
+      Option(new java.io.File(StreamSource.ckptRoot).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith(s"$name-"))
+    var during = Seq.empty[String]
+    val out = StreamSource.runToTable(spark, StatefulOps.runningAgg(input.toDS()).toDF(),
+      name, "append", onDrained = _ => during = dirs())
+    assert(during.size === 1, "the query ran on its own checkpoint dir")
+    assert(dirs().isEmpty, s"checkpoint dirs left: ${dirs()}")
+    assert(out.select("run_cnt").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+  }
 }
 
 /** A V1 source that, like the file source, keeps a metadata log under its

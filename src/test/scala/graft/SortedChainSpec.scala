@@ -1,0 +1,161 @@
+package graft
+
+import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
+
+import graft.streaming.{Cep, KeyedStep, OooReplay, StatefulOps, StreamJoins, StreamSource}
+import graft.streaming.StreamSource.Event
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+/** The fused watermark sorter (`StatefulOps.sortedThen`) against the
+  * two-operator form it replaces, `step.run(sortedEvents(ds))`, for each
+  * of the 11 user_id-keyed steps the `_ooo` queries run. Both read the same
+  * scripted feed and must emit the same rows in every micro-batch. The feed
+  * has:
+  *  - disorder across batches, inside the 10-minute delay;
+  *  - batches that carry no input, in which only the sorter's timeouts
+  *    fire and release rows;
+  *  - keys whose held rows all drain while the step keeps state, and which
+  *    receive rows again later.
+  */
+class SortedChainSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val delay = "10 minutes"
+  private def ev(id: Long, min: Int, user: Long, typ: String, v: Double): Event =
+    Event(id, new Timestamp(1700000000000L + min * 60000L), user, typ, v)
+
+  // watermark = max event time seen in earlier batches - 10 minutes
+  private val feed: Seq[Seq[Event]] = Seq(
+    // everything held (no watermark yet); after: watermark 10
+    Seq(ev(1, 20, 1, "purchase", 1.0), ev(2, 15, 1, "view", 2.0),
+      ev(3, 17, 1, "click", 3.0), ev(4, 18, 2, "purchase", 4.0),
+      ev(5, 16, 2, "view", 5.0), ev(6, 14, 3, "purchase", 6.0)),
+    // rows earlier than batch 1's, still above the watermark; after: 20,
+    // so a no-data batch fires the timeouts of keys 1, 2 and 3: key 3's
+    // held rows all drain and only its step state is left
+    Seq(ev(7, 12, 1, "purchase", 7.0), ev(8, 21, 1, "view", 8.0),
+      ev(9, 30, 2, "error", 9.0), ev(10, 13, 3, "view", 10.0),
+      ev(11, 19, 3, "error", 11.0)),
+    // another key only; after: 50, and a no-data batch drains keys 1, 2
+    Seq(ev(12, 60, 4, "view", 12.0)),
+    // key 3 again, after its buffer emptied
+    Seq(ev(13, 52, 3, "click", 13.0), ev(14, 55, 3, "view", 14.0)),
+    Seq(ev(15, 53, 1, "click", 15.0), ev(16, 51, 3, "purchase", 16.0),
+      ev(17, 54, 2, "purchase", 17.0)),
+    // far future: the last no-data batch releases everything but key 9
+    Seq(ev(18, 300, 9, "view", 0.0)))
+
+  /** Per batch id, the sorted rows `build` emitted, and the ids of the
+    * batches that read no input rows. */
+  private def run(name: String, build: Dataset[Event] => DataFrame,
+                  chained: Boolean): (Map[Long, Seq[String]], Set[Long]) = {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Event]
+    val out = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
+    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val ckpt = s"${StreamSource.ckptRoot}/chain-$name-${System.nanoTime()}"
+    // the two-operator form trips Spark's global-watermark check (the
+    // sorter emits rows older than the watermark); the fused one must not
+    val prev = spark.conf.get(key, "true")
+    if (chained) spark.conf.set(key, "false")
+    val q = try build(input.toDS()).writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        out.put(id, b.collect().map(_.toString).sorted.toSeq); ()
+      }.start()
+    finally spark.conf.set(key, prev)
+    try feed.foreach { rows => input.addData(rows); q.processAllAvailable() }
+    finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
+    val idle = q.recentProgress.filter(_.numInputRows == 0).map(_.batchId).toSet
+    (out.asScala.toMap, idle)
+  }
+
+  private def sameAsChained[S, O](name: String, step: KeyedStep[S, O]): Map[Long, Seq[String]] = {
+    val (fused, idle) = run(name, ds => StatefulOps.sortedThen(ds, delay)(step).toDF(),
+      chained = false)
+    val (chained, _) = run(name,
+      ds => step.run(StatefulOps.sortedEvents(ds, delay)).toDF(), chained = true)
+    assert(fused.values.exists(_.nonEmpty), s"$name emitted nothing")
+    assert(idle.exists(id => fused(id).nonEmpty),
+      s"$name: no batch without input released rows through a timeout")
+    assert(fused === chained)
+    fused
+  }
+
+  test("fused runningAgg == chained; step state outlives an empty sorter buffer") {
+    val out = sameAsChained("over", StatefulOps.runningAggStep).values.flatten
+    // key 3: rows 13', 14', 19' drain in the first timeout batch, leaving
+    // only step state; rows 51', 52', 55' continue its count from 3
+    assert(out.count(_.startsWith("[3,")) === 6)
+    assert(out.exists(_ == "[3,14,6,70.0]"))
+  }
+
+  test("fused keepLast == chained") {
+    sameAsChained("dedup_last", StatefulOps.keepLastStep)
+  }
+
+  test("fused bounded ROWS over == chained") {
+    sameAsChained("over_rows_b", StatefulOps.boundedRowsStep(2))
+  }
+
+  test("fused bounded RANGE over == chained") {
+    sameAsChained("over_range_b", StatefulOps.boundedRangeStep(20L * 60 * 1000000))
+  }
+
+  test("fused changelog normalize == chained") {
+    sameAsChained("changelog", StatefulOps.changelogStep)
+  }
+
+  test("fused dynamic-gap session == chained") {
+    val gap: Event => Long =
+      e => if (e.event_type == "error") 5L * 60 * 1000000 else 10L * 60 * 1000000
+    sameAsChained("dyn_session", StatefulOps.dynamicSessionStep(gap))
+  }
+
+  test("fused strict CEP == chained") {
+    val pattern: Seq[Event => Boolean] = Seq(
+      _.event_type == "view", _.event_type == "click", _.event_type == "purchase")
+    sameAsChained("cep", Cep.patternStep(pattern))
+  }
+
+  test("fused quantified CEP (A+ B) == chained") {
+    val a: Event => Boolean = e =>
+      e.event_type != "error" && e.event_type != OooReplay.FlushType
+    sameAsChained("cep_plus", Cep.orderedSkipStep(
+      Seq(Cep.QStep.oneOrMore(a), Cep.QStep.once(_.event_type == "purchase")),
+      Cep.SkipToNextRow))
+  }
+
+  test("fused notFollowedBy CEP == chained") {
+    val pattern: Seq[Event => Boolean] = Seq(
+      _.event_type == "purchase", _.event_type == "view")
+    sameAsChained("cep_not", Cep.relaxedStep(pattern, withinMs = 60L * 60000,
+      nots = Map(1 -> ((e: Event) => e.event_type == "error"))))
+  }
+
+  test("fused followedByAny CEP == chained") {
+    val pattern: Seq[Event => Boolean] = Seq(
+      _.event_type == "view", _.event_type == "click", _.event_type == "purchase")
+    sameAsChained("cep_any", Cep.relaxedStep(pattern, withinMs = 60L * 60000, any = true))
+  }
+
+  test("fused connect (keep-filtered step) == chained") {
+    // the step reads purchase and error rows only: a key's released rows
+    // can all be filtered out, and the step must then not run at all
+    val out = sameAsChained("connect", StreamJoins.connectStep("purchase", "error", 3600))
+    assert(out.values.flatten.exists(_.split(",")(2) != "null"),
+      "no purchase matched an error")
+  }
+
+  test("sortedEvents alone is the sorter with a pass-through step") {
+    val (out, _) = run("sorted", ds => StatefulOps.sortedEvents(ds, delay).toDF(),
+      chained = false)
+    assert(out.values.map(_.size).sum === feed.map(_.size).sum - 1) // key 9 held
+  }
+}

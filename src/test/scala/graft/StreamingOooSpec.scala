@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *     (a later-arriving segment holds earlier timestamps than an
   *     already-delivered one), and a lateness bound covered by the
   *     advertised watermark delay;
-  *  2. the sortedEvents-composed operators produce byte-identical final
-  *     answers on the shuffled replay and on the ordered replay
+  *  2. all 13 sorter-composed `_ooo` operators produce byte-identical
+  *     final answers on the shuffled replay and on the ordered replay
   *     (order-independence, spark-vs-spark — the DuckDB oracle re-proves
   *     it against SQL per round).
   */
@@ -72,6 +72,54 @@ class StreamingOooSpec extends SparkSpec {
   test("CEP quantified pattern (parked partials across batches) is order-independent") {
     val a = StreamQueries.cepPlus(spark, sf).collect().toSeq
     val b = StreamQueries.cepPlusOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("bounded ROWS over is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.overRowsBounded(spark, sf).collect().toSeq
+    val b = StreamQueries.overRowsBoundedOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("bounded RANGE over is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.overRangeBounded(spark, sf).collect().toSeq
+    val b = StreamQueries.overRangeBoundedOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("changelog normalize is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.changelog(spark, sf).collect().toSeq
+    val b = StreamQueries.changelogOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("dynamic-gap session is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.dynamicSession(spark, sf).collect().toSeq
+    val b = StreamQueries.dynSessionOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("retracting top-n is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.topNRetract(spark, sf).collect().toSeq
+    val b = StreamQueries.topNRetractOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("CEP notFollowedBy is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.cepNot(spark, sf).collect().toSeq
+    val b = StreamQueries.cepNotOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("CEP followedByAny is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.cepAny(spark, sf).collect().toSeq
+    val b = StreamQueries.cepAnyOoo(spark, sf).collect().toSeq
+    assert(a == b)
+  }
+
+  test("connect/CoProcess is order-independent: shuffled replay == ordered replay") {
+    val a = StreamQueries.connect(spark, sf).collect().toSeq
+    val b = StreamQueries.connectOoo(spark, sf).collect().toSeq
     assert(a == b)
   }
 }
