@@ -94,20 +94,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hive-backed catalog, per-process Derby metastore (q_hive_catalog)
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore/bench-${System.nanoTime()};create=true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse/bench-${System.nanoTime()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bench")
     val failed = scala.collection.mutable.ListBuffer.empty[String]
 
     /** One timed execution. A crash is recorded as a failure (name collected,

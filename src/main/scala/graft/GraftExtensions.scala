@@ -1,9 +1,6 @@
 package graft
 
-import graft.functions._
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension installer — the deployment story for the engine as a
   * library (SURVEY.md §4 conclusion: custom work is registered via
@@ -16,26 +13,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   .getOrCreate()
   * }}}
   *
-  * Installs every custom scalar expression (vec_dot, minhash32, simhash60,
-  * is_decimal/is_digit/is_alpha, hash_code) into the function registry and
-  * the AsOfJoin planner strategy — after which they are usable from plain
-  * SQL text and `expr(...)` like built-ins, with no per-session register
-  * calls. The operator objects also self-register defensively so direct
-  * API use works without the extension.
+  * Injects every function of [[GraftSession.functions]] into the function
+  * registry, plus the AsOfJoin planner strategy and the as-of SQL-pattern
+  * rule — after which they are usable from plain SQL text and `expr(...)`
+  * like built-ins. [[GraftSession.install]] puts the same set into a session
+  * built without the extension; the query builders call it themselves, so
+  * direct API use works either way.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    def fn(name: String, clazz: Class[_], build: Seq[Expression] => Expression): Unit =
-      e.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), build))
-    fn("vec_dot", classOf[VecDot], es => VecDot(es.head, es(1)))
-    fn("minhash32", classOf[MinHash32Expr], es => MinHash32Expr(es.head))
-    fn("simhash60", classOf[SimHash60Expr], es => SimHash60Expr(es.head))
-    fn("is_decimal", classOf[IsDecimalExpr], es => IsDecimalExpr(es.head))
-    fn("is_digit", classOf[IsDigitExpr], es => IsDigitExpr(es.head))
-    fn("is_alpha", classOf[IsAlphaExpr], es => IsAlphaExpr(es.head))
-    fn("hash_code", classOf[HashCodeExpr], es => HashCodeExpr(es.head))
-    fn("sum0", classOf[Sum0], es => Sum0(es.head).toAggregateExpression())
+    GraftSession.functions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
     // SQL-pattern recognition: ROW_NUMBER-over-versions as-of shape →
     // AsOfJoinPlan (ref LogicalCorrelateToJoinFromTemporalTableRule)

@@ -103,16 +103,9 @@ object Tables {
     * GC'd-then-reallocated object, so every cache hit is validated with an
     * `eq` check on the frame's own session — a stale or colliding entry is
     * rebuilt and replaced, never served. */
-  /** Measurement kill-switch (A/B aid, the GRAFT_STREAM_SHUFFLE precedent):
-    * GRAFT_NO_RELATION_MEMO=1 disables the relation memo AND the
-    * registration skips that depend on it, restoring the r16 per-call
-    * behavior in the same binary. */
-  val memoDisabled: Boolean = sys.env.contains("GRAFT_NO_RELATION_MEMO")
-
   private def cachedFor(spark: SparkSession, key: String,
                         build: () => DataFrame): DataFrame =
-    if (memoDisabled) build()
-    else dfCache.synchronized {
+    dfCache.synchronized {
       val k = System.identityHashCode(spark).toString + ":" + key
       dfCache.get(k) match {
         case Some(df) if df.sparkSession eq spark => df
@@ -132,6 +125,10 @@ object Tables {
       () => spark.read.schema(cachedSchema(spark, path)).parquet(path))
   }
 
+  /** [[materializeShared]]'s gate: 4 GiB keeps every bench and verify
+    * run on the measured localCheckpoint path. */
+  private val LocalCheckpointMaxBytes = BigInt(4L << 30)
+
   /** Materialize an intermediate that feeds several consumers (guide §2.4),
     * with a SCALE GATE (r17, VERDICT r16 what's-wrong #2): below the gate an
     * eager `localCheckpoint` — the cheapest cut, executor-local, lineage
@@ -141,18 +138,15 @@ object Tables {
     * memory/disk, and with lineage gone one lost executor fails the query
     * instead of recomputing — so the large branch switches to
     * `persist(DISK_ONLY)` + eager materialization, whose blocks recompute
-    * from lineage on loss. Gated on the optimizer's size estimate;
-    * `GRAFT_LOCAL_CKPT_MAX_BYTES` overrides (local default 4 GiB keeps
-    * every bench/verify run on the measured localCheckpoint path).
+    * from lineage on loss. Gated on the optimizer's size estimate against
+    * [[LocalCheckpointMaxBytes]].
     * Unpersist on the gated path is the caller's (or the session cache
     * lifecycle's) concern — the bench clears the cache between queries. */
   def materializeShared(df: DataFrame): DataFrame = {
-    val gate = sys.env.get("GRAFT_LOCAL_CKPT_MAX_BYTES").map(BigInt(_))
-      .getOrElse(BigInt(4L << 30))
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est <= gate) df.localCheckpoint(eager = true)
+    if (est <= LocalCheckpointMaxBytes) df.localCheckpoint(eager = true)
     else {
-      System.err.println(s"[materialize] est=$est B > gate=$gate B: " +
+      System.err.println(s"[materialize] est=$est B > gate=$LocalCheckpointMaxBytes B: " +
         "persist(DISK_ONLY) instead of localCheckpoint")
       df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       df.count()
@@ -191,7 +185,7 @@ object Tables {
     val cat = spark.sessionState.catalog
     all.foreach { n =>
       val key = System.identityHashCode(spark).toString + ":" + dir + ":" + n
-      val stillOurs = !memoDisabled && cat.getRawTempView(n).exists(cur =>
+      val stillOurs = cat.getRawTempView(n).exists(cur =>
         regMemo.get(key).exists(_ eq cur))
       if (!stillOurs) {
         apply(spark, dir, n).createOrReplaceTempView(n)

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Both are native codegen expressions — a static helper call / inline
   * comparisons — so projections using them stay inside one
-  * WholeStageCodegen span (same pattern as [[StringClassify]]).
+  * WholeStageCodegen span (same pattern as the StringClassify.scala expressions).
   *
   * Semantics pinned to the reference:
   *  - SPLIT_INDEX(str, sep, idx): 0-based index, whole-separator split
@@ -170,37 +168,25 @@ case class TemporalOverlapsExpr(
 }
 
 object FlinkScalars {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def add(name: String, clazz: Class[_], f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), f)
-    add("split_index", classOf[SplitIndexExpr],
-      es => SplitIndexExpr(es(0), es(1), es(2)))
-    add("temporal_overlaps", classOf[TemporalOverlapsExpr],
-      es => TemporalOverlapsExpr(es(0), es(1), es(2), es(3)))
-    add("truncate_num", classOf[TruncateNumExpr],
-      es => TruncateNumExpr(es(0), es(1)))
-    // SIMILAR TO lowers onto the codegen'd RLike with the pattern translated
-    // at plan time (the pattern must be a literal, as in the reference's
-    // parser production) — zero runtime translation cost, full WSCG fusion.
-    add("similar_to", classOf[org.apache.spark.sql.catalyst.expressions.RLike], {
-      es =>
-        def lit(e: Expression, role: String): String = {
-          require(e.foldable, s"similar_to $role must be a literal")
-          val v = e.eval(null)
-          require(v != null, s"similar_to $role must be non-null")
-          v.toString
-        }
-        val esc = if (es.length > 2) Some({
-          val s = lit(es(2), "escape"); require(s.length == 1,
-            s"similar_to escape must be a single character, got '$s'"); s.charAt(0)
-        }) else None
-        org.apache.spark.sql.catalyst.expressions.RLike(es(0),
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            UTF8String.fromString(
-              FlinkScalarsUtil.similarToRegex(lit(es(1), "pattern"), esc)),
-            StringType))
-    })
+  /** `similar_to(str, pattern[, escape])`. SIMILAR TO lowers onto the
+    * codegen'd RLike with the pattern translated at plan time (the pattern
+    * must be a literal, as in the reference's parser production) — zero
+    * runtime translation cost, full WSCG fusion. */
+  def similarTo(es: Seq[Expression]): Expression = {
+    def lit(e: Expression, role: String): String = {
+      require(e.foldable, s"similar_to $role must be a literal")
+      val v = e.eval(null)
+      require(v != null, s"similar_to $role must be non-null")
+      v.toString
+    }
+    val esc = if (es.length > 2) Some({
+      val s = lit(es(2), "escape"); require(s.length == 1,
+        s"similar_to escape must be a single character, got '$s'"); s.charAt(0)
+    }) else None
+    org.apache.spark.sql.catalyst.expressions.RLike(es(0),
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        UTF8String.fromString(
+          FlinkScalarsUtil.similarToRegex(lit(es(1), "pattern"), esc)),
+        StringType))
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -122,17 +120,4 @@ case class HashCodeExpr(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.StringClassifyUtil.hashCode32($c)")
   override def prettyName: String = "hash_code"
   override protected def withNewChildInternal(c: Expression): HashCodeExpr = copy(child = c)
-}
-
-object StringClassify {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def add(name: String, clazz: Class[_], f: Seq[Expression] => Expression): Unit =
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(clazz.getName, name), f)
-    add("is_decimal", classOf[IsDecimalExpr], es => IsDecimalExpr(es.head))
-    add("is_digit", classOf[IsDigitExpr], es => IsDigitExpr(es.head))
-    add("is_alpha", classOf[IsAlphaExpr], es => IsAlphaExpr(es.head))
-    add("hash_code", classOf[HashCodeExpr], es => HashCodeExpr(es.head))
-  }
 }

@@ -3,11 +3,9 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -94,21 +92,6 @@ object TextHashes {
       i += 1
     }
     mins
-  }
-
-  /** Register `simhash60(array<string>)` and `minhash32(array<string>)`
-    * into the session's function registry so they are usable from
-    * `expr(...)` / `spark.sql(...)` like any built-in. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.registerFunction(
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60Expr].getName, "simhash60"),
-      (exprs: Seq[Expression]) => SimHash60Expr(exprs.head))
-    reg.registerFunction(
-      FunctionIdentifier("minhash32"),
-      new ExpressionInfo(classOf[MinHash32Expr].getName, "minhash32"),
-      (exprs: Seq[Expression]) => MinHash32Expr(exprs.head))
   }
 }
 

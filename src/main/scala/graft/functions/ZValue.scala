@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
@@ -60,10 +59,4 @@ object ZValue {
   import org.apache.spark.sql.graftshim.ColumnShim.{column, expression}
 
   def zValue(x: Column, y: Column): Column = column(ZValueExpr(expression(x), expression(y)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("z_value"),
-      new ExpressionInfo(classOf[ZValueExpr].getName, "z_value"),
-      es => ZValueExpr(es.head, es(1)))
 }

@@ -489,7 +489,7 @@ object Dedup {
     * [[minhashEval]] scores it against ground truth. */
   private[graft] def minhashCandidatesWithJ(s: SparkSession, docs: DataFrame,
                           maxBucket: Int): DataFrame = {
-    TextHashes.register(s)
+    graft.GraftSession.install(s)
     val ds = docs
       .withColumn("toks", tokens(col("text")))
       .withColumn("sh", shingles(col("toks")))
@@ -658,7 +658,7 @@ object Dedup {
   /** SimHash near-dup pairs: 60-bit signature, banded into 4 x 15-bit chunks
     * for candidate generation, verified by Hamming distance <= 12. */
   def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    TextHashes.register(s)
+    graft.GraftSession.install(s)
     val ds = Tables(s, dir, "documents")
       .withColumn("toks", tokens(col("text")))
       .select(col("doc_id"), expr("simhash60(toks)").as("sim"))

@@ -57,7 +57,7 @@ object ScalarFuncs {
     * NULL on out-of-range where Spark's element_at is 1-based and throws) —
     * a native codegen expr in graft.functions.FlinkScalars. */
   def strings2(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.FlinkScalars.register(s)
+    graft.GraftSession.install(s)
     Tables(s, dir, "part").selectExpr(
       "p_partkey",
       "overlay(p_name PLACING '###' FROM 3 FOR 2) AS ovl",
@@ -111,7 +111,7 @@ object ScalarFuncs {
     * codegen expr truncate_num; the oracle emulates with trunc(x*10^n)/10^n
     * (identical IEEE multiply/floor/divide on both engines). */
   def math2(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.FlinkScalars.register(s)
+    graft.GraftSession.install(s)
     Tables(s, dir, "part").selectExpr(
       "p_partkey",
       "truncate_num(p_retailprice, 2) AS t2",
@@ -153,7 +153,7 @@ object ScalarFuncs {
     * via date_trunc because Spark counts COMPLETE units while DuckDB's
     * date_diff counts boundary crossings — aligned inputs make them agree. */
   def datetime2(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.FlinkScalars.register(s)
+    graft.GraftSession.install(s)
     Tables(s, dir, "orders").selectExpr(
       "o_orderkey",
       "date_format(from_utc_timestamp(o_orderdate, '+09:00'), 'yyyy-MM-dd HH:mm:ss') AS cvt",
@@ -186,7 +186,7 @@ object ScalarFuncs {
     * discriminating rows: an engine that forgot escape handling or dot
     * literalization flips them to true. */
   def similar(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.FlinkScalars.register(s)
+    graft.GraftSession.install(s)
     Tables(s, dir, "part").selectExpr(
       "p_partkey",
       "similar_to(p_name, '%(bolt|rod)%') AS sim_alt",
@@ -237,7 +237,7 @@ object ScalarFuncs {
     * native codegen expressions (graft.functions.StringClassify): IS_DECIMAL,
     * IS_DIGIT, IS_ALPHA, HASH_CODE (ref SqlFunctionUtils, SURVEY.md §2.8). */
   def classify(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.StringClassify.register(s)
+    graft.GraftSession.install(s)
     Tables(s, dir, "part").selectExpr(
       "p_partkey",
       "is_decimal(cast(p_size AS STRING)) AS dec_int",

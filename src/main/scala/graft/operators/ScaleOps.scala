@@ -67,14 +67,8 @@ object ScaleOps {
       // coalescing pass hiding the split
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val df = skewJoinPlan(s, dir)
-      df.localCheckpoint(true) // materialize under the scoped confs
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
+    graft.GraftSession.withConf(s, confs: _*) {
+      skewJoinPlan(s, dir).localCheckpoint(true) // materialize under the scoped confs
     }
   }
 

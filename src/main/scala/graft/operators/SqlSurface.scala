@@ -428,11 +428,7 @@ object SqlSurface {
 
   def asofPattern(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir)
-    import graft.plans.{AsOfPatternRule, AsOfStrategy}
-    if (!s.experimental.extraOptimizations.contains(AsOfPatternRule))
-      s.experimental.extraOptimizations = s.experimental.extraOptimizations :+ AsOfPatternRule
-    if (!s.experimental.extraStrategies.contains(AsOfStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ AsOfStrategy
+    graft.GraftSession.install(s)
     s.sql(asofPatternSql)
   }
 

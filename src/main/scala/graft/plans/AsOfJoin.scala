@@ -203,8 +203,7 @@ object AsOfJoin {
             probeKey: String, buildKey: String,
             probeTime: String, buildTime: String): DataFrame = {
     val s: SparkSession = probe.sparkSession
-    if (!s.experimental.extraStrategies.contains(AsOfStrategy))
-      s.experimental.extraStrategies = s.experimental.extraStrategies :+ AsOfStrategy
+    graft.GraftSession.install(s)
     val lPlan = probe.queryExecution.analyzed
     val rPlan = build.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -151,9 +151,8 @@ object JdbcDemo {
             }
           }
       }
-    val q = graft.streaming.StreamSource
-      .checkpointDir(s, s"jdbc-${s.sparkContext.applicationId}").start(sink)
-    try q.processAllAvailable() finally q.stop()
+    graft.streaming.StreamSource
+      .checkpointDir(s, s"jdbc-${s.sparkContext.applicationId}").drain(sink)
 
     s.read.format("jdbc")
       .option("url", u).option("driver", driver)

@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Each query below runs a real streaming job to completion, then audits
   * its state store and returns the STATE contents (not the sink) — the
-  * oracle recomputes what the final state must be from the raw table.
+  * oracle recomputes what the final state must be from the raw table. The
+  * returned frame is a lazy `statestore` scan of the checkpoint, so the
+  * checkpoint dir must outlive the call and is kept.
   */
 object StateRead {
 
@@ -36,10 +38,9 @@ object StateRead {
     val agg = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
-    val q = ckpt.start(agg.writeStream.format("memory")
+    ckpt.run(agg.writeStream.format("memory")
       .queryName(s"state_agg_${System.nanoTime()}")
       .outputMode("update"))
-    q.processAllAvailable(); q.stop()
     s.read.format("statestore").load(ckpt.path)
       .select(col("key.user_id").as("user_id"),
         col("value.count").as("cnt"),
@@ -55,10 +56,9 @@ object StateRead {
     val dd = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")
-    val q = ckpt.start(dd.writeStream.format("memory")
+    ckpt.run(dd.writeStream.format("memory")
       .queryName(s"state_dedup_${System.nanoTime()}")
       .outputMode("append"))
-    q.processAllAvailable(); q.stop()
     s.read.format("statestore").load(ckpt.path)
       .select(col("key.user_id").as("user_id"),
         col("key.event_type").as("event_type"))

@@ -36,56 +36,49 @@ object CdcStream {
     val changelog = CdcFormats.debeziumChangelog(raw, CdcFormats.payload)
 
     @volatile var current: Option[String] = None
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
-    try {
-      val sink = changelog.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val sess = batch.sparkSession
-          // net action per key within the batch: the max-offset event
-          // (-U never wins: its paired +U shares the offset and sorts above
-          // it via the kind rank, mirroring emission order)
-          val acts = batch
-            .groupBy(col("o_orderkey"))
-            .agg(max_by(
-              struct(col("offset"), col("kind"), col("o_custkey"),
-                col("o_orderstatus"), col("o_totalprice")),
-              struct(col("offset"), (col("kind") === "+U").cast("int").as("r")))
-              .as("w"))
-            .select(col("o_orderkey"), col("w.offset").as("offset"),
-              col("w.kind").as("kind"), col("w.o_custkey").as("o_custkey"),
-              col("w.o_orderstatus").as("o_orderstatus"),
-              col("w.o_totalprice").as("o_totalprice"))
-            .withColumn("alive", col("kind") =!= "-D")
-            .drop("kind")
-          if (!acts.isEmpty) {
-            val merged = current match {
-              case None => acts
-              case Some(prev) =>
-                val target = sess.read.parquet(prev)
-                // offset-ordered last-writer-wins between target and batch
-                target.unionByName(acts)
-                  .groupBy(col("o_orderkey"))
-                  .agg(max_by(struct(col("offset"), col("alive"),
-                    col("o_custkey"), col("o_orderstatus"), col("o_totalprice")),
-                    col("offset")).as("w"))
-                  .select(col("o_orderkey"), col("w.offset").as("offset"),
-                    col("w.alive").as("alive"), col("w.o_custkey").as("o_custkey"),
-                    col("w.o_orderstatus").as("o_orderstatus"),
-                    col("w.o_totalprice").as("o_totalprice"))
-            }
-            val out = s"$root/v$batchId"
-            merged.write.mode("overwrite").parquet(out)
-            current = Some(out)
+    val sink = changelog.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val sess = batch.sparkSession
+        // net action per key within the batch: the max-offset event
+        // (-U never wins: its paired +U shares the offset and sorts above
+        // it via the kind rank, mirroring emission order)
+        val acts = batch
+          .groupBy(col("o_orderkey"))
+          .agg(max_by(
+            struct(col("offset"), col("kind"), col("o_custkey"),
+              col("o_orderstatus"), col("o_totalprice")),
+            struct(col("offset"), (col("kind") === "+U").cast("int").as("r")))
+            .as("w"))
+          .select(col("o_orderkey"), col("w.offset").as("offset"),
+            col("w.kind").as("kind"), col("w.o_custkey").as("o_custkey"),
+            col("w.o_orderstatus").as("o_orderstatus"),
+            col("w.o_totalprice").as("o_totalprice"))
+          .withColumn("alive", col("kind") =!= "-D")
+          .drop("kind")
+        if (!acts.isEmpty) {
+          val merged = current match {
+            case None => acts
+            case Some(prev) =>
+              val target = sess.read.parquet(prev)
+              // offset-ordered last-writer-wins between target and batch
+              target.unionByName(acts)
+                .groupBy(col("o_orderkey"))
+                .agg(max_by(struct(col("offset"), col("alive"),
+                  col("o_custkey"), col("o_orderstatus"), col("o_totalprice")),
+                  col("offset")).as("w"))
+                .select(col("o_orderkey"), col("w.offset").as("offset"),
+                  col("w.alive").as("alive"), col("w.o_custkey").as("o_custkey"),
+                  col("w.o_orderstatus").as("o_orderstatus"),
+                  col("w.o_totalprice").as("o_totalprice"))
           }
-          ()
+          val out = s"$root/v$batchId"
+          merged.write.mode("overwrite").parquet(out)
+          current = Some(out)
         }
-      val q = StreamSource.checkpointDir(s, "cdc").start(sink)
-      q.processAllAvailable()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        ()
+      }
+    StreamSource.checkpointDir(s, "cdc").drain(sink, StreamSource.StreamShuffle)
 
     val fin = current.map(p => s.read.parquet(p))
       .getOrElse(s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),

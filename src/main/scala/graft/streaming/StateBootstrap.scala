@@ -45,12 +45,15 @@ object StateBootstrap {
     * rebuilding them per invocation was fixture prep inside the timed
     * region (r16 optimization, guide §1; the sentinel-memo precedent).
     * In-process only: a fresh JVM always rebuilds from the parquet inputs,
-    * so a stale fixture can never cross testdata drops. */
+    * so a stale fixture can never cross testdata drops. The memoized
+    * checkpoints are read again by every later call, so their dirs are
+    * kept (`Checkpoint.run`, not `drain`); so is rescale's new-job
+    * checkpoint, which [[rescaleRun]] returns for inspection. */
   private val prepMemo = scala.collection.concurrent.TrieMap.empty[String, Any]
   // synchronized (r17, the CdcFormats.roundTrip discipline): the builders
-  // write fixture dirs and (surgery/rescale) temporarily flip the session's
-  // shuffle.partitions — two concurrent first-callers must not interleave
-  // those side effects (callers are sequential today; cheap insurance)
+  // write fixture dirs and checkpoints — two concurrent first-callers must
+  // not interleave those side effects (callers are sequential today; cheap
+  // insurance)
   private def prepOnce[T](key: String)(build: => T): T =
     synchronized(prepMemo.getOrElseUpdate(key, build)).asInstanceOf[T]
 
@@ -160,10 +163,9 @@ object StateBootstrap {
       val folded = hist.groupByKey(_.user_id)
         .flatMapGroupsWithState[BootState, UserTotal](
           OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-      val q1 = ck.start(folded.toDF().writeStream.format("memory")
+      ck.run(folded.toDF().writeStream.format("memory")
         .queryName(s"surgery_hist_${System.nanoTime()}")
         .outputMode("update"))
-      try q1.processAllAvailable() finally q1.stop()
 
       // the live half + one flush marker per user — the new query's stream
       // fixture, equally a given input
@@ -228,7 +230,6 @@ object StateBootstrap {
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val partKey = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(partKey)
     val (cutoff, liveDirPrep, ckptA) = prepOnce(s"rescale:$dir:$pOld") {
       val mm = ev.agg(expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head()
       val cut = if (mm.isNullAt(0)) 0L else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
@@ -240,18 +241,14 @@ object StateBootstrap {
       val histDir = s"$base/hist"
       ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
       val ck = StreamSource.checkpointDir(s, s"rescale$pOld")
-      s.conf.set(partKey, pOld.toString)
-      try {
-        val hist = s.readStream.schema(ev.schema).parquet(histDir)
-          .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-        val folded = hist.groupByKey(_.user_id)
-          .flatMapGroupsWithState[BootState, UserTotal](
-            OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-        val q1 = ck.start(folded.toDF().writeStream.format("memory")
-          .queryName(s"rescale_hist_${System.nanoTime()}")
-          .outputMode("update"))
-        try q1.processAllAvailable() finally q1.stop()
-      } finally s.conf.set(partKey, prev)
+      val hist = s.readStream.schema(ev.schema).parquet(histDir)
+        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+      val folded = hist.groupByKey(_.user_id)
+        .flatMapGroupsWithState[BootState, UserTotal](
+          OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
+      ck.run(folded.toDF().writeStream.format("memory")
+        .queryName(s"rescale_hist_${System.nanoTime()}")
+        .outputMode("update"), partKey -> pOld.toString)
 
       // the live half + flush markers — the new job's stream fixture
       val ld = s"$base/live"
@@ -278,18 +275,13 @@ object StateBootstrap {
     // still report)
     val ckptB = StreamSource.checkpointDir(s, s"rescale$pNew")
     val name = s"state_rescale_${System.nanoTime()}"
-    s.conf.set(partKey, pNew.toString)
-    try {
-      val live = s.readStream.schema(ev.schema).parquet(liveDirPrep)
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val out = live.groupByKey(_.user_id)
-        .flatMapGroupsWithState[BootState, UserTotal](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout(), seeded)(foldFn)
-      val q2 = ckptB.start(out.toDF().writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update"))
-      try q2.processAllAvailable() finally q2.stop()
-    } finally s.conf.set(partKey, prev)
+    val live = s.readStream.schema(ev.schema).parquet(liveDirPrep)
+      .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+    val out = live.groupByKey(_.user_id)
+      .flatMapGroupsWithState[BootState, UserTotal](
+        OutputMode.Update(), GroupStateTimeout.NoTimeout(), seeded)(foldFn)
+    ckptB.run(out.toDF().writeStream.format("memory").queryName(name).outputMode("update"),
+      partKey -> pNew.toString)
 
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("cnt").desc)

@@ -40,33 +40,29 @@ object StreamBloom {
       .groupBy("w").agg(expr("bit_or(m)").as("bits"))
     val ckpt = StreamSource.checkpointDir(s, "bloom")
     val name = s"stream_bloom_${System.nanoTime()}"
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
-    try {
-      val q = ckpt.start(words.writeStream.format("memory").queryName(name)
-        .outputMode("update"))
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     // the checkpoint is the artifact: read the final agg state as the
-    // bitmap (value field name is the internal aggregate's — discover it).
-    // An empty corpus commits no batch and writes no store — the bitmap
-    // is legitimately all-zero then.
+    // bitmap (value field name is the internal aggregate's — discover it),
+    // then delete it. An empty corpus commits no batch and writes no store
+    // — the bitmap is legitimately all-zero then.
     val bm = Array.fill(Dedup.BloomBits / 64)(0L)
-    if (new java.io.File(s"${ckpt.path}/state").isDirectory) {
-      val st = s.read.format("statestore").load(ckpt.path)
-      // the bit_or aggregate's buffer is the single long in the state value
-      // struct; if a Spark upgrade ever adds another long bookkeeping field
-      // this would silently read the wrong column — fail loudly instead
-      val longFields = st.schema("value").dataType.asInstanceOf[StructType]
-        .fields.filter(_.dataType == LongType)
-      require(longFields.length == 1,
-        s"expected exactly one LongType field in the agg state value struct " +
-          s"(the bit_or buffer), found ${longFields.map(_.name).mkString(", ")}")
-      val vField = longFields.head.name
-      st.select(col("key.w").as("w"), col(s"value.$vField").as("bits"))
-        .collect().foreach(r => bm(r.getInt(0)) = r.getLong(1))
-    }
+    try {
+      ckpt.run(words.writeStream.format("memory").queryName(name).outputMode("update"),
+        StreamSource.StreamShuffle)
+      if (new java.io.File(s"${ckpt.path}/state").isDirectory) {
+        val st = s.read.format("statestore").load(ckpt.path)
+        // the bit_or aggregate's buffer is the single long in the state value
+        // struct; if a Spark upgrade ever adds another long bookkeeping field
+        // this would silently read the wrong column — fail loudly instead
+        val longFields = st.schema("value").dataType.asInstanceOf[StructType]
+          .fields.filter(_.dataType == LongType)
+        require(longFields.length == 1,
+          s"expected exactly one LongType field in the agg state value struct " +
+            s"(the bit_or buffer), found ${longFields.map(_.name).mkString(", ")}")
+        val vField = longFields.head.name
+        st.select(col("key.w").as("w"), col(s"value.$vField").as("bits"))
+          .collect().foreach(r => bm(r.getInt(0)) = r.getLong(1))
+      }
+    } finally ckpt.delete()
     Dedup.bloomVerdict(s, dir, bm)
   }
 }

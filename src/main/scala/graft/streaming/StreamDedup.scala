@@ -94,7 +94,7 @@ object StreamDedup {
     * verified pair), which the DuckDB oracle recomputes from scratch. */
   def minhashStreamKeep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    TextHashes.register(s)
+    graft.GraftSession.install(s)
     val segDir = prepare(s, dir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
@@ -206,7 +206,7 @@ object StreamDedup {
   def minhashStreamKeepTtl(s: SparkSession, dir: String, horizonDocs: Long,
                            maxFilesPerTrigger: Int): DataFrame = {
     import s.implicits._
-    TextHashes.register(s)
+    graft.GraftSession.install(s)
     val segDir = prepare(s, dir)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),

@@ -55,8 +55,7 @@ object StreamIterate {
           if (fb.limit(1).count() > 0) fb.write.mode("append").parquet(src)
         } finally { batch.unpersist(); () }
       }
-    val q = StreamSource.checkpointDir(s, "iterate").start(sink)
-    q.processAllAvailable(); q.stop()
+    StreamSource.checkpointDir(s, "iterate").drain(sink)
     s.read.parquet(exitDir)
   }
 

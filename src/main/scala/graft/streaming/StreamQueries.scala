@@ -493,27 +493,21 @@ object StreamQueries {
     * latest event changes type retracts (-U) their value from the old
     * type's aggregate and inserts (+U) into the new — min/max recover
     * through the multiset state. Two chained stateful stages (normalize →
-    * aggregate) in one append-mode query, same-key-free so the
-    * checkCorrectness guard is disabled for the run. Final answer = each
-    * group's max-version emission. */
+    * aggregate) in one append-mode query, same-key-free so it starts
+    * through runToTableChained. Final answer = each group's max-version
+    * emission. */
   def retractAgg(s: SparkSession, dir: String): DataFrame = {
-    val prev = s.conf.get(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-    s.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
-    try {
-      val out = StatefulOps.retractableAgg(
-        StatefulOps.valueChangelog(StreamSource.eventsTyped(s, dir))).toDF()
-      val t = StreamSource.runToTable(s, out, "stream_retract_agg", "append")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("ver").desc)
-      t.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .select(col("event_type"), col("cnt"),
-          round(col("sum_value"), 2).as("sum_value"),
-          round(col("min_value"), 2).as("min_value"),
-          round(col("max_value"), 2).as("max_value"))
-        .orderBy("event_type")
-    } finally s.conf.set(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled", prev)
+    val out = StatefulOps.retractableAgg(
+      StatefulOps.valueChangelog(StreamSource.eventsTyped(s, dir))).toDF()
+    val t = StreamSource.runToTableChained(s, out, "stream_retract_agg", "append")
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("event_type").orderBy(col("ver").desc)
+    t.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
+      .select(col("event_type"), col("cnt"),
+        round(col("sum_value"), 2).as("sum_value"),
+        round(col("min_value"), 2).as("min_value"),
+        round(col("max_value"), 2).as("max_value"))
+      .orderBy("event_type")
   }
 
   /** FULL outer: both sides thinned by value >= 90 so unmatched-left,

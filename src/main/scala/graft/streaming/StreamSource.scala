@@ -138,9 +138,10 @@ object StreamSource {
   }
 
   /** runToTable for CHAINED stateful operators (sortedEvents → operator).
-    * Only the operators keyed by event_type (the topN `_ooo` twins) still
-    * need it: a user_id-keyed operator runs inside the sorter's own
-    * operator (StatefulOps.sortedThen), which passes the check below.
+    * Only the operators keyed by event_type (the topN `_ooo` twins and
+    * StreamQueries.retractAgg) still need it: a user_id-keyed operator runs
+    * inside the sorter's own operator (StatefulOps.sortedThen), which
+    * passes the check below.
     * Spark's global-watermark correctness check flags any stateful op
     * downstream of one that emits rows older than the watermark, because
     * a downstream op with watermark-based eviction COULD silently drop
@@ -149,17 +150,14 @@ object StreamSource {
     * columns — they have no late-row predicate, so nothing is dropped;
     * the DuckDB oracle hash (exact row set) re-proves it per run. The
     * check is consulted only during query PLANNING (the unsupported-
-    * operation walk at start()), so the session flag is restored the
-    * moment start() returns — the window where a concurrently-planned
-    * query could observe the flipped flag is the planning call itself,
-    * not the whole run; the check stays ON for every other query. */
+    * operation walk at start()), so the flag is off only in
+    * [[Checkpoint.start]]'s window — a concurrently-planned query could
+    * observe it there, not during the drain; the check stays ON for every
+    * other query. */
   def runToTableChained(s: SparkSession, df: DataFrame, name: String,
-                        mode: String): DataFrame = {
-    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prev = s.conf.get(key, "true")
-    s.conf.set(key, "false")
-    runToTable(s, df, name, mode, afterStart = () => s.conf.set(key, prev))
-  }
+                        mode: String): DataFrame =
+    runToTable(s, df, name, mode,
+      conf = Seq("spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false"))
 
   /** Streaming checkpoint root: tmpfs when the host has one. On a real
     * cluster the checkpoint store is remote (HDFS/object store) with its
@@ -176,24 +174,49 @@ object StreamSource {
     * read from the query's hadoop conf by `CheckpointFileManager.create`). */
   private[graft] val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Shuffle partitions of graft's streaming queries. Measured at sf0.1,
+    * the replay-driven queries spend their time in per-partition
+    * state-store lifecycle (one store load and commit per stateful op per
+    * batch), so 4 instead of 8 cuts ~10-13% off every streaming query
+    * (q_stream_dyn_session_ooo 7.12->6.22 s warm, q_stream_tumble
+    * 2.21->2.01 s); 2 re-serializes the work and loses the gain.
+    * Production unbounded jobs size this to key cardinality. */
+  private[graft] val StreamShuffle: (String, String) = "spark.sql.shuffle.partitions" -> "4"
+
   /** A fresh checkpoint dir for one streaming query; `start` is the only way
     * to start a query on it. */
   final class Checkpoint private[StreamSource] (s: SparkSession, val path: String) {
-    /** Start `w` on this dir with [[LocalCheckpointFileManager]] installed,
-      * then give the caller's session its previous value back. The offset,
-      * commit and state logs read the setting from the stream's own session,
-      * cloned inside start(). A file source's log reads it from the caller's
-      * session when the stream thread builds its sources, after start()
-      * returns, so the setting is held until the query has initialized. */
-    def start[T](w: DataStreamWriter[T]): StreamingQuery = {
-      val prev = s.conf.getOption(FileManagerKey)
-      s.conf.set(FileManagerKey, classOf[LocalCheckpointFileManager].getName)
-      try {
+    /** Start `w` on this dir with [[LocalCheckpointFileManager]] and `conf`
+      * set on the caller's session, then give each key its previous value
+      * back. The offset, commit and state logs, and every setting the
+      * query plans with, are read from the stream's own session, cloned
+      * inside start(). A file source's log reads the file manager from the
+      * caller's session when the stream thread builds its sources, after
+      * start() returns, so the settings are held until the query has
+      * initialized. */
+    def start[T](w: DataStreamWriter[T], conf: (String, String)*): StreamingQuery =
+      graft.GraftSession.withConf(s,
+          (FileManagerKey -> classOf[LocalCheckpointFileManager].getName) +: conf: _*) {
         val q = w.option("checkpointLocation", path).start()
         q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(Long.MaxValue)
         q
-      } finally prev.fold(s.conf.unset(FileManagerKey))(s.conf.set(FileManagerKey, _))
+      }
+
+    /** [[start]] `w`, process all available input, and stop the query, also
+      * when processing throws. The dir stays, for callers that read the
+      * checkpoint afterwards; the stopped query keeps its progress. */
+    def run[T](w: DataStreamWriter[T], conf: (String, String)*): StreamingQuery = {
+      val q = start(w, conf: _*)
+      try q.processAllAvailable() finally q.stop()
+      q
     }
+
+    /** [[run]], then [[delete]] the dir: for queries whose checkpoint
+      * nothing reads once they have stopped. */
+    def drain[T](w: DataStreamWriter[T], conf: (String, String)*): StreamingQuery =
+      try run(w, conf: _*) finally delete()
+
+    def delete(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
   }
 
   /** `$ckptRoot/$name-$nanoTime`, written through LocalCheckpointFileManager
@@ -202,17 +225,18 @@ object StreamSource {
     new Checkpoint(s, s"$ckptRoot/$name-${System.nanoTime()}")
 
   /** Run `df` (a streaming DataFrame) to completion into a memory sink and
-    * return the materialized result. `afterStart` runs as soon as the query
-    * has been planned and started — even when start() itself throws. The
-    * query's checkpoint dir is deleted once it has stopped: the result
-    * lives in the memory sink, and nothing restarts the query.
+    * return the materialized result. The query starts with `conf` and
+    * [[StreamShuffle]] in [[Checkpoint.start]]'s window. `onDrained` sees
+    * the stopped query (the hook that lets callers read its final progress,
+    * e.g. the state-store row counts of the TTL-bound demonstrations)
+    * before its checkpoint dir is deleted: the result lives in the memory
+    * sink, and nothing restarts the query.
     *
     * State-store sizing: each shuffle partition materializes one state-store
     * instance per stateful operator per batch (a delta file and its checksum
     * under the checkpoint dir, plus the load of the previous version). For
-    * the bounded replays here that fixed cost dominates the actual work, so
-    * streaming queries run with a smaller shuffle fan-out; production
-    * unbounded jobs size this to key cardinality.
+    * the bounded replays here that fixed cost dominates the actual work,
+    * hence the smaller [[StreamShuffle]] fan-out.
     *
     * Most of that per-batch floor was process forks, not disk: Hadoop's
     * local filesystem without libhadoop forks `chmod` and `readlink` for
@@ -220,35 +244,13 @@ object StreamSource {
     * the out-of-order replays). The query therefore starts through
     * [[checkpointDir]], whose [[LocalCheckpointFileManager]] writes with
     * java.nio syscalls instead. */
-  def runToTable(s: SparkSession, df: DataFrame, name: String,
-                 mode: String, afterStart: () => Unit = () => (),
-                 // runs after the drain, before stop — the hook that lets
-                 // callers read the query's final progress (state-store
-                 // row counts for the TTL-bound demonstrations)
-                 onDrained: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    // default 4 (was 8): measured at sf0.1, the replay-driven queries spend
-    // their time in per-partition state-store lifecycle (one store load and
-    // commit per stateful op per batch), so halving the fan-out cuts ~10-13%
-    // off every streaming query (q_stream_dyn_session_ooo 7.12->6.22 s warm,
-    // q_stream_tumble 2.21->2.01 s); 2 partitions re-serializes the work
-    // and loses the gain. GRAFT_STREAM_SHUFFLE overrides for experiments.
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+  def runToTable(s: SparkSession, df: DataFrame, name: String, mode: String,
+                 onDrained: StreamingQuery => Unit = _ => (),
+                 conf: Seq[(String, String)] = Nil): DataFrame = {
     val ckpt = checkpointDir(s, name)
-    try {
-      val q: StreamingQuery =
-        try ckpt.start(
-          df.writeStream.format("memory").queryName(name).outputMode(mode))
-        finally afterStart()
-      try {
-        q.processAllAvailable()
-        onDrained(q)
-      } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt.path))
-    }
+    try onDrained(ckpt.run(df.writeStream.format("memory").queryName(name).outputMode(mode),
+      StreamShuffle +: conf: _*))
+    finally ckpt.delete()
     s.table(name)
   }
 }

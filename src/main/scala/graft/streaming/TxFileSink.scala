@@ -345,10 +345,9 @@ object TxFileSink {
       java.lang.Integer.toHexString(dir.hashCode) + "-" + System.nanoTime()
     // engine state on the tmpfs ckpt root; the sink's own 2PC manifests
     // (the demonstrated contract) stay under `out`
-    val q = StreamSource.checkpointDir(s, "2pc").start(
+    StreamSource.checkpointDir(s, "2pc").drain(
       graft.sources.FileTopic.readStream(s, topic).writeStream
         .foreachBatch { (b: DataFrame, id: Long) => commitEpoch(b, id, out) })
-    try { q.processAllAvailable() } finally q.stop()
     readCommitted(s, out)
       .select(col("key"), split(col("value"), "\\|").getItem(0).cast("long").as("eid"))
       .groupBy(col("key"))
@@ -369,7 +368,7 @@ object TxFileSink {
     // commit machinery rather than small-file churn
     val rollRows = math.max(200L,
       graft.Tables(s, dir, "events").count() / 90).toInt
-    val q = StreamSource.checkpointDir(s, "rolling").start(
+    StreamSource.checkpointDir(s, "rolling").drain(
       graft.sources.FileTopic.readStream(s, topic)
         .select(col("key"), col("value"),
           split(col("value"), "\\|").getItem(1).as("day"))
@@ -377,7 +376,6 @@ object TxFileSink {
         .foreachBatch { (b: DataFrame, id: Long) =>
           rollingEpoch(b, id, out, "day", "value", maxRowsPerFile = rollRows)
         })
-    try { q.processAllAvailable() } finally q.stop()
     out
   }
 

@@ -58,9 +58,7 @@ object UpsertSink {
         }
         ()
       }
-    val q = StreamSource.checkpointDir(s, name).start(sink)
-    q.processAllAvailable()
-    q.stop()
+    StreamSource.checkpointDir(s, name).drain(sink)
     import s.implicits._
     current.map(p => s.read.parquet(p))
       .getOrElse(Seq.empty[(Long, Long)].toDF("user_id", "event_id"))

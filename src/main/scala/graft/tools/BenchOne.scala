@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Isolated re-timing of named queries under the same session config as
   * graft.Bench (usage: BenchOne <sfDir> <q1,q2,...> [reps]) — the tool for
@@ -14,21 +13,7 @@ object BenchOne {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's hive-backed catalog: the comparison is only valid
-      // under the same session configuration
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore/benchone-${System.nanoTime()};create=true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse/benchone-${System.nanoTime()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("benchone")
     names.foreach { n =>
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.Similarity
 import graft.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: cross-validate the LSH-candidate embedding dedup against
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
 object CrossCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("crosscheck")
     val lsh = Similarity.cosineDedupKeep(spark, sfDir)
     val losers = Similarity.cosinePairs(spark, sfDir) // exact all-pairs, cos >= 0.5
       .select(col("vb").as("vec_id")).distinct()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Measurement aid: cost of TpcdsData.ensure() (24-view re-registration)
   * alone, repeated. Usage: EnsureTime <sfDir> [reps]. */
@@ -8,14 +7,7 @@ object EnsureTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("ensuretime")
     graft.tpcds.TpcdsData.ensure(spark, sfDir) // generation, if any, paid here
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()

@@ -1,17 +1,13 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection aid: prints the formatted physical plan of the named
   * queries (usage: Explain <sfDir> <q1,q2,...>). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.split(",").foreach { n =>
       println(s"===== $n =====")

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Job/stage-count audit for the mid-tier sweep (r17, guide §1): counts
   * Spark jobs and completed stages per declared query under the bench's
@@ -16,19 +15,7 @@ object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore/jobcount-${System.nanoTime()};create=true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse/jobcount-${System.nanoTime()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("jobcount")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasks = new java.util.concurrent.atomic.AtomicInteger(0)

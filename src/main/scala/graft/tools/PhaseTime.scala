@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Measurement aid (guide §1): splits a query invocation into
   *   build  — fixture ensure() + DataFrame construction + analysis,
@@ -14,19 +13,7 @@ object PhaseTime {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore/phasetime-${System.nanoTime()};create=true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse/phasetime-${System.nanoTime()}")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("phasetime")
     names.foreach { n =>
       (1 to reps).foreach { i =>
         val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Bulk plan dump for the optimization rounds (guide §1/§7.2): writes each
   * declared query's `explain("formatted")` text to <outDir>/<name>.txt plus
@@ -26,18 +25,7 @@ object PlanAudit {
     val only: Option[Set[String]] =
       if (args.length > 2 && args(2) != "all") Some(args(2).split(",").toSet)
       else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .enableHiveSupport()
-      .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=/tmp/graft-metastore/planaudit-${System.nanoTime()};create=true")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft-warehouse/planaudit-${System.nanoTime()}")
-      .getOrCreate()
+    val spark = graft.GraftSession.local("planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = new java.io.File(outDir)
     dir.mkdirs()

@@ -124,14 +124,7 @@ object ScaleBench {
       else if (cdcOnly) s"/tmp/graft-cdc$k"
       else if (streamOnly) s"/tmp/graft-stream$k"
       else if (layoutOnly) s"/tmp/graft-layout$k" else "/tmp/graft-sf1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("scalebench")
 
     def time(name: String)(f: => Long): (String, Double, Long) = {
       val t0 = System.nanoTime()
@@ -679,29 +672,21 @@ object ScaleBench {
       when(rand(7) < 0.5, lit(0L)).otherwise(col("l_orderkey")).as("k"),
       col("l_quantity"))
     val dim = ord.select(col("o_orderkey").as("k"), col("o_orderpriority")).limit(200000)
-    val skewResults = {
-      val prev = Seq("spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.autoBroadcastJoinThreshold")
-        .map(c => c -> spark.conf.getOption(c))
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force shuffle join
-      val r = try {
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        val aqe = time("skew_join_aqe") {
-          skewed.join(dim, "k").groupBy("o_orderpriority").count().count()
-        }
-        val salted = time("skew_join_salted") {
-          val salt = 16
-          val saltedFact = skewed.withColumn("salt", (rand(11) * salt).cast("int"))
-          val saltedDim = dim.withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
-          saltedFact.join(saltedDim, Seq("k", "salt"))
-            .groupBy("o_orderpriority").count().count()
-        }
-        Seq(aqe, salted)
-      } finally prev.foreach { case (c, v) =>
-        v.fold(spark.conf.unset(c))(spark.conf.set(c, _)) }
-      r
+    val skewResults = graft.GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force shuffle join
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true") {
+      val aqe = time("skew_join_aqe") {
+        skewed.join(dim, "k").groupBy("o_orderpriority").count().count()
+      }
+      val salted = time("skew_join_salted") {
+        val salt = 16
+        val saltedFact = skewed.withColumn("salt", (rand(11) * salt).cast("int"))
+        val saltedDim = dim.withColumn("salt", explode(sequence(lit(0), lit(salt - 1))))
+        saltedFact.join(saltedDim, Seq("k", "salt"))
+          .groupBy("o_orderpriority").count().count()
+      }
+      Seq(aqe, salted)
     }
 
     val all = results ++ skewResults

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Isolated re-timing of individual ScaleBench entries against an already-
   * inflated dir (r17 diagnostic: attribute k=100 row movement to host I/O
@@ -11,14 +10,7 @@ object ScaleOne {
     val dir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("scaleone")
     val ops: Map[String, () => Long] = Map(
       "ngram_pairs" -> (() => graft.operators.Dedup.ngramJaccardPairs(spark, dir).count()),
       "ppjoin" -> (() => graft.operators.Dedup.ppjoinPairs(spark, dir).count()),

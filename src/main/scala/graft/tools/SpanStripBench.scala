@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A/B timing of the span-strip rewrite variants (naive exists-over-starts
@@ -11,14 +10,7 @@ object SpanStripBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("spanstrip")
     for (r <- 1 to reps; naive <- Seq(true, false)) {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()

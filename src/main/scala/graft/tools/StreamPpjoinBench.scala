@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Streaming-PPJoin deployment-dial rehearsal (r15, VERDICT r14 #1): the
   * k× inflated corpus run under state-store provider × trigger-size
@@ -26,25 +25,16 @@ object StreamPpjoinBench {
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val src = "/root/testdata/sf0.1"
     val out = s"/tmp/graft-llm$k"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("ppjoinbench")
     ScaleBench.inflateLlm(spark, src, out, k)
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val providers = Seq(
       "hdfs" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
       "rocksdb" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val triggers = Seq(1, 2, 4)
-    val prev = spark.conf.getOption(provKey)
     val results =
-      try {
-        for ((pname, pclass) <- providers; mft <- triggers) yield {
-          spark.conf.set(provKey, pclass)
+      for ((pname, pclass) <- providers; mft <- triggers)
+        yield graft.GraftSession.withConf(spark, provKey -> pclass) {
           spark.catalog.clearCache()
           // Spark-INTERNAL API (r15 ADVICE): forces the loaded provider
           // instances to unload so the next cell's providerClass conf is
@@ -59,7 +49,6 @@ object StreamPpjoinBench {
             f"[ppjoin-bench] provider=$pname%-8s mft=$mft $dt%7.2fs rows=$n")
           (s"${pname}_mft$mft", dt, n)
         }
-      } finally prev.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
     val total = results.map(_._2).sum
     println(f"""{"metric":"stream_ppjoin_bench","value":$total%.2f,"unit":"sec","k":$k,"queries":{${
       results.map { case (n, t, rows) => f""""$n":[$t%.2f,$rows]""" }.mkString(",")}}}""")

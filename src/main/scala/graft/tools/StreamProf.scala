@@ -1,19 +1,13 @@
 package graft.tools
 
 import graft.streaming.{StreamSource, StreamWindowAggs}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off profiling main for streaming-query overhead (usage: <sfDir>). */
 object StreamProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("streamprof")
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
@@ -33,14 +27,12 @@ object StreamProf {
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
     val q = time("start+drain") {
-      val q = StreamSource.checkpointDir(spark, "prof")
-        .start(agg.writeStream.format("memory").queryName("prof").outputMode("complete"))
-      q.processAllAvailable(); q
+      StreamSource.checkpointDir(spark, "prof")
+        .drain(agg.writeStream.format("memory").queryName("prof").outputMode("complete"))
     }
     q.recentProgress.foreach { p =>
       println(s"batch ${p.batchId}: rows=${p.numInputRows} durationMs=${p.durationMs}")
     }
-    q.stop()
     spark.stop()
   }
 }

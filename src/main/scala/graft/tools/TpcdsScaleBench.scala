@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** TPC-DS flagship rehearsal at the reference's own gate scale (r14,
   * VERDICT r13 #6): the reference's test_tpcds.sh runs dsdgen at SF=1;
@@ -27,46 +26,38 @@ object TpcdsScaleBench {
     val tag = args.headOption.getOrElse("sf1")
     val only: Option[Set[String]] = args.lift(1)
       .map(_.split(",").map(q => s"q_tpcdsr_${q.trim.stripPrefix("q_tpcdsr_")}").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("GRAFT_TPCDS_BROADCAST").foreach { b =>
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", b)
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", b)
-      System.err.println(s"[tpcds-scale] autoBroadcastJoinThreshold=$b")
+    val spark = graft.GraftSession.local("tpcdsscale")
+    val overrides =
+      sys.env.get("GRAFT_TPCDS_BROADCAST").toSeq.flatMap(b => Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> b,
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> b)) ++
+      sys.env.get("GRAFT_TPCDS_PARTITIONS").map("spark.sql.shuffle.partitions" -> _)
+    overrides.foreach { case (k, v) => System.err.println(s"[tpcds-scale] $k=$v") }
+    graft.GraftSession.withConf(spark, overrides: _*) {
+      val t0 = System.nanoTime()
+      graft.tpcds.TpcdsData.ensure(spark, tag)
+      val genSec = (System.nanoTime() - t0) / 1e9
+      System.err.println(f"[tpcds-scale] generate+register $tag: $genSec%.1fs")
+      val names = SparkEntry.queries.keys.filter(_.startsWith("q_tpcdsr_")).toSeq.sorted
+        .filter(n => only.forall(_.contains(n)))
+      val results = names.map { n =>
+        spark.catalog.clearCache()
+        val q0 = System.nanoTime()
+        val df = SparkEntry.queries(n)(spark, tag)
+        val rows = df.count()
+        val dt = (System.nanoTime() - q0) / 1e9
+        // final (post-AQE) physical plan: join-operator census
+        val plan = df.queryExecution.executedPlan.toString
+        val smj = "SortMergeJoin".r.findAllIn(plan).size
+        val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
+        System.err.println(f"[tpcds-scale] $n%-16s $dt%7.2fs rows=$rows%-8d smj=$smj bhj=$bhj")
+        (n, dt, rows, smj, bhj)
+      }
+      val total = results.map(_._2).sum
+      println(f"""{"metric":"tpcds_scale_bench","value":$total%.2f,"unit":"sec","tag":"$tag","gen_sec":$genSec%.1f,"queries":{${
+        results.map { case (n, t, r, smj, bhj) =>
+          f""""$n":[$t%.2f,$r,$smj,$bhj]""" }.mkString(",")}}}""")
     }
-    sys.env.get("GRAFT_TPCDS_PARTITIONS").foreach { p =>
-      spark.conf.set("spark.sql.shuffle.partitions", p)
-      System.err.println(s"[tpcds-scale] shuffle.partitions=$p")
-    }
-    val t0 = System.nanoTime()
-    graft.tpcds.TpcdsData.ensure(spark, tag)
-    val genSec = (System.nanoTime() - t0) / 1e9
-    System.err.println(f"[tpcds-scale] generate+register $tag: $genSec%.1fs")
-    val names = SparkEntry.queries.keys.filter(_.startsWith("q_tpcdsr_")).toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val results = names.map { n =>
-      spark.catalog.clearCache()
-      val q0 = System.nanoTime()
-      val df = SparkEntry.queries(n)(spark, tag)
-      val rows = df.count()
-      val dt = (System.nanoTime() - q0) / 1e9
-      // final (post-AQE) physical plan: join-operator census
-      val plan = df.queryExecution.executedPlan.toString
-      val smj = "SortMergeJoin".r.findAllIn(plan).size
-      val bhj = "BroadcastHashJoin".r.findAllIn(plan).size
-      System.err.println(f"[tpcds-scale] $n%-16s $dt%7.2fs rows=$rows%-8d smj=$smj bhj=$bhj")
-      (n, dt, rows, smj, bhj)
-    }
-    val total = results.map(_._2).sum
-    println(f"""{"metric":"tpcds_scale_bench","value":$total%.2f,"unit":"sec","tag":"$tag","gen_sec":$genSec%.1f,"queries":{${
-      results.map { case (n, t, r, smj, bhj) =>
-        f""""$n":[$t%.2f,$r,$smj,$bhj]""" }.mkString(",")}}}""")
     spark.stop()
   }
 }

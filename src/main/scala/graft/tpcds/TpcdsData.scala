@@ -826,8 +826,7 @@ object TpcdsData {
     val cat = s.sessionState.catalog
     tableNames.foreach { t =>
       val key = System.identityHashCode(s).toString + ":" + root + ":" + t
-      val stillOurs = !graft.Tables.memoDisabled &&
-        cat.getRawTempView(t).exists(cur => regMemo.get(key).exists(_ eq cur))
+      val stillOurs = cat.getRawTempView(t).exists(cur => regMemo.get(key).exists(_ eq cur))
       if (!stillOurs) {
         graft.Tables.cachedRead(s, s"$root/$t").createOrReplaceTempView(t)
         cat.getRawTempView(t).foreach(v => regMemo.put(key, v))

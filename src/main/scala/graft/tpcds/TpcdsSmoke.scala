@@ -1,11 +1,7 @@
 package graft.tpcds
-import org.apache.spark.sql.SparkSession
 object TpcdsSmoke {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GraftSession.local("tpcdssmoke")
     s.sparkContext.setLogLevel("ERROR")
     val t0 = System.nanoTime
     val root = TpcdsData.ensure(s, "/root/testdata/sf0.01")

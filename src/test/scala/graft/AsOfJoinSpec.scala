@@ -52,21 +52,18 @@ class AsOfJoinSpec extends SparkSpec {
   }
 
   test("large build side: co-partitioned sort-merge, and both paths agree") {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    val merge = GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (probe, build) = probeBuild
       val df = AsOfJoin(probe, build, "user_id", "v_user", "p_ts", "v_ts")
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("AsOfJoin") && !p.contains("AsOfJoinBroadcast"), s"plan:\n$p")
       assert(p.split("hashpartitioning").length >= 3, s"expected co-partitioning exchanges:\n$p")
-      val merge = df.select("p_id", "v_id").collect()
+      df.select("p_id", "v_id").collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      val bcast = AsOfJoin(probeBuild._1, probeBuild._2, "user_id", "v_user", "p_ts", "v_ts")
-        .select("p_id", "v_id").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-      assert(merge === bcast)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    val bcast = AsOfJoin(probeBuild._1, probeBuild._2, "user_id", "v_user", "p_ts", "v_ts")
+      .select("p_id", "v_id").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
+    assert(merge === bcast)
   }
 }

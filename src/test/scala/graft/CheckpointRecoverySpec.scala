@@ -113,29 +113,31 @@ class CheckpointRecoverySpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
     val ck = StreamSource.checkpointDir(spark, "test-interop")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val feeds = Seq(
-      Seq(ev(1, 10, 7, "view", 10.0), ev(2, 11, 8, "view", 1.0)),
-      Seq(ev(3, 20, 7, "click", 5.0)),
-      Seq(ev(4, 30, 7, "purchase", 1.0), ev(5, 31, 8, "click", 2.0)))
-    for ((graftMgr, feed) <- viaGraft.zip(feeds)) {
-      val w = input.toDF().groupBy("user_id")
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum"))
-        .writeStream.outputMode("update")
-        .foreachBatch { (df: DataFrame, _: Long) =>
-          val rows = df.as[(Long, Long, Double)].collect().sortBy(_._1)
-          out.synchronized { out ++= rows }
-          ()
-        }
-      val q = if (graftMgr) ck.start(w)
-        else w.option("checkpointLocation", ck.path).start()
-      input.addData(feed)
-      try q.processAllAvailable() finally q.stop()
-    }
-    val state = spark.read.format("statestore").load(ck.path)
-      .select(col("key.user_id"), col("value.count"), col("value.sum"))
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    (out.synchronized(out.toList), state)
+    try {
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      val feeds = Seq(
+        Seq(ev(1, 10, 7, "view", 10.0), ev(2, 11, 8, "view", 1.0)),
+        Seq(ev(3, 20, 7, "click", 5.0)),
+        Seq(ev(4, 30, 7, "purchase", 1.0), ev(5, 31, 8, "click", 2.0)))
+      for ((graftMgr, feed) <- viaGraft.zip(feeds)) {
+        val w = input.toDF().groupBy("user_id")
+          .agg(count(lit(1)).as("cnt"), sum("value").as("sum"))
+          .writeStream.outputMode("update")
+          .foreachBatch { (df: DataFrame, _: Long) =>
+            val rows = df.as[(Long, Long, Double)].collect().sortBy(_._1)
+            out.synchronized { out ++= rows }
+            ()
+          }
+        val q = if (graftMgr) ck.start(w)
+          else w.option("checkpointLocation", ck.path).start()
+        input.addData(feed)
+        try q.processAllAvailable() finally q.stop()
+      }
+      val state = spark.read.format("statestore").load(ck.path)
+        .select(col("key.user_id"), col("value.count"), col("value.sum"))
+        .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+      (out.synchronized(out.toList), state)
+    } finally ck.delete()
   }
 
   test("a checkpoint moves between graft's manager and Spark's stock one, both ways") {
@@ -152,23 +154,25 @@ class CheckpointRecoverySpec extends SparkSpec {
     val key = StreamSource.FileManagerKey
     assert(spark.conf.getOption(key).isEmpty)
     val ck = StreamSource.checkpointDir(spark, "test-manager")
-    val q = ck.start(spark.readStream.format(classOf[SlowLogSource].getName).load()
-      .writeStream.format("memory").queryName(s"mgr_${System.nanoTime()}"))
-    try {
-      assert(spark.conf.getOption(key).isEmpty, "the caller's session keeps no new flag")
-      q.processAllAvailable()
-      // the stream's cloned session (a protected member, hence reflection)
-      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
-      val streamConf = exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
-        .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
-      assert(CheckpointFileManager.create(new Path(ck.path), streamConf)
-        .isInstanceOf[LocalCheckpointFileManager])
-    } finally q.stop()
+    val names = try {
+      val q = ck.start(spark.readStream.format(classOf[SlowLogSource].getName).load()
+        .writeStream.format("memory").queryName(s"mgr_${System.nanoTime()}"))
+      try {
+        assert(spark.conf.getOption(key).isEmpty, "the caller's session keeps no new flag")
+        q.processAllAvailable()
+        // the stream's cloned session (a protected member, hence reflection)
+        val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        val streamConf = exec.getClass.getMethod("sparkSessionForStream").invoke(exec)
+          .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+        assert(CheckpointFileManager.create(new Path(ck.path), streamConf)
+          .isInstanceOf[LocalCheckpointFileManager])
+      } finally q.stop()
+      val walk = Files.walk(Paths.get(ck.path))
+      try walk.iterator().asScala.map(p => Paths.get(ck.path).relativize(p).toString).toList
+      finally walk.close()
+    } finally ck.delete()
     // the stock manager leaves a Hadoop `.<name>.crc` sidecar beside every
     // file it writes; this one none (`<name>.crc` is Spark's own checksum)
-    val walk = Files.walk(Paths.get(ck.path))
-    val names = try walk.iterator().asScala.map(p => Paths.get(ck.path).relativize(p).toString).toList
-      finally walk.close()
     assert(names.contains("sources/0/0"))
     val sidecars = names.filter(n => n.split('/').last.startsWith(".") && n.endsWith(".crc"))
     assert(sidecars.isEmpty, s"files written through Hadoop's stock local filesystem: $sidecars")
@@ -188,6 +192,23 @@ class CheckpointRecoverySpec extends SparkSpec {
     assert(during.size === 1, "the query ran on its own checkpoint dir")
     assert(dirs().isEmpty, s"checkpoint dirs left: ${dirs()}")
     assert(out.select("run_cnt").as[Long].collect().sorted.toSeq === Seq(1L, 2L))
+  }
+
+  test("runUpsert and StreamBloom leave no checkpoint dir behind") {
+    import graft.streaming.{StreamBloom, UpsertSink}
+    implicit val sqlCtx = spark.sqlContext
+    def dirs(prefix: String): Set[String] =
+      Option(new java.io.File(StreamSource.ckptRoot).listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith(s"$prefix-")).toSet
+    val input = MemoryStream[StatefulOps.Change]
+    input.addData(Seq(StatefulOps.Change(1, 10, "+I"), StatefulOps.Change(2, 20, "+I")))
+    val name = s"ckpt_upsert_${System.nanoTime()}"
+    val upserted = UpsertSink.runUpsert(spark, input.toDS().toDF(), name)
+    assert(upserted.count() === 2)
+    assert(dirs(name).isEmpty, s"checkpoint dirs left: ${dirs(name)}")
+    val bloomBefore = dirs("bloom")
+    assert(StreamBloom.bloomStreamDedup(spark, sf).count() > 0)
+    assert(dirs("bloom") === bloomBefore, s"checkpoint dirs left: ${dirs("bloom") -- bloomBefore}")
   }
 }
 

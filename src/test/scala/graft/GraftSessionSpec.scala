@@ -1,0 +1,46 @@
+package graft
+
+import graft.plans.{AsOfPatternRule, AsOfStrategy}
+
+/** The three owners in GraftSession: the session factory, the idempotent
+  * install, and the scoped config. */
+class GraftSessionSpec extends SparkSpec {
+
+  test("withConf restores a set key, unsets an unset one, and restores when the body throws") {
+    val setKey = "graft.spec.withConf"
+    val unsetKey = "spark.sql.cbo.joinReorder.dp.threshold" // has a default: 12
+    spark.conf.set(setKey, "12345")
+    try {
+      assert(!spark.conf.getAll.contains(unsetKey))
+      val seen = GraftSession.withConf(spark, setKey -> "-1", unsetKey -> "3") {
+        (spark.conf.get(setKey), spark.conf.get(unsetKey))
+      }
+      assert(seen === (("-1", "3")))
+      assert(spark.conf.get(setKey) === "12345")
+      assert(!spark.conf.getAll.contains(unsetKey), "an unset key comes back unset, not set to its default")
+      intercept[IllegalStateException] {
+        GraftSession.withConf(spark, setKey -> "-1", unsetKey -> "3") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(spark.conf.get(setKey) === "12345")
+      assert(!spark.conf.getAll.contains(unsetKey))
+    } finally spark.conf.unset(setKey)
+  }
+
+  test("install twice leaves one AsOf strategy and one AsOf rule") {
+    GraftSession.install(spark)
+    GraftSession.install(spark)
+    assert(spark.experimental.extraStrategies.count(_ == AsOfStrategy) === 1)
+    assert(spark.experimental.extraOptimizations.count(_ == AsOfPatternRule) === 1)
+    assert(GraftSession.functions.forall { case (id, _, _) =>
+      spark.sessionState.functionRegistry.functionExists(id) })
+  }
+
+  test("a local session has UTC, the Hive catalog, and shuffle partitions = cores") {
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.catalogImplementation") === "hive")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.conf.get("spark.ui.enabled") === "false")
+  }
+}

@@ -25,11 +25,8 @@ class IdleSourceSpec extends SparkSpec {
   /** Two watermarked streams, unioned, windowed: `live` advances through
     * t=95s; `idle` says t=5s once and never again. Returns closed-window
     * rows the sink saw. */
-  private def run(policy: String): Long = {
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, policy)
-    try {
+  private def run(policy: String): Long =
+    GraftSession.withConf(spark, "spark.sql.streaming.multipleWatermarkPolicy" -> policy) {
       implicit val sqlCtx = spark.sqlContext
       val live = MemoryStream[Long]
       val idle = MemoryStream[Long]
@@ -39,10 +36,10 @@ class IdleSourceSpec extends SparkSpec {
       val agg = shaped(live).union(shaped(idle))
         .groupBy(window(col("ts"), "10 seconds")).agg(count(lit(1)).as("n"))
       val name = s"idle_${policy}_${System.nanoTime()}"
+      val ckpt = s"${graft.streaming.StreamSource.ckptRoot}/idle-${System.nanoTime()}"
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .option("checkpointLocation",
-          s"${graft.streaming.StreamSource.ckptRoot}/idle-${System.nanoTime()}")
+        .option("checkpointLocation", ckpt)
         .start()
       try {
         idle.addData(5L) // one early row, then silence forever
@@ -52,10 +49,12 @@ class IdleSourceSpec extends SparkSpec {
         q.processAllAvailable()
         live.addData(96L) // one more batch so 50/95's watermark applies
         q.processAllAvailable()
-      } finally q.stop()
+      } finally {
+        q.stop()
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+      }
       spark.table(name).count()
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+    }
 
   test("min policy: one idle input stalls the global watermark — no window ever closes") {
     assert(run("min") === 0L)

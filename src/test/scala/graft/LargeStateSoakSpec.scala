@@ -19,12 +19,19 @@ class LargeStateSoakSpec extends SparkSpec {
 
   private val N = 1000000
 
+  /** `body` on a fresh checkpoint path `$prefix-$nanoTime` with the RocksDB
+    * state store provider and `conf` set; the dir is deleted afterwards,
+    * also when `body` throws. */
+  private def onRocksDb(prefix: String, conf: (String, String)*)(body: String => Unit): Unit = {
+    val ckpt = s"$prefix-${System.nanoTime()}"
+    try GraftSession.withConf(spark, ("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") +: conf: _*) {
+      body(ckpt)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+  }
+
   test(s"$N-key state on RocksDB: build, incremental update, restart+restore") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb("/tmp/graft-ckpt/soak") { ckpt =>
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(Long, Long)]
       val op = input.toDS().groupByKey(_._1)
@@ -35,7 +42,6 @@ class LargeStateSoakSpec extends SparkSpec {
             st.update(c)
             Iterator.single((k, c))
         }
-      val ckpt = s"/tmp/graft-ckpt/soak-${System.nanoTime()}"
       // foreachBatch sink: the memory sink refuses checkpoint recovery,
       // and the restart leg is the point of this spec
       val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
@@ -80,7 +86,7 @@ class LargeStateSoakSpec extends SparkSpec {
       assert(restored.contains((123L, 2L)),
         s"state not restored across restart: $restored")
       q2.stop()
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test(s"connect/CoProcess soak: $N pending probes on RocksDB, cross-batch match, restart") {
@@ -90,11 +96,7 @@ class LargeStateSoakSpec extends SparkSpec {
     // pad and emit the pair.
     import graft.streaming.{StreamJoins, StreamSource}
     import graft.streaming.StreamSource.Event
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb("/tmp/graft-ckpt/conn-soak") { ckpt =>
       implicit val sqlCtx = spark.sqlContext
       val t0 = 1700000000000L
       def ev(id: Long, tsMs: Long, user: Long, tpe: String) =
@@ -102,7 +104,6 @@ class LargeStateSoakSpec extends SparkSpec {
       val input = MemoryStream[Event]
       val out = StreamJoins.connectMatch(input.toDS(),
         probeType = "purchase", matchType = "error", windowSec = 3600)
-      val ckpt = s"/tmp/graft-ckpt/conn-soak-${System.nanoTime()}"
       val emitted =
         new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[Long], String)]()
       def start() = out.toDF().writeStream
@@ -148,7 +149,7 @@ class LargeStateSoakSpec extends SparkSpec {
       assert(emitted.asScala.toSet.contains((123L, Some(3000123L), "+I")),
         s"state not restored across restart: ${emitted.asScala.toSet}")
       q2.stop()
-    } finally prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
+    }
   }
 
   test(s"outer-join TTL soak: $N keys on RocksDB, restart, watermark-driven state cleanup") {
@@ -158,11 +159,7 @@ class LargeStateSoakSpec extends SparkSpec {
     // and the bound must hold across a checkpoint restart at soak scale.
     import graft.streaming.{StreamJoins, StreamSource}
     import graft.streaming.StreamSource.Event
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb("/tmp/graft-ckpt/ttl-soak") { ckpt =>
       implicit val sqlCtx = spark.sqlContext
       val t0 = 1700000000000L
       def ev(id: Long, tsMs: Long, user: Long, tpe: String) =
@@ -172,7 +169,6 @@ class LargeStateSoakSpec extends SparkSpec {
         input.toDS().withWatermark("ts", "10 minutes"),
         probeType = "probe", buildType = "build",
         stateTtlMs = Some(60L * 1000)) // 1 minute of event time
-      val ckpt = s"/tmp/graft-ckpt/ttl-soak-${System.nanoTime()}"
       val emitted =
         new java.util.concurrent.ConcurrentLinkedQueue[(Long, Option[Long], String)]()
       def start() = joined.toDF().writeStream
@@ -223,7 +219,7 @@ class LargeStateSoakSpec extends SparkSpec {
       assert(emitted.asScala.toSet.contains((9999123L, None, "+I")),
         s"expired key must rejoin fresh: ${emitted.asScala.toSet}")
       q2.stop()
-    } finally prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
+    }
   }
 
   test(s"OOO sorter soak: $N buffered keys on RocksDB, restart mid-stream, ordered drain into chained topN") {
@@ -233,14 +229,9 @@ class LargeStateSoakSpec extends SparkSpec {
     // append-mode topN exactly once.
     import graft.streaming.StatefulOps
     import graft.streaming.StreamSource.Event
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val chainKey = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevChain = spark.conf.get(chainKey, "true")
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(chainKey, "false") // sorter→topN: no late-row predicate downstream
-    try {
+    // sorter→topN: no late-row predicate downstream
+    onRocksDb("/tmp/graft-ckpt/ooo-soak",
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") { ckpt =>
       implicit val sqlCtx = spark.sqlContext
       val t0 = 1700000000000L // fixed epoch millis; ts arithmetic below in ms
       def ev(id: Long, tsMs: Long, user: Long, tpe: String, v: Double) =
@@ -248,7 +239,6 @@ class LargeStateSoakSpec extends SparkSpec {
       val input = MemoryStream[Event]
       val chained = StatefulOps.topNVersioned(
         StatefulOps.sortedEvents(input.toDS(), delay = "10 minutes"), 3)
-      val ckpt = s"/tmp/graft-ckpt/ooo-soak-${System.nanoTime()}"
       val emitted =
         new java.util.concurrent.ConcurrentLinkedQueue[StatefulOps.RankedVer]()
       def start() = chained.toDF().writeStream
@@ -312,9 +302,6 @@ class LargeStateSoakSpec extends SparkSpec {
           .sortBy { case (id, v) => (-v, id) }.take(3)
         assert(got === want, s"topN mismatch for $tpe")
       }
-    } finally {
-      prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      spark.conf.set(chainKey, prevChain)
     }
   }
 
@@ -326,11 +313,7 @@ class LargeStateSoakSpec extends SparkSpec {
     // seeded key lands in the store (numRowsTotal), the live tail CONTINUES
     // seeded accumulators (seed + live count, not live-only), and untouched
     // seeded keys survive to a restarted query.
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    onRocksDb(s"${graft.streaming.StreamSource.ckptRoot}/bootsoak") { ckpt =>
       implicit val sqlCtx = spark.sqlContext
       // seed value = k % 97, computed distributed (range → keyed mapValues)
       val initial = spark.range(N.toLong).as[Long]
@@ -348,7 +331,6 @@ class LargeStateSoakSpec extends SparkSpec {
               Iterator.single((k, c))
             }
         }
-      val ckpt = s"${graft.streaming.StreamSource.ckptRoot}/bootsoak-${System.nanoTime()}"
       val emitted = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
       def start() = op.toDF("k", "cnt").writeStream
         .outputMode("update")
@@ -385,6 +367,6 @@ class LargeStateSoakSpec extends SparkSpec {
       assert(restored.contains((777777L, 777777L % 97 + 1)),
         s"untouched seed not restored across restart: $restored")
       q2.stop()
-    } finally prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
+    }
   }
 }

@@ -256,7 +256,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("string classify expressions match their regex contracts") {
-    graft.functions.StringClassify.register(spark)
+    GraftSession.install(spark)
     import spark.implicits._
     val rows = Seq("123", "-4.5", ".5e3", "abc", "a1", "", "1.2.3")
       .toDF("s")

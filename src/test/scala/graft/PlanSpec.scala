@@ -139,13 +139,11 @@ class PlanSpec extends SparkSpec {
       .agg(concat_ws(",", array_sort(collect_list(col("n_name")))).as("nations"))
       .orderBy("n_regionkey")
     val default = q().collect().map(_.toSeq)
-    val prev = spark.conf.get("spark.sql.execution.useObjectHashAggregateExec")
-    try {
-      spark.conf.set("spark.sql.execution.useObjectHashAggregateExec", "false")
+    GraftSession.withConf(spark, "spark.sql.execution.useObjectHashAggregateExec" -> "false") {
       val df = q()
       assert(plan(df).contains("SortAggregate"), s"expected SortAggregate:\n${plan(df)}")
       assert(df.collect().map(_.toSeq) === default)
-    } finally spark.conf.set("spark.sql.execution.useObjectHashAggregateExec", prev)
+    }
   }
 
   test("native sum0 aggregate stays inside whole-stage codegen") {
@@ -184,16 +182,14 @@ class PlanSpec extends SparkSpec {
       .bucketBy(4, "c_custkey").sortBy("c_custkey").saveAsTable("b_customer")
     // force the shuffle-class join path (broadcast would win on tiny SF and
     // bypass bucketing entirely; at real scale both sides are too big)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_orders")
         .join(spark.table("b_customer"), col("o_custkey") === col("c_custkey"))
       val p = joined.queryExecution.executedPlan.toString
       assert(!p.contains("Exchange hashpartitioning"), s"bucketed join still shuffles:\n$p")
       assert(p.contains("Bucketed: true"), s"bucketed read not used:\n$p")
       assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("runtime bloom filter prunes the probe side of a selective shuffle join") {
@@ -203,14 +199,11 @@ class PlanSpec extends SparkSpec {
     // filtered build side and pushes might_contain() into the probe scan —
     // rows that cannot join die before the shuffle. Thresholds lowered to
     // fire at test scale (prod defaults: 10 MB build / 10 GB probe).
-    val confs = Seq(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB") {
       val li = Tables(spark, sf, "lineitem")
       val ord = Tables(spark, sf, "orders")
         .where(col("o_orderpriority") === "1-URGENT")
@@ -218,8 +211,6 @@ class PlanSpec extends SparkSpec {
       val plan = j.queryExecution.optimizedPlan.toString
       assert(plan.contains("might_contain"), s"no runtime filter injected:\n${plan.take(1200)}")
       assert(j.count() > 0)
-    } finally prev.foreach { case (k, v) =>
-      v match { case Some(x) => spark.conf.set(k, x); case None => spark.conf.unset(k) }
     }
   }
 
@@ -228,19 +219,13 @@ class PlanSpec extends SparkSpec {
     // 100TB-relevant: one viral key would otherwise pin a single reducer;
     // AQE's runtime re-plan splits it (the alternative to manual salting,
     // which q_join_salted demonstrates)
-    val prev = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "100KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
+    GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "100KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { // force SMJ
       val left = spark.range(200000)
         .select(when(col("id") % 100 =!= 0, lit(0L)).otherwise(col("id")).as("k"),
           col("id").as("v")) // 99% of rows share key 0
@@ -254,8 +239,7 @@ class PlanSpec extends SparkSpec {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("isFinalPlan=true"), s"AQE did not finalize:\n$p")
       assert(p.contains("skew=true"), s"skew join not triggered:\n$p")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("q_join_skew's real-table plan splits the hot-key partition (skew=true)") {
@@ -263,34 +247,24 @@ class PlanSpec extends SparkSpec {
     // the oracle-checked q_join_skew fact: ~30% of lineitem remapped to
     // one hot orderkey; same conf scoping as ScaleOps.skewJoin but with
     // thresholds shrunk for the sf0.001 fixture data
-    val keys = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.shuffle.partitions")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      // sf0.001 sizes: the hot partition is a few KB, so the byte floor
-      // drops to 1KB; with the production 32-way shuffle the hot reducer
-      // is ~15x the median, far over the 2x factor
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
+    // sf0.001 sizes: the hot partition is a few KB, so the byte floor
+    // drops to 1KB; with the production 32-way shuffle the hot reducer
+    // is ~15x the median, far over the 2x factor
+    GraftSession.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "32") {
       val df = operators.ScaleOps.skewJoinPlan(spark, sf)
       assert(df.collect().nonEmpty)
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("isFinalPlan=true"), s"AQE did not finalize:\n$p")
       assert(p.contains("skew=true"), s"skew join not triggered:\n$p")
-    } finally prev.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   test("decontaminate size-guard: large benchmark side flips broadcast to shuffle join") {
@@ -302,9 +276,7 @@ class PlanSpec extends SparkSpec {
     // a benchmark bigger than the threshold must NOT be broadcast — the
     // guard measures the materialized gram set, it does not trust the
     // caller (VERDICT r8 finding #2)
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
+    try GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "1KB") {
       spark.catalog.clearCache() // drop the cached benchmark from the first run
       val df = operators.Pipeline.decontaminate(spark, sf)
       val got = df.collect().map(_.toSeq)
@@ -314,11 +286,7 @@ class PlanSpec extends SparkSpec {
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a shuffle join fallback:\n$p")
       assert(got === expected, "shuffle-join fallback changed the result")
-    } finally {
-      prev.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 
   test("lookup join broadcasts the dimension, no driver-side collect") {

@@ -47,10 +47,10 @@ class PunctuatedWatermarkSpec extends SparkSpec {
       .withWatermark("ts", s"$delaySec seconds")
       .groupBy(window(col("ts"), "10 seconds")).agg(count(lit(1)).as("n"))
     val name = s"punct_${System.nanoTime()}"
+    val ckpt = s"${graft.streaming.StreamSource.ckptRoot}/punct-${System.nanoTime()}"
     val q = agg.writeStream.format("memory").queryName(name)
       .outputMode("append")
-      .option("checkpointLocation",
-        s"${graft.streaming.StreamSource.ckptRoot}/punct-${System.nanoTime()}")
+      .option("checkpointLocation", ckpt)
       .start()
     try {
       in.addData(10L, 100L, 20L) // batch 1: straggler AFTER the wm-advancing event
@@ -59,7 +59,10 @@ class PunctuatedWatermarkSpec extends SparkSpec {
       q.processAllAvailable()
       in.addData(200L) // batch 3: flush the [100,110) window
       q.processAllAvailable()
-    } finally q.stop()
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+    }
     spark.table(name)
       .select(col("window.start").cast("long").as("w"), col("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

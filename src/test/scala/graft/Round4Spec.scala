@@ -20,13 +20,14 @@ class Round4Spec extends SparkSpec {
 
   test("retractableAgg: min/max recover when the current extreme is retracted") {
     implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val input = MemoryStream[Event]
     val out = StatefulOps.retractableAgg(StatefulOps.valueChangelog(input.toDS()))
-    val q = out.toDF().writeStream.format("memory").queryName("t_retract_agg")
-      .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-ragg-${System.nanoTime()}")
-      .start()
+    val q = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
+      out.toDF().writeStream.format("memory").queryName("t_retract_agg")
+        .outputMode("append")
+        .option("checkpointLocation", s"/tmp/graft-ckpt/t-ragg-${System.nanoTime()}")
+        .start()
+    }
     // user 1 latest = 5.0 (A, the group min), user 2 latest = 7.0 (A)
     input.addData(Seq(ev(1, 10, 1, "A", 5.0), ev(3, 10, 2, "A", 7.0)))
     q.processAllAvailable()
@@ -49,7 +50,6 @@ class Round4Spec extends SparkSpec {
     val aAfterB2 = rows.filter(r => r.event_type == "A" && r.cnt == 2).maxBy(_.ver)
     assert(aAfterB2.min_value === 7.0 && aAfterB2.max_value === 9.0)
     q.stop()
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
   }
 
   test("outerJoinChangelog FULL: both sides null-pad, first opposite row retracts") {

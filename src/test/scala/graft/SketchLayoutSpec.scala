@@ -109,8 +109,8 @@ class SketchLayoutSpec extends SparkSpec {
     val base = raw.select(
       expr(s"cast(round((xs - $minX) / (${maxX - minX}) * 1023) as int)").as("x"),
       expr(s"cast(round((ys - $minY) / (${maxY - minY}) * 1023) as int)").as("y"))
-    val zdir = s"${SparkSpec.warehouseDir}/zorder-files"
-    val xdir = s"${SparkSpec.warehouseDir}/xsort-files"
+    val zdir = s"${spark.conf.get("spark.sql.warehouse.dir")}/zorder-files"
+    val xdir = s"${spark.conf.get("spark.sql.warehouse.dir")}/xsort-files"
     base.withColumn("z", ZValue.zValue(col("x"), col("y")))
       .repartitionByRange(16, col("z")).sortWithinPartitions("z")
       .write.mode("overwrite").parquet(zdir)
@@ -143,8 +143,8 @@ class SketchLayoutSpec extends SparkSpec {
     val base = raw.select(
       expr(s"cast(round((xs - $minX) / (${maxX - minX}) * 1023) as int)").as("x"),
       expr(s"cast(round((ys - $minY) / (${maxY - minY}) * 1023) as int)").as("y"))
-    val zdir = s"${SparkSpec.warehouseDir}/zorder-prune"
-    val xdir = s"${SparkSpec.warehouseDir}/xsort-prune"
+    val zdir = s"${spark.conf.get("spark.sql.warehouse.dir")}/zorder-prune"
+    val xdir = s"${spark.conf.get("spark.sql.warehouse.dir")}/xsort-prune"
     base.withColumn("z", ZValue.zValue(col("x"), col("y")))
       .repartitionByRange(16, col("z")).sortWithinPartitions("z")
       .write.mode("overwrite").parquet(zdir)
@@ -172,17 +172,14 @@ class SketchLayoutSpec extends SparkSpec {
     // a filter-only query has no shuffle to avoid, so the planner's
     // auto-bucketed-scan heuristic turns bucketing off; pin it on to
     // observe the bucket PRUNING path the layout enables
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val (ordersT, _) = Layout.bucketTableNames(sf)
       val one = spark.table(ordersT).filter(col("o_custkey") === 42L)
       one.collect()
       val p = one.queryExecution.executedPlan.toString
       assert(p.contains("SelectedBucketsCount: 1 out of 16"),
         s"equality filter on the bucket key should scan 1/16 buckets:\n$p")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   test("z_value is order-preserving per dimension (range-partition safety)") {

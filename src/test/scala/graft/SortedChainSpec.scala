@@ -55,18 +55,18 @@ class SortedChainSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Event]
     val out = new java.util.concurrent.ConcurrentHashMap[Long, Seq[String]]()
-    val key = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
     val ckpt = s"${StreamSource.ckptRoot}/chain-$name-${System.nanoTime()}"
     // the two-operator form trips Spark's global-watermark check (the
     // sorter emits rows older than the watermark); the fused one must not
-    val prev = spark.conf.get(key, "true")
-    if (chained) spark.conf.set(key, "false")
-    val q = try build(input.toDS()).writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        out.put(id, b.collect().map(_.toString).sorted.toSeq); ()
-      }.start()
-    finally spark.conf.set(key, prev)
+    val check = if (chained)
+      Seq("spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") else Nil
+    val q = GraftSession.withConf(spark, check: _*) {
+      build(input.toDS()).writeStream.outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          out.put(id, b.collect().map(_.toString).sorted.toSeq); ()
+        }.start()
+    }
     try feed.foreach { rows => input.addData(rows); q.processAllAvailable() }
     finally {
       q.stop()

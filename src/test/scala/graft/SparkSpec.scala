@@ -4,23 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture for operator specs. One session per
-  * suite class (ScalaTest instantiates suites sequentially by default);
-  * small shuffle partition count keeps tiny-data tests fast. */
+/** Shared local SparkSession fixture for operator specs: graft's own
+  * session ([[GraftSession.local]], Hive catalog included, so the
+  * HiveCatalogSpec and DDL suites exercise the production catalog). One
+  * session per JVM — `getOrCreate` hands every suite the same one; a small
+  * core and shuffle-partition count keeps tiny-data tests fast. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", SparkSpec.warehouseDir)
-    .config("spark.ui.enabled", "false")
-    // hive-backed catalog (lazy Derby metastore, per-JVM path) so the
-    // HiveCatalogSpec and DDL suites exercise the production catalog
-    .enableHiveSupport()
-    .config("spark.hadoop.javax.jdo.option.ConnectionURL",
-      s"jdbc:derby:;databaseName=${SparkSpec.warehouseDir}-metastore;create=true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local("test", cores = 4)
 
   /** Smallest driver-generated scale factor — used for end-to-end shapes. */
   val sf: String = "/root/testdata/sf0.001"
@@ -29,10 +19,4 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // keep the session for the next suite (getOrCreate reuses it)
     super.afterAll()
   }
-}
-
-object SparkSpec {
-  /** Per-JVM warehouse + metastore so a concurrent Verify never hits the
-    * same Derby database. */
-  val warehouseDir: String = s"/tmp/graft-warehouse/test-${System.nanoTime()}"
 }

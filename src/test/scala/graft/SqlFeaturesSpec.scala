@@ -68,13 +68,10 @@ class SqlFeaturesSpec extends SparkSpec {
     // the segment filter) lands far below
     val tableBytes = spark.table("graft_stats.customer_s")
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val confs = Seq("spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> s"${tableBytes - 1}",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confs.map { case (k, _) => k -> spark.conf.get(k, null) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> s"${tableBytes - 1}",
+        "spark.sql.adaptive.enabled" -> "false") {
       // (a) exact row count lands in the optimizer's estimate (rowCount is
       // only surfaced by the CBO stats visitor)
       val est = spark.table("graft_stats.customer_s")
@@ -105,7 +102,6 @@ class SqlFeaturesSpec extends SparkSpec {
       assert(cboStats.sizeInBytes < plainStats.sizeInBytes,
         s"CBO size ${cboStats.sizeInBytes} should undercut size-only " +
           s"propagation ${plainStats.sizeInBytes}")
-    } finally prev.foreach { case (k, v) =>
-      if (v == null) spark.conf.unset(k) else spark.conf.set(k, v) }
+    }
   }
 }

@@ -21,14 +21,10 @@ class StateEvolutionSpec extends SparkSpec {
     val ckpt = s"$root/ckpt"
     val schema = Encoders.product[StreamSource.Event].schema
 
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val encKey = "spark.sql.streaming.stateStore.encodingFormat"
-    val prevProv = spark.conf.getOption(provKey)
-    val prevEnc = spark.conf.getOption(encKey)
-    spark.conf.set(provKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(encKey, "avro")
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.streaming.stateStore.encodingFormat" -> "avro") {
       def runOnce(proc: StatefulProcessor[Long, StreamSource.Event,
           StateEvolution.KeyCount]): Map[Long, (Long, Double)] = {
         val live = spark.readStream.schema(schema).parquet(src)
@@ -65,9 +61,6 @@ class StateEvolutionSpec extends SparkSpec {
       assert(g2(1L) === ((3L, 7.5)), g2.toString)   // 2 (V1 rows) + 1, last from new row
       assert(g2(3L) === ((1L, 1.25)), g2.toString)  // fresh key under V2
       assert(!g2.contains(2L) || g2(2L)._1 === 1L, g2.toString)
-    } finally {
-      prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      prevEnc.fold(spark.conf.unset(encKey))(spark.conf.set(encKey, _))
     }
   }
 }

@@ -74,10 +74,8 @@ class StreamingSemanticsSpec extends SparkSpec {
   }
 
   test("stateful op runs on the RocksDB state store provider") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[Event]
       val q = StatefulOps.keepLast(input.toDS()).writeStream
@@ -91,11 +89,6 @@ class StreamingSemanticsSpec extends SparkSpec {
       val got = spark.table("t_rocks").as[Event].collect().map(_.event_id).toSeq
       assert(got === Seq(2L, 3L)) // state carried across batches under RocksDB
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -154,14 +147,15 @@ class StreamingSemanticsSpec extends SparkSpec {
     // watermark (they were buffered); the downstream fMGWS is
     // watermark-agnostic (NoTimeout), so Spark's conservative
     // cross-operator check is a false positive here — documented override
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     val input = MemoryStream[Event]
     // two chained stateful operators in one query: reorder, then aggregate
     val out = StatefulOps.runningAgg(StatefulOps.sortedEvents(input.toDS()))
-    val q = out.writeStream.format("memory").queryName("t_sorted_agg")
-      .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-sorted-${System.nanoTime()}")
-      .start()
+    val q = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
+      out.writeStream.format("memory").queryName("t_sorted_agg")
+        .outputMode("append")
+        .option("checkpointLocation", s"/tmp/graft-ckpt/t-sorted-${System.nanoTime()}")
+        .start()
+    }
     // event 2 arrives a batch BEFORE event 1 (cross-batch disorder that
     // plain runningAgg would mis-order)
     input.addData(Seq(ev(2, 20, 1, "view", 2.0)))
@@ -179,7 +173,6 @@ class StreamingSemanticsSpec extends SparkSpec {
     assert(got.map(r => (r.event_id, r.run_cnt, r.run_sum)).toSeq ===
       Seq((1L, 1L, 1.0), (2L, 2L, 3.0)))
     q.stop()
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
   }
 
   test("an idle source does not stall the watermark (no idleness markers needed)") {

@@ -250,13 +250,14 @@ class StreamingSpec extends SparkSpec {
     // heuristic (the sorter intentionally emits rows AT the watermark).
     // The downstream op is watermark-agnostic (NoTimeout, no event-time
     // filter), so the sanctioned escape hatch is safe here.
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     // out-of-order multi-batch feed: batch 2 delivers an EARLIER row than
     // batch 1's within the sort delay; the composed pipeline must produce
     // the same running sums as an in-order feed
     val composed: Dataset[Event] => Dataset[StatefulOps.Running] =
       ds => StatefulOps.runningAgg(StatefulOps.sortedEvents(ds, "10 minutes"))
-    val (feed, drain, stop) = harness(composed, "t_ooo_run", "append")
+    val (feed, drain, stop) = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
+      harness(composed, "t_ooo_run", "append")
+    }
     feed(Seq(ev(2, 12, 7, "view", 2.0)))
     feed(Seq(ev(1, 10, 7, "view", 1.0))) // earlier than event 2, later batch
     assert(drain().isEmpty) // watermark (12:00-10min) passed neither row
@@ -273,14 +274,15 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.Cep
     val v: Event => Boolean = _.event_type == "view"
     val p: Event => Boolean = _.event_type == "purchase"
-    spark.conf.set("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
     // the Ordered variant: no re-watermark after the sorter (re-tagging ts
     // would make the engine drop the sorter's releases as late rows)
     val composed: Dataset[Event] => Dataset[Cep.Match] = ds =>
       Cep.matchRecognizeOrdered(
         StatefulOps.sortedEvents(ds, "10 minutes"),
         Seq(Cep.QStep.once(v), Cep.QStep.once(p)), skipPastLastRow = false)
-    val (feed, drain, stop) = harness(composed, "t_ooo_cep", "append")
+    val (feed, drain, stop) = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
+      harness(composed, "t_ooo_cep", "append")
+    }
     // arrival order purchase-then-view; event-time order view(1) purchase(2)
     feed(Seq(ev(2, 12, 7, "purchase", 0)))
     feed(Seq(ev(1, 10, 7, "view", 0)))

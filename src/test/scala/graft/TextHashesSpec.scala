@@ -31,7 +31,7 @@ class TextHashesSpec extends SparkSpec {
   }
 
   test("registered SQL functions match DuckDB-reproducible md5 formula") {
-    TextHashes.register(spark)
+    GraftSession.install(spark)
     import spark.implicits._
     val row = Seq(Seq("aa", "bb")).toDF("toks")
       .selectExpr("minhash32(toks) AS mh", "simhash60(toks) AS sh")
