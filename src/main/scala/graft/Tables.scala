@@ -66,8 +66,7 @@ object Tables {
     * not from re-opening data files per query. nanosAsLong must already be
     * set by the caller for event-time tables so the cached schema matches
     * the flagged read path. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+  private val schemaCache = new Once[String, org.apache.spark.sql.types.StructType]
 
   /** CONTRACT (r17, ADVICE r16): the cache has no invalidation, so a path
     * may only be passed here if its schema is WRITE-ONCE for the life of
@@ -81,7 +80,7 @@ object Tables {
     // columns — key the cache on it so a flagged and an unflagged reader
     // of the same file can never serve each other's schema
     val key = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") + ":" + path
-    schemaCache.getOrElseUpdate(key, spark.read.parquet(path).schema)
+    schemaCache(key)(spark.read.parquet(path).schema)
   }
 
   /** Per-(session, path) parquet RELATION cache (r17, guide §1/§6 — the
@@ -96,33 +95,17 @@ object Tables {
     * and re-registered/reused from the memo; every action on it still
     * reads the parquet — this caches METADATA (the relation), never data
     * or results. Same write-once contract as [[cachedSchema]] above;
-    * DataFrames are session-bound, so the key leads with the session UUID. */
-  private val dfCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** identityHashCode is not unique across a session's lifetime and a later
-    * GC'd-then-reallocated object, so every cache hit is validated with an
-    * `eq` check on the frame's own session — a stale or colliding entry is
-    * rebuilt and replaced, never served. */
-  private def cachedFor(spark: SparkSession, key: String,
-                        build: () => DataFrame): DataFrame =
-    dfCache.synchronized {
-      val k = System.identityHashCode(spark).toString + ":" + key
-      dfCache.get(k) match {
-        case Some(df) if df.sparkSession eq spark => df
-        case _ =>
-          val df = build()
-          dfCache.put(k, df)
-          df
-      }
-    }
+    * DataFrames are session-bound, so the key leads with the session, and
+    * the entries are dropped when the session's SparkContext ends. */
+  private val dfCache = new Once[(SparkSession, String), DataFrame]
 
   /** Memoized `spark.read.schema(cachedSchema).parquet(path)` for
     * write-once paths (no event-time normalization — use [[apply]] for
     * fixture tables; this is the raw-relation entry TpcdsData uses). */
   def cachedRead(spark: SparkSession, path: String): DataFrame = {
     val flag = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    cachedFor(spark, flag + ":raw:" + path,
-      () => spark.read.schema(cachedSchema(spark, path)).parquet(path))
+    dfCache(spark, (spark, flag + ":raw:" + path))(
+      spark.read.schema(cachedSchema(spark, path)).parquet(path))
   }
 
   /** [[materializeShared]]'s gate: 4 GiB keeps every bench and verify
@@ -164,33 +147,34 @@ object Tables {
       // memoize the NORMALIZED frame: normalizeTs re-analyzes a projection
       // per call, and the flag is always set on this path, so the cached
       // plan is identical to what every call would rebuild
-      cachedFor(spark, "true:norm:" + path,
-        () => normalizeTs(spark.read.schema(cachedSchema(spark, path)).parquet(path)))
+      dfCache(spark, (spark, "true:norm:" + path))(
+        normalizeTs(spark.read.schema(cachedSchema(spark, path)).parquet(path)))
     } else cachedRead(spark, path)
   }
 
-  /** Register every table as a temp view so `spark.sql` matches the oracle.
-    *
-    * r17: same registration-skip discipline as TpcdsData.ensure — the view
-    * is re-registered UNLESS the catalog still holds the exact
-    * TemporaryViewRelation object this method stored last time (`eq` on
-    * getRawTempView). Any rebind by another family (TpcdsData.ensure
-    * rebinding `customer`, a DDL query, an explicit drop) stores a new
-    * object or clears the slot, fails the identity check, and forces the
-    * re-registration the old unconditional code always did; only the
-    * untouched steady state skips the ~5 ms/view rebuild. */
-  private val regMemo = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+  /** Latest view object each (session, origin, view name) registration
+    * stored, dropped with the session's SparkContext. */
+  private val viewTokens =
+    new Once[(SparkSession, String), java.util.concurrent.atomic.AtomicReference[AnyRef]]
 
-  def registerAll(spark: SparkSession, dir: String): Unit = {
+  /** Bind `df` as temp view `name` of `spark`, unless the catalog still
+    * holds the exact view object this `origin` bound last time (`eq` on
+    * getRawTempView). Any rebind by another family (TpcdsData and the
+    * fixture tables share `customer`, a DDL query, an explicit drop)
+    * stores a new object or clears the slot, and forces the registration;
+    * only the untouched steady state skips the ~5 ms view rebuild. */
+  private[graft] def bindView(spark: SparkSession, origin: String, name: String)(
+      df: => DataFrame): Unit = {
+    val last = viewTokens(spark, (spark, s"$origin:$name"))(
+      new java.util.concurrent.atomic.AtomicReference[AnyRef])
     val cat = spark.sessionState.catalog
-    all.foreach { n =>
-      val key = System.identityHashCode(spark).toString + ":" + dir + ":" + n
-      val stillOurs = cat.getRawTempView(n).exists(cur =>
-        regMemo.get(key).exists(_ eq cur))
-      if (!stillOurs) {
-        apply(spark, dir, n).createOrReplaceTempView(n)
-        cat.getRawTempView(n).foreach(v => regMemo.put(key, v))
-      }
+    if (!cat.getRawTempView(name).exists(_ eq last.get)) {
+      df.createOrReplaceTempView(name)
+      last.set(cat.getRawTempView(name).orNull)
     }
   }
+
+  /** Register every table as a temp view so `spark.sql` matches the oracle. */
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    all.foreach(n => bindView(spark, dir, n)(apply(spark, dir, n)))
 }

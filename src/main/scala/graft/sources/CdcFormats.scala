@@ -236,14 +236,11 @@ object CdcFormats {
     * invocation was fixture prep inside the timed region (r16
     * optimization, guide §1; sentinel-memo precedent). In-process only,
     * so a stale fixture never crosses testdata drops. */
-  private val fixtureMemo = scala.collection.concurrent.TrieMap.empty[String, Unit]
+  private val fixtureMemo = new graft.Once[String, Unit]
 
   private def roundTrip(s: SparkSession, events: => DataFrame, path: String,
                         offsetFrom: Column): DataFrame = {
-    // synchronized: two concurrent first-callers must not overwrite the
-    // same path mid-read (callers are sequential today; cheap insurance)
-    synchronized(fixtureMemo.getOrElseUpdate(path,
-      events.select("value").write.mode("overwrite").text(path)))
+    fixtureMemo(path)(events.select("value").write.mode("overwrite").text(path))
     s.read.text(path).withColumn("offset", offsetFrom)
   }
 
@@ -274,9 +271,8 @@ object CdcFormats {
     * query and the streaming CDC pipeline (streaming/CdcStream). */
   def writeDebeziumFixture(s: SparkSession, dir: String, which: String): String = {
     val path = tmpDir(which, dir)
-    synchronized(fixtureMemo.getOrElseUpdate(path,
-      debeziumEvents(ordersWithBucket(s, dir), wrapped = false)
-        .select("value").write.mode("overwrite").text(path)))
+    fixtureMemo(path)(debeziumEvents(ordersWithBucket(s, dir), wrapped = false)
+      .select("value").write.mode("overwrite").text(path))
     path
   }
 

@@ -26,13 +26,12 @@ object FsCommit {
   // Configuration parse is milliseconds and FileContext is uncached by
   // Hadoop — shared read-only instances.
   private lazy val conf = new Configuration()
-  private val fctxCache =
-    scala.collection.concurrent.TrieMap.empty[String, FileContext]
+  private val fctxCache = new graft.Once[String, FileContext]
 
   private def fctx(p: String): FileContext = {
     val uri = new Path(p).toUri
     val key = s"${uri.getScheme}://${Option(uri.getAuthority).getOrElse("")}"
-    fctxCache.getOrElseUpdate(key, FileContext.getFileContext(uri, conf))
+    fctxCache(key)(FileContext.getFileContext(uri, conf))
   }
 
   private def isLocal(p: String): Boolean = {

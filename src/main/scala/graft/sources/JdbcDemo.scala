@@ -28,28 +28,27 @@ object JdbcDemo {
 
   private val driver = "org.apache.derby.jdbc.EmbeddedDriver"
 
-  private def url(s: SparkSession, dir: String): String = {
-    val db = s"/tmp/graft-derby/${s.sparkContext.applicationId}-" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    s"jdbc:derby:$db;create=true"
-  }
+  /** The database of each (app, dir): shut down and deleted when the
+    * SparkContext ends. */
+  private val dbs = new graft.Once[String, String](db => {
+    // Derby reports a completed shutdown as SQLState 08006
+    try DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true")
+    catch { case _: java.sql.SQLException => () }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(db))
+  })
 
   /** Load the customer dimension into Derby once per (app, dir) via
-    * Spark's distributed JDBC writer (executor-side inserts). */
-  def ensureDb(s: SparkSession, dir: String): String = synchronized {
-    val u = url(s, dir)
-    val conn = DriverManager.getConnection(u)
-    val exists =
-      try {
-        val rs = conn.getMetaData.getTables(null, null, "CUSTOMER", null)
-        try rs.next() finally rs.close()
-      } finally conn.close()
-    if (!exists) {
+    * Spark's distributed JDBC writer (executor-side inserts); returns the
+    * database's JDBC url. */
+  def ensureDb(s: SparkSession, dir: String): String = {
+    val db = dbs(s, dir) {
+      val db = s"/tmp/graft-derby/${s.sparkContext.applicationId}-" +
+        java.lang.Integer.toHexString(dir.hashCode)
       graft.Tables(s, dir, "customer")
         .select(col("c_custkey").cast("long"), col("c_name"),
           col("c_mktsegment"), col("c_acctbal").cast("double"))
         .write.format("jdbc")
-        .option("url", u).option("driver", driver)
+        .option("url", s"jdbc:derby:$db;create=true").option("driver", driver)
         .option("dbtable", "customer")
         // Derby maps StringType to CLOB by default; CLOBs can't sit in
         // predicates, so pin VARCHARs (ref JdbcDialects do the same)
@@ -57,8 +56,9 @@ object JdbcDemo {
           "c_name VARCHAR(64), c_mktsegment VARCHAR(16)")
         .mode("overwrite")
         .save()
+      db
     }
-    u
+    s"jdbc:derby:$db;create=true"
   }
 
   private def readCustomer(s: SparkSession, u: String): DataFrame =

@@ -26,7 +26,8 @@ import org.apache.spark.sql.functions._
   * its state store and returns the STATE contents (not the sink) — the
   * oracle recomputes what the final state must be from the raw table. The
   * returned frame is a lazy `statestore` scan of the checkpoint, so the
-  * checkpoint dir must outlive the call and is kept.
+  * checkpoint dir must outlive the call: it is deleted when the
+  * SparkContext ends ([[graft.streaming.StreamSource.Checkpoint.kept]]).
   */
 object StateRead {
 
@@ -34,7 +35,7 @@ object StateRead {
     * groupBy(user_id).agg(count,sum) — one (count,sum) buffer row per key,
     * exactly the RocksDB contents SavepointReader.aggregate() would yield. */
   def aggStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-agg")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-agg").kept()
     val agg = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"))
@@ -52,7 +53,7 @@ object StateRead {
   /** q_state_dedup_read: the key set of a streaming dropDuplicates state —
     * the seen-keys store, aggregated per user. */
   def dedupStateRead(s: SparkSession, dir: String): DataFrame = {
-    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-dedup")
+    val ckpt = graft.streaming.StreamSource.checkpointDir(s, "stateread-dedup").kept()
     val dd = graft.streaming.StreamSource.eventsWithSentinel(s, dir)
       .select("user_id", "event_type")
       .dropDuplicates("user_id", "event_type")

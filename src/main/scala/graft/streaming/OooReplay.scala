@@ -40,15 +40,12 @@ object OooReplay {
     * block spans) fits under the sentinel's flush horizon. */
   val Blocks = 8
 
-  private case class Prepared(dir: String, delaySec: Long)
-  private val cache = scala.collection.concurrent.TrieMap.empty[String, Prepared]
+  private val prepared = new graft.Once[String, (String, Long)]
 
   /** Build (once per events dir, cross-process reusable) the segmented
     * replay; returns (replayDir, watermarkDelaySeconds). */
-  def prepare(s: SparkSession, dir: String): (String, Long) = {
-    val p = cache.getOrElseUpdate(dir, doPrepare(s, dir))
-    (p.dir, p.delaySec)
-  }
+  def prepare(s: SparkSession, dir: String): (String, Long) =
+    prepared(dir)(doPrepare(s, dir))
 
   /** Bump when the replay layout/sentinel changes — keys the cache dir so
     * stale fixtures from an older generator never feed a new run.
@@ -60,14 +57,14 @@ object OooReplay {
     * sorter after every real row; matches no operator predicate). */
   val FlushType = "__flush"
 
-  private def doPrepare(s: SparkSession, dir: String): Prepared = synchronized {
+  private def doPrepare(s: SparkSession, dir: String): (String, Long) = {
     val replayDir =
       s"/tmp/graft-ooo/v$ReplayVersion-" + dir.replaceAll("[^A-Za-z0-9.]", "_")
     val root = new java.io.File(replayDir)
     val meta = new java.io.File(root, "_delay_sec")
     if (meta.isFile) {
       val d = new String(java.nio.file.Files.readAllBytes(meta.toPath)).trim.toLong
-      return Prepared(replayDir, d)
+      return (replayDir, d)
     }
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // canonicalize ts to long MICROS whatever the file declared (nanos-as-long
@@ -183,7 +180,7 @@ object OooReplay {
       throw new java.io.IOException(s"failed to publish OOO replay $replayDir")
     org.apache.commons.io.FileUtils.deleteQuietly(staging)
     val d = new String(java.nio.file.Files.readAllBytes(meta.toPath)).trim.toLong
-    Prepared(replayDir, d)
+    (replayDir, d)
   }
 
   /** The replay as an unbounded typed stream, one segment per micro-batch;

@@ -37,25 +37,62 @@ object StateBootstrap {
 
   private[graft] val FlushType = "__flush"
 
-  /** Per-JVM memo of the INPUT artifacts the bootstrap/surgery/rescale
-    * operations are defined over: the half-split parquet fixtures and (for
-    * surgery/rescale) the old job's checkpoint produced by folding the
-    * historical half. In production those are given artifacts — the
-    * savepoint being operated ON — not work the operation performs;
-    * rebuilding them per invocation was fixture prep inside the timed
-    * region (r16 optimization, guide §1; the sentinel-memo precedent).
-    * In-process only: a fresh JVM always rebuilds from the parquet inputs,
-    * so a stale fixture can never cross testdata drops. The memoized
-    * checkpoints are read again by every later call, so their dirs are
-    * kept (`Checkpoint.run`, not `drain`); so is rescale's new-job
-    * checkpoint, which [[rescaleRun]] returns for inspection. */
-  private val prepMemo = scala.collection.concurrent.TrieMap.empty[String, Any]
-  // synchronized (r17, the CdcFormats.roundTrip discipline): the builders
-  // write fixture dirs and checkpoints — two concurrent first-callers must
-  // not interleave those side effects (callers are sequential today; cheap
-  // insurance)
-  private def prepOnce[T](key: String)(build: => T): T =
-    synchronized(prepMemo.getOrElseUpdate(key, build)).asInstanceOf[T]
+  /** Memo of the INPUT artifacts the bootstrap/surgery/rescale operations
+    * are defined over: the half-split cutoff, the live-half stream fixture
+    * under `base`, and (for surgery/rescale) the old job's checkpoint
+    * produced by folding the historical half. In production those are
+    * given artifacts — the savepoint being operated ON — not work the
+    * operation performs; rebuilding them per invocation was fixture prep
+    * inside the timed region (r16 optimization, guide §1; the
+    * sentinel-memo precedent). The entries belong to the SparkContext that
+    * built them: every later call of that context reads the same dirs, and
+    * both dirs are deleted when it ends. */
+  private case class Prep(cutoff: Long, base: String, savepoint: Option[StreamSource.Checkpoint]) {
+    def live: String = s"$base/live"
+  }
+  private val prepOnce = new graft.Once[String, Prep](p => {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p.base))
+    p.savepoint.foreach(_.delete())
+  })
+
+  /** The memoized input of operation `op` on `dir`, built by the first
+    * call in a context: the midpoint cutoff, then the live half plus one
+    * flush marker per user (ALL users, so bootstrap-only keys still
+    * surface their state) re-cut as the file-source stream fixture. With
+    * `foldConf`, also the savepoint being operated on: the historical half
+    * through the SAME keyed fold into a real checkpoint, started with
+    * `foldConf`. `variant` names any setting the savepoint is pinned to. */
+  private def prepared(s: SparkSession, ev: DataFrame, op: String, dir: String,
+      variant: String, foldConf: Option[Seq[(String, String)]]): Prep =
+    prepOnce(s, s"$op:$dir:$variant") {
+      import s.implicits._
+      val mm = ev.agg(expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head()
+      // midpoint cutoff; empty table degenerates to an empty result either way
+      val cut = if (mm.isNullAt(0)) 0L else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
+      val cc = expr(s"unix_micros(ts) < ${cut}L")
+      val base = s"/tmp/graft-$op/${dir.replaceAll("[^A-Za-z0-9.]", "_")}-${System.nanoTime()}"
+      val savepoint = foldConf.map { conf =>
+        val histDir = s"$base/hist"
+        ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
+        val ck = StreamSource.checkpointDir(s, op)
+        val hist = s.readStream.schema(ev.schema).parquet(histDir)
+          .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+        val folded = hist.groupByKey(_.user_id)
+          .flatMapGroupsWithState[BootState, UserTotal](
+            OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
+        ck.run(folded.toDF().writeStream.format("memory")
+          .queryName(s"${op}_hist_${System.nanoTime()}")
+          .outputMode("update"), conf: _*)
+        ck
+      }
+      val p = Prep(cut, base, savepoint)
+      val flush = ev.select(col("user_id")).distinct()
+        .select(lit(-1L).as("event_id"), lit(new java.sql.Timestamp(0L)).as("ts"),
+          col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
+      ev.where(!cc).unionByName(flush)
+        .coalesce(1).write.mode("overwrite").parquet(p.live)
+      p
+    }
 
   /** The keyed continuation fold: live rows (flush markers excluded) are
     * folded onto whatever accumulator the state holds — the batch-seeded
@@ -78,22 +115,8 @@ object StateBootstrap {
     import s.implicits._
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val (cutoff, liveDir) = prepOnce(s"boot:$dir") {
-      val mm = ev.agg(expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head()
-      // midpoint cutoff; empty table degenerates to an empty result either way
-      val cut = if (mm.isNullAt(0)) 0L else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
-      // the live tail + one flush marker per user (ALL users, so
-      // bootstrap-only keys still surface their state), re-cut as the
-      // file-source stream fixture
-      val ld = s"/tmp/graft-bootstrap/${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
-      val flush = ev.select(col("user_id")).distinct()
-        .select(lit(-1L).as("event_id"), lit(new java.sql.Timestamp(0L)).as("ts"),
-          col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
-      ev.where(!expr(s"unix_micros(ts) < ${cut}L")).unionByName(flush)
-        .coalesce(1).write.mode("overwrite").parquet(ld)
-      (cut, ld)
-    }
-    val cutCol = expr(s"unix_micros(ts) < ${cutoff}L")
+    val prep = prepared(s, ev, "bootstrap", dir, "", None)
+    val cutCol = expr(s"unix_micros(ts) < ${prep.cutoff}L")
 
     // 1. the "savepoint write": batch-aggregate the historical half into
     //    keyed state (one shuffle on user_id — the stream's own key)
@@ -105,7 +128,7 @@ object StateBootstrap {
       .mapValues(r => BootState(r._2, r._3))
 
     // 2. the live tail stream over the prepared fixture
-    val live = s.readStream.schema(ev.schema).parquet(liveDir)
+    val live = s.readStream.schema(ev.schema).parquet(prep.live)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
 
     // 3. continuation: fold live rows onto the bootstrapped accumulators
@@ -145,41 +168,12 @@ object StateBootstrap {
     import s.implicits._
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val shufNow = s.conf.get("spark.sql.shuffle.partitions")
-    val (cutoff, liveDirPrep, ckptA) = prepOnce(s"surgery:$dir:$shufNow") {
-      val mm = ev.agg(expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head()
-      val cut = if (mm.isNullAt(0)) 0L else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
-      val cc = expr(s"unix_micros(ts) < ${cut}L")
-      val base = s"/tmp/graft-surgery/${dir.replaceAll("[^A-Za-z0-9.]", "_")}-${System.nanoTime()}"
-
-      // phase 1: historical half through the SAME keyed fold into a real
-      // checkpoint — the savepoint being operated on (the operation's
-      // INPUT artifact; see prepMemo)
-      val histDir = s"$base/hist"
-      ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = StreamSource.checkpointDir(s, "surgery")
-      val hist = s.readStream.schema(ev.schema).parquet(histDir)
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val folded = hist.groupByKey(_.user_id)
-        .flatMapGroupsWithState[BootState, UserTotal](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-      ck.run(folded.toDF().writeStream.format("memory")
-        .queryName(s"surgery_hist_${System.nanoTime()}")
-        .outputMode("update"))
-
-      // the live half + one flush marker per user — the new query's stream
-      // fixture, equally a given input
-      val ld = s"$base/live"
-      val flush = ev.select(col("user_id")).distinct()
-        .select(lit(-1L).as("event_id"), lit(new java.sql.Timestamp(0L)).as("ts"),
-          col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
-      ev.where(!cc).unionByName(flush)
-        .coalesce(1).write.mode("overwrite").parquet(ld)
-      (cut, ld, ck.path)
-    }
+    // phase 1: the savepoint at the session's parallelism (see prepared)
+    val prep = prepared(s, ev, "surgery", dir, s.conf.get("spark.sql.shuffle.partitions"),
+      Some(Nil))
 
     // phase 2+3: read the savepoint, drop the erased users' accumulators
-    val edited = s.read.format("statestore").load(ckptA)
+    val edited = s.read.format("statestore").load(prep.savepoint.get.path)
       .select(col("key.value").as("user_id"),
         col("value.groupState.cnt").as("cnt"),
         col("value.groupState.sum").as("sum"))
@@ -191,7 +185,7 @@ object StateBootstrap {
     // phase 4: new query bootstrapped from the EDITED state, streaming the
     // prepared live half (flush markers included so every surviving
     // accumulator reports)
-    val live = s.readStream.schema(ev.schema).parquet(liveDirPrep)
+    val live = s.readStream.schema(ev.schema).parquet(prep.live)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
     val out = live.groupByKey(_.user_id)
       .flatMapGroupsWithState[BootState, UserTotal](
@@ -230,38 +224,14 @@ object StateBootstrap {
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val partKey = "spark.sql.shuffle.partitions"
-    val (cutoff, liveDirPrep, ckptA) = prepOnce(s"rescale:$dir:$pOld") {
-      val mm = ev.agg(expr("unix_micros(min(ts))"), expr("unix_micros(max(ts))")).head()
-      val cut = if (mm.isNullAt(0)) 0L else mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
-      val cc = expr(s"unix_micros(ts) < ${cut}L")
-      val base = s"/tmp/graft-rescale/${dir.replaceAll("[^A-Za-z0-9.]", "_")}-${System.nanoTime()}"
-
-      // phase 1: the old job — historical half folded at parallelism pOld
-      // into the savepoint the rescale takes as INPUT (see prepMemo)
-      val histDir = s"$base/hist"
-      ev.where(cc).coalesce(1).write.mode("overwrite").parquet(histDir)
-      val ck = StreamSource.checkpointDir(s, s"rescale$pOld")
-      val hist = s.readStream.schema(ev.schema).parquet(histDir)
-        .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      val folded = hist.groupByKey(_.user_id)
-        .flatMapGroupsWithState[BootState, UserTotal](
-          OutputMode.Update(), GroupStateTimeout.NoTimeout())(foldFn)
-      ck.run(folded.toDF().writeStream.format("memory")
-        .queryName(s"rescale_hist_${System.nanoTime()}")
-        .outputMode("update"), partKey -> pOld.toString)
-
-      // the live half + flush markers — the new job's stream fixture
-      val ld = s"$base/live"
-      val flush = ev.select(col("user_id")).distinct()
-        .select(lit(-1L).as("event_id"), lit(new java.sql.Timestamp(0L)).as("ts"),
-          col("user_id"), lit(FlushType).as("event_type"), lit(0.0).as("value"))
-      ev.where(!cc).unionByName(flush)
-        .coalesce(1).write.mode("overwrite").parquet(ld)
-      (cut, ld, ck.path)
-    }
+    // phase 1: the old job — historical half folded at parallelism pOld
+    // into the savepoint the rescale takes as INPUT (see prepared)
+    val prep = prepared(s, ev, s"rescale$pOld", dir, "",
+      Some(Seq(partKey -> pOld.toString)))
 
     // phase 2: read the p=8 savepoint unmodified (a distributed scan —
     // at 100 TB of state this is the same batch job any backfill is)
+    val ckptA = prep.savepoint.get.path
     val seeded = s.read.format("statestore").load(ckptA)
       .select(col("key.value").as("user_id"),
         col("value.groupState.cnt").as("cnt"),
@@ -273,9 +243,9 @@ object StateBootstrap {
     // phase 3: the new job at parallelism pNew, seeded, streaming the
     // prepared live half (flush markers included so bootstrap-only keys
     // still report)
-    val ckptB = StreamSource.checkpointDir(s, s"rescale$pNew")
+    val ckptB = StreamSource.checkpointDir(s, s"rescale$pNew").kept()
     val name = s"state_rescale_${System.nanoTime()}"
-    val live = s.readStream.schema(ev.schema).parquet(liveDirPrep)
+    val live = s.readStream.schema(ev.schema).parquet(prep.live)
       .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
     val out = live.groupByKey(_.user_id)
       .flatMapGroupsWithState[BootState, UserTotal](

@@ -55,7 +55,7 @@ object StreamDedup {
     * file order, modtimes pinned so the file source replays them in
     * ascending order). */
   private[streaming] def prepare(s: SparkSession, dir: String,
-      withSource: Boolean = false): String = synchronized {
+      withSource: Boolean = false): String = {
     // v3: segments carry n_chars so the streaming weighted sample weighs
     // by the SAME column as its batch twin (r14 ADVICE fix — length(text)
     // only coincides with n_chars on all-ASCII fixtures). Extra columns
@@ -63,31 +63,35 @@ object StreamDedup {
     val segDir = (if (withSource) "/tmp/graft-docstream/v3src-"
                   else "/tmp/graft-docstream/v3-") +
       dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(segDir)
-    if (root.isDirectory && root.listFiles().exists(_.getName.endsWith(".parquet")))
-      return segDir
-    val staging = new java.io.File(
-      s"$segDir.inprogress-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    staging.mkdirs()
-    val tmp = new java.io.File(staging, "tmp")
-    val cols = if (withSource) Seq(col("doc_id"), col("text"), col("n_chars"), col("source"))
-               else Seq(col("doc_id"), col("text"), col("n_chars"))
-    Tables(s, dir, "documents").select(cols: _*)
-      .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(tmp.getPath)
-    val t0 = System.currentTimeMillis() - 3600 * 1000L
-    tmp.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        val tgt = new java.io.File(staging, f"seg-$i%02d.parquet")
-        java.nio.file.Files.move(f.toPath, tgt.toPath)
-        tgt.setLastModified(t0 + i * 60000L)
+    replays(segDir) {
+      val root = new java.io.File(segDir)
+      if (!(root.isDirectory && root.listFiles().exists(_.getName.endsWith(".parquet")))) {
+        val staging = new java.io.File(
+          s"$segDir.inprogress-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+        staging.mkdirs()
+        val tmp = new java.io.File(staging, "tmp")
+        val cols = if (withSource) Seq(col("doc_id"), col("text"), col("n_chars"), col("source"))
+                   else Seq(col("doc_id"), col("text"), col("n_chars"))
+        Tables(s, dir, "documents").select(cols: _*)
+          .repartitionByRange(4, col("doc_id")).sortWithinPartitions("doc_id")
+          .write.mode("overwrite").parquet(tmp.getPath)
+        val t0 = System.currentTimeMillis() - 3600 * 1000L
+        tmp.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+          .zipWithIndex.foreach { case (f, i) =>
+            val tgt = new java.io.File(staging, f"seg-$i%02d.parquet")
+            java.nio.file.Files.move(f.toPath, tgt.toPath)
+            tgt.setLastModified(t0 + i * 60000L)
+          }
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        if (!staging.renameTo(root) && !root.isDirectory)
+          throw new java.io.IOException(s"failed to publish doc replay $segDir")
+        org.apache.commons.io.FileUtils.deleteQuietly(staging)
       }
-    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    if (!staging.renameTo(root) && !root.isDirectory)
-      throw new java.io.IOException(s"failed to publish doc replay $segDir")
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
+    }
     segDir
   }
+
+  private val replays = new graft.Once[String, Unit]
 
   /** q_stream_dedup_minhash: keep-set after streaming LSH dedup — must
     * equal the batch keep (docs never appearing as the LATER side of a

@@ -68,17 +68,11 @@ object StreamSource {
     * immutable for the life of a JVM, so both are computed once; the memo
     * is in-process only (no cross-process reuse — a stale sentinel from an
     * older testdata drop can never leak into a new run). */
-  private val sentinelMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (org.apache.spark.sql.types.StructType, String)]
+  private val sentinelMemo = new graft.Once[String, (org.apache.spark.sql.types.StructType, String)]
 
   def eventsWithSentinel(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // synchronized (r17, the CdcFormats.roundTrip discipline): two
-    // concurrent first-callers must not both run prepareSentinel and
-    // overwrite the same fixed sentinel dir mid-read — callers are
-    // sequential today; cheap insurance
-    val (schema, sentinelDir) = synchronized(
-      sentinelMemo.getOrElseUpdate(dir, prepareSentinel(s, dir)))
+    val (schema, sentinelDir) = sentinelMemo(dir)(prepareSentinel(s, dir))
     val (path, glob) = eventsStreamPath(dir)
     val real = s.readStream.schema(schema)
       .option("pathGlobFilter", glob).parquet(path)
@@ -204,7 +198,8 @@ object StreamSource {
 
     /** [[start]] `w`, process all available input, and stop the query, also
       * when processing throws. The dir stays, for callers that read the
-      * checkpoint afterwards; the stopped query keeps its progress. */
+      * checkpoint afterwards (see [[kept]]); the stopped query keeps its
+      * progress. */
     def run[T](w: DataStreamWriter[T], conf: (String, String)*): StreamingQuery = {
       val q = start(w, conf: _*)
       try q.processAllAvailable() finally q.stop()
@@ -217,7 +212,14 @@ object StreamSource {
       try run(w, conf: _*) finally delete()
 
     def delete(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+
+    /** This checkpoint, deleted when the SparkContext ends instead of by
+      * the caller: for a dir read after the call returns, such as the
+      * source of a lazy `statestore` frame. */
+    def kept(): Checkpoint = keptCheckpoints(s, path)(this)
   }
+
+  private val keptCheckpoints = new graft.Once[String, Checkpoint](_.delete())
 
   /** `$ckptRoot/$name-$nanoTime`, written through LocalCheckpointFileManager
     * by the query that `start`s on it. */

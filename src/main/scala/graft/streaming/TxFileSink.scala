@@ -293,21 +293,16 @@ object TxFileSink {
 
   /** One deterministic topic per (app, events dir), produced executor-side
     * (each partition appends one segment — the "partition leader writes
-    * its segment" shape; FileTopic.append is atomic per segment). */
-  private val topicReady =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+    * its segment" shape; FileTopic.append is atomic per segment). The
+    * first caller per topic produces it; the topic dir is deleted when the
+    * SparkContext ends. */
+  private val topics = new graft.Once[String, String](
+    t => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t)))
 
   def ensureTopic(s: SparkSession, dir: String): String = {
     val topic = s"/tmp/graft-topic/${s.sparkContext.applicationId}-" +
       java.lang.Integer.toHexString(dir.hashCode)
-    // Per-topic future instead of an object-wide lock: producing one
-    // topic must not block callers working on a different dir (or on
-    // already-published topics). The first caller per topic produces;
-    // everyone else awaits its future.
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
-    val prior = topicReady.putIfAbsent(topic, fresh)
-    if (prior != null) return prior.get()
-    try {
+    topics(s, topic) {
       // Produce into a temp dir and rename on success: a totalRecords==0
       // gate is not atomic with production, so a job that dies after some
       // partitions appended would make later calls skip production and
@@ -325,13 +320,7 @@ object TxFileSink {
             !graft.sources.FsCommit.exists(topic))
           throw new java.io.IOException(s"failed to publish topic $topic")
       }
-      fresh.complete(topic)
       topic
-    } catch {
-      case e: Throwable =>
-        fresh.completeExceptionally(e)
-        topicReady.remove(topic, fresh)
-        throw e
     }
   }
 
@@ -389,40 +378,26 @@ object TxFileSink {
   def rollingSink(s: SparkSession, dir: String): DataFrame =
     rollingSummary(s, runRollingSink(s, dir))
 
-  private val compactedOut =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
-
   /** The rolling sink followed by a compaction pass — byte-identical
     * summary to q_stream_file_sink's oracle (content preservation IS the
     * compaction contract), read back through the compaction manifest with
     * every bucket collapsed to one file. Sink + compaction run once per
-    * (process, dir) — the production cadence is "compact nightly, read
-    * often", so repeated invocations measure the manifest-resolved read
-    * (q_stream_file_sink still re-runs the full sink machinery every
-    * call). */
+    * (app, dir), by the first caller — the production cadence is "compact
+    * nightly, read often", so repeated invocations measure the
+    * manifest-resolved read (q_stream_file_sink still re-runs the full
+    * sink machinery every call). The compacted dir is deleted when the
+    * SparkContext ends. */
   def compactedSink(s: SparkSession, dir: String): DataFrame = {
-    // Per-dir future, not an object-wide lock: the first sink-run +
-    // compaction is a full streaming job, and holding the TxFileSink
-    // lock for its duration would stall unrelated queries (exactly-once,
-    // rolling sink) that only need ensureTopic. The first caller per dir
-    // runs the job; concurrent callers await its future.
-    val fresh = new java.util.concurrent.CompletableFuture[String]()
-    val prior = compactedOut.putIfAbsent(dir, fresh)
-    val out =
-      if (prior != null) prior.get()
-      else try {
-        val o = runRollingSink(s, dir)
-        compact(s, o, "day", "value", targetRowsPerFile = Int.MaxValue / 2)
-        fresh.complete(o)
-        o
-      } catch {
-        case e: Throwable =>
-          fresh.completeExceptionally(e)
-          compactedOut.remove(dir, fresh)
-          throw e
-      }
+    val out = compactedOut(s, dir) {
+      val o = runRollingSink(s, dir)
+      compact(s, o, "day", "value", targetRowsPerFile = Int.MaxValue / 2)
+      o
+    }
     rollingSummary(s, out)
   }
+
+  private val compactedOut = new graft.Once[String, String](
+    o => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(o)))
 
   val sql: Map[String, String] = Map(
     "q_topic_exactly_once" ->

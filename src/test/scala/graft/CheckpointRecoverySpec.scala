@@ -34,7 +34,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("runningAgg state, offsets and file-sink commits survive restart") {
     implicit val sqlCtx = spark.sqlContext
-    val base = s"/tmp/graft-ckpt/test-recovery-${System.nanoTime()}"
+    val base = checkpointPath("test-recovery")
     val input = MemoryStream[Event]
 
     def start() =
@@ -67,7 +67,7 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   test("keepLast dedup state survives restart via foreachBatch (stale row still rejected)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = s"/tmp/graft-ckpt/test-recovery2-${System.nanoTime()}"
+    val ckpt = checkpointPath("test-recovery2")
     val input = MemoryStream[Event]
 
     def start() =

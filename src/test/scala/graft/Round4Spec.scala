@@ -25,7 +25,7 @@ class Round4Spec extends SparkSpec {
     val q = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
       out.toDF().writeStream.format("memory").queryName("t_retract_agg")
         .outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft-ckpt/t-ragg-${System.nanoTime()}")
+        .option("checkpointLocation", checkpointPath("t-ragg"))
         .start()
     }
     // user 1 latest = 5.0 (A, the group min), user 2 latest = 7.0 (A)
@@ -59,7 +59,7 @@ class Round4Spec extends SparkSpec {
       _.event_type == "P", _.event_type == "V", padLeft = true, padRight = true)
     val q = out.toDF().writeStream.format("memory").queryName("t_full_outer")
       .outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-fo-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-fo"))
       .start()
     // unmatched left (user 1) and unmatched right (user 2) both emit padded
     input.addData(Seq(ev(1, 10, 1, "P", 0), ev(2, 10, 2, "V", 0)))
@@ -86,7 +86,7 @@ class Round4Spec extends SparkSpec {
     val q = StatefulOps.procTimeDedupKeepFirst(input.toDS())
       .toDF().writeStream.format("memory").queryName("t_pt_dedup")
       .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-ptd-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-ptd"))
       .start()
     input.addData(Seq(ev(5, 50, 1, "view", 0)))
     q.processAllAvailable()
@@ -106,7 +106,7 @@ class Round4Spec extends SparkSpec {
       input.toDS().withWatermark("ts", "1 minute"), 86400L * 1000000, 40.0)
     val q = out.toDF().writeStream.format("memory").queryName("t_delta_ev")
       .outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-dev-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-dev"))
       .start()
     // one day-window for user 7; last value 55 → |10-55|=45 and |100-55|=45
     // are >= 40 (evicted), 60 and 55 survive

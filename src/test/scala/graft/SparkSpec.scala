@@ -15,8 +15,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Smallest driver-generated scale factor — used for end-to-end shapes. */
   val sf: String = "/root/testdata/sf0.001"
 
-  override def afterAll(): Unit = {
-    // keep the session for the next suite (getOrCreate reuses it)
-    super.afterAll()
+  private val checkpoints =
+    scala.collection.mutable.ListBuffer.empty[streaming.StreamSource.Checkpoint]
+
+  /** A fresh checkpoint dir under [[streaming.StreamSource.ckptRoot]],
+    * deleted when the suite ends. */
+  def checkpointPath(name: String): String = checkpoints.synchronized {
+    val ck = streaming.StreamSource.checkpointDir(spark, name)
+    checkpoints += ck
+    ck.path
   }
+
+  override def afterAll(): Unit =
+    // keep the session for the next suite (getOrCreate reuses it)
+    try checkpoints.synchronized(checkpoints.foreach(_.delete()))
+    finally super.afterAll()
 }

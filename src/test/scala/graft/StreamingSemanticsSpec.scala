@@ -29,7 +29,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       .select(col("w.start").as("w_start"), col("cnt"))
     val q = agg.writeStream.format("memory").queryName("t_late")
       .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-late-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-late"))
       .start()
     input.addData(Seq(ev(1, 5, 1, "view", 0), ev(2, 25, 1, "view", 0)))
     q.processAllAvailable() // watermark → 25 - 10 = 15
@@ -61,7 +61,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       .select(col("w.start").as("w_start"), col("cnt"))
     val q = agg.writeStream.format("memory").queryName("t_early")
       .outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-early-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-early"))
       .start()
     input.addData(Seq(ev(1, 5, 1, "view", 0)))
     q.processAllAvailable()
@@ -80,7 +80,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       val input = MemoryStream[Event]
       val q = StatefulOps.keepLast(input.toDS()).writeStream
         .format("memory").queryName("t_rocks").outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft-ckpt/t-rocks-${System.nanoTime()}")
+        .option("checkpointLocation", checkpointPath("t-rocks"))
         .start()
       input.addData(Seq(ev(1, 10, 3, "view", 1.0), ev(2, 20, 3, "click", 2.0)))
       q.processAllAvailable()
@@ -99,7 +99,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     val out = StatefulOps.sortedEvents(input.toDS(), "10 minutes")
     val q = out.writeStream.format("memory").queryName("t_sorted_pack")
       .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-pack-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-pack"))
       .start()
     // same-MILLISECOND events differing only in micros: the packed state
     // stores event time as long micros and must keep full precision (the
@@ -153,7 +153,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     val q = GraftSession.withConf(spark, "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false") {
       out.writeStream.format("memory").queryName("t_sorted_agg")
         .outputMode("append")
-        .option("checkpointLocation", s"/tmp/graft-ckpt/t-sorted-${System.nanoTime()}")
+        .option("checkpointLocation", checkpointPath("t-sorted"))
         .start()
     }
     // event 2 arrives a batch BEFORE event 1 (cross-batch disorder that
@@ -193,7 +193,7 @@ class StreamingSemanticsSpec extends SparkSpec {
       .select(col("w.start").as("w_start"), col("cnt"))
     val q = agg.writeStream.format("memory").queryName("t_idle")
       .outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-idle-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-idle"))
       .start()
     active.addData(Seq(ev(1, 5, 1, "view", 0), ev(2, 25, 1, "view", 0)))
     q.processAllAvailable()
@@ -215,7 +215,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     // the OutputTag pattern: ONE streaming pass, the batch is split inside
     // foreachBatch (persist avoids a double source scan in production)
     val q = input.toDS().writeStream
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-side-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-side"))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Event], _: Long) =>
         batch.persist()
         batch.filter(_.event_type != "error").collect().foreach(e => main.add(e.event_id))
@@ -244,7 +244,7 @@ class StreamingSemanticsSpec extends SparkSpec {
     val matched = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
     val input = MemoryStream[Event]
     val q = input.toDS().writeStream
-      .option("checkpointLocation", s"/tmp/graft-ckpt/t-bcast-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("t-bcast"))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Event], _: Long) =>
         val r = spark.createDataFrame(rules).toDF("event_type", "w")
         batch.toDF().join(broadcast(r), "event_type")
@@ -265,7 +265,7 @@ class StreamingSemanticsSpec extends SparkSpec {
 
   test("state survives query restart from the same checkpoint (exactly-once recovery)") {
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = s"/tmp/graft-ckpt/t-recover-${System.nanoTime()}"
+    val ckpt = checkpointPath("t-recover")
     val emitted = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     def start(input: MemoryStream[Event]) =
       StatefulOps.keepLast(input.toDS()).writeStream

@@ -29,7 +29,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Event]
     val q: StreamingQuery = op(input.toDS()).writeStream
       .format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", s"/tmp/graft-ckpt/test-$name-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath(s"test-$name"))
       .start()
     var seen = 0L
     val feed = (rows: Seq[Event]) => { input.addData(rows); () }
@@ -304,7 +304,7 @@ class StreamingSpec extends SparkSpec {
     val q = StatefulOps.keepLastWithTtl(
         input.toDS().withWatermark("ts", "0 seconds"), ttlMs = 10L * 60000)
       .writeStream.format("memory").queryName("t_ttl").outputMode("update")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/test-ttl-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("test-ttl"))
       .start()
     def stateRows: Long = {
       val p = q.lastProgress
@@ -333,7 +333,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[Event]
     val q = StatefulOps.temporalSort(input.toDS()).writeStream
       .format("memory").queryName("t_tsort").outputMode("append")
-      .option("checkpointLocation", s"/tmp/graft-ckpt/test-tsort-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath("test-tsort"))
       .start()
     // out-of-order batch; watermark still at -inf → everything buffered
     input.addData(Seq(ev(2, 20, 1, "view", 0), ev(1, 10, 1, "view", 0)))

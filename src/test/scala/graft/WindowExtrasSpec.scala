@@ -28,7 +28,7 @@ class WindowExtrasSpec extends SparkSpec {
     val input = MemoryStream[Event]
     val q: StreamingQuery = op(input.toDS().withWatermark("ts", delay))
       .writeStream.format("memory").queryName(name).outputMode(mode)
-      .option("checkpointLocation", s"/tmp/graft-ckpt/test-$name-${System.nanoTime()}")
+      .option("checkpointLocation", checkpointPath(s"test-$name"))
       .start()
     var seen = 0
     ( (rows: Seq[Event]) => { input.addData(rows); () },
