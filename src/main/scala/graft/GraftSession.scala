@@ -81,15 +81,19 @@ object GraftSession {
   }
 
   /** Run `body` with `conf` set on `s`, then give each key back exactly what
-    * it had before (unset if it was unset), also when `body` throws. */
-  def withConf[A](s: SparkSession, conf: (String, String)*)(body: => A): A = {
-    val set = s.conf.getAll
-    val prev = conf.map { case (k, _) => k -> set.get(k) }
-    conf.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    * it had before (unset if it was unset), also when `body` throws.
+    * Windows on one session hold its config's monitor, so windows from
+    * several threads run one at a time and each restores what it found;
+    * a nested window on the same thread re-enters it. */
+  def withConf[A](s: SparkSession, conf: (String, String)*)(body: => A): A =
+    s.conf.synchronized {
+      val set = s.conf.getAll
+      val prev = conf.map { case (k, _) => k -> set.get(k) }
+      conf.foreach { case (k, v) => s.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
     }
-  }
 }

@@ -1,7 +1,10 @@
 package graft
 
-/** DuckDB oracle SQL for the LLM-pipeline operators (text analysis, dedup,
-  * similarity, multimodal). Kept apart from SparkEntry for readability.
+import graft.operators.{Dedup, Multimodal, Pipeline, Similarity, TextAnalysis, WebPipeline}
+import graft.streaming.StreamBloom
+
+/** The LLM-pipeline queries (text analysis, dedup, similarity,
+  * multimodal): each builder with its DuckDB oracle SQL.
   *
   * Hash-dependent operators (minhash/simhash/hyperplane LSH) are fully
   * reproducible here because every hash is md5-derived:
@@ -222,8 +225,8 @@ object LlmOracles {
       |       FROM h a JOIN h b ON a.doc_id < b.doc_id
       |       WHERE bit_count(xor(a.ah, b.ah)) <= 3)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_corpus_datasheet" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_corpus_datasheet", TextAnalysis.corpusDatasheet,
       """WITH d AS (SELECT source, lang, n_chars,
         |  len(string_split(lower(text), ' ')) AS n_toks FROM documents)
         |SELECT source, lang,
@@ -234,8 +237,8 @@ object LlmOracles {
         |  CAST(sum(CASE WHEN n_toks < 60 THEN 1 ELSE 0 END) AS BIGINT) AS n_short,
         |  CAST(GROUPING(source, lang) AS BIGINT) AS gid
         |FROM d GROUP BY ROLLUP (source, lang)
-        |ORDER BY gid, source NULLS FIRST, lang NULLS FIRST""".stripMargin,
-    "q_text_stats" ->
+        |ORDER BY gid, source NULLS FIRST, lang NULLS FIRST""".stripMargin),
+    Query("q_text_stats", TextAnalysis.stats,
       (toksCte + """
         |SELECT doc_id,
         | CAST(len(t) AS INT) AS n_tokens,
@@ -248,8 +251,8 @@ object LlmOracles {
         | list_reduce(list_prepend(0::BIGINT,
         |   list_transform(range(1, length(text)+1), i -> ascii(text[i])::BIGINT)),
         |   (acc, c) -> (acc * 31 + c) % 1000000007) AS fp_roll
-        |FROM toks ORDER BY doc_id""").stripMargin,
-    "q_text_langid" ->
+        |FROM toks ORDER BY doc_id""").stripMargin),
+    Query("q_text_langid", TextAnalysis.langId,
       (toksCte + """,
         |sc AS (SELECT doc_id,
         | CAST(len(list_intersect(list_distinct(t), """ + stopEnSql + """)) AS INT) AS s_en,
@@ -261,24 +264,24 @@ object LlmOracles {
         | CASE WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
         |      WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
         |      WHEN s_fr >= s_es THEN 'fr' ELSE 'es' END AS lang_pred
-        |FROM sc ORDER BY doc_id""").stripMargin,
-    "q_dedup_exact" ->
+        |FROM sc ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_exact", Dedup.exact,
       """SELECT keep_id, n_copies FROM (
         | SELECT md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
         |        min(doc_id) AS keep_id, count(*) AS n_copies
         | FROM (SELECT doc_id, text FROM documents
         |       UNION ALL SELECT doc_id + 1000000, text FROM documents)
-        | GROUP BY fp) ORDER BY keep_id""".stripMargin,
+        | GROUP BY fp) ORDER BY keep_id""".stripMargin),
     // Bloom probe replay: identical md5-derived Kirsch–Mitzenmacher
     // positions; membership of all 4 probe positions in the lake's set-bit
     // SET is exactly the bitmap test (false positives reproduce too).
     // q_stream_bloom shares the text verbatim: the streaming bit_or fold
     // must produce the bit-identical bitmap (commutative/associative OR)
-    "q_dedup_bloom" -> bloomSql,
-    "q_stream_bloom" -> bloomSql,
+    Query("q_dedup_bloom", Dedup.bloomDedup, bloomSql),
+    Query("q_stream_bloom", StreamBloom.bloomStreamDedup, bloomSql),
     // sketch-sized bloom: the HLL measurement, the next-pow2 sizing
     // decision (integer bit length) and every filter bit replay exactly
-    "q_dedup_bloom_sized" ->
+    Query("q_dedup_bloom_sized", Dedup.bloomSizedDedup,
       """WITH fps AS (SELECT doc_id,
         |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp FROM documents),
         |lake AS (SELECT doc_id, fp FROM fps WHERE doc_id % 3 = 0),
@@ -313,8 +316,8 @@ object LlmOracles {
         |SELECT d.doc_id, f.bloom_dup,
         |  (d.fp IN (SELECT fp FROM lake)) AS exact_dup,
         |  (SELECT m FROM mm) AS m_bits
-        |FROM shard d JOIN flag f USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-    "q_text_repetition" ->
+        |FROM shard d JOIN flag f USING (doc_id) ORDER BY d.doc_id""".stripMargin),
+    Query("q_text_repetition", TextAnalysis.repetition,
       (toksCte + """,
         |g AS (SELECT doc_id, len(t) AS n_tokens,
         |  CASE WHEN len(t) < 2 THEN []::VARCHAR[]
@@ -327,8 +330,8 @@ object LlmOracles {
         |      ELSE round(1.0 - len(list_distinct(g2))::DOUBLE / len(g2), 6) END AS dup2_frac,
         | CASE WHEN len(g3) = 0 THEN 0.0
         |      ELSE round(1.0 - len(list_distinct(g3))::DOUBLE / len(g3), 6) END AS dup3_frac
-        |FROM g ORDER BY doc_id""").stripMargin,
-    "q_quality_gopher" ->
+        |FROM g ORDER BY doc_id""").stripMargin),
+    Query("q_quality_gopher", TextAnalysis.gopherQuality,
       (toksCte + """,
         |g AS (SELECT doc_id,
         |  list_transform(range(1, len(t) + 1), j ->
@@ -352,8 +355,8 @@ object LlmOracles {
         |  (n_words BETWEEN 50 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
         |   AND sym_ratio <= 0.1 AND frac_bullet <= 0.9 AND frac_ellipsis <= 0.3
         |   AND alpha_frac >= 0.8 AND n_stop >= 2) AS keep
-        |FROM m ORDER BY doc_id""").stripMargin,
-    "q_quality_perplexity" ->
+        |FROM m ORDER BY doc_id""").stripMargin),
+    Query("q_quality_perplexity", TextAnalysis.perplexity,
       (toksCte + """,
         |tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
         |cnt AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
@@ -367,10 +370,10 @@ object LlmOracles {
         |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
         | CAST(su // n_tok AS BIGINT) AS nats_u,
         | (su // n_tok) <= 3405000 AS keep
-        |FROM d ORDER BY doc_id""").stripMargin,
+        |FROM d ORDER BY doc_id""").stripMargin),
     // CCNet head/middle/tail: per-language perplexity terciles over the
     // same micro-nat column; ntile over (nats_u, doc_id) is deterministic
-    "q_quality_ccnet_buckets" ->
+    Query("q_quality_ccnet_buckets", TextAnalysis.ccnetBuckets,
       (toksCte + """,
         |tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
         |cnt AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
@@ -385,11 +388,11 @@ object LlmOracles {
         |  CASE ntile(3) OVER (PARTITION BY l.lang ORDER BY d.nats_u, d.doc_id)
         |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
         |FROM d JOIN (SELECT doc_id, lang FROM documents) l USING (doc_id)
-        |ORDER BY doc_id""").stripMargin,
+        |ORDER BY doc_id""").stripMargin),
     // sketch-threshold tercile twin (r13): the same nats_u per document,
     // split by HDR-cell thresholds instead of ntile — pure integer cell
     // math, bit-replayable on both engines
-    "q_quality_ccnet_sketch" ->
+    Query("q_quality_ccnet_sketch", TextAnalysis.ccnetBucketsSketch,
       (toksCte + """,
         |tok AS (SELECT doc_id, unnest(t) AS tok FROM toks),
         |cnt AS (SELECT tok, count(*) AS c FROM tok GROUP BY tok),
@@ -415,10 +418,10 @@ object LlmOracles {
         |  CASE WHEN dl.cell <= thr.b1 THEN 'head'
         |       WHEN dl.cell <= thr.b2 THEN 'middle' ELSE 'tail' END AS bucket
         |FROM dl JOIN thr USING (lang)
-        |ORDER BY dl.doc_id""").stripMargin,
+        |ORDER BY dl.doc_id""").stripMargin),
     // conditional bigram LM: same micro-nat quantization discipline, cost
     // −ln((c(w1,w2)+1)/(c(w1)+V)) per bigram event
-    "q_quality_bigram_lm" ->
+    Query("q_quality_bigram_lm", TextAnalysis.bigramPerplexity,
       (toksCte + """,
         |docs AS (SELECT doc_id, t FROM toks WHERE len(t) >= 2),
         |bi AS (SELECT doc_id,
@@ -437,14 +440,14 @@ object LlmOracles {
         |SELECT doc_id, CAST(n_big AS BIGINT) AS n_big,
         | CAST(su // n_big AS BIGINT) AS nats_u,
         | (su // n_big) <= 3422000 AS keep
-        |FROM d ORDER BY doc_id""").stripMargin,
-    "q_fingerprint_winnow" ->
+        |FROM d ORDER BY doc_id""").stripMargin),
+    Query("q_fingerprint_winnow", TextAnalysis.winnowFingerprint,
       (winnowCtes + """
         |SELECT doc_id, CAST(len(g5) AS INT) AS n_grams,
         | CAST(len(list_distinct(s)) AS INT) AS n_fp,
         | array_to_string(list_sort(list_distinct(s)), ',') AS fp
-        |FROM sel ORDER BY doc_id""").stripMargin,
-    "q_dedup_winnow_pairs" ->
+        |FROM sel ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_winnow_pairs", TextAnalysis.winnowDupPairs,
       (winnowCtes + """,
         |sets AS (SELECT doc_id, list_sort(list_distinct(s)) AS fps FROM sel),
         |post AS (SELECT doc_id, unnest(fps) AS hsh FROM sets),
@@ -458,8 +461,8 @@ object LlmOracles {
         |  round(len(list_intersect(x.fps, y.fps))::DOUBLE /
         |    (len(x.fps) + len(y.fps) - len(list_intersect(x.fps, y.fps))), 4) AS j
         | FROM cand JOIN sets x ON x.doc_id = doc_a JOIN sets y ON y.doc_id = doc_b)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin,
-    "q_tfidf_top3" ->
+        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
+    Query("q_tfidf_top3", TextAnalysis.tfidfTop3,
       (toksCte + """,
         |tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -472,16 +475,16 @@ object LlmOracles {
         |  (PARTITION BY doc_id ORDER BY skey DESC, token) AS rnk FROM sc)
         |SELECT doc_id, CAST(rnk AS INT) AS rnk, token,
         | round(skey / 1000000.0, 4) AS score
-        |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""").stripMargin,
-    "q_decontaminate" ->
+        |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""").stripMargin),
+    Query("q_decontaminate", Pipeline.decontaminate,
       """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, array_to_string(ws[i:i+12], ' ') AS gram
         |      FROM w, unnest(range(1, greatest(len(ws) - 11, 1))) t(i)),
         |b AS (SELECT DISTINCT gram FROM g WHERE doc_id % 5 = 0)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
         |FROM g WHERE doc_id % 5 <> 0 AND gram IN (SELECT gram FROM b)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_sample_stratified" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q_sample_stratified", Pipeline.stratifiedSample,
       (toksCte + """,
         |sc AS (SELECT doc_id,
         | CAST(len(list_intersect(list_distinct(t), """ + stopEnSql + """)) AS INT) AS s_en,
@@ -500,8 +503,8 @@ object LlmOracles {
         | FROM lang)
         |WHERE bucket < CASE lang_pred WHEN 'en' THEN 60 WHEN 'de' THEN 40
         |                              WHEN 'fr' THEN 30 ELSE 20 END
-        |ORDER BY doc_id""").stripMargin,
-    "q_dedup_span" ->
+        |ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_span", Dedup.spanDupCoverage,
       """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, array_to_string(ws[i:i+12], ' ') AS gram
         |      FROM w, unnest(range(1, greatest(len(ws) - 11, 1))) t(i)),
@@ -512,11 +515,11 @@ object LlmOracles {
         | CAST(count(*) AS BIGINT) AS total_ngrams,
         | CAST(coalesce(sum(CASE WHEN gram IN (SELECT gram FROM d) THEN 1 ELSE 0 END), 0) AS BIGINT) AS dup_ngrams,
         | round(coalesce(sum(CASE WHEN gram IN (SELECT gram FROM d) THEN 1 ELSE 0 END), 0)::DOUBLE / count(*), 4) AS dup_frac
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // exact-substring removal: same gram index; token j survives iff no
     // duplicate 13-gram window [i, i+12] covers it; fingerprint of the
     // kept sequence proves the EDIT matches, not just the counts
-    "q_dedup_span_strip" ->
+    Query("q_dedup_span_strip", Dedup.spanStrip,
       """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),
         |g AS (SELECT doc_id, i, array_to_string(ws[i:i+12], ' ') AS gram
         |      FROM w, unnest(range(1, greatest(len(ws) - 11, 1))) t(i)),
@@ -534,16 +537,16 @@ object LlmOracles {
         |SELECT w.doc_id, CAST(len(w.ws) AS INT) AS n_tok,
         | CAST(len(w.ws) - coalesce(r.n_kept, 0) AS INT) AS n_removed,
         | r.fp AS fp_kept
-        |FROM w LEFT JOIN r USING (doc_id) ORDER BY w.doc_id""".stripMargin,
-    "q_dedup_ngram_pairs" ->
+        |FROM w LEFT JOIN r USING (doc_id) ORDER BY w.doc_id""".stripMargin),
+    Query("q_dedup_ngram_pairs", Dedup.ngramJaccardPairsSorted,
       (shinglesCte + """
         |SELECT doc_a, doc_b, j FROM (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  round(len(list_intersect(a.s, b.s))::DOUBLE /
         |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin,
-    "q_dedup_ngram_keep" ->
+        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
+    Query("q_dedup_ngram_keep", Dedup.ngramDedupKeep,
       (shinglesCte + """,
         |pairs AS (
         | SELECT doc_a, doc_b FROM (
@@ -553,14 +556,14 @@ object LlmOracles {
         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id) WHERE j >= 0.5)
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT doc_b FROM pairs)
-        |ORDER BY doc_id""").stripMargin,
-    "q_dedup_minhash_lsh" ->
-      (minhashPairCtes + "\nSELECT doc_a, doc_b, j FROM vpairs ORDER BY doc_a, doc_b"),
+        |ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_minhash_lsh", Dedup.minhashLshPairs,
+      (minhashPairCtes + "\nSELECT doc_a, doc_b, j FROM vpairs ORDER BY doc_a, doc_b")),
     // transitive closure over the SAME verified pair set: recursive
     // reachability (the pair graph is tiny — closure cost is per-cluster
     // quadratic in near-dup cluster size, not corpus size), then keep every
     // doc that no smaller doc_id can reach
-    "q_dedup_cluster_keep" ->
+    Query("q_dedup_cluster_keep", Dedup.minhashClusterKeep,
       (minhashPairCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vpairs
         |          UNION SELECT doc_b, doc_a FROM vpairs),
@@ -569,10 +572,10 @@ object LlmOracles {
         |lbl AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT u FROM lbl WHERE mv < u)
-        |ORDER BY doc_id""").stripMargin,
+        |ORDER BY doc_id""").stripMargin),
     // leakage-safe split: rep = component minimum (same reach derivation),
     // split key = md5(rep) bucket — clusters move together
-    "q_split_leakage" ->
+    Query("q_split_leakage", Dedup.leakageSafeSplit,
       (minhashPairCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
         |edges AS (SELECT doc_a AS u, doc_b AS v FROM vpairs
         |          UNION SELECT doc_b, doc_a FROM vpairs),
@@ -586,8 +589,8 @@ object LlmOracles {
         |   ('0x' || substr(md5(rep::VARCHAR), 1, 8))::UBIGINT % 10 AS b FROM rep)
         |SELECT doc_id, rep,
         |  CASE WHEN b <= 7 THEN 'train' WHEN b = 8 THEN 'val' ELSE 'test' END AS split
-        |FROM sp ORDER BY doc_id""").stripMargin,
-    "q_dedup_simhash" ->
+        |FROM sp ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_simhash", Dedup.simhashPairs,
       (toksCte + """,
         |th AS (SELECT doc_id, ('0x'||substr(md5(tok), 1, 15))::UBIGINT AS h
         |       FROM (SELECT doc_id, unnest(t) AS tok FROM toks)),
@@ -605,8 +608,8 @@ object LlmOracles {
         | FROM chunks a JOIN chunks b
         |   ON a.chunk = b.chunk AND a.cv = b.cv AND a.doc_id < b.doc_id)
         |SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 12
-        |ORDER BY doc_a, doc_b""").stripMargin,
-    "q_ann_brute" ->
+        |ORDER BY doc_a, doc_b""").stripMargin),
+    Query("q_ann_brute", Similarity.annBruteForce,
       """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 5),
         |scored AS (
@@ -618,8 +621,8 @@ object LlmOracles {
         |r AS (SELECT qid, vec_id, cos,
         |  CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS INT) AS rank
         | FROM scored)
-        |SELECT qid, rank, vec_id, cos FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-    "q_ann_ivf" ->
+        |SELECT qid, rank, vec_id, cos FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+    Query("q_ann_ivf", Similarity.annIvf,
       """WITH cent AS (
         | SELECT label, i.i AS d, round(avg(embedding[i.i]), 6) AS c
         | FROM embeddings, range(1, 65) i(i) GROUP BY label, i.i),
@@ -643,10 +646,10 @@ object LlmOracles {
         |r AS (SELECT qid, vec_id, cos,
         |  CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS INT) AS rank
         | FROM scored)
-        |SELECT qid, rank, vec_id, cos FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
+        |SELECT qid, rank, vec_id, cos FROM r WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
     // recall@10 of the IVF index vs brute-force ground truth: both CTE
     // chains verbatim from their own oracles, intersected per query
-    "q_ann_recall" ->
+    Query("q_ann_recall", Similarity.annRecall,
       """WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
         |           FROM embeddings WHERE vec_id < 5),
         |bscored AS (
@@ -682,11 +685,11 @@ object LlmOracles {
         |SELECT b.qid, CAST(count(i.vec_id) AS BIGINT) AS n_hits,
         | round(count(i.vec_id) / CAST(count(*) AS DOUBLE), 2) AS recall_at_10
         |FROM br b LEFT JOIN ir i USING (qid, vec_id)
-        |GROUP BY b.qid ORDER BY b.qid""".stripMargin,
+        |GROUP BY b.qid ORDER BY b.qid""".stripMargin),
     // product quantization: per-subspace L2 codebooks (K=4, 2 Lloyd rounds
     // under the same round-6 discipline as kmeansCtes), encode, then ADC
     // top-10 with integer micro-unit distance sums
-    "q_ann_pq" ->
+    Query("q_ann_pq", Similarity.annPq,
       (pqCtes + """,
         |ad AS (SELECT dt.qid, e.vec_id, CAST(sum(du) AS BIGINT) AS adist_u
         |  FROM enc e JOIN dt ON dt.s = e.s AND dt.cid = e.cid
@@ -694,10 +697,10 @@ object LlmOracles {
         |SELECT qid, CAST(rank AS INT) AS rank, vec_id, adist_u FROM (
         |  SELECT qid, vec_id, adist_u,
         |    row_number() OVER (PARTITION BY qid ORDER BY adist_u, vec_id) AS rank
-        |  FROM ad) WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+        |  FROM ad) WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
     // IVF-PQ: the probe CTEs from q_ann_ivf prune candidates to 3 cells,
     // the ADC sum scores only the survivors from their codes
-    "q_ann_ivfpq" ->
+    Query("q_ann_ivfpq", Similarity.annIvfPq,
       (pqCtes + """,
         |cent AS (
         | SELECT label, i.i AS d, round(avg(embedding[i.i]), 6) AS c
@@ -723,10 +726,10 @@ object LlmOracles {
         |SELECT qid, CAST(rank AS INT) AS rank, vec_id, adist_u FROM (
         |  SELECT qid, vec_id, adist_u,
         |    row_number() OVER (PARTITION BY qid ORDER BY adist_u, vec_id) AS rank
-        |  FROM ad) WHERE rank <= 10 ORDER BY qid, rank""".stripMargin),
+        |  FROM ad) WHERE rank <= 10 ORDER BY qid, rank""".stripMargin)),
     // recall@10 of the composed IVF-PQ index vs the exact-cosine truth:
     // both the cell miss and the code distortion are charged against it
-    "q_ann_recall_pq" ->
+    Query("q_ann_recall_pq", Similarity.annRecallPq,
       (pqCtes + """,
         |cent AS (
         | SELECT label, i.i AS d, round(avg(embedding[i.i]), 6) AS c
@@ -765,11 +768,11 @@ object LlmOracles {
         |SELECT b.qid, CAST(count(i.vec_id) AS BIGINT) AS n_hits,
         | round(count(i.vec_id) / CAST(count(*) AS DOUBLE), 2) AS recall_at_10
         |FROM br b LEFT JOIN ir i USING (qid, vec_id)
-        |GROUP BY b.qid ORDER BY b.qid""".stripMargin),
-    "q_ann_kmeans" ->
+        |GROUP BY b.qid ORDER BY b.qid""".stripMargin)),
+    Query("q_ann_kmeans", Similarity.annKmeans,
       (kmeansCtes + """
-        |SELECT vec_id, cid AS cluster FROM asg ORDER BY vec_id""".stripMargin),
-    "q_semdedup" ->
+        |SELECT vec_id, cid AS cluster FROM asg ORDER BY vec_id""".stripMargin)),
+    Query("q_semdedup", Similarity.semDedup,
       (kmeansCtes + """,
         |sd_pairs AS (SELECT a.vec_id AS va, b.vec_id AS vb
         | FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id
@@ -780,8 +783,8 @@ object LlmOracles {
         |    sqrt(list_dot_product(eb.v, eb.v))), 6) >= 0.5)
         |SELECT vec_id, cid AS cluster FROM asg
         |WHERE vec_id NOT IN (SELECT vb FROM sd_pairs)
-        |ORDER BY vec_id""".stripMargin),
-    "q_emb_dedup_keep" ->
+        |ORDER BY vec_id""".stripMargin)),
+    Query("q_emb_dedup_keep", Similarity.cosineDedupKeep,
       """WITH pairs AS (
         | SELECT a.vec_id AS va, b.vec_id AS vb,
         |  round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
@@ -790,16 +793,16 @@ object LlmOracles {
         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
         |SELECT vec_id FROM embeddings
         |WHERE vec_id NOT IN (SELECT vb FROM pairs WHERE cos >= 0.5)
-        |ORDER BY vec_id""".stripMargin,
-    "q_ann_cos_pairs" ->
+        |ORDER BY vec_id""".stripMargin),
+    Query("q_ann_cos_pairs", Similarity.cosinePairs,
       """SELECT va, vb, cos FROM (
         | SELECT a.vec_id AS va, b.vec_id AS vb,
         |  round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) /
         |   (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[]))) *
         |    sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6) AS cos
         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |WHERE cos >= 0.5 ORDER BY va, vb""".stripMargin,
-    "q_ann_hyperplane_lsh" ->
+        |WHERE cos >= 0.5 ORDER BY va, vb""".stripMargin),
+    Query("q_ann_hyperplane_lsh", Similarity.hyperplaneLshPairs,
       """WITH planes AS (
         | SELECT p.p AS p, d.d AS d,
         |  (('0x'||substr(md5(p.p::VARCHAR||'_'||d.d::VARCHAR), 1, 15))::UBIGINT::DOUBLE
@@ -821,30 +824,30 @@ object LlmOracles {
         |   (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[]))) *
         |    sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])))), 6) AS cos
         | FROM cand JOIN embeddings ea ON ea.vec_id = va JOIN embeddings eb ON eb.vec_id = vb)
-        |WHERE cos >= 0.4 ORDER BY va, vb""".stripMargin,
-    "q_mm_resize" ->
+        |WHERE cos >= 0.4 ORDER BY va, vb""".stripMargin),
+    Query("q_mm_resize", Multimodal.resizeStub,
       """WITH m AS (SELECT doc_id, octet_length(encode(text)) AS n FROM documents),
         |d AS (SELECT doc_id, CAST(64 + n % 577 AS INT) AS width,
         |       CAST(64 + (n * 31) % 421 AS INT) AS height FROM m)
         |SELECT doc_id, width, height,
         | CAST(width * 224 // greatest(width, height) AS INT) AS out_w,
         | CAST(height * 224 // greatest(width, height) AS INT) AS out_h
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "q_mm_features" ->
+        |FROM d ORDER BY doc_id""".stripMargin),
+    Query("q_mm_features", Multimodal.featureStub,
       """WITH x AS (SELECT doc_id, b.b AS band,
         |  len(list_filter(range(1, length(text) + 1), i -> ascii(text[i]) % 8 = b.b)) AS cnt
         | FROM documents, range(8) b(b))
         |SELECT doc_id, array_to_string(list(CAST(cnt AS BIGINT) ORDER BY band), ',') AS features
-        |FROM x GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM x GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // perceptual near-dup pairs: brute Hamming replay — completeness proof
     // for the 4x15 banding at threshold 3 (pigeonhole)
-    "q_mm_phash" ->
+    Query("q_mm_phash", Multimodal.phashPairs,
       (phashPairCtes +
-        "\nSELECT doc_a, doc_b, hamming FROM ph ORDER BY doc_a, doc_b"),
+        "\nSELECT doc_a, doc_b, hamming FROM ph ORDER BY doc_a, doc_b")),
     // keep-set over the SAME verified perceptual pair set: recursive
     // reachability (the q_dedup_cluster_keep derivation), keep every media
     // doc no smaller doc_id can reach
-    "q_mm_phash_keep" ->
+    Query("q_mm_phash_keep", Multimodal.phashKeep,
       (phashPairCtes.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
         |edges AS (SELECT doc_a AS u, doc_b AS w FROM ph
         |          UNION SELECT doc_b, doc_a FROM ph),
@@ -853,21 +856,21 @@ object LlmOracles {
         |lbl AS (SELECT u, min(w) AS mw FROM reach GROUP BY u)
         |SELECT doc_id FROM mu
         |WHERE doc_id NOT IN (SELECT u FROM lbl WHERE mw < u)
-        |ORDER BY doc_id""").stripMargin,
-    "q_mm_decode" ->
+        |ORDER BY doc_id""").stripMargin),
+    Query("q_mm_decode", Multimodal.decodeStub,
       """SELECT doc_id,
         | CAST(octet_length(encode(text)) AS INT) AS n_bytes,
         | CAST(64 + octet_length(encode(text)) % 577 AS INT) AS width,
         | CAST(64 + (octet_length(encode(text)) * 31) % 421 AS INT) AS height,
         | CAST(1 + octet_length(encode(text)) % 7 AS INT) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_mm_frames" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q_mm_frames", Multimodal.frameSample,
       """SELECT doc_id, CAST(f.f AS INT) AS frame_idx,
         | md5(doc_id::VARCHAR||':'||f.f::VARCHAR) AS frame_key
         |FROM (SELECT doc_id, 1 + octet_length(encode(text)) % 7 AS n_frames FROM documents) d,
         |     range(7) f(f)
-        |WHERE f.f < n_frames ORDER BY doc_id, frame_idx""".stripMargin,
-    "q_dedup_incremental" ->
+        |WHERE f.f < n_frames ORDER BY doc_id, frame_idx""".stripMargin),
+    Query("q_dedup_incremental", Dedup.incrementalDedup,
       (toksCte + """,
         |s0 AS (SELECT doc_id,
         |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp,
@@ -896,8 +899,8 @@ object LlmOracles {
         | coalesce(e.exact_m, n.near_m) AS matched
         |FROM inc i LEFT JOIN ex e ON e.doc_id = i.doc_id
         |LEFT JOIN nr n ON n.doc_id = i.doc_id
-        |ORDER BY i.doc_id""").stripMargin,
-    "q_c4_filter" ->
+        |ORDER BY i.doc_id""").stripMargin),
+    Query("q_c4_filter", WebPipeline.c4Filter,
       (webLinesCtes + """,
         |k AS (SELECT doc_id, lines,
         |  list_filter(lines, l -> l LIKE '%.' AND len(string_split(l, ' ')) >= 3
@@ -909,8 +912,8 @@ object LlmOracles {
         | (len(kept) >= 5 AND NOT page LIKE '%lorem ipsum%'
         |   AND NOT page LIKE '%{%') AS keep_doc,
         | coalesce(array_to_string(kept, ' '), '') AS cleaned
-        |FROM k ORDER BY doc_id""").stripMargin,
-    "q_dedup_lines" ->
+        |FROM k ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_lines", WebPipeline.lineDedup,
       (webLinesCtes + """,
         |ex0 AS (SELECT doc_id, unnest(list_transform(range(1, len(lines) + 1),
         |  i -> {'idx': i, 'line': lines[i]})) AS u FROM lns),
@@ -923,8 +926,8 @@ object LlmOracles {
         |SELECT doc_id, count(*) AS n_lines,
         | CAST(sum(CASE WHEN kept THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped,
         | coalesce(string_agg(CASE WHEN kept THEN line END, ' ' ORDER BY idx), '') AS cleaned
-        |FROM j GROUP BY doc_id ORDER BY doc_id""").stripMargin,
-    "q_dedup_url" ->
+        |FROM j GROUP BY doc_id ORDER BY doc_id""").stripMargin),
+    Query("q_dedup_url", WebPipeline.urlDedup,
       """WITH u AS (SELECT doc_id,
         |  ['https://','HTTPS://','Https://'][CAST(('0x'||substr(md5('sc:'||doc_id),1,15))::UBIGINT % 3 AS INT) + 1] ||
         |  ['','www.','WWW.'][CAST(('0x'||substr(md5('w:'||doc_id),1,15))::UBIGINT % 3 AS INT) + 1] ||
@@ -944,8 +947,8 @@ object LlmOracles {
         |    '[?&]+$', ''), '?&', '?') AS r3 FROM c3),
         |c5 AS (SELECT doc_id, pre2 || regexp_replace(r3, '/$', '') AS canon FROM c4)
         |SELECT canon, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM c5 GROUP BY canon ORDER BY canon""".stripMargin,
-    "q_quality_classifier" ->
+        |FROM c5 GROUP BY canon ORDER BY canon""".stripMargin),
+    Query("q_quality_classifier", WebPipeline.qualityClassifier,
       (toksCte + """,
         |w AS (SELECT doc_id, CAST(len(t) AS INT) AS n_tok,
         |  coalesce(CAST(list_sum(list_transform(t, tk ->
@@ -953,9 +956,9 @@ object LlmOracles {
         |  )) AS BIGINT), 0) AS su
         | FROM toks)
         |SELECT doc_id, n_tok, su AS logit_u, su > 0 AS keep
-        |FROM w ORDER BY doc_id""").stripMargin,
+        |FROM w ORDER BY doc_id""").stripMargin),
     // mixed-language halves: planted German second half, per-half langid
-    "q_text_mixed_lang" ->
+    Query("q_text_mixed_lang", TextAnalysis.mixedLang,
       """WITH base AS (SELECT doc_id, text, string_split(lower(text), ' ') AS t0 FROM documents),
         |t2 AS (SELECT doc_id,
         |  CASE WHEN ('0x'||substr(md5('ml:'||doc_id),1,15))::UBIGINT % 6 = 0 THEN
@@ -986,9 +989,9 @@ object LlmOracles {
         |      WHEN b_fr >= b_es THEN 'fr' ELSE 'es' END AS lang_b
         | FROM sc)
         |SELECT doc_id, lang_a, lang_b, lang_a <> lang_b AS mixed
-        |FROM v ORDER BY doc_id""".stripMargin,
+        |FROM v ORDER BY doc_id""".stripMargin),
     // two-phase mix: natural shares then quality-upweighted anneal
-    "q_mix_two_phase" ->
+    Query("q_mix_two_phase", Pipeline.mixTwoPhase,
       (toksCte + """,
         |w AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tok,
         |  coalesce(CAST(list_sum(list_transform(t, tk ->
@@ -1006,9 +1009,9 @@ object LlmOracles {
         |SELECT source, n_tokens, keep_bp,
         |  CAST(900000 * n_tokens // t1 AS BIGINT) AS quota_p1,
         |  CAST(100000 * w2 // t2 AS BIGINT) AS quota_p2
-        |FROM k, t ORDER BY source""").stripMargin,
+        |FROM k, t ORDER BY source""").stripMargin),
     // classifier calibration: decile sweep of the quality logits
-    "q_quality_calibration" ->
+    Query("q_quality_calibration", WebPipeline.qualityCalibration,
       (toksCte + """,
         |w AS (SELECT doc_id,
         |  coalesce(CAST(list_sum(list_transform(t, tk ->
@@ -1020,9 +1023,9 @@ object LlmOracles {
         |SELECT decile, CAST(count(*) AS BIGINT) AS n_docs,
         |  min(su) AS lo, max(su) AS hi,
         |  CAST(sum(CASE WHEN su > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-        |FROM d GROUP BY decile ORDER BY decile""").stripMargin,
+        |FROM d GROUP BY decile ORDER BY decile""").stripMargin),
     // character-distribution entropy gate: micro-nat terms summed as ints
-    "q_text_entropy" ->
+    Query("q_text_entropy", TextAnalysis.charEntropy,
       """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents),
         |c AS (SELECT doc_id, ch, count(*) AS c FROM ch WHERE length(ch) > 0 GROUP BY 1, 2),
         |n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1),
@@ -1031,9 +1034,9 @@ object LlmOracles {
         |      FROM c JOIN n ON n.doc_id = c.doc_id)
         |SELECT doc_id, max(n) AS n_chars, CAST(sum(term_u) AS BIGINT) AS ent_u,
         |       CAST(sum(term_u) AS BIGINT) >= 2500000 * max(n) AS keep
-        |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin),
     // normalization-keyed exact dedup over planted recrawl variants
-    "q_dedup_norm" ->
+    Query("q_dedup_norm", Dedup.normalizedDedup,
       """WITH d AS (SELECT doc_id, text FROM documents),
         |v AS (SELECT doc_id + 2000000 AS vid,
         |        CASE ('0x'||substr(md5('nk:'||doc_id),1,15))::UBIGINT % 3
@@ -1051,11 +1054,11 @@ object LlmOracles {
         |      FROM u)
         |SELECT min(doc_id) AS keep_id, CAST(count(*) AS BIGINT) AS n_copies,
         |       CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_raw
-        |FROM nrm GROUP BY md5(norm) ORDER BY keep_id""".stripMargin,
+        |FROM nrm GROUP BY md5(norm) ORDER BY keep_id""".stripMargin),
     // PPJoin prefix-filtered pairs: the oracle is the BRUTE all-pairs scan,
     // so the hash compare is itself the completeness proof for the prefix
     // filter (no false negatives at J >= 0.5)
-    "q_dedup_ppjoin" ->
+    Query("q_dedup_ppjoin", Dedup.ppjoinPairs,
       (shinglesCte + """
         |SELECT doc_a, doc_b, j FROM (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1063,9 +1066,9 @@ object LlmOracles {
         |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         | WHERE len(a.s) > 0 AND len(b.s) > 0)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin,
+        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
     // Efraimidis–Spirakis weighted sample: integer-grid rank key, top-100
-    "q_sample_weighted" ->
+    Query("q_sample_weighted", Pipeline.weightedSample,
       """WITH d AS (SELECT doc_id, n_chars AS w,
         |    ('0x'||substr(md5('ws:'||doc_id),1,15))::UBIGINT % 1000000000 + 1 AS u9
         |  FROM documents),
@@ -1073,9 +1076,9 @@ object LlmOracles {
         |    CAST(round(CAST(round(ln(u9 / 1.0e9) * 1e6) AS BIGINT) * 1000.0 / w) AS BIGINT) AS key_u
         |  FROM d),
         |top AS (SELECT * FROM k ORDER BY key_u DESC, doc_id LIMIT 100)
-        |SELECT doc_id, w, key_u FROM top ORDER BY doc_id""".stripMargin,
+        |SELECT doc_id, w, key_u FROM top ORDER BY doc_id""".stripMargin),
     // LSH calibration: candidates + verified TPs vs exact ground truth
-    "q_dedup_minhash_eval" ->
+    Query("q_dedup_minhash_eval", Dedup.minhashEval,
       (minhashPairCtes + """,
         |truth AS (SELECT doc_a, doc_b FROM (
         |   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1092,9 +1095,9 @@ object LlmOracles {
         |  CAST(n_tp AS BIGINT) AS n_tp,
         |  CAST(CASE WHEN n_cand = 0 THEN 0 ELSE 10000 * n_tp // n_cand END AS BIGINT) AS precision_bp,
         |  CAST(CASE WHEN n_truth = 0 THEN 0 ELSE 10000 * n_hit // n_truth END AS BIGINT) AS recall_bp
-        |FROM m""").stripMargin,
+        |FROM m""").stripMargin),
     // UT1-style registrable-domain blocklist filter
-    "q_url_blocklist" ->
+    Query("q_url_blocklist", WebPipeline.urlBlocklist,
       """WITH h AS (SELECT doc_id,
         |  ['','www.','cdn.','news.'][CAST(('0x'||substr(md5('sub:'||doc_id),1,15))::UBIGINT % 4 AS INT) + 1] ||
         |  'site' || (doc_id % 7) || '.' ||
@@ -1109,6 +1112,6 @@ object LlmOracles {
         |  CAST(count(DISTINCT r.host) AS BIGINT) AS n_hosts,
         |  min(r.doc_id) AS first_doc
         |FROM r LEFT JOIN b ON b.registrable = r.registrable
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
   )
 }

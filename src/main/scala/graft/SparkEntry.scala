@@ -1,806 +1,51 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{BatchRelational, Bpe, Dedup, Formats, Graph, GraphGens, GroupWindowSql, Layout, Multimodal, MultisetOps, Pipeline, ScalarFuncs, ScaleOps, Similarity, Sketches, SqlSurface, StatementSets, TextAnalysis, TpcDsSurface, Udafs, WebPipeline, WindowAggs}
+import graft.operators._
+import graft.sources.{CdcFormats, DdlSql, Descriptors, HiveCatalog, JdbcDemo, StateRead}
+import graft.streaming.{CdcStream, MatchRecognizeSql, StateBootstrap, StreamDedup,
+  StreamIterate, StreamQueries, TxFileSink, Unified}
+import graft.tpcds.TpcdsReal
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The entry points of SURVEY.md §7: the flagship query, and the query
+  * catalog read as two maps (`queries` builds each query's DataFrame,
+  * `oracleSql` holds its DuckDB SQL over the same parquet tables).
   *
-  * Every implemented operator from SURVEY.md §2 gets (a) a `queries` entry
-  * building the DataFrame plan and (b) an `oracleSql` entry with equivalent
-  * ANSI SQL the driver runs in DuckDB over the same parquet tables.
-  * Column names and types are aligned on both sides; doubles are rounded at
-  * the end of each plan so cross-engine float summation order can't flip the
-  * hash compare.
+  * Every implemented operator from SURVEY.md §2 is one [[Query]] in the
+  * catalog. Column names and types are aligned on both sides; doubles are
+  * rounded at the end of each plan so cross-engine float summation order
+  * can't flip the hash compare.
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** The flagship query on the sf0.001 testdata; a smoke check wants rows > 0. */
   def entry(spark: SparkSession): DataFrame =
     BatchRelational.q1Agg(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    base ++ TpcDsSurface.sql.keys.map(n => n -> (TpcDsSurface.query(n) _)).toMap ++
-      graft.tpcds.TpcdsReal.queries
+  /** Every query, each declared once in the module that holds its oracle. */
+  lazy val catalog: Seq[Query] = assemble(
+    BatchRelational.queries, ScalarFuncs.queries, AsyncMap.queries, Descriptors.queries,
+    Unified.queries, LlmOracles.queries, WindowOracles.queries, Bpe.queries,
+    StreamQueries.queries, Formats.queries, Udafs.queries, Graph.queries,
+    Graph.starQueries, SqlSurface.queries, ScaleOps.queries, Pipeline.queries,
+    TpcDsSurface.queries, MatchRecognizeSql.queries, GroupWindowSql.queries,
+    DdlSql.queries, HiveCatalog.queries, TpcdsReal.queries, TxFileSink.queries,
+    JdbcDemo.queries, CdcFormats.queries, StateRead.queries, StatementSets.queries,
+    CdcStream.queries, MlPipeline.queries, SystemTimeSql.queries, Similarity.queries,
+    GraphGens.queries, StreamIterate.queries, Sketches.queries, Layout.queries,
+    DataQuality.queries, StateBootstrap.queries, MultisetOps.queries,
+    StreamDedup.queries, TypeLattice.queries, Retrieval.queries)
 
-  private def base: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg"            -> (BatchRelational.q1Agg _),
-    "q_join_inner"      -> (BatchRelational.joinInner _),
-    "q_join_left"       -> (BatchRelational.joinLeft _),
-    "q_join_full"       -> (BatchRelational.joinFull _),
-    "q_join_semi"       -> (BatchRelational.joinSemi _),
-    "q_join_anti"       -> (BatchRelational.joinAnti _),
-    "q_join_cross"      -> (BatchRelational.joinCross _),
-    "q_join_theta"      -> (BatchRelational.joinTheta _),
-    "q_agg_distinct"    -> (BatchRelational.aggDistinct _),
-    "q_agg_stats"       -> (BatchRelational.aggStats _),
-    "q_agg_rollup"      -> (BatchRelational.aggRollup _),
-    "q_agg_cube"        -> (BatchRelational.aggCube _),
-    "q_agg_listagg"     -> (BatchRelational.aggListagg _),
-    "q_agg_sum0"        -> (BatchRelational.aggSum0 _),
-    "q_agg_percentile"  -> (BatchRelational.aggPercentile _),
-    "q_agg_collect"     -> (BatchRelational.aggCollect _),
-    "q_set_union_all"   -> (BatchRelational.setUnionAll _),
-    "q_set_union"       -> (BatchRelational.setUnion _),
-    "q_set_intersect"   -> (BatchRelational.setIntersect _),
-    "q_set_intersect_all" -> (BatchRelational.setIntersectAll _),
-    "q_set_except"      -> (BatchRelational.setExcept _),
-    "q_set_except_all"  -> (BatchRelational.setExceptAll _),
-    "q_sort_limit"      -> (BatchRelational.sortLimit _),
-    "q_topn_group"      -> (BatchRelational.topNPerGroup _),
-    "q_dedup_first"     -> (BatchRelational.dedupFirst _),
-    "q_dedup_last"      -> (BatchRelational.dedupLast _),
-    "q_over_rows"       -> (BatchRelational.overRows _),
-    "q_over_rank"       -> (BatchRelational.overRank _),
-    "q_over_leadlag"    -> (BatchRelational.overLeadLag _),
-    "q_over_range"      -> (BatchRelational.overRange _),
-    "q_unnest_words"    -> (BatchRelational.unnestWords _),
-    "q_values"          -> (BatchRelational.valuesScan _),
-    "q_cogroup"         -> (BatchRelational.coGroup _),
-    "q_descriptor_dedup" -> ((s: SparkSession, dir: String) => {
-      import graft.sources.{Descriptors, TableDescriptor}
-      val d = TableDescriptor("events_desc", s"$dir/events.parquet",
-        primaryKey = Seq("user_id"), watermarkCol = Some("ts"), tsNanosAsLong = true)
-      Descriptors.dedupByPk(s, d, tieBreak = Seq("event_id"))
-        .select(org.apache.spark.sql.functions.col("user_id"),
-          org.apache.spark.sql.functions.col("event_id"),
-          org.apache.spark.sql.functions.col("event_type"))
-        .orderBy("user_id")
-    }),
-    "q_stream_drop_before" -> (streaming.StreamQueries.dropUpdateBefore _),
-    "q_ddl_dedup"       -> (graft.sources.DdlSql.ddlDedup _),
-    "q_ddl_view"        -> (graft.sources.DdlSql.ddlView _),
-    "q_hive_catalog"    -> (graft.sources.HiveCatalog.hiveCatalog _),
-    "q_ddl_watermark"   -> (graft.sources.DdlSql.ddlWatermark _),
-    "q_ddl_alter"       -> (graft.sources.DdlSql.ddlAlter _),
-    "q_ddl_use"         -> (graft.sources.DdlSql.ddlUse _),
-    "q_ddl_function"    -> (graft.sources.DdlSql.ddlFunction _),
-    "q_fn_string"       -> (ScalarFuncs.strings _),
-    "q_fn_string2"      -> (ScalarFuncs.strings2 _),
-    "q_fn_math"         -> (ScalarFuncs.math _),
-    "q_fn_math2"        -> (ScalarFuncs.math2 _),
-    "q_fn_datetime"     -> (ScalarFuncs.datetime _),
-    "q_fn_datetime2"    -> (ScalarFuncs.datetime2 _),
-    "q_fn_similar"      -> (ScalarFuncs.similar _),
-    "q_fn_conditional"  -> (ScalarFuncs.conditional _),
-    "q_fn_complex"      -> (ScalarFuncs.complexTypes _),
-    "q_text_stats"      -> (TextAnalysis.stats _),
-    "q_text_langid"     -> (TextAnalysis.langId _),
-    "q_dedup_exact"     -> (Dedup.exact _),
-    // read through the shared materialization: keep/graph/pipeline consumers
-    // already do, so the corpus's most expensive join runs once per session
-    "q_dedup_ngram_pairs" -> ((s: SparkSession, dir: String) =>
-      Dedup.ngramJaccardPairsShared(s, dir).orderBy("doc_a", "doc_b")),
-    "q_dedup_ngram_keep"  -> (Dedup.ngramDedupKeep _),
-    "q_dedup_minhash_lsh" -> (Dedup.minhashLshPairs _),
-    "q_dedup_cluster_keep" -> (Dedup.minhashClusterKeep _),
-    "q_split_leakage"   -> (Dedup.leakageSafeSplit _),
-    "q_stream_dedup_minhash" -> (streaming.StreamDedup.minhashStreamKeep _),
-    "q_stream_dedup_ttl" -> ((s: SparkSession, d: String) =>
-      streaming.StreamDedup.minhashStreamKeepTtl(s, d)),
-    "q_stream_ppjoin"     -> ((s: SparkSession, d: String) =>
-      streaming.StreamDedup.ppjoinStream(s, d)),
-    "q_stream_ppjoin_keep" -> (streaming.StreamDedup.ppjoinStreamKeep _),
-    "q_stream_ppjoin_ttl" -> ((s: SparkSession, d: String) =>
-      streaming.StreamDedup.ppjoinStreamTtl(s, d)),
-    "q_dedup_span"        -> (Dedup.spanDupCoverage _),
-    "q_dedup_span_strip"  -> (Dedup.spanStrip _),
-    "q_dedup_incremental" -> (Dedup.incrementalDedup _),
-    "q_dedup_bloom"     -> (Dedup.bloomDedup _),
-    "q_dedup_bloom_sized" -> (Dedup.bloomSizedDedup _),
-    "q_stream_bloom"    -> (streaming.StreamBloom.bloomStreamDedup _),
-    "q_text_repetition"   -> (TextAnalysis.repetition _),
-    "q_quality_gopher"    -> (TextAnalysis.gopherQuality _),
-    "q_corpus_datasheet"  -> (TextAnalysis.corpusDatasheet _),
-    "q_tfidf_top3"        -> (TextAnalysis.tfidfTop3 _),
-    "q_retrieval_bm25"    -> (graft.operators.Retrieval.bm25 _),
-    "q_retrieval_rrf"     -> (graft.operators.Retrieval.hybridRrf _),
-    "q_retrieval_rrf_ivf" -> (graft.operators.Retrieval.hybridRrfIvf _),
-    "q_quality_perplexity" -> (TextAnalysis.perplexity _),
-    "q_quality_bigram_lm" -> (TextAnalysis.bigramPerplexity _),
-    "q_quality_ccnet_buckets" -> (TextAnalysis.ccnetBuckets _),
-    "q_quality_ccnet_sketch" -> (TextAnalysis.ccnetBucketsSketch _),
-    "q_fingerprint_winnow" -> (TextAnalysis.winnowFingerprint _),
-    "q_dedup_winnow_pairs" -> (TextAnalysis.winnowDupPairs _),
-    "q_decontaminate"     -> (Pipeline.decontaminate _),
-    "q_sample_stratified" -> (Pipeline.stratifiedSample _),
-    "q_sample_weighted"   -> (Pipeline.weightedSample _),
-    "q_stream_sample_weighted" -> (streaming.StreamQueries.streamWeightedSample _),
-    "q_stream_entropy"    -> (streaming.StreamQueries.streamEntropy _),
-    "q_pack_sequences"    -> (Pipeline.packSequences _),
-    "q_pack_nfd"          -> (Pipeline.packBinNfd _),
-    "q_dsir_weight"       -> (Pipeline.dsirWeights _),
-    "q_pii_redact"        -> (Pipeline.piiRedact _),
-    "q_mix_budget"        -> (Pipeline.mixBudget _),
-    "q_mix_temperature"   -> (Pipeline.mixTemperature _),
-    "q_mix_unimax"        -> (Pipeline.mixUnimax _),
-    "q_c4_filter"         -> (WebPipeline.c4Filter _),
-    "q_dedup_lines"       -> (WebPipeline.lineDedup _),
-    "q_dedup_url"         -> (WebPipeline.urlDedup _),
-    "q_url_blocklist"     -> (WebPipeline.urlBlocklist _),
-    "q_dedup_minhash_eval" -> (Dedup.minhashEval _),
-    "q_dedup_ppjoin"      -> (Dedup.ppjoinPairs _),
-    "q_dedup_norm"        -> (Dedup.normalizedDedup _),
-    "q_text_entropy"      -> (TextAnalysis.charEntropy _),
-    "q_text_mixed_lang"   -> (TextAnalysis.mixedLang _),
-    "q_quality_classifier" -> (WebPipeline.qualityClassifier _),
-    "q_bpe_merges"        -> (Bpe.mergeTable _),
-    "q_bpe_encode"        -> (Bpe.encode _),
-    "q_bpe_fertility"     -> (Bpe.fertility _),
-    "q_semdedup"          -> (Similarity.semDedup _),
-    "q_decontaminate_emb" -> (Similarity.decontaminateEmb _),
-    "q_sketch_hll"        -> (Sketches.hllDistinct _),
-    "q_sketch_kmv"        -> (Sketches.kmvDistinct _),
-    "q_sketch_cms"        -> (Sketches.cmsHeavyHitters _),
-    "q_sample_reservoir"  -> (Sketches.reservoirSample _),
-    "q_sketch_quantile"   -> (Sketches.quantileSketch _),
-    "q_stream_hll"        -> (streaming.StreamQueries.streamHll _),
-    "q_stream_quantile"   -> (streaming.StreamQueries.streamQuantile _),
-    "q_stream_ols"        -> (streaming.StreamQueries.streamOls _),
-    "q_stream_hll_window" -> (streaming.StreamQueries.streamHllWindow _),
-    "q_sketch_overlap"    -> (Sketches.sourceOverlap _),
-    "q_dq_checks"         -> (graft.operators.DataQuality.checks _),
-    "q_drift_psi"         -> (graft.operators.DataQuality.driftPsi _),
-    "q_stream_drift_psi"  -> (streaming.StreamQueries.streamDriftPsi _),
-    "q_layout_zorder"     -> (Layout.zorderCells _),
-    "q_bucket_join"       -> (Layout.bucketJoin _),
-    "q_dedup_simhash"   -> (Dedup.simhashPairs _),
-    "q_ann_brute"       -> (Similarity.annBruteForce _),
-    "q_ann_negatives"   -> (Similarity.annHardNegatives _),
-    "q_ann_negatives_ix" -> (Similarity.annHardNegativesIndexed _),
-    "q_ann_ivf"         -> (Similarity.annIvf _),
-    "q_ann_recall"      -> (Similarity.annRecall _),
-    "q_ann_pq"          -> (Similarity.annPq _),
-    "q_ann_ivfpq"       -> (Similarity.annIvfPq _),
-    "q_ann_recall_pq"   -> (Similarity.annRecallPq _),
-    "q_ann_kmeans"      -> (Similarity.annKmeans _),
-    "q_ann_cos_pairs"   -> (Similarity.cosinePairs _),
-    "q_emb_dedup_keep"  -> (Similarity.cosineDedupKeep _),
-    "q_ann_hyperplane_lsh" -> (Similarity.hyperplaneLshPairs _),
-    "q_mm_decode"       -> (Multimodal.decodeStub _),
-    "q_mm_phash"        -> (Multimodal.phashPairs _),
-    "q_mm_phash_keep"   -> (Multimodal.phashKeep _),
-    "q_train_triplets"  -> (Similarity.trainTriplets _),
-    "q_quality_calibration" -> (WebPipeline.qualityCalibration _),
-    "q_mix_two_phase"     -> (Pipeline.mixTwoPhase _),
-    "q_sql_tvf_tumble"    -> (GroupWindowSql.tvfTumble _),
-    "q_sql_tvf_hop"       -> (GroupWindowSql.tvfHop _),
-    "q_sql_tvf_cumulate"  -> (GroupWindowSql.tvfCumulate _),
-    "q_sql_tvf_session"   -> (GroupWindowSql.tvfSession _),
-    "q_sql_tvf_window_time" -> (GroupWindowSql.tvfWindowTime _),
-    "q_sql_tvf_cumulate_time" -> (GroupWindowSql.tvfCumulateTime _),
-    "q_sql_tvf_hop_time" -> (GroupWindowSql.tvfHopTime _),
-    "q_sql_tvf_session_time" -> (GroupWindowSql.tvfSessionTime _),
-    "q_sql_tvf_stream_window_time" -> (GroupWindowSql.tvfStreamWindowTime _),
-    "q_sql_tvf_stream_tumble" -> (GroupWindowSql.tvfStreamTumble _),
-    "q_sql_tvf_stream_session" -> (GroupWindowSql.tvfStreamSession _),
-    "q_mm_frames"       -> (Multimodal.frameSample _),
-    "q_mm_resize"       -> (Multimodal.resizeStub _),
-    "q_mm_features"     -> (Multimodal.featureStub _),
-    "q_win_tumble"      -> (WindowAggs.tumble _),
-    "q_win_hop"         -> (WindowAggs.hop _),
-    "q_win_session"     -> (WindowAggs.session _),
-    "q_win_cumulate"    -> (WindowAggs.cumulate _),
-    "q_interval_join"   -> (WindowAggs.intervalJoin _),
-    "q_asof_join"       -> (WindowAggs.asOfJoin _),
-    "q_asof_custom"     -> (WindowAggs.asOfJoinCustom _),
-    "q_stream_tumble"   -> (streaming.StreamWindowAggs.tumble _),
-    "q_stream_tumble_all" -> (streaming.StreamWindowAggs.tumbleAll _),
-    "q_stream_cascade"  -> (streaming.StreamWindowAggs.cascade _),
-    "q_stream_session"  -> (streaming.StreamWindowAggs.session _),
-    "q_stream_interval_join" -> (streaming.StreamWindowAggs.intervalJoin _),
-    "q_stream_dedup_last" -> (streaming.StreamQueries.dedupLast _),
-    "q_stream_dedup_last_ooo" -> (streaming.StreamQueries.dedupLastOoo _),
-    "q_stream_topn_ooo" -> (streaming.StreamQueries.topNOoo _),
-    "q_stream_over_ooo" -> (streaming.StreamQueries.overOoo _),
-    "q_stream_cep_ooo"  -> (streaming.StreamQueries.cepOoo _),
-    "q_stream_cep_plus_ooo" -> (streaming.StreamQueries.cepPlusOoo _),
-    "q_stream_changelog_ooo" -> (streaming.StreamQueries.changelogOoo _),
-    "q_stream_dyn_session_ooo" -> (streaming.StreamQueries.dynSessionOoo _),
-    "q_stream_over_rows_b_ooo" -> (streaming.StreamQueries.overRowsBoundedOoo _),
-    "q_stream_over_range_b_ooo" -> (streaming.StreamQueries.overRangeBoundedOoo _),
-    "q_stream_topn"     -> (streaming.StreamQueries.topN _),
-    "q_stream_topn_range" -> (streaming.StreamQueries.topNRange _),
-    "q_stream_connect"  -> (streaming.StreamQueries.connect _),
-    "q_stream_cep_not"  -> (streaming.StreamQueries.cepNot _),
-    "q_stream_cep_notnext" -> (streaming.StreamQueries.cepNotNext _),
-    "q_stream_cep_any"  -> (streaming.StreamQueries.cepAny _),
-    "q_stream_cep_not_ooo" -> (streaming.StreamQueries.cepNotOoo _),
-    "q_stream_cep_any_ooo" -> (streaming.StreamQueries.cepAnyOoo _),
-    "q_stream_connect_ooo" -> (streaming.StreamQueries.connectOoo _),
-    "q_stream_topn_retract" -> (streaming.StreamQueries.topNRetract _),
-    "q_stream_topn_retract_ooo" -> (streaming.StreamQueries.topNRetractOoo _),
-    "q_stream_over"     -> (streaming.StreamQueries.over _),
-    "q_stream_over_rows_b" -> (streaming.StreamQueries.overRowsBounded _),
-    "q_stream_over_range_b" -> (streaming.StreamQueries.overRangeBounded _),
-    "q_stream_changelog" -> (streaming.StreamQueries.changelog _),
-    "q_stream_cep"      -> (streaming.StreamQueries.cep _),
-    "q_stream_cep_relaxed" -> (streaming.StreamQueries.cepRelaxed _),
-    "q_stream_cep_plus"    -> (streaming.StreamQueries.cepPlus _),
-    "q_stream_cep_until"   -> (streaming.StreamQueries.cepUntil _),
-    "q_stream_cep_timeout" -> (streaming.StreamQueries.cepTimedOut _),
-    "q_stream_cep_plus_rel" -> (streaming.StreamQueries.cepPlusReluctant _),
-    "q_stream_cep_skip_past" -> (streaming.StreamQueries.cepSkipPast _),
-    "q_stream_semi_join" -> (streaming.StreamQueries.semiJoin _),
-    "q_stream_anti_join" -> (streaming.StreamQueries.antiJoin _),
-    "q_stream_outer_join" -> (streaming.StreamQueries.outerJoin _),
-    "q_stream_full_outer_join" -> (streaming.StreamQueries.fullOuterJoin _),
-    "q_stream_retract_agg" -> (streaming.StreamQueries.retractAgg _),
-    "q_proctime_dedup" -> (streaming.StreamQueries.procTimeDedup _),
-    "q_proctime_over" -> (streaming.StreamQueries.procTimeOver _),
-    "q_proctime_temporal" -> (streaming.StreamQueries.procTimeTemporal _),
-    "q_stream_right_outer_join" -> (streaming.StreamQueries.rightOuterJoin _),
-    "q_stream_count_win" -> (streaming.StreamQueries.countWindow _),
-    "q_stream_count_slide" -> (streaming.StreamQueries.countSlideWindow _),
-    "q_stream_tumble_late" -> (streaming.StreamQueries.tumbleLate _),
-    "q_stream_evictor"  -> (streaming.StreamQueries.tumbleEvictor _),
-    "q_stream_evictor_time" -> (streaming.StreamQueries.tumbleTimeEvictor _),
-    "q_stream_evictor_delta" -> (streaming.StreamQueries.tumbleDeltaEvictor _),
-    "q_stream_temporal_sort" -> (streaming.StreamQueries.temporalSortQuery _),
-    "q_lookup_join"     -> (operators.AsyncMap.lookupJoin _),
-    "q_lookup_join_async" -> (operators.AsyncMap.lookupJoinAsync _),
-    "q_stream_hop"      -> (streaming.StreamWindowAggs.hop _),
-    "q_stream_cumulate" -> (streaming.StreamWindowAggs.cumulate _),
-    "q_stream_upsert"   -> (streaming.StreamQueries.upsert _),
-    "q_stream_trigger_cont" -> (streaming.StreamQueries.triggerContinuous _),
-    "q_stream_trigger_purge" -> (streaming.StreamQueries.triggerPurging _),
-    "q_topic_exactly_once" -> (streaming.TxFileSink.exactlyOnce _),
-    "q_stream_file_sink" -> (streaming.TxFileSink.rollingSink _),
-    "q_stream_file_compact" -> (streaming.TxFileSink.compactedSink _),
-    "q_jdbc_scan"       -> (graft.sources.JdbcDemo.scan _),
-    "q_jdbc_lookup"     -> (graft.sources.JdbcDemo.lookup _),
-    "q_jdbc_upsert"     -> (graft.sources.JdbcDemo.upsert _),
-    "q_stream_dyn_session" -> (streaming.StreamQueries.dynamicSession _),
-    "q_fmt_csv"         -> (Formats.csvRoundtrip _),
-    "q_fmt_json"        -> (Formats.jsonRoundtrip _),
-    "q_meta_columns"    -> (Formats.metadataColumns _),
-    "q_fmt_orc"         -> (Formats.orcRoundtrip _),
-    "q_fmt_avro"        -> (Formats.avroRoundtrip _),
-    "q_fmt_avro_evolve" -> (Formats.avroEvolve _),
-    "q_fmt_csv_quirks"  -> (Formats.csvQuirks _),
-    "q_fn_json"         -> (Formats.jsonColumn _),
-    "q_fn_classify"     -> (ScalarFuncs.classify _),
-    "q_agg_firstlast"   -> (Udafs.firstLast _),
-    "q_agg_single_value" -> (Udafs.singleValue _),
-    "q_tableagg_top2"   -> (Udafs.tableAggTop2 _),
-    "q_graph_cc"        -> (Graph.docComponents _),
-    "q_graph_cc_star"   -> (Graph.docComponentsStar _),
-    "q_graph_labelprop" -> (Graph.docLabelProp _),
-    "q_graph_pagerank"  -> (Graph.docPageRank _),
-    "q_graph_pagerank_sink" -> (Graph.docPageRankSink _),
-    "q_graph_sssp"      -> (Graph.docSssp _),
-    "q_graph_sssp_sg"   -> (Graph.docSsspSG _),
-    "q_graph_sssp_gsa"  -> (Graph.docSsspGSA _),
-    "q_graph_cc_vc"     -> (Graph.docComponentsVC _),
-    "q_graph_vertex_metrics" -> (Graph.docVertexMetrics _),
-    "q_graph_edge_metrics"   -> (Graph.docEdgeMetrics _),
-    "q_graph_vertex_metrics_dir" -> (Graph.docVertexMetricsDir _),
-    "q_graph_edge_metrics_dir"   -> (Graph.docEdgeMetricsDir _),
-    "q_graph_triangles" -> (Graph.docTriangles _),
-    "q_graph_clustering" -> (Graph.docClustering _),
-    "q_graph_clustering_global" -> (Graph.docClusteringGlobal _),
-    "q_graph_triadic"   -> (Graph.docTriadic _),
-    "q_graph_triadic_directed" -> (Graph.docTriadicDirected _),
-    "q_graph_clustering_directed" -> (Graph.docClusteringDirected _),
-    "q_graph_clustering_dir_global" -> (Graph.docClusteringDirGlobal _),
-    "q_graph_jaccard"   -> (Graph.docJaccard _),
-    "q_graph_adamic"    -> (Graph.docAdamic _),
-    "q_graph_community" -> (Graph.docCommunity _),
-    "q_graph_hits"      -> (Graph.docHits _),
-    "q_graph_summarize" -> (Graph.docSummarize _),
-    "q_graph_gen_edges"   -> (GraphGens.genEdges _),
-    "q_graph_gen_rmat"    -> (GraphGens.genRmat _),
-    "q_graph_gen_summary" -> (GraphGens.genSummary _),
-    "q_graph_degrees"     -> (GraphGens.docDegrees _),
-    "q_graph_max_degree"  -> (GraphGens.docMaxDegree _),
-    "q_graph_bipartite_top"  -> (GraphGens.bipartiteTopSimple _),
-    "q_graph_bipartite_full" -> (GraphGens.bipartiteTopFull _),
-    "q_graph_ops"         -> (GraphGens.graphOps _),
-    "q_sql_q3"          -> (SqlSurface.q3 _),
-    "q_sql_subquery"    -> (SqlSurface.correlatedSubquery _),
-    "q_sql_hints"       -> (SqlSurface.sqlHints _),
-    "q_unified_pipeline" -> (streaming.Unified.batchRun _),
-    "q_tpch_q1"         -> (SqlSurface.tpchQuery("q_tpch_q1") _),
-    "q_tpch_q3"         -> (SqlSurface.tpchQuery("q_tpch_q3") _),
-    "q_tpch_q7"         -> (SqlSurface.tpchQuery("q_tpch_q7") _),
-    "q_tpch_q8"         -> (SqlSurface.tpchQuery("q_tpch_q8") _),
-    "q_tpch_q9"         -> (SqlSurface.tpchQuery("q_tpch_q9") _),
-    "q_tpch_q13"        -> (SqlSurface.tpchQuery("q_tpch_q13") _),
-    "q_tpch_q15"        -> (SqlSurface.tpchQuery("q_tpch_q15") _),
-    "q_tpch_q17"        -> (SqlSurface.tpchQuery("q_tpch_q17") _),
-    "q_tpch_q21"        -> (SqlSurface.tpchQuery("q_tpch_q21") _),
-    "q_tpch_q4"         -> (SqlSurface.tpchQuery("q_tpch_q4") _),
-    "q_tpch_q5"         -> (SqlSurface.tpchQuery("q_tpch_q5") _),
-    "q_tpch_q6"         -> (SqlSurface.tpchQuery("q_tpch_q6") _),
-    "q_tpch_q10"        -> (SqlSurface.tpchQuery("q_tpch_q10") _),
-    "q_tpch_q14"        -> (SqlSurface.tpchQuery("q_tpch_q14") _),
-    "q_tpch_q18"        -> (SqlSurface.tpchQuery("q_tpch_q18") _),
-    "q_tpch_q12"        -> (SqlSurface.tpchQuery("q_tpch_q12") _),
-    "q_tpch_q19"        -> (SqlSurface.tpchQuery("q_tpch_q19") _),
-    "q_tpch_q22"        -> (SqlSurface.tpchQuery("q_tpch_q22") _),
-    "q_tpch_q2"         -> (SqlSurface.tpchQuery("q_tpch_q2") _),
-    "q_tpch_q11"        -> (SqlSurface.tpchQuery("q_tpch_q11") _),
-    "q_tpch_q16"        -> (SqlSurface.tpchQuery("q_tpch_q16") _),
-    "q_tpch_q20"        -> (SqlSurface.tpchQuery("q_tpch_q20") _),
-    "q_sql_topn_pattern" -> (SqlSurface.tpchQuery("q_sql_topn_pattern") _),
-    "q_sql_asof_pattern" -> (SqlSurface.asofPattern _),
-    "q_sql_match"        -> (streaming.MatchRecognizeSql.matchPlus _),
-    "q_sql_match_strict" -> (streaming.MatchRecognizeSql.matchStrict _),
-    "q_sql_match_sum"    -> (streaming.MatchRecognizeSql.matchSum _),
-    "q_sql_match_rows"   -> (streaming.MatchRecognizeSql.matchAllRows _),
-    "q_sql_match_rows_measures" -> (streaming.MatchRecognizeSql.matchAllRowsMeasures _),
-    "q_sql_match_rows_final" -> (streaming.MatchRecognizeSql.matchAllRowsFinal _),
-    "q_sql_match_within" -> (streaming.MatchRecognizeSql.matchWithin _),
-    "q_sql_match_paren"  -> (streaming.MatchRecognizeSql.matchParen _),
-    "q_sql_match_agg_def" -> (streaming.MatchRecognizeSql.matchAggDef _),
-    "q_sql_match_skip_last" -> (streaming.MatchRecognizeSql.matchSkipLast _),
-    "q_sql_match_permute" -> (streaming.MatchRecognizeSql.matchPermute _),
-    "q_sql_match_permute_skip" -> (streaming.MatchRecognizeSql.matchPermuteSkip _),
-    "q_sql_match_rep_skip" -> (streaming.MatchRecognizeSql.matchRepSkip _),
-    "q_sql_match_number"  -> (streaming.MatchRecognizeSql.matchNumber _),
-    "q_sql_match_multi"   -> (streaming.MatchRecognizeSql.matchMulti _),
-    "q_sql_match_multi_deep" -> (streaming.MatchRecognizeSql.matchMultiDeep _),
-    "q_sql_match_subset"  -> (streaming.MatchRecognizeSql.matchSubset _),
-    "q_sql_match_xvar"    -> (streaming.MatchRecognizeSql.matchXvar _),
-    "q_sql_match_xvar_min" -> (streaming.MatchRecognizeSql.matchXvarMin _),
-    "q_sql_match_nav"     -> (streaming.MatchRecognizeSql.matchNav _),
-    "q_sql_match_qopt"    -> (streaming.MatchRecognizeSql.matchQOpt _),
-    "q_sql_match_qopt_rel" -> (streaming.MatchRecognizeSql.matchQOptRel _),
-    "q_sql_match_qrange"  -> (streaming.MatchRecognizeSql.matchQRange _),
-    "q_sql_match_qrange_rel" -> (streaming.MatchRecognizeSql.matchQRangeRel _),
-    "q_sql_match_qupto"   -> (streaming.MatchRecognizeSql.matchQUpto _),
-    "q_sql_match_qopen"   -> (streaming.MatchRecognizeSql.matchQOpen _),
-    "q_sql_match_subset_def" -> (streaming.MatchRecognizeSql.matchSubsetDef _),
-    "q_sql_match_xagg"    -> (streaming.MatchRecognizeSql.matchXagg _),
-    "q_sql_match_distinct" -> (streaming.MatchRecognizeSql.matchDistinct _),
-    "q_sql_match_exclude" -> (streaming.MatchRecognizeSql.matchExclude _),
-    "q_sql_match_prev"    -> (streaming.MatchRecognizeSql.matchPrev _),
-    "q_sql_match_next"    -> (streaming.MatchRecognizeSql.matchNext _),
-    "q_sql_match_batch_nav" -> (streaming.MatchRecognizeSql.matchNavBatch _),
-    "q_sql_match_batch_rows" -> (streaming.MatchRecognizeSql.matchAllRowsBatch _),
-    "q_sql_match_batch_permute" -> (streaming.MatchRecognizeSql.matchPermuteBatch _),
-    "q_sql_match_batch_group" -> (streaming.MatchRecognizeSql.matchMultiBatch _),
-    "q_sql_match_anchor"    -> (streaming.MatchRecognizeSql.matchAnchorStart _),
-    "q_sql_match_anchor_end" -> (streaming.MatchRecognizeSql.matchAnchorEnd _),
-    "q_sql_match_anchor_both" -> (streaming.MatchRecognizeSql.matchAnchorBoth _),
-    "q_sql_match_rowtime" -> (streaming.MatchRecognizeSql.matchRowtime _),
-    "q_sql_match_cascade" -> (streaming.MatchRecognizeSql.matchCascade _),
-    "q_sql_tumble"       -> (GroupWindowSql.tumble _),
-    "q_sql_hop"          -> (GroupWindowSql.hop _),
-    "q_sql_session"      -> (GroupWindowSql.session _),
-    "q_sql_cumulate"     -> (GroupWindowSql.cumulate _),
-    "q_sql_stream_tumble" -> (GroupWindowSql.streamTumble _),
-    "q_sql_stream_hop"    -> (GroupWindowSql.streamHop _),
-    "q_sql_stream_session" -> (GroupWindowSql.streamSession _),
-    "q_sql_dedup_pattern" -> (SqlSurface.tpchQuery("q_sql_dedup_pattern") _),
-    "q_part_prune"      -> (ScaleOps.partitionedWrite _),
-    "q_join_salted"     -> (ScaleOps.saltedJoin(_, _)),
-    "q_join_skew"       -> (ScaleOps.skewJoin _),
-    "q_stream_static_join" -> (ScaleOps.streamStaticJoin _),
-    "q_agg_sum0_native" -> (ScaleOps.sum0Native _),
-    "q_fmt_gzip"        -> (Formats.gzipRoundtrip _),
-    "q_fmt_seqfile"     -> (Formats.sequenceFileRoundtrip _),
-    "q_fmt_raw"         -> (Formats.rawRoundtrip _),
-    "q_stmt_multi_sink" -> (StatementSets.multiSink _),
-    "q_state_agg_read"  -> (graft.sources.StateRead.aggStateRead _),
-    "q_state_dedup_read" -> (graft.sources.StateRead.dedupStateRead _),
-    "q_state_bootstrap" -> (streaming.StateBootstrap.bootstrapContinue _),
-    "q_state_surgery"   -> (streaming.StateBootstrap.stateSurgery _),
-    "q_state_rescale"   -> (streaming.StateBootstrap.rescaleContinue _),
-    "q_fmt_debezium"    -> (graft.sources.CdcFormats.debeziumKinds _),
-    "q_cdc_materialize" -> (graft.sources.CdcFormats.debeziumMaterialize _),
-    "q_ddl_like"        -> (graft.sources.DdlSql.ddlLike _),
-    "q_ddl_hive_udf"    -> (graft.sources.DdlSql.ddlHiveUdf _),
-    "q_type_multiset"   -> (MultisetOps.multisetLattice _),
-    "q_type_time"       -> (graft.operators.TypeLattice.timeLattice _),
-    "q_type_raw"        -> (graft.operators.TypeLattice.rawLattice _),
-    "q_graph_checksum"  -> (Graph.docChecksum _),
-    "q_ddl_insert_partition" -> (graft.sources.HiveCatalog.insertPartition _),
-    "q_sql_cascade"     -> (GroupWindowSql.cascade _),
-    "q_ml_pipeline"     -> (graft.operators.MlPipeline.mlPipeline _),
-    "q_ml_gaussian"     -> (graft.operators.MlPipeline.gaussian _),
-    "q_ml_ols"          -> (graft.operators.MlPipeline.ols _),
-    "q_stream_iterate"  -> (streaming.StreamIterate.userCountdown _),
-    "q_sql_system_time" -> (graft.operators.SystemTimeSql.systemTimeJoin _),
-    "q_sql_temporal_func" -> (graft.operators.SystemTimeSql.temporalFuncJoin _),
-    "q_sparse_cosine"   -> (Similarity.sparseCosinePairs _),
-    "q_cdc_stream"      -> (streaming.CdcStream.debeziumStream _),
-    "q_fmt_canal"       -> (graft.sources.CdcFormats.canalKinds _),
-    "q_fmt_maxwell"     -> (graft.sources.CdcFormats.maxwellMaterialize _),
-    "q_pipeline_clean"  -> (Pipeline.cleanCorpus _),
-    "q_emb_normalize"   -> (Pipeline.normalize _),
-    "q_emb_quantize"    -> (Pipeline.quantize _),
-  )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map(q => q.name -> q.build).toMap
 
-  def oracleSql: Map[String, String] = Map(
-    "q_unified_pipeline" ->
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity),2) AS sum_qty,
-        | round(sum(l_extendedprice),2) AS sum_base_price,
-        | round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price,
-        | round(avg(l_quantity),6) AS avg_qty,
-        | round(avg(l_discount),6) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_inner" ->
-      """SELECT r_name, n_name, round(sum(o_totalprice),2) AS revenue, count(*) AS n_orders
-        |FROM orders JOIN customer ON o_custkey=c_custkey
-        |JOIN nation ON c_nationkey=n_nationkey
-        |JOIN region ON n_regionkey=r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q_join_left" ->
-      """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
-        | round(coalesce(sum(o_totalprice),0),2) AS total
-        |FROM customer LEFT JOIN orders ON c_custkey=o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-    "q_join_full" ->
-      """SELECT coalesce(k, k2) AS suppkey, coalesce(li_cnt, 0) AS li_cnt,
-        | round(coalesce(s_acctbal, 0),2) AS acctbal
-        |FROM (SELECT l_suppkey AS k, count(*) AS li_cnt FROM lineitem GROUP BY l_suppkey) a
-        |FULL JOIN (SELECT s_suppkey AS k2, s_acctbal FROM supplier) b ON k=k2
-        |ORDER BY suppkey""".stripMargin,
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>100000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>400000)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_cross" ->
-      """SELECT r_name, n_name FROM region CROSS JOIN nation
-        |ORDER BY r_name, n_name""".stripMargin,
-    "q_join_theta" ->
-      """SELECT s_suppkey, count(*) AS n_gt
-        |FROM supplier JOIN nation ON s_nationkey < n_nationkey
-        |GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin,
-    "q_agg_distinct" ->
-      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
-        | count(DISTINCT l_partkey) AS n_part, count(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_stats" ->
-      """SELECT l_linestatus,
-        | round(stddev_pop(l_quantity),6) AS sd_pop,
-        | round(stddev_samp(l_quantity),6) AS sd_samp,
-        | round(var_pop(l_quantity),6) AS v_pop,
-        | round(var_samp(l_quantity),6) AS v_samp,
-        | round(min(l_quantity),2) AS min_q,
-        | round(max(l_quantity),2) AS max_q
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q_agg_rollup" ->
-      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
-        | count(*) AS cnt, CAST(grouping(l_returnflag, l_linestatus) AS INT) AS gid
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q_agg_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
-        | round(sum(o_totalprice),2) AS total,
-        | CAST(grouping(o_orderstatus, o_orderpriority) AS INT) AS gid
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_agg_listagg" ->
-      """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "q_agg_sum0" ->
-      """SELECT c_mktsegment, round(coalesce(sum(o_totalprice),0),2) AS sum0_total,
-        | count(o_orderkey) AS cnt
-        |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice>450000) o
-        | ON c_custkey=o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_agg_percentile" ->
-      """SELECT l_returnflag,
-        | round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-        | round(quantile_cont(l_quantity, 0.9), 6) AS p90,
-        | round(quantile_cont(l_extendedprice, 0.25), 6) AS price_p25
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_collect" ->
-      """SELECT s_nationkey,
-        | array_to_string(list_sort(list(s_suppkey)), ',') AS supps,
-        | array_to_string(list_sort(list_distinct(list(s_nationkey))), ',') AS nk_set
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_set_union_all" ->
-      """SELECT k, count(*) AS cnt FROM (
-        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        | UNION ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |) GROUP BY k ORDER BY k""".stripMargin,
-    "q_set_union" ->
-      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        |UNION SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |ORDER BY k""".stripMargin,
-    "q_set_intersect" ->
-      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        |INTERSECT SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |ORDER BY k""".stripMargin,
-    "q_set_intersect_all" ->
-      """SELECT k, count(*) AS cnt FROM (
-        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        | INTERSECT ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |) GROUP BY k ORDER BY k""".stripMargin,
-    "q_set_except" ->
-      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        |EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |ORDER BY k""".stripMargin,
-    "q_set_except_all" ->
-      """SELECT k, count(*) AS cnt FROM (
-        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
-        | EXCEPT ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
-        |) GROUP BY k ORDER BY k""".stripMargin,
-    "q_sort_limit" ->
-      """SELECT o_orderkey, round(o_totalprice,2) AS o_totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin,
-    "q_topn_group" ->
-      """SELECT o_orderpriority, rn, o_orderkey, round(o_totalprice,2) AS o_totalprice
-        |FROM (SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |  row_number() OVER (PARTITION BY o_orderpriority
-        |    ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders)
-        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin,
-    "q_dedup_first" ->
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        | FROM events) WHERE rn=1 ORDER BY user_id""".stripMargin,
-    "q_dedup_last" ->
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn=1 ORDER BY user_id""".stripMargin,
-    "q_over_rows" ->
-      """SELECT user_id, event_id,
-        | round(sum(value) OVER w_unb, 4) AS run_sum,
-        | round(avg(value) OVER w3, 6) AS mavg3,
-        | count(*) OVER w_unb AS run_cnt
-        |FROM events
-        |WINDOW w_unb AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        | w3 AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_over_rank" ->
-      """SELECT c_mktsegment, c_custkey,
-        | rank() OVER w AS rnk, dense_rank() OVER w AS drnk, row_number() OVER w AS rn
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-        |ORDER BY c_mktsegment, rn""".stripMargin,
-    "q_over_leadlag" ->
-      """SELECT user_id, event_id,
-        | lag(event_id, 1, -1) OVER w AS prev_id,
-        | lead(event_id, 1, -1) OVER w AS next_id
-        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_over_range" ->
-      """SELECT p_brand, p_partkey, p_size, count(*) OVER w AS n_close
-        |FROM part
-        |WINDOW w AS (PARTITION BY p_brand ORDER BY p_size
-        |  RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY p_brand, p_partkey""".stripMargin,
-    "q_unnest_words" ->
-      """SELECT word, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(p_name, ' ')) AS word FROM part)
-        |GROUP BY word ORDER BY word""".stripMargin,
-    "q_values" ->
-      """SELECT * FROM (VALUES (1,'a'),(2,'b'),(3,'c')) AS t(id, tag) ORDER BY id""",
-    "q_lookup_join" ->
-      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
-        |FROM events LEFT JOIN customer ON c_custkey = user_id
-        |ORDER BY event_id""".stripMargin,
-    "q_lookup_join_async" ->
-      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
-        |FROM events LEFT JOIN customer ON c_custkey = user_id
-        |ORDER BY event_id""".stripMargin,
-    "q_cogroup" ->
-      """SELECT c_custkey, count(o_orderkey) AS n_orders,
-        | CAST(coalesce(sum(CASE WHEN o_totalprice > c_acctbal * 50 THEN 1 END), 0) AS BIGINT) AS n_above,
-        | round(coalesce(sum(o_totalprice), 0), 2) AS total
-        |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
-        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin,
-    "q_descriptor_dedup" ->
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_fn_string" ->
-      """SELECT p_partkey,
-        | upper(p_name) AS up, lower(p_brand) AS lo,
-        | substring(p_name, 2, 5) AS sub,
-        | left(p_name, 4) AS l4, right(p_name, 3) AS r3,
-        | CAST(length(p_name) AS INT) AS len,
-        | concat(p_brand, '-', p_type) AS cat,
-        | concat_ws('|', p_brand, p_type) AS catws,
-        | lpad(p_brand, 12, '*') AS lp, rpad(p_brand, 12, '#') AS rp,
-        | trim(lpad(p_brand, 12, '*'), '*') AS tr,
-        | replace(p_type, 'a', '@') AS rep,
-        | reverse(p_name) AS rev,
-        | repeat(p_brand, 2) AS rep2,
-        | CAST(instr(p_name, 'a') AS INT) AS pos_a,
-        | CAST(ascii(p_name) AS INT) AS asc1,
-        | chr(65 + (p_size % 26)) AS ch,
-        | split_part(p_name, ' ', 1) AS tok1,
-        | regexp_extract(p_name, '([a-z]+)', 1) AS rex,
-        | regexp_replace(p_name, '[aeiou]', '_', 'g') AS rrep,
-        | translate(p_name, 'abc', 'xyz') AS trn,
-        | md5(p_name) AS h_md5, sha256(p_name) AS h_sha,
-        | to_base64(encode(p_brand)) AS b64,
-        | p_name LIKE '%a%' AS has_a,
-        | regexp_matches(p_name, '[0-9]') AS has_digit
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_fn_string2" ->
-      """SELECT p_partkey,
-        | substr(p_name, 1, 2) || '###' || substr(p_name, 5) AS ovl,
-        | 'example.com' AS host,
-        | CAST(p_size AS VARCHAR) AS qk,
-        | CAST(p_size AS VARCHAR) AS m_a,
-        | p_brand AS m_b,
-        | string_split(p_name, ' ')[1] AS si0,
-        | CASE WHEN len(string_split(p_name, ' ')) > 1 THEN string_split(p_name, ' ')[2] END AS si1,
-        | CAST(NULL AS VARCHAR) AS si_oob,
-        | CAST(NULL AS VARCHAR) AS si_neg,
-        | array_to_string(list_transform(string_split(p_name, ' '), x -> upper(x[1:1]) || lower(x[2:])), ' ') AS ic,
-        | CAST(position('a' IN p_name) AS INT) AS pos,
-        | CAST(instr(p_name, 'an') AS INT) AS loc,
-        | p_name AS enc_rt,
-        | p_name AS b64_rt,
-        | hex(encode(p_name)) AS hx
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_fn_math2" ->
-      """SELECT p_partkey,
-        | trunc(p_retailprice * 100) / 100 AS t2,
-        | trunc(p_retailprice - 1000.0) AS t0,
-        | trunc(p_retailprice * 0.01) / 0.01 AS tm2,
-        | trunc(-p_retailprice * 100) / 100 AS tn2,
-        | trunc((1000.0 - p_retailprice) * 10) / 10 AS tmix
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_fn_similar" ->
-      """SELECT p_partkey,
-        | regexp_full_match(p_name, '.*(bolt|rod).*') AS sim_alt,
-        | regexp_full_match(p_name, '(cold|small)..*') AS sim_us,
-        | regexp_full_match(p_brand, 'Brand#[0-9]+') AS sim_cls,
-        | regexp_full_match(p_brand, 'Brand#1[0-9]?') AS sim_q,
-        | regexp_full_match(p_name, '[a-z]{4} .*') AS sim_rep,
-        | regexp_full_match(p_name, '.*_.*') AS sim_esc,
-        | regexp_full_match(p_name, 'c.*\.') AS sim_dot,
-        | p_name LIKE '%!_%' ESCAPE '!' AS like_esc,
-        | p_name LIKE 'c%t' AS like_ct
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_fn_datetime2" ->
-      """SELECT o_orderkey,
-        | strftime(o_orderdate + to_hours(9), '%Y-%m-%d %H:%M:%S') AS cvt,
-        | strftime(o_orderdate + to_hours(3), '%Y-%m-%d %H:%M:%S') AS ta_h,
-        | strftime(o_orderdate + INTERVAL 2 MONTH, '%Y-%m-%d %H:%M:%S') AS ta_mo,
-        | date_diff('day', date_trunc('day', o_orderdate), TIMESTAMP '2025-06-01') AS td_d,
-        | date_diff('hour', date_trunc('day', o_orderdate), TIMESTAMP '2025-06-01') AS td_h,
-        | date_diff('month', date_trunc('month', o_orderdate), TIMESTAMP '2025-06-01') AS td_mo,
-        | (greatest(o_orderdate, o_orderdate + to_hours(2))
-        |    >= least(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
-        |             o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
-        |  AND greatest(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
-        |               o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
-        |    >= least(o_orderdate, o_orderdate + to_hours(2))) AS ovl,
-        | (greatest(o_orderdate, o_orderdate + to_hours(2))
-        |    >= least(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
-        |             o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
-        |  AND greatest(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
-        |               o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
-        |    >= least(o_orderdate, o_orderdate + to_hours(2))) AS ovl_rev
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_fn_math" ->
-      """SELECT p_partkey,
-        | round(abs(-p_retailprice), 2) AS v_abs,
-        | CAST(ceil(p_retailprice) AS BIGINT) AS v_ceil,
-        | CAST(floor(p_retailprice) AS BIGINT) AS v_floor,
-        | round(exp(p_size / 50.0), 6) AS v_exp,
-        | round(ln(p_retailprice), 6) AS v_ln,
-        | round(log10(p_retailprice), 6) AS v_log10,
-        | round(log2(CAST(p_size AS DOUBLE) + 1), 6) AS v_log2,
-        | round(sqrt(p_retailprice), 6) AS v_sqrt,
-        | round(power(CAST(p_size AS DOUBLE), 2), 2) AS v_pow,
-        | p_size % 7 AS v_mod,
-        | CAST(sign(p_retailprice - 1000) AS INT) AS v_sign,
-        | round(sin(CAST(p_size AS DOUBLE)), 6) AS v_sin,
-        | round(cos(CAST(p_size AS DOUBLE)), 6) AS v_cos,
-        | round(atan2(CAST(p_size AS DOUBLE), 3.0), 6) AS v_atan2,
-        | round(cot(CAST(p_size AS DOUBLE) + 0.5), 6) AS v_cot,
-        | round(degrees(1.0), 6) AS v_deg,
-        | round(radians(180.0), 6) AS v_rad,
-        | greatest(p_size, 25) AS v_great,
-        | least(p_size, 25) AS v_least,
-        | bin(p_size) AS v_bin,
-        | hex(p_size) AS v_hex
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q_fn_datetime" ->
-      """SELECT o_orderkey,
-        | CAST(year(o_orderdate) AS INT) AS y,
-        | CAST(quarter(o_orderdate) AS INT) AS q,
-        | CAST(month(o_orderdate) AS INT) AS m,
-        | CAST(day(o_orderdate) AS INT) AS d,
-        | CAST(hour(o_orderdate) AS INT) AS h,
-        | CAST(minute(o_orderdate) AS INT) AS mi,
-        | CAST(second(o_orderdate) AS INT) AS sec,
-        | CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow,
-        | CAST(weekofyear(o_orderdate) AS INT) AS woy,
-        | CAST(dayofyear(o_orderdate) AS INT) AS doy,
-        | CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mon_start,
-        | CAST(datediff('day', DATE '2024-01-01', CAST(o_orderdate AS DATE)) AS INT) AS days_since,
-        | strftime(date_add(CAST(o_orderdate AS DATE), 30), '%Y-%m-%d') AS plus30,
-        | CAST(epoch(o_orderdate) AS BIGINT) AS epoch_s,
-        | strftime(o_orderdate, '%Y-%m-%d') AS fmt,
-        | o_orderdate + INTERVAL 5 HOUR AS plus5h
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_fn_conditional" ->
-      """SELECT c_custkey,
-        | CASE WHEN c_acctbal > 5000 THEN 'high' WHEN c_acctbal > 1000 THEN 'mid' ELSE 'low' END AS tier,
-        | coalesce(nullif(c_mktsegment, 'AUTOMOBILE'), 'OTHER') AS seg,
-        | if(c_acctbal > 0, 'pos', 'nonpos') AS sgn,
-        | c_acctbal IS NULL AS isn,
-        | c_acctbal BETWEEN 100 AND 2000 AS in_range,
-        | c_mktsegment IN ('AUTOMOBILE', 'MACHINERY') AS seg_in,
-        | c_mktsegment IS DISTINCT FROM 'BUILDING' AS is_distinct,
-        | coalesce(c_name, '?') AS nm,
-        | round(greatest(c_acctbal, 0.0), 2) AS bal_pos
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_fn_complex" ->
-      """SELECT n_nationkey,
-        | array_to_string([n_nationkey, n_regionkey], ',') AS arr,
-        | CAST(len([n_nationkey, n_regionkey]) AS INT) AS card,
-        | [n_name, 'x'][1] AS elem1,
-        | map(['k'], [n_name])['k'][1] AS mval,
-        | struct_pack(a := n_nationkey, b := n_name).b AS fld,
-        | array_to_string(list_sort([n_regionkey, n_nationkey]), ',') AS sorted_arr,
-        | list_contains([n_nationkey, n_regionkey], 0) AS has0
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-    "q_fn_classify" ->
-      """SELECT p_partkey,
-        | regexp_full_match(CAST(p_size AS VARCHAR), '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_int,
-        | regexp_full_match(CAST(p_retailprice AS VARCHAR), '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_frac,
-        | regexp_full_match(p_brand, '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_brand,
-        | regexp_full_match(CAST(p_partkey AS VARCHAR), '[0-9]+') AS dig_key,
-        | regexp_full_match(p_type, '[0-9]+') AS dig_type,
-        | regexp_full_match(split_part(p_name, ' ', 1), '[A-Za-z]+') AS alpha_tok,
-        | regexp_full_match(p_brand, '[A-Za-z]+') AS alpha_brand,
-        | CAST(((list_reduce(list_prepend(0::BIGINT,
-        |    list_transform(range(1, length(p_brand)+1), i -> ascii(p_brand[i])::BIGINT)),
-        |    (a, c) -> (a * 31 + c) % 4294967296) + 2147483648) % 4294967296) - 2147483648 AS INT) AS hc_brand,
-        | CAST(((list_reduce(list_prepend(0::BIGINT,
-        |    list_transform(range(1, length(p_name)+1), i -> ascii(p_name[i])::BIGINT)),
-        |    (a, c) -> (a * 31 + c) % 4294967296) + 2147483648) % 4294967296) - 2147483648 AS INT) AS hc_name
-        |FROM part ORDER BY p_partkey""".stripMargin,
-  ) ++ LlmOracles.sql ++ Bpe.sql ++ WindowOracles.sql ++ streaming.StreamQueries.sql ++
-    Formats.sql ++ Udafs.sql ++ Graph.sql ++ SqlSurface.sql ++ ScaleOps.sql ++
-    Pipeline.sql ++ TpcDsSurface.sql ++ streaming.MatchRecognizeSql.sql ++
-    GroupWindowSql.sql ++ graft.sources.DdlSql.sql ++
-    graft.sources.HiveCatalog.sql ++ Graph.starSql ++
-    graft.tpcds.TpcdsReal.oracles ++ streaming.TxFileSink.sql ++
-    graft.sources.JdbcDemo.sql ++ graft.sources.CdcFormats.sql ++
-    graft.sources.StateRead.sql ++ StatementSets.sql ++
-    streaming.CdcStream.sql ++ graft.operators.MlPipeline.sql ++
-    graft.operators.SystemTimeSql.sql ++ Similarity.sql ++ GraphGens.sql ++
-    streaming.StreamIterate.sql ++ Sketches.sql ++ Layout.sql ++
-    graft.operators.DataQuality.sql ++ streaming.StateBootstrap.sql ++
-    MultisetOps.sql ++ streaming.StreamDedup.sql ++
-    graft.operators.TypeLattice.sql ++ graft.operators.Retrieval.sql
+  lazy val oracleSql: Map[String, String] = catalog.map(q => q.name -> q.oracle).toMap
+
+  /** Concatenates module lists; a name declared twice is an error. */
+  private[graft] def assemble(modules: Seq[Query]*): Seq[Query] = {
+    val all = modules.flatten
+    val dups = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"queries declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    all
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.WindowAggs
+
 /** DuckDB oracle SQL for the window-aggregation / time-join operators
   * (SURVEY.md §2.3 interval+temporal joins, §2.5 group windows).
   *
@@ -9,19 +11,19 @@ package graft
   */
 object WindowOracles {
 
-  val sql: Map[String, String] = Map(
-    "q_win_tumble" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_win_tumble", WindowAggs.tumble,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_win_hop" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_win_hop", WindowAggs.hop,
       """WITH e AS (SELECT event_type, value,
         |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
         | FROM events)
         |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-    "q_win_session" ->
+        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+    Query("q_win_session", WindowAggs.session,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
         |m AS (SELECT user_id, t, value,
         |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
@@ -30,38 +32,38 @@ object WindowOracles {
         |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
         |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-    "q_win_cumulate" ->
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    Query("q_win_cumulate", WindowAggs.cumulate,
       """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
         |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
         |SELECT day AS w_start, make_timestamp(epoch_us(day) + k * 21600000000) AS w_end,
         | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_interval_join" ->
+        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    Query("q_interval_join", WindowAggs.intervalJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t AND v.t >= p.t - INTERVAL 1 HOUR
-        |ORDER BY p.user_id, p_id, v_id""".stripMargin,
-    "q_asof_custom" ->
+        |ORDER BY p.user_id, p_id, v_id""".stripMargin),
+    Query("q_asof_custom", WindowAggs.asOfJoinCustom,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t
-        |ORDER BY p.user_id, p_id""".stripMargin,
-    "q_asof_join" ->
+        |ORDER BY p.user_id, p_id""".stripMargin),
+    Query("q_asof_join", WindowAggs.asOfJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t
-        |ORDER BY p.user_id, p_id""".stripMargin,
+        |ORDER BY p.user_id, p_id""".stripMargin),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.{Duration, DurationInt}
 
@@ -134,6 +135,17 @@ object AsyncMap {
       }
     }.toDF("event_id", "user_id", "segment").orderBy("event_id")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_lookup_join", lookupJoin,
+      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
+        |FROM events LEFT JOIN customer ON c_custkey = user_id
+        |ORDER BY event_id""".stripMargin),
+    Query("q_lookup_join_async", lookupJoinAsync,
+      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
+        |FROM events LEFT JOIN customer ON c_custkey = user_id
+        |ORDER BY event_id""".stripMargin),
+  )
 }
 
 /** Executor-side dimension cache for the async lookup join: one

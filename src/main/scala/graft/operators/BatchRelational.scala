@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -355,4 +355,181 @@ object BatchRelational {
     }.toDF("c_custkey", "n_orders", "n_above", "total")
       .orderBy("c_custkey")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q1_agg", q1Agg,
+      """SELECT l_returnflag, l_linestatus,
+        | round(sum(l_quantity),2) AS sum_qty,
+        | round(sum(l_extendedprice),2) AS sum_base_price,
+        | round(sum(l_extendedprice*(1-l_discount)),2) AS sum_disc_price,
+        | round(avg(l_quantity),6) AS avg_qty,
+        | round(avg(l_discount),6) AS avg_disc,
+        | count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q_join_inner", joinInner,
+      """SELECT r_name, n_name, round(sum(o_totalprice),2) AS revenue, count(*) AS n_orders
+        |FROM orders JOIN customer ON o_custkey=c_custkey
+        |JOIN nation ON c_nationkey=n_nationkey
+        |JOIN region ON n_regionkey=r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    Query("q_join_left", joinLeft,
+      """SELECT c_custkey, c_name, count(o_orderkey) AS n_orders,
+        | round(coalesce(sum(o_totalprice),0),2) AS total
+        |FROM customer LEFT JOIN orders ON c_custkey=o_custkey
+        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin),
+    Query("q_join_full", joinFull,
+      """SELECT coalesce(k, k2) AS suppkey, coalesce(li_cnt, 0) AS li_cnt,
+        | round(coalesce(s_acctbal, 0),2) AS acctbal
+        |FROM (SELECT l_suppkey AS k, count(*) AS li_cnt FROM lineitem GROUP BY l_suppkey) a
+        |FULL JOIN (SELECT s_suppkey AS k2, s_acctbal FROM supplier) b ON k=k2
+        |ORDER BY suppkey""".stripMargin),
+    Query("q_join_semi", joinSemi,
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>100000)
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q_join_anti", joinAnti,
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey=c_custkey AND o_totalprice>400000)
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q_join_cross", joinCross,
+      """SELECT r_name, n_name FROM region CROSS JOIN nation
+        |ORDER BY r_name, n_name""".stripMargin),
+    Query("q_join_theta", joinTheta,
+      """SELECT s_suppkey, count(*) AS n_gt
+        |FROM supplier JOIN nation ON s_nationkey < n_nationkey
+        |GROUP BY s_suppkey ORDER BY s_suppkey""".stripMargin),
+    Query("q_agg_distinct", aggDistinct,
+      """SELECT l_returnflag, count(DISTINCT l_suppkey) AS n_supp,
+        | count(DISTINCT l_partkey) AS n_part, count(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q_agg_stats", aggStats,
+      """SELECT l_linestatus,
+        | round(stddev_pop(l_quantity),6) AS sd_pop,
+        | round(stddev_samp(l_quantity),6) AS sd_samp,
+        | round(var_pop(l_quantity),6) AS v_pop,
+        | round(var_samp(l_quantity),6) AS v_samp,
+        | round(min(l_quantity),2) AS min_q,
+        | round(max(l_quantity),2) AS max_q
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+    Query("q_agg_rollup", aggRollup,
+      """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,
+        | count(*) AS cnt, CAST(grouping(l_returnflag, l_linestatus) AS INT) AS gid
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q_agg_cube", aggCube,
+      """SELECT o_orderstatus, o_orderpriority, count(*) AS cnt,
+        | round(sum(o_totalprice),2) AS total,
+        | CAST(grouping(o_orderstatus, o_orderpriority) AS INT) AS gid
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
+    Query("q_agg_listagg", aggListagg,
+      """SELECT n_regionkey, string_agg(n_name, ',' ORDER BY n_name) AS nations
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Query("q_agg_sum0", aggSum0,
+      """SELECT c_mktsegment, round(coalesce(sum(o_totalprice),0),2) AS sum0_total,
+        | count(o_orderkey) AS cnt
+        |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice>450000) o
+        | ON c_custkey=o_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q_agg_percentile", aggPercentile,
+      """SELECT l_returnflag,
+        | round(quantile_cont(l_quantity, 0.5), 6) AS p50,
+        | round(quantile_cont(l_quantity, 0.9), 6) AS p90,
+        | round(quantile_cont(l_extendedprice, 0.25), 6) AS price_p25
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q_agg_collect", aggCollect,
+      """SELECT s_nationkey,
+        | array_to_string(list_sort(list(s_suppkey)), ',') AS supps,
+        | array_to_string(list_sort(list_distinct(list(s_nationkey))), ',') AS nk_set
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("q_set_union_all", setUnionAll,
+      """SELECT k, count(*) AS cnt FROM (
+        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        | UNION ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |) GROUP BY k ORDER BY k""".stripMargin),
+    Query("q_set_union", setUnion,
+      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        |UNION SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |ORDER BY k""".stripMargin),
+    Query("q_set_intersect", setIntersect,
+      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        |INTERSECT SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |ORDER BY k""".stripMargin),
+    Query("q_set_intersect_all", setIntersectAll,
+      """SELECT k, count(*) AS cnt FROM (
+        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        | INTERSECT ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |) GROUP BY k ORDER BY k""".stripMargin),
+    Query("q_set_except", setExcept,
+      """SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        |EXCEPT SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |ORDER BY k""".stripMargin),
+    Query("q_set_except_all", setExceptAll,
+      """SELECT k, count(*) AS cnt FROM (
+        | SELECT o_custkey AS k FROM orders WHERE o_orderstatus='F'
+        | EXCEPT ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice>200000
+        |) GROUP BY k ORDER BY k""".stripMargin),
+    Query("q_sort_limit", sortLimit,
+      """SELECT o_orderkey, round(o_totalprice,2) AS o_totalprice
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin),
+    Query("q_topn_group", topNPerGroup,
+      """SELECT o_orderpriority, rn, o_orderkey, round(o_totalprice,2) AS o_totalprice
+        |FROM (SELECT o_orderpriority, o_orderkey, o_totalprice,
+        |  row_number() OVER (PARTITION BY o_orderpriority
+        |    ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders)
+        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin),
+    Query("q_dedup_first", dedupFirst,
+      """SELECT user_id, event_id, event_type FROM (
+        | SELECT user_id, event_id, event_type,
+        |  row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
+        | FROM events) WHERE rn=1 ORDER BY user_id""".stripMargin),
+    Query("q_dedup_last", dedupLast,
+      """SELECT user_id, event_id, event_type FROM (
+        | SELECT user_id, event_id, event_type,
+        |  row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
+        | FROM events) WHERE rn=1 ORDER BY user_id""".stripMargin),
+    Query("q_over_rows", overRows,
+      """SELECT user_id, event_id,
+        | round(sum(value) OVER w_unb, 4) AS run_sum,
+        | round(avg(value) OVER w3, 6) AS mavg3,
+        | count(*) OVER w_unb AS run_cnt
+        |FROM events
+        |WINDOW w_unb AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        | w3 AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |   ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_over_rank", overRank,
+      """SELECT c_mktsegment, c_custkey,
+        | rank() OVER w AS rnk, dense_rank() OVER w AS drnk, row_number() OVER w AS rn
+        |FROM customer
+        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
+        |ORDER BY c_mktsegment, rn""".stripMargin),
+    Query("q_over_leadlag", overLeadLag,
+      """SELECT user_id, event_id,
+        | lag(event_id, 1, -1) OVER w AS prev_id,
+        | lead(event_id, 1, -1) OVER w AS next_id
+        |FROM events WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_over_range", overRange,
+      """SELECT p_brand, p_partkey, p_size, count(*) OVER w AS n_close
+        |FROM part
+        |WINDOW w AS (PARTITION BY p_brand ORDER BY p_size
+        |  RANGE BETWEEN 2 PRECEDING AND CURRENT ROW)
+        |ORDER BY p_brand, p_partkey""".stripMargin),
+    Query("q_unnest_words", unnestWords,
+      """SELECT word, count(*) AS cnt
+        |FROM (SELECT unnest(string_split(p_name, ' ')) AS word FROM part)
+        |GROUP BY word ORDER BY word""".stripMargin),
+    Query("q_values", valuesScan,
+      """SELECT * FROM (VALUES (1,'a'),(2,'b'),(3,'c')) AS t(id, tag) ORDER BY id"""),
+    Query("q_cogroup", coGroup,
+      """SELECT c_custkey, count(o_orderkey) AS n_orders,
+        | CAST(coalesce(sum(CASE WHEN o_totalprice > c_acctbal * 50 THEN 1 END), 0) AS BIGINT) AS n_above,
+        | round(coalesce(sum(o_totalprice), 0), 2) AS total
+        |FROM customer LEFT JOIN orders ON o_custkey = c_custkey
+        |GROUP BY c_custkey ORDER BY c_custkey""".stripMargin),
+  )
 }

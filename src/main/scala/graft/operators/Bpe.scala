@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -179,15 +179,15 @@ object Bpe {
       |        i -> word[i]), ' ') || ' ' AS seq
       | FROM w)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_bpe_merges" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_bpe_merges", mergeTable,
       (baseCtes + (1 to Rounds).map(roundCte).mkString + "\n" +
         (1 to Rounds).map(r =>
           s"""SELECT $r AS round, (SELECT pair FROM p$r) AS pair,
              | replace((SELECT pair FROM p$r), ' ', '') AS merged,
              | (SELECT cnt FROM p$r) AS cnt""".stripMargin)
-          .mkString("", "\nUNION ALL\n", "\nORDER BY round")),
-    "q_bpe_encode" ->
+          .mkString("", "\nUNION ALL\n", "\nORDER BY round"))),
+    Query("q_bpe_encode", encode,
       (baseCtes + (1 to Rounds).map(roundCte).mkString + s""",
         |enc AS (SELECT word, len(string_split(trim(seq), ' ')) AS n_sym FROM v$Rounds),
         |d AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word FROM documents)
@@ -195,8 +195,8 @@ object Bpe {
         | CAST(sum(n_sym) AS BIGINT) AS n_bpe,
         | CAST(sum(length(word)) AS BIGINT) AS n_chars
         |FROM d JOIN enc USING (word) WHERE length(word) > 0
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    "q_bpe_fertility" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("q_bpe_fertility", fertility,
       (baseCtes + (1 to Rounds).map(roundCte).mkString + s""",
         |enc AS (SELECT word, len(string_split(trim(seq), ' ')) AS n_sym FROM v$Rounds),
         |d AS (SELECT lang, unnest(string_split(lower(text), ' ')) AS word FROM documents)
@@ -204,6 +204,6 @@ object Bpe {
         | CAST(sum(n_sym) AS BIGINT) AS n_bpe,
         | round(CAST(sum(n_sym) AS DOUBLE) / count(*), 4) AS fertility
         |FROM d JOIN enc USING (word) WHERE length(word) > 0
-        |GROUP BY lang ORDER BY lang""".stripMargin),
+        |GROUP BY lang ORDER BY lang""".stripMargin)),
   )
 }

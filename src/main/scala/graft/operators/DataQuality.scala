@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.Tables
+import graft.streaming.StreamQueries
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -194,13 +195,13 @@ object DataQuality {
         |  CAST(sum(contrib) AS BIGINT) > 200000 AS drifted
         |FROM ctr GROUP BY source ORDER BY source""".stripMargin
 
-  val sql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // PSI drift: same HDR bucket math, exact integer ratios, ln quantized
     // to micro units per bucket before the per-source sum; the streaming
     // twin shares the text verbatim (incremental fold ≡ batch build)
-    "q_drift_psi" -> driftPsiSql,
-    "q_stream_drift_psi" -> driftPsiSql,
-    "q_dq_checks" ->
+    Query("q_drift_psi", driftPsi, driftPsiSql),
+    Query("q_stream_drift_psi", StreamQueries.streamDriftPsi, driftPsiSql),
+    Query("q_dq_checks", checks,
       """WITH li AS (SELECT count(*) AS total,
         |   CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_null_qty,
         |   CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS v_disc,
@@ -227,6 +228,6 @@ object DataQuality {
         | UNION ALL SELECT 'orders_date_bounds', (SELECT v_date FROM oo), (SELECT total FROM oo))
         |SELECT check_name, CAST(violations AS BIGINT) AS violations,
         |  CAST(total AS BIGINT) AS total, violations = 0 AS pass
-        |FROM rows_ ORDER BY check_name""".stripMargin,
+        |FROM rows_ ORDER BY check_name""".stripMargin),
   )
 }

@@ -304,6 +304,12 @@ object Dedup {
     s.read.parquet(path)
   }
 
+  /** q_dedup_ngram_pairs: reads through the shared materialization, as the
+    * keep/graph/pipeline consumers already do, so the corpus's most
+    * expensive join runs once per session. */
+  def ngramJaccardPairsSorted(s: SparkSession, dir: String): DataFrame =
+    ngramJaccardPairsShared(s, dir).orderBy("doc_a", "doc_b")
+
   /** Greedy near-dup removal: drop any doc having a near-dup with a smaller
     * doc_id (single-link one-step; full connected components would iterate
     * large-star/small-star — overkill for the planted-pair corpus). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -239,48 +239,48 @@ object Formats {
         max(col("k")).as("max_k"))
       .orderBy("user_id")
 
-  val sql: Map[String, String] = Map(
-    "q_fmt_csv" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_fmt_csv", csvRoundtrip,
       """SELECT n_regionkey, count(*) AS cnt, min(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "q_fmt_json" ->
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Query("q_fmt_json", jsonRoundtrip,
       """SELECT o_orderstatus, count(*) AS cnt, round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_meta_columns" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q_meta_columns", metadataColumns,
       """SELECT doc_id, true AS fname_ok, true AS nonempty, true AS in_path
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_fmt_orc" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q_fmt_orc", orcRoundtrip,
       """SELECT l_returnflag, count(*) AS cnt, round(sum(l_quantity), 2) AS sum_qty
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_fmt_avro" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q_fmt_avro", avroRoundtrip,
       """SELECT s_nationkey, count(*) AS cnt, min(s_name) AS first_name,
         | round(sum(s_acctbal), 2) AS total
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_fmt_csv_quirks" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("q_fmt_csv_quirks", csvQuirks,
       """SELECT n_regionkey, count(*) AS cnt,
         | min(n_name || ',"q"' || chr(10) || 'L2') AS first_tricky,
         | CAST(sum(length(n_name || ',"q"' || chr(10) || 'L2')) AS BIGINT) AS len_sum
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    "q_fmt_avro_evolve" ->
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+    Query("q_fmt_avro_evolve", avroEvolve,
       """SELECT s_nationkey, 'std' AS s_tier, count(*) AS cnt,
         | max(s_suppkey) AS max_key, round(sum(s_acctbal), 2) AS total
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_fmt_seqfile" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("q_fmt_seqfile", sequenceFileRoundtrip,
       """SELECT s_nationkey, count(*) AS cnt, min(s_name) AS first_name,
         | round(sum(s_acctbal), 2) AS total
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_fmt_gzip" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("q_fmt_gzip", gzipRoundtrip,
       """SELECT c_mktsegment, count(*) AS cnt, round(sum(c_acctbal), 2) AS total
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_fmt_raw" ->
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q_fmt_raw", rawRoundtrip,
       """SELECT user_id, count(*) AS cnt,
         | CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_fn_json" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q_fn_json", jsonColumn,
       """SELECT user_id, count(*) AS cnt,
         | CAST(sum(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
         | CAST(max(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS max_k
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1437,8 +1438,8 @@ object Graph {
       |st AS (SELECT a, b, CASE h WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 3 END AS s
       |  FROM cand WHERE h <> 3)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_graph_checksum" -> (graphCtes + """
+  val queries: Seq[Query] = Seq(
+    Query("q_graph_checksum", docChecksum, (graphCtes + """
       |SELECT part, cnt, checksum FROM (
       | SELECT 'vertices' AS part, CAST(count(*) AS BIGINT) AS cnt,
       |  CAST(sum(((xor(id, id >> 32) + 2147483648) % 4294967296 + 4294967296)
@@ -1452,8 +1453,8 @@ object Graph {
       |          + 4294967296) % 4294967296 - 2147483648)
       |        + 2147483648) % 4294967296 + 4294967296) % 4294967296
       |      - 2147483648) AS BIGINT)
-      | FROM pairs) ORDER BY part""".stripMargin),
-    "q_graph_vertex_metrics" -> (graphCtes + """,
+      | FROM pairs) ORDER BY part""".stripMargin)),
+    Query("q_graph_vertex_metrics", docVertexMetrics, (graphCtes + """,
       |dg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
       |dv AS (SELECT v.id, coalesce(dg.deg, 0) AS deg
       |  FROM verts v LEFT JOIN dg ON dg.id = v.id)
@@ -1462,8 +1463,8 @@ object Graph {
       | CAST(coalesce(sum(deg * (deg - 1) // 2), 0) AS BIGINT) AS triplet_count,
       | CAST(coalesce(max(deg), 0) AS BIGINT) AS maximum_degree,
       | CAST(coalesce(max(deg * (deg - 1) // 2), 0) AS BIGINT) AS maximum_triplets
-      |FROM dv""".stripMargin),
-    "q_graph_edge_metrics" -> (graphCtes + """,
+      |FROM dv""".stripMargin)),
+    Query("q_graph_edge_metrics", docEdgeMetrics, (graphCtes + """,
       |dg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
       |ow AS (SELECT CASE WHEN (da.deg, p.doc_a) < (db.deg, p.doc_b)
       |    THEN p.doc_a ELSE p.doc_b END AS id
@@ -1475,8 +1476,8 @@ object Graph {
       | CAST(coalesce(sum(own * (own - 1) // 2 + own * (deg - own)), 0) AS BIGINT) AS rectangle_triplet_count,
       | CAST(coalesce(max(own * (own - 1) // 2), 0) AS BIGINT) AS maximum_triangle_triplets,
       | CAST(coalesce(max(own * (own - 1) // 2 + own * (deg - own)), 0) AS BIGINT) AS maximum_rectangle_triplets
-      |FROM oc""".stripMargin),
-    "q_graph_vertex_metrics_dir" -> (windowCtes + """,
+      |FROM oc""".stripMargin)),
+    Query("q_graph_vertex_metrics_dir", docVertexMetricsDir, (windowCtes + """,
       |roles AS (SELECT a AS id, (s IN (1,3))::INT AS od, (s IN (2,3))::INT AS idg FROM st
       |  UNION ALL SELECT b, (s IN (2,3))::INT, (s IN (1,3))::INT FROM st),
       |dg AS (SELECT id, count(*) AS deg, sum(od) AS od, sum(idg) AS idg
@@ -1494,8 +1495,8 @@ object Graph {
       | CAST(coalesce(max(od), 0) AS BIGINT) AS maximum_out_degree,
       | CAST(coalesce(max(idg), 0) AS BIGINT) AS maximum_in_degree,
       | CAST(coalesce(max(deg * (deg - 1) // 2), 0) AS BIGINT) AS maximum_triplets
-      |FROM dv""".stripMargin),
-    "q_graph_edge_metrics_dir" -> (windowCtes + """,
+      |FROM dv""".stripMargin)),
+    Query("q_graph_edge_metrics_dir", docEdgeMetricsDir, (windowCtes + """,
       |dg AS (SELECT id, count(*) AS deg FROM (
       |  SELECT a AS id FROM st UNION ALL SELECT b FROM st) GROUP BY id),
       |ow AS (SELECT CASE WHEN (da.deg, p.a) < (db.deg, p.b)
@@ -1508,8 +1509,8 @@ object Graph {
       | CAST(coalesce(sum(own * (own - 1) // 2 + own * (deg - own)), 0) AS BIGINT) AS rectangle_triplet_count,
       | CAST(coalesce(max(own * (own - 1) // 2), 0) AS BIGINT) AS maximum_triangle_triplets,
       | CAST(coalesce(max(own * (own - 1) // 2 + own * (deg - own)), 0) AS BIGINT) AS maximum_rectangle_triplets
-      |FROM oc""".stripMargin),
-    "q_graph_clustering_directed" -> (windowCtes + """,
+      |FROM oc""".stripMargin)),
+    Query("q_graph_clustering_directed", docClusteringDirected, (windowCtes + """,
       |und AS (SELECT a, b FROM st),
       |dg AS (SELECT id, count(*) AS deg FROM (
       |  SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY id),
@@ -1523,8 +1524,8 @@ object Graph {
       | CAST(coalesce(tv.tri, 0) AS BIGINT) AS tri,
       | CASE WHEN d.deg < 2 THEN NULL
       |      ELSE round(coalesce(tv.tri, 0) / (d.deg * (d.deg - 1)), 6) END AS coeff
-      |FROM dg d LEFT JOIN tv ON tv.id = d.id ORDER BY doc_id""".stripMargin),
-    "q_graph_clustering_dir_global" -> (windowCtes + """,
+      |FROM dg d LEFT JOIN tv ON tv.id = d.id ORDER BY doc_id""".stripMargin)),
+    Query("q_graph_clustering_dir_global", docClusteringDirGlobal, (windowCtes + """,
       |und AS (SELECT a, b FROM st),
       |dg AS (SELECT id, count(*) AS deg FROM (
       |  SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY id),
@@ -1544,11 +1545,11 @@ object Graph {
       | CASE WHEN coalesce(sum(deg * (deg - 1) // 2), 0) = 0 THEN 0.0
       |  ELSE round(coalesce(sum(tri), 0) / (sum(deg * (deg - 1) // 2)), 6) END AS gcc,
       | coalesce(round(sum(coalesce(coeff, 0)) / count(*), 6), 0.0) AS acc
-      |FROM lc""".stripMargin),
+      |FROM lc""".stripMargin)),
     // brute-force oracle: classify ALL C(n,3) triples directly (20.7M at
     // sf0.01) — definitionally correct, so it cannot share a bug with the
     // engine's subtraction identities
-    "q_graph_triadic_directed" -> (windowCtes + """,
+    Query("q_graph_triadic_directed", docTriadicDirected, (windowCtes + """,
       |lab AS (SELECT
       |   coalesce(pxy.s, 0) AS sxy, coalesce(pxz.s, 0) AS sxz, coalesce(pyz.s, 0) AS syz
       | FROM vv v1 JOIN vv v2 ON v2.id > v1.id JOIN vv v3 ON v3.id > v2.id
@@ -1603,8 +1604,8 @@ object Graph {
       | CAST(coalesce(sum((c = '120c')::INT), 0) AS BIGINT) AS t120c,
       | CAST(coalesce(sum((c = '210')::INT), 0) AS BIGINT) AS t210,
       | CAST(coalesce(sum((c = '300')::INT), 0) AS BIGINT) AS t300
-      |FROM k""".stripMargin),
-    "q_graph_jaccard" -> (graphCtes + """,
+      |FROM k""".stripMargin)),
+    Query("q_graph_jaccard", docJaccard, (graphCtes + """,
       |nb AS (SELECT src AS id, dst AS nb FROM edges),
       |dg AS (SELECT id, count(*) AS deg FROM nb GROUP BY id),
       |shr AS (SELECT x.nb AS u, y.nb AS v, count(*) AS shared
@@ -1612,8 +1613,8 @@ object Graph {
       |SELECT u AS doc_u, v AS doc_v, CAST(shared AS BIGINT) AS shared,
       | round(shared / (du.deg + dv.deg - shared), 6) AS jaccard
       |FROM shr JOIN dg du ON du.id = u JOIN dg dv ON dv.id = v
-      |ORDER BY doc_u, doc_v""".stripMargin),
-    "q_graph_adamic" -> (graphCtes + """,
+      |ORDER BY doc_u, doc_v""".stripMargin)),
+    Query("q_graph_adamic", docAdamic, (graphCtes + """,
       |nb AS (SELECT src AS id, dst AS nb FROM edges),
       |dg AS (SELECT id, count(*) AS deg FROM nb GROUP BY id),
       |nbw AS (SELECT nb.id, nb.nb,
@@ -1621,22 +1622,22 @@ object Graph {
       | FROM nb JOIN dg ON dg.id = nb.id AND dg.deg >= 2)
       |SELECT x.nb AS doc_u, y.nb AS doc_v, round(sum(x.w9) / 1e9, 6) AS aa
       |FROM nbw x JOIN nbw y ON x.id = y.id AND x.nb < y.nb
-      |GROUP BY 1, 2 ORDER BY doc_u, doc_v""".stripMargin),
-    "q_graph_community" -> (graphCtes +
+      |GROUP BY 1, 2 ORDER BY doc_u, doc_v""".stripMargin)),
+    Query("q_graph_community", docCommunity, (graphCtes +
       ",\nc0 AS (SELECT id, id AS label, 1.0 AS score FROM verts)" +
       (1 to 3).map(cdRound).mkString + """
       |SELECT id AS doc_id, label AS community FROM c3
-      |ORDER BY doc_id""".stripMargin),
-    "q_graph_sssp" -> (ssspCtes + (1 to 5).map(ssspRound).mkString + """
+      |ORDER BY doc_id""".stripMargin)),
+    Query("q_graph_sssp", docSssp, (ssspCtes + (1 to 5).map(ssspRound).mkString + """
       |SELECT id AS doc_id, round(dist, 6) AS dist FROM d5
-      |WHERE dist IS NOT NULL ORDER BY doc_id""".stripMargin),
-    "q_graph_triangles" -> (graphCtes + """
+      |WHERE dist IS NOT NULL ORDER BY doc_id""".stripMargin)),
+    Query("q_graph_triangles", docTriangles, (graphCtes + """
       |SELECT e1.doc_a AS t1, e1.doc_b AS t2, e2.doc_b AS t3
       |FROM pairs e1
       |JOIN pairs e2 ON e2.doc_a = e1.doc_a AND e2.doc_b > e1.doc_b
       |JOIN pairs e3 ON e3.doc_a = e1.doc_b AND e3.doc_b = e2.doc_b
-      |ORDER BY 1, 2, 3""".stripMargin),
-    "q_graph_triadic" -> (graphCtes + """,
+      |ORDER BY 1, 2, 3""".stripMargin)),
+    Query("q_graph_triadic", docTriadic, (graphCtes + """,
       |dg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
       |tri AS (SELECT e1.doc_a AS t1, e1.doc_b AS t2, e2.doc_b AS t3
       | FROM pairs e1
@@ -1651,8 +1652,8 @@ object Graph {
       | CAST(n*(n-1)*(n-2)//6 - (m*(n-2) - 2*w + 3*t) - (w - 3*t) - t AS BIGINT) AS t0,
       | CAST(m*(n-2) - 2*w + 3*t AS BIGINT) AS t1,
       | CAST(w - 3*t AS BIGINT) AS t2, CAST(t AS BIGINT) AS t3
-      |FROM sc""".stripMargin),
-    "q_graph_clustering_global" -> (graphCtes + """,
+      |FROM sc""".stripMargin)),
+    Query("q_graph_clustering_global", docClusteringGlobal, (graphCtes + """,
       |tri AS (SELECT e1.doc_a AS t1, e1.doc_b AS t2, e2.doc_b AS t3
       | FROM pairs e1
       | JOIN pairs e2 ON e2.doc_a = e1.doc_a AND e2.doc_b > e1.doc_b
@@ -1670,8 +1671,8 @@ object Graph {
       | CASE WHEN coalesce(sum(deg * (deg - 1)) // 2, 0) = 0 THEN 0.0
       |  ELSE round(coalesce(sum(tri), 0) / (sum(deg * (deg - 1)) // 2), 6) END AS gcc,
       | round(coalesce(avg(coeff), 0.0), 6) AS acc
-      |FROM lc""".stripMargin),
-    "q_graph_hits" -> (graphCtes +
+      |FROM lc""".stripMargin)),
+    Query("q_graph_hits", docHits, (graphCtes +
       """,
       |hv AS (SELECT doc_a AS id FROM pairs UNION SELECT doc_b FROM pairs),
       |h0 AS (SELECT id, 1.0 AS hub FROM hv)""".stripMargin +
@@ -1679,8 +1680,8 @@ object Graph {
       |SELECT h3.id AS doc_id,
       | round(h3.hub / greatest((SELECT max(hub) FROM h3), 1.0), 6) AS hub,
       | round(a3.auth / greatest((SELECT max(auth) FROM a3), 1.0), 6) AS auth
-      |FROM h3 JOIN a3 ON a3.id = h3.id ORDER BY doc_id""".stripMargin),
-    "q_graph_clustering" -> (graphCtes + """,
+      |FROM h3 JOIN a3 ON a3.id = h3.id ORDER BY doc_id""".stripMargin)),
+    Query("q_graph_clustering", docClustering, (graphCtes + """,
       |tri AS (SELECT e1.doc_a AS t1, e1.doc_b AS t2, e2.doc_b AS t3
       | FROM pairs e1
       | JOIN pairs e2 ON e2.doc_a = e1.doc_a AND e2.doc_b > e1.doc_b
@@ -1692,12 +1693,12 @@ object Graph {
       | CAST(coalesce(t.tri, 0) AS BIGINT) AS tri,
       | CASE WHEN d.deg < 2 THEN 0.0
       |      ELSE round(2.0 * coalesce(t.tri, 0) / (d.deg * (d.deg - 1)), 6) END AS coeff
-      |FROM dg d LEFT JOIN tv t ON t.id = d.id ORDER BY doc_id""".stripMargin),
-    "q_graph_labelprop" -> (graphCtes +
+      |FROM dg d LEFT JOIN tv t ON t.id = d.id ORDER BY doc_id""".stripMargin)),
+    Query("q_graph_labelprop", docLabelProp, (graphCtes +
       ",\nl0 AS (SELECT id, id AS label FROM verts)" +
       (1 to 3).map(lpRound).mkString +
-      "\nSELECT id AS doc_id, label FROM l3 ORDER BY doc_id"),
-    "q_graph_summarize" -> (graphCtes +
+      "\nSELECT id AS doc_id, label FROM l3 ORDER BY doc_id")),
+    Query("q_graph_summarize", docSummarize, (graphCtes +
       ",\nl0 AS (SELECT id, id AS label FROM verts)" +
       (1 to 3).map(lpRound).mkString + """,
       |sizes AS (SELECT label, count(*) AS n FROM l3 GROUP BY label),
@@ -1709,22 +1710,22 @@ object Graph {
       | CAST(sa.n AS BIGINT) AS size_a, CAST(sb.n AS BIGINT) AS size_b
       |FROM es JOIN sizes sa ON sa.label = es.label_a
       |JOIN sizes sb ON sb.label = es.label_b
-      |ORDER BY label_a, label_b""".stripMargin),
-    "q_graph_pagerank_sink" -> (graphCtes + """,
+      |ORDER BY label_a, label_b""".stripMargin)),
+    Query("q_graph_pagerank_sink", docPageRankSink, (graphCtes + """,
       |de AS (SELECT doc_a AS src, doc_b AS dst FROM pairs),
       |odeg AS (SELECT src AS id, count(*) AS outdeg FROM de GROUP BY src),
       |nv AS (SELECT count(*)::DOUBLE AS n FROM verts),
       |p0 AS (SELECT id, round(1.0 / (SELECT n FROM nv), 9) AS rank FROM verts)""".stripMargin +
       (1 to 3).map(prSinkRound).mkString +
-      "\nSELECT id AS doc_id, rank FROM p3 ORDER BY doc_id"),
-    "q_graph_pagerank" -> (graphCtes + """,
+      "\nSELECT id AS doc_id, rank FROM p3 ORDER BY doc_id")),
+    Query("q_graph_pagerank", docPageRank, (graphCtes + """,
       |nv AS (SELECT count(*)::DOUBLE AS n FROM verts),
       |deg AS (SELECT src AS id, count(*) AS outdeg FROM edges GROUP BY src),
       |r0 AS (SELECT id, round(1.0 / (SELECT n FROM nv), 9) AS rank FROM verts)""".stripMargin +
       (1 to 3).map(prRound).mkString +
-      "\nSELECT id AS doc_id, rank FROM r3 ORDER BY doc_id"),
+      "\nSELECT id AS doc_id, rank FROM r3 ORDER BY doc_id")),
     // transitive closure by recursive CTE, component = min reachable id
-    "q_graph_cc" -> (graft.LlmOracles.shinglesCte + """,
+    Query("q_graph_cc", docComponents, (graft.LlmOracles.shinglesCte + """,
       |pairs AS (
       | SELECT doc_a, doc_b FROM (
       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1739,15 +1740,15 @@ object Graph {
       | SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src)
       |SELECT a AS doc_id, min(b) AS component FROM reach
       |GROUP BY a ORDER BY doc_id""").stripMargin
-      .replaceFirst("WITH toks", "WITH RECURSIVE toks"),
+      .replaceFirst("WITH toks", "WITH RECURSIVE toks")),
   )
 
   /** Star-CC must produce the identical labeling (component = min id), so
     * it shares q_graph_cc's oracle text; likewise the scatter-gather SSSP
     * must reproduce the fused loop's distances exactly. */
-  val starSql: Map[String, String] = Map(
-    "q_graph_cc_star" -> sql("q_graph_cc"),
-    "q_graph_cc_vc" -> sql("q_graph_cc"),
-    "q_graph_sssp_sg" -> sql("q_graph_sssp"),
-    "q_graph_sssp_gsa" -> sql("q_graph_sssp"))
+  val starQueries: Seq[Query] = Seq(
+    Query("q_graph_cc_star", docComponentsStar, Query.oracleOf(queries, "q_graph_cc")),
+    Query("q_graph_cc_vc", docComponentsVC, Query.oracleOf(queries, "q_graph_cc")),
+    Query("q_graph_sssp_sg", docSsspSG, Query.oracleOf(queries, "q_graph_sssp")),
+    Query("q_graph_sssp_gsa", docSsspGSA, Query.oracleOf(queries, "q_graph_sssp")))
 }

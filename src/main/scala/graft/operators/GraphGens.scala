@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -549,17 +550,17 @@ object GraphGens {
       |  WHERE df >= 2 AND df <= (SELECT hi FROM cap)),
       |be AS (SELECT t.top, t.btm, t.lang, t.ev FROM tok t JOIN banded b ON b.btm = t.btm)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_graph_gen_edges" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_graph_gen_edges", genEdges,
       smallGensSql.map { case (g, inner) =>
         s"SELECT '$g' AS gen, src, dst FROM ($inner)"
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY gen, src, dst"),
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY gen, src, dst")),
 
-    "q_graph_gen_rmat" -> (s"WITH ${rmatCte(6, 512)}\n" +
+    Query("q_graph_gen_rmat", genRmat, (s"WITH ${rmatCte(6, 512)}\n" +
       """SELECT src, dst, CAST(count(*) AS BIGINT) AS cnt
-        |FROM rmat_edges GROUP BY src, dst ORDER BY src, dst""".stripMargin),
+        |FROM rmat_edges GROUP BY src, dst ORDER BY src, dst""".stripMargin)),
 
-    "q_graph_gen_summary" -> (s"WITH ${rmatCte(8, 4096)},\n" +
+    Query("q_graph_gen_summary", genSummary, (s"WITH ${rmatCte(8, 4096)},\n" +
       """rmat_verts AS (SELECT count(DISTINCT id) AS vertices FROM (
         |  SELECT src AS id FROM rmat_edges UNION SELECT dst FROM rmat_edges))
         |""".stripMargin +
@@ -579,9 +580,9 @@ object GraphGens {
           |  CAST(coalesce(sum(src), 0) AS BIGINT) AS sum_src,
           |  CAST(coalesce(sum(dst), 0) AS BIGINT) AS sum_dst
           |FROM rmat_edges, rmat_verts v GROUP BY v.vertices""".stripMargin
-      ).mkString("\nUNION ALL\n") + "\nORDER BY gen"),
+      ).mkString("\nUNION ALL\n") + "\nORDER BY gen")),
 
-    "q_graph_ops" -> (s"""WITH ${rmatCte(5, 300)},
+    Query("q_graph_ops", graphOps, (s"""WITH ${rmatCte(5, 300)},
        |multi AS (SELECT src, dst, (src * 31 + dst) % 7 AS val FROM rmat_edges),
        |g1 AS (SELECT src, dst, (src * 31 + dst) % 7 AS val FROM (${cycleSql(12)})),
        |g2 AS (SELECT src, dst, (src * 31 + dst) % 7 AS val FROM (${pathSql(9)})),
@@ -616,9 +617,9 @@ object GraphGens {
        |UNION ALL SELECT 'intersect_distinct', src, dst, val
        |  FROM (SELECT DISTINCT l.src, l.dst, l.val FROM il l
        |        JOIN (SELECT DISTINCT * FROM ir) r USING (src, dst, val))
-       |ORDER BY op, src, dst, val""".stripMargin),
+       |ORDER BY op, src, dst, val""".stripMargin)),
 
-    "q_graph_degrees" -> (Graph.windowCtes + """,
+    Query("q_graph_degrees", docDegrees, (Graph.windowCtes + """,
       |wedges AS (SELECT a AS src, b AS dst FROM st WHERE s IN (1, 3)
       |           UNION ALL SELECT b, a FROM st WHERE s IN (2, 3)),
       |m AS (SELECT src AS id, dst AS nb, 1 AS f, 0 AS r FROM wedges
@@ -631,27 +632,27 @@ object GraphGens {
       |SELECT v.id, coalesce(dg.degree, 0) AS degree,
       |  coalesce(dg.out_degree, 0) AS out_degree,
       |  coalesce(dg.in_degree, 0) AS in_degree
-      |FROM vv v LEFT JOIN dg ON dg.id = v.id ORDER BY v.id""".stripMargin),
+      |FROM vv v LEFT JOIN dg ON dg.id = v.id ORDER BY v.id""".stripMargin)),
 
-    "q_graph_max_degree" -> (graft.LlmOracles.pairsCte + """,
+    Query("q_graph_max_degree", docMaxDegree, (graft.LlmOracles.pairsCte + """,
       |sym AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
       |        UNION ALL SELECT doc_b, doc_a FROM pairs),
       |high AS (SELECT src AS id FROM sym GROUP BY src HAVING count(*) > 2)
       |SELECT p.doc_a, p.doc_b FROM pairs p
       |WHERE p.doc_a NOT IN (SELECT id FROM high)
       |  AND p.doc_b NOT IN (SELECT id FROM high)
-      |ORDER BY p.doc_a, p.doc_b""".stripMargin),
+      |ORDER BY p.doc_a, p.doc_b""".stripMargin)),
 
-    "q_graph_bipartite_top" -> (bipartiteCtes + """
+    Query("q_graph_bipartite_top", bipartiteTopSimple, (bipartiteCtes + """
       |SELECT l.top AS src, r.top AS dst, l.ev AS ev_a, r.ev AS ev_b
       |FROM be l JOIN be r ON r.btm = l.btm AND r.top <> l.top
-      |ORDER BY src, dst, ev_a, ev_b""".stripMargin),
+      |ORDER BY src, dst, ev_a, ev_b""".stripMargin)),
 
-    "q_graph_bipartite_full" -> (bipartiteCtes + """
+    Query("q_graph_bipartite_full", bipartiteTopFull, (bipartiteCtes + """
       |SELECT l.top AS src, r.top AS dst, l.btm,
       |  CAST(length(l.btm) AS INTEGER) AS btm_len,
       |  l.lang AS src_lang, r.lang AS dst_lang, l.ev AS ev_a, r.ev AS ev_b
       |FROM be l JOIN be r ON r.btm = l.btm AND r.top <> l.top
-      |ORDER BY src, dst, l.btm""".stripMargin)
+      |ORDER BY src, dst, l.btm""".stripMargin))
   )
 }

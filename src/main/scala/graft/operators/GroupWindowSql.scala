@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL group-window syntax (SURVEY.md §2.5 / VERDICT r3 missing #3): the
@@ -565,96 +565,95 @@ object GroupWindowSql {
   /** DuckDB oracles — same derivations as the API-path window oracles.
     * The TVF queries share the group-window oracles verbatim: FLIP-145 is
     * new syntax over identical window semantics. */
-  lazy val sql: Map[String, String] = {
-    val base = sqlBase
-    base ++ Map(
-      "q_sql_tvf_tumble"   -> base("q_sql_tumble"),
-      "q_sql_tvf_hop"      -> base("q_sql_hop"),
-      "q_sql_tvf_cumulate" -> base("q_sql_cumulate"),
-      "q_sql_tvf_session"  -> base("q_sql_session"),
-      "q_sql_tvf_stream_tumble" -> base("q_sql_stream_tumble"),
-      "q_sql_tvf_stream_session" -> base("q_sql_stream_session"),
-      // window_time = window_end − 1ms, derived the same way the oracle
-      // derives *_ROWTIME elsewhere (q_sql_cascade's inner hour)
-      "q_sql_tvf_window_time" ->
-        """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
-          | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
-          |   - INTERVAL 1 MILLISECOND AS w_time,
-          | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-          |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin,
-      // streaming twin: identical window arithmetic over the same rows
-      "q_sql_tvf_stream_window_time" ->
-        """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
-          | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
-          |   - INTERVAL 1 MILLISECOND AS w_time,
-          | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-          |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin,
-      // HOP window_time = each sliding window's end − 1ms (the q_sql_hop
-      // derivation, end = start + 1 day)
-      "q_sql_tvf_hop_time" ->
-        """WITH e AS (SELECT event_type, value,
-          |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
-          | FROM events)
-          |SELECT ws AS w_start, ws + INTERVAL 1 DAY - INTERVAL 1 MILLISECOND AS w_time,
-          | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-          |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-          |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-      // SESSION window_time = the data-driven end − 1ms (the q_sql_session
-      // reconstruction with w_end shifted)
-      "q_sql_tvf_session_time" ->
-        """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
-          |m AS (SELECT user_id, t, value,
-          |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
-          |       THEN 0 ELSE 1 END AS brk FROM e),
-          |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-          |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-          |SELECT min(t) AS w_start,
-          | max(t) + INTERVAL 1 HOUR - INTERVAL 1 MILLISECOND AS w_time, user_id,
-          | count(*) AS cnt, round(sum(value), 2) AS sum_value
-          |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-      // CUMULATE window_time = each growing window's end − 1ms (the
-      // q_sql_cumulate derivation with w_end shifted)
-      "q_sql_tvf_cumulate_time" ->
-        """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
-          |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
-          |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
-          |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
-          |SELECT day AS w_start,
-          | make_timestamp(epoch_us(day) + k * 21600000000 - 1000) AS w_time,
-          | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-          |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)
-  }
+  lazy val queries: Seq[Query] = baseQueries ++ Seq(
+    Query("q_sql_tvf_tumble", tvfTumble, Query.oracleOf(baseQueries, "q_sql_tumble")),
+    Query("q_sql_tvf_hop", tvfHop, Query.oracleOf(baseQueries, "q_sql_hop")),
+    Query("q_sql_tvf_cumulate", tvfCumulate, Query.oracleOf(baseQueries, "q_sql_cumulate")),
+    Query("q_sql_tvf_session", tvfSession, Query.oracleOf(baseQueries, "q_sql_session")),
+    Query("q_sql_tvf_stream_tumble", tvfStreamTumble,
+      Query.oracleOf(baseQueries, "q_sql_stream_tumble")),
+    Query("q_sql_tvf_stream_session", tvfStreamSession,
+      Query.oracleOf(baseQueries, "q_sql_stream_session")),
+    // window_time = window_end − 1ms, derived the same way the oracle
+    // derives *_ROWTIME elsewhere (q_sql_cascade's inner hour)
+    Query("q_sql_tvf_window_time", tvfWindowTime,
+      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
+        | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
+        |   - INTERVAL 1 MILLISECOND AS w_time,
+        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin),
+    // streaming twin: identical window arithmetic over the same rows
+    Query("q_sql_tvf_stream_window_time", tvfStreamWindowTime,
+      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
+        | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
+        |   - INTERVAL 1 MILLISECOND AS w_time,
+        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin),
+    // HOP window_time = each sliding window's end − 1ms (the q_sql_hop
+    // derivation, end = start + 1 day)
+    Query("q_sql_tvf_hop_time", tvfHopTime,
+      """WITH e AS (SELECT event_type, value,
+        |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
+        | FROM events)
+        |SELECT ws AS w_start, ws + INTERVAL 1 DAY - INTERVAL 1 MILLISECOND AS w_time,
+        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
+        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+    // SESSION window_time = the data-driven end − 1ms (the q_sql_session
+    // reconstruction with w_end shifted)
+    Query("q_sql_tvf_session_time", tvfSessionTime,
+      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
+        |m AS (SELECT user_id, t, value,
+        |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
+        |       THEN 0 ELSE 1 END AS brk FROM e),
+        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
+        |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
+        |SELECT min(t) AS w_start,
+        | max(t) + INTERVAL 1 HOUR - INTERVAL 1 MILLISECOND AS w_time, user_id,
+        | count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    // CUMULATE window_time = each growing window's end − 1ms (the
+    // q_sql_cumulate derivation with w_end shifted)
+    Query("q_sql_tvf_cumulate_time", tvfCumulateTime,
+      """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
+        |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
+        |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
+        |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
+        |SELECT day AS w_start,
+        | make_timestamp(epoch_us(day) + k * 21600000000 - 1000) AS w_time,
+        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin))
 
-  private val sqlBase: Map[String, String] = Map(
-    "q_sql_cascade" ->
+  private val baseQueries: Seq[Query] = Seq(
+    Query("q_sql_cascade", cascade,
       """WITH h AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hs,
         |  count(*) AS cnt, sum(value) AS sv FROM events GROUP BY 1)
         |SELECT date_trunc('day', hs + INTERVAL 1 HOUR - INTERVAL 1 MILLISECOND) AS d_start,
         | CAST(sum(cnt) AS BIGINT) AS cnt, round(sum(sv), 2) AS sum_value
-        |FROM h GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_sql_tumble" ->
+        |FROM h GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q_sql_tumble", tumble,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_sql_hop" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_sql_hop", hop,
       """WITH e AS (SELECT event_type, value,
         |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
         | FROM events)
         |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-    "q_sql_stream_tumble" ->
+        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+    Query("q_sql_stream_tumble", streamTumble,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_sql_stream_hop" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_sql_stream_hop", streamHop,
       """WITH e AS (SELECT event_type, value,
         |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
         | FROM events)
         |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-    "q_sql_stream_session" ->
+        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+    Query("q_sql_stream_session", streamSession,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
         |m AS (SELECT user_id, t, value,
         |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
@@ -663,16 +662,16 @@ object GroupWindowSql {
         |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
         |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-    "q_sql_cumulate" ->
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    Query("q_sql_cumulate", cumulate,
       """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
         |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
         |SELECT day AS w_start, make_timestamp(epoch_us(day) + k * 21600000000) AS w_end,
         | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_sql_session" ->
+        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    Query("q_sql_session", session,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
         |m AS (SELECT user_id, t, value,
         |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
@@ -681,6 +680,6 @@ object GroupWindowSql {
         |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
         |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.ZValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -80,8 +80,8 @@ object Layout {
         |GROUP BY c.c_mktsegment ORDER BY c.c_mktsegment""".stripMargin)
   }
 
-  val sql: Map[String, String] = Map(
-    "q_layout_zorder" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_layout_zorder", zorderCells,
       """WITH xy AS (SELECT p_size AS x,
         |   CAST(floor(p_retailprice) AS INT) & 1023 AS y FROM part),
         |zz AS (SELECT x, y, CAST(list_sum(list_transform(range(0, 16), i ->
@@ -89,11 +89,11 @@ object Layout {
         |   AS BIGINT) AS z FROM xy)
         |SELECT z >> 10 AS zcell, count(*) AS cnt,
         |  min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y
-        |FROM zz GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_bucket_join" ->
+        |FROM zz GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q_bucket_join", bucketJoin,
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  round(sum(o_totalprice), 2) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -207,8 +207,8 @@ object MlPipeline {
       .orderBy("l_returnflag")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_ml_ols" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_ml_ols", ols,
       """WITH b AS (SELECT l_returnflag, CAST(round(l_quantity) AS BIGINT) AS x,
         |    CAST(round(l_extendedprice) AS BIGINT) AS y FROM lineitem),
         |st AS (SELECT l_returnflag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
@@ -223,8 +223,8 @@ object MlPipeline {
         |SELECT l_returnflag, n, slope,
         |  round((syd - slope * sxd) / n, 4) AS intercept,
         |  round(numd * numd / (dend * (n * syyd - syd * syd)), 6) AS r2
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "q_ml_gaussian" ->
+        |FROM m ORDER BY l_returnflag""".stripMargin),
+    Query("q_ml_gaussian", gaussian,
       """WITH q AS (SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]), x ->
         |    CAST(floor(x / (list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) / 127.0)
         |      + 0.5) AS BIGINT)) AS q
@@ -237,12 +237,12 @@ object MlPipeline {
         |    CAST(round((-0.5 * ((t.x - mv.mu) * (t.x - mv.mu) / mv.v2 + ln(2 * pi() * mv.v2))) * 1000000.0) AS BIGINT) AS tm
         |  FROM t JOIN mv USING (d))
         |SELECT vec_id, round(sum(tm)::DOUBLE / 1000000.0, 5) AS logpdf
-        |FROM terms GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "q_ml_pipeline" -> (graft.LlmOracles.kmeansCtesOn(
+        |FROM terms GROUP BY vec_id ORDER BY vec_id""".stripMargin),
+    Query("q_ml_pipeline", mlPipeline, (graft.LlmOracles.kmeansCtesOn(
       """SELECT vec_id, list_transform(v0, x -> floor(x / s + 0.5)) AS v FROM (
         | SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v0,
         |  list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) / 127.0 AS s
         | FROM embeddings)""".stripMargin) + """
-      |SELECT vec_id, cid AS cluster FROM asg ORDER BY vec_id""".stripMargin),
+      |SELECT vec_id, cid AS cluster FROM asg ORDER BY vec_id""".stripMargin)),
   )
 }

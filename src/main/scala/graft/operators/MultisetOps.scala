@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,8 +65,8 @@ object MultisetOps {
       .orderBy("segment", "pri")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_type_multiset" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_type_multiset", multisetLattice,
       """WITH o AS (
         | SELECT c_mktsegment AS segment, o_orderpriority AS pri,
         |        o_orderdate < TIMESTAMP '1995-01-01' AS early
@@ -85,5 +85,5 @@ object MultisetOps {
         |SELECT segment, pri, cnt_a, cnt_b, cnt_a + cnt_b AS cnt_union,
         |       card, card_distinct, urgent_cnt
         |FROM cnt JOIN tot USING (segment)
-        |ORDER BY segment, pri""".stripMargin)
+        |ORDER BY segment, pri""".stripMargin))
 }

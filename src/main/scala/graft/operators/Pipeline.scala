@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.LlmOracles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -450,8 +450,8 @@ object Pipeline {
         expr("cast(array_max(transform(embedding, x -> floor(cast(x AS DOUBLE) / scale + 0.5D))) AS BIGINT)").as("qmax"))
       .orderBy("vec_id")
 
-  val sql: Map[String, String] = Map(
-    "q_pipeline_clean" -> (LlmOracles.shinglesCte + """,
+  val queries: Seq[Query] = Seq(
+    Query("q_pipeline_clean", cleanCorpus, (LlmOracles.shinglesCte + """,
       |stats AS (SELECT doc_id, text, len(t) AS n_tokens,
       |  len(list_filter(t, x -> list_contains(""" + LlmOracles.stopEnSql + """, x)))::DOUBLE / len(t) AS stop_ratio,
       |  md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fp
@@ -467,8 +467,8 @@ object Pipeline {
       |SELECT q.doc_id, CAST(q.n_tokens AS INT) AS n_tokens FROM quality q
       |WHERE q.doc_id IN (SELECT doc_id FROM keep_exact)
       |  AND q.doc_id NOT IN (SELECT doc_b FROM pairs)
-      |ORDER BY q.doc_id""").stripMargin,
-    "q_pack_sequences" ->
+      |ORDER BY q.doc_id""").stripMargin),
+    Query("q_pack_sequences", packSequences,
       """WITH t AS (SELECT doc_id, source,
         |  len(string_split(lower(text), ' '))::BIGINT AS n_tokens FROM documents),
         |c AS (SELECT doc_id, source, n_tokens,
@@ -479,8 +479,8 @@ object Pipeline {
         | CAST(start_tok // 256 AS BIGINT) AS pack_id,
         | CAST(start_tok % 256 AS BIGINT) AS tok_offset,
         | CAST((start_tok + n_tokens - 1) // 256 - start_tok // 256 + 1 AS BIGINT) AS n_packs
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q_dsir_weight" ->
+        |FROM c ORDER BY doc_id""".stripMargin),
+    Query("q_dsir_weight", dsirWeights,
       """WITH tk AS (SELECT doc_id, source, unnest(string_split(lower(text), ' ')) AS token
         |  FROM documents),
         |cnt AS (SELECT token,
@@ -494,8 +494,8 @@ object Pipeline {
         |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
         | round(CAST(sum(llr_q) AS BIGINT) / 1e6, 6) AS weight
         |FROM tk t JOIN llr USING (token) WHERE t.source <> 'src0'
-        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-    "q_pii_redact" ->
+        |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin),
+    Query("q_pii_redact", piiRedact,
       """WITH p AS (SELECT doc_id,
         |  text || ' contact user' || doc_id || '@crawl.example.com from 10.' ||
         |  (doc_id % 256) || '.0.7 ref 4111111' || (doc_id % 100) || '99' AS planted
@@ -510,8 +510,8 @@ object Pipeline {
         | CAST((length(red) - length(replace(red, '<IP>', ''))) // 4 AS BIGINT) AS n_ip,
         | CAST((length(red) - length(replace(red, '<NUM>', ''))) // 5 AS BIGINT) AS n_num,
         | substring(red, length(red) - 59, 60) AS tail
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q_mix_temperature" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q_mix_temperature", mixTemperature,
       """WITH per AS (
         | SELECT source,
         |   CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS src_toks
@@ -525,10 +525,10 @@ object Pipeline {
         |  round(pa / z, 6) AS p_temp,
         |  round((pa / z) / p_nat, 6) AS upsample,
         |  CAST(round(round(pa / z, 6) * 1000000, 0) AS BIGINT) AS budget_toks
-        |FROM p, z ORDER BY source""".stripMargin,
+        |FROM p, z ORDER BY source""".stripMargin),
     // NFD bin packing: the recursive CTE steps every (source, shard) group
     // in lockstep through the identical next-fit fold
-    "q_pack_nfd" ->
+    Query("q_pack_nfd", packBinNfd,
       """WITH RECURSIVE d AS (SELECT doc_id, source, doc_id % 8 AS shard,
         |  len(string_split(lower(text), ' '))::BIGINT AS n FROM documents),
         |o AS (SELECT *, row_number() OVER (PARTITION BY source, shard
@@ -546,10 +546,10 @@ object Pipeline {
         |  FROM steps s JOIN o ON o.source = s.source AND o.shard = s.shard
         |                     AND o.rn = s.rn + 1)
         |SELECT doc_id, source, shard, n AS n_tokens, bin
-        |FROM steps WHERE rn > 0 ORDER BY doc_id""".stripMargin,
+        |FROM steps WHERE rn > 0 ORDER BY doc_id""".stripMargin),
     // UniMax waterfill: the recursive CTE replays the engine's driver fold
     // step by step (ascending capacity, integer fair share of the rest)
-    "q_mix_unimax" ->
+    Query("q_mix_unimax", mixUnimax,
       """WITH RECURSIVE d AS (SELECT source,
         |  len(string_split(lower(text), ' '))::BIGINT AS n FROM documents),
         |per AS (SELECT source, CAST(sum(n) AS BIGINT) AS src_toks FROM d GROUP BY source),
@@ -567,8 +567,8 @@ object Pipeline {
         |SELECT o.source, o.src_toks, o.cap_toks, st.alloc AS alloc_toks,
         |  st.alloc * 1000000 // o.src_toks AS epochs_micro
         |FROM ord o JOIN steps st ON st.source = o.source
-        |ORDER BY o.source""".stripMargin,
-    "q_mix_budget" ->
+        |ORDER BY o.source""".stripMargin),
+    Query("q_mix_budget", mixBudget,
       """WITH d AS (SELECT doc_id, source,
         |  len(string_split(lower(text), ' '))::BIGINT AS n_tokens FROM documents),
         |per AS (SELECT source, sum(n_tokens) AS src_toks FROM d GROUP BY source),
@@ -579,16 +579,16 @@ object Pipeline {
         |SELECT d.doc_id, d.source, d.n_tokens, CAST(r.rate_bp AS BIGINT) AS rate_bp
         |FROM d JOIN rates r USING (source)
         |WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::UBIGINT % 10000 < r.rate_bp
-        |ORDER BY doc_id""".stripMargin,
-    "q_emb_normalize" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q_emb_normalize", normalize,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |  sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS nrm
         | FROM embeddings)
         |SELECT vec_id, round(nrm, 6) AS norm,
         | round(v[1] / nrm, 6) AS h1, round(v[2] / nrm, 6) AS h2,
         | round(v[3] / nrm, 6) AS h3, round(v[4] / nrm, 6) AS h4
-        |FROM e ORDER BY vec_id""".stripMargin,
-    "q_emb_quantize" ->
+        |FROM e ORDER BY vec_id""".stripMargin),
+    Query("q_emb_quantize", quantize,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
         |  list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) / 127.0 AS scale
         | FROM embeddings)
@@ -596,6 +596,6 @@ object Pipeline {
         | CAST(list_sum(list_transform(v, x -> CAST(floor(x / scale + 0.5) AS BIGINT))) AS BIGINT) AS qsum,
         | CAST(list_min(list_transform(v, x -> floor(x / scale + 0.5))) AS BIGINT) AS qmin,
         | CAST(list_max(list_transform(v, x -> floor(x / scale + 0.5))) AS BIGINT) AS qmax
-        |FROM e ORDER BY vec_id""".stripMargin,
+        |FROM e ORDER BY vec_id""".stripMargin),
   )
 }

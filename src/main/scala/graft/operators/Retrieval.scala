@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sparse + hybrid retrieval over the documents corpus — the query side of
   * an LLM data/RAG pipeline (the reference covers the analytics half; a
@@ -153,8 +153,8 @@ object Retrieval {
       | doc_id, rrf
       |FROM fused QUALIFY rank <= 10 ORDER BY qid, rank""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_retrieval_bm25" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_retrieval_bm25", bm25,
       (graft.LlmOracles.toksCte + """,
         |tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
         |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token),
@@ -173,8 +173,8 @@ object Retrieval {
         |r AS (SELECT qid, doc_id, sk, CAST(row_number() OVER
         |  (PARTITION BY qid ORDER BY sk DESC, doc_id) AS INT) AS rank FROM agg)
         |SELECT qid, rank, doc_id, round(sk / 1000000.0, 4) AS score
-        |FROM r WHERE rank <= 10 ORDER BY qid, rank""").stripMargin,
-    "q_retrieval_rrf" ->
+        |FROM r WHERE rank <= 10 ORDER BY qid, rank""").stripMargin),
+    Query("q_retrieval_rrf", hybridRrf,
       (graft.LlmOracles.toksCte + ",\n" + bm25SparseCtes + """,
         |dq AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
         |       FROM embeddings WHERE vec_id < 5),
@@ -186,8 +186,8 @@ object Retrieval {
         | FROM embeddings e, dq WHERE e.vec_id <> qid),
         |dense AS (SELECT qid, doc_id, CAST(row_number() OVER
         |  (PARTITION BY qid ORDER BY cos DESC, doc_id) AS INT) AS rd FROM dsc
-        |  QUALIFY rd <= 10),""".stripMargin + "\n" + rrfTail),
-    "q_retrieval_rrf_ivf" ->
+        |  QUALIFY rd <= 10),""".stripMargin + "\n" + rrfTail)),
+    Query("q_retrieval_rrf_ivf", hybridRrfIvf,
       (graft.LlmOracles.pqCtes + """,
         |cent AS (
         | SELECT label, i.i AS d, round(avg(embedding[i.i]), 6) AS c
@@ -214,5 +214,5 @@ object Retrieval {
         |  (PARTITION BY qid ORDER BY adist_u, vec_id) AS INT) AS rd FROM ad
         |  QUALIFY rd <= 10),""".stripMargin + "\n" +
         graft.LlmOracles.toksCte.replaceFirst("WITH ", "") + ",\n" +
-        bm25SparseCtes + ",\n" + rrfTail))
+        bm25SparseCtes + ",\n" + rrfTail)))
 }

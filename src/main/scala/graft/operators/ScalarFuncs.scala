@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scalar function parity layer (SURVEY.md §2.8).
@@ -251,4 +251,172 @@ object ScalarFuncs {
       "hash_code(p_name) AS hc_name"
     ).orderBy("p_partkey")
   }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_fn_string", strings,
+      """SELECT p_partkey,
+        | upper(p_name) AS up, lower(p_brand) AS lo,
+        | substring(p_name, 2, 5) AS sub,
+        | left(p_name, 4) AS l4, right(p_name, 3) AS r3,
+        | CAST(length(p_name) AS INT) AS len,
+        | concat(p_brand, '-', p_type) AS cat,
+        | concat_ws('|', p_brand, p_type) AS catws,
+        | lpad(p_brand, 12, '*') AS lp, rpad(p_brand, 12, '#') AS rp,
+        | trim(lpad(p_brand, 12, '*'), '*') AS tr,
+        | replace(p_type, 'a', '@') AS rep,
+        | reverse(p_name) AS rev,
+        | repeat(p_brand, 2) AS rep2,
+        | CAST(instr(p_name, 'a') AS INT) AS pos_a,
+        | CAST(ascii(p_name) AS INT) AS asc1,
+        | chr(65 + (p_size % 26)) AS ch,
+        | split_part(p_name, ' ', 1) AS tok1,
+        | regexp_extract(p_name, '([a-z]+)', 1) AS rex,
+        | regexp_replace(p_name, '[aeiou]', '_', 'g') AS rrep,
+        | translate(p_name, 'abc', 'xyz') AS trn,
+        | md5(p_name) AS h_md5, sha256(p_name) AS h_sha,
+        | to_base64(encode(p_brand)) AS b64,
+        | p_name LIKE '%a%' AS has_a,
+        | regexp_matches(p_name, '[0-9]') AS has_digit
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q_fn_string2", strings2,
+      """SELECT p_partkey,
+        | substr(p_name, 1, 2) || '###' || substr(p_name, 5) AS ovl,
+        | 'example.com' AS host,
+        | CAST(p_size AS VARCHAR) AS qk,
+        | CAST(p_size AS VARCHAR) AS m_a,
+        | p_brand AS m_b,
+        | string_split(p_name, ' ')[1] AS si0,
+        | CASE WHEN len(string_split(p_name, ' ')) > 1 THEN string_split(p_name, ' ')[2] END AS si1,
+        | CAST(NULL AS VARCHAR) AS si_oob,
+        | CAST(NULL AS VARCHAR) AS si_neg,
+        | array_to_string(list_transform(string_split(p_name, ' '), x -> upper(x[1:1]) || lower(x[2:])), ' ') AS ic,
+        | CAST(position('a' IN p_name) AS INT) AS pos,
+        | CAST(instr(p_name, 'an') AS INT) AS loc,
+        | p_name AS enc_rt,
+        | p_name AS b64_rt,
+        | hex(encode(p_name)) AS hx
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q_fn_math2", math2,
+      """SELECT p_partkey,
+        | trunc(p_retailprice * 100) / 100 AS t2,
+        | trunc(p_retailprice - 1000.0) AS t0,
+        | trunc(p_retailprice * 0.01) / 0.01 AS tm2,
+        | trunc(-p_retailprice * 100) / 100 AS tn2,
+        | trunc((1000.0 - p_retailprice) * 10) / 10 AS tmix
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q_fn_similar", similar,
+      """SELECT p_partkey,
+        | regexp_full_match(p_name, '.*(bolt|rod).*') AS sim_alt,
+        | regexp_full_match(p_name, '(cold|small)..*') AS sim_us,
+        | regexp_full_match(p_brand, 'Brand#[0-9]+') AS sim_cls,
+        | regexp_full_match(p_brand, 'Brand#1[0-9]?') AS sim_q,
+        | regexp_full_match(p_name, '[a-z]{4} .*') AS sim_rep,
+        | regexp_full_match(p_name, '.*_.*') AS sim_esc,
+        | regexp_full_match(p_name, 'c.*\.') AS sim_dot,
+        | p_name LIKE '%!_%' ESCAPE '!' AS like_esc,
+        | p_name LIKE 'c%t' AS like_ct
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q_fn_datetime2", datetime2,
+      """SELECT o_orderkey,
+        | strftime(o_orderdate + to_hours(9), '%Y-%m-%d %H:%M:%S') AS cvt,
+        | strftime(o_orderdate + to_hours(3), '%Y-%m-%d %H:%M:%S') AS ta_h,
+        | strftime(o_orderdate + INTERVAL 2 MONTH, '%Y-%m-%d %H:%M:%S') AS ta_mo,
+        | date_diff('day', date_trunc('day', o_orderdate), TIMESTAMP '2025-06-01') AS td_d,
+        | date_diff('hour', date_trunc('day', o_orderdate), TIMESTAMP '2025-06-01') AS td_h,
+        | date_diff('month', date_trunc('month', o_orderdate), TIMESTAMP '2025-06-01') AS td_mo,
+        | (greatest(o_orderdate, o_orderdate + to_hours(2))
+        |    >= least(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
+        |             o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
+        |  AND greatest(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
+        |               o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
+        |    >= least(o_orderdate, o_orderdate + to_hours(2))) AS ovl,
+        | (greatest(o_orderdate, o_orderdate + to_hours(2))
+        |    >= least(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
+        |             o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
+        |  AND greatest(o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT)),
+        |               o_orderdate + to_hours(CAST(o_orderkey % 4 AS INT) + 1))
+        |    >= least(o_orderdate, o_orderdate + to_hours(2))) AS ovl_rev
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q_fn_math", math,
+      """SELECT p_partkey,
+        | round(abs(-p_retailprice), 2) AS v_abs,
+        | CAST(ceil(p_retailprice) AS BIGINT) AS v_ceil,
+        | CAST(floor(p_retailprice) AS BIGINT) AS v_floor,
+        | round(exp(p_size / 50.0), 6) AS v_exp,
+        | round(ln(p_retailprice), 6) AS v_ln,
+        | round(log10(p_retailprice), 6) AS v_log10,
+        | round(log2(CAST(p_size AS DOUBLE) + 1), 6) AS v_log2,
+        | round(sqrt(p_retailprice), 6) AS v_sqrt,
+        | round(power(CAST(p_size AS DOUBLE), 2), 2) AS v_pow,
+        | p_size % 7 AS v_mod,
+        | CAST(sign(p_retailprice - 1000) AS INT) AS v_sign,
+        | round(sin(CAST(p_size AS DOUBLE)), 6) AS v_sin,
+        | round(cos(CAST(p_size AS DOUBLE)), 6) AS v_cos,
+        | round(atan2(CAST(p_size AS DOUBLE), 3.0), 6) AS v_atan2,
+        | round(cot(CAST(p_size AS DOUBLE) + 0.5), 6) AS v_cot,
+        | round(degrees(1.0), 6) AS v_deg,
+        | round(radians(180.0), 6) AS v_rad,
+        | greatest(p_size, 25) AS v_great,
+        | least(p_size, 25) AS v_least,
+        | bin(p_size) AS v_bin,
+        | hex(p_size) AS v_hex
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q_fn_datetime", datetime,
+      """SELECT o_orderkey,
+        | CAST(year(o_orderdate) AS INT) AS y,
+        | CAST(quarter(o_orderdate) AS INT) AS q,
+        | CAST(month(o_orderdate) AS INT) AS m,
+        | CAST(day(o_orderdate) AS INT) AS d,
+        | CAST(hour(o_orderdate) AS INT) AS h,
+        | CAST(minute(o_orderdate) AS INT) AS mi,
+        | CAST(second(o_orderdate) AS INT) AS sec,
+        | CAST(dayofweek(o_orderdate) + 1 AS INT) AS dow,
+        | CAST(weekofyear(o_orderdate) AS INT) AS woy,
+        | CAST(dayofyear(o_orderdate) AS INT) AS doy,
+        | CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS mon_start,
+        | CAST(datediff('day', DATE '2024-01-01', CAST(o_orderdate AS DATE)) AS INT) AS days_since,
+        | strftime(date_add(CAST(o_orderdate AS DATE), 30), '%Y-%m-%d') AS plus30,
+        | CAST(epoch(o_orderdate) AS BIGINT) AS epoch_s,
+        | strftime(o_orderdate, '%Y-%m-%d') AS fmt,
+        | o_orderdate + INTERVAL 5 HOUR AS plus5h
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q_fn_conditional", conditional,
+      """SELECT c_custkey,
+        | CASE WHEN c_acctbal > 5000 THEN 'high' WHEN c_acctbal > 1000 THEN 'mid' ELSE 'low' END AS tier,
+        | coalesce(nullif(c_mktsegment, 'AUTOMOBILE'), 'OTHER') AS seg,
+        | if(c_acctbal > 0, 'pos', 'nonpos') AS sgn,
+        | c_acctbal IS NULL AS isn,
+        | c_acctbal BETWEEN 100 AND 2000 AS in_range,
+        | c_mktsegment IN ('AUTOMOBILE', 'MACHINERY') AS seg_in,
+        | c_mktsegment IS DISTINCT FROM 'BUILDING' AS is_distinct,
+        | coalesce(c_name, '?') AS nm,
+        | round(greatest(c_acctbal, 0.0), 2) AS bal_pos
+        |FROM customer ORDER BY c_custkey""".stripMargin),
+    Query("q_fn_complex", complexTypes,
+      """SELECT n_nationkey,
+        | array_to_string([n_nationkey, n_regionkey], ',') AS arr,
+        | CAST(len([n_nationkey, n_regionkey]) AS INT) AS card,
+        | [n_name, 'x'][1] AS elem1,
+        | map(['k'], [n_name])['k'][1] AS mval,
+        | struct_pack(a := n_nationkey, b := n_name).b AS fld,
+        | array_to_string(list_sort([n_regionkey, n_nationkey]), ',') AS sorted_arr,
+        | list_contains([n_nationkey, n_regionkey], 0) AS has0
+        |FROM nation ORDER BY n_nationkey""".stripMargin),
+    Query("q_fn_classify", classify,
+      """SELECT p_partkey,
+        | regexp_full_match(CAST(p_size AS VARCHAR), '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_int,
+        | regexp_full_match(CAST(p_retailprice AS VARCHAR), '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_frac,
+        | regexp_full_match(p_brand, '[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?') AS dec_brand,
+        | regexp_full_match(CAST(p_partkey AS VARCHAR), '[0-9]+') AS dig_key,
+        | regexp_full_match(p_type, '[0-9]+') AS dig_type,
+        | regexp_full_match(split_part(p_name, ' ', 1), '[A-Za-z]+') AS alpha_tok,
+        | regexp_full_match(p_brand, '[A-Za-z]+') AS alpha_brand,
+        | CAST(((list_reduce(list_prepend(0::BIGINT,
+        |    list_transform(range(1, length(p_brand)+1), i -> ascii(p_brand[i])::BIGINT)),
+        |    (a, c) -> (a * 31 + c) % 4294967296) + 2147483648) % 4294967296) - 2147483648 AS INT) AS hc_brand,
+        | CAST(((list_reduce(list_prepend(0::BIGINT,
+        |    list_transform(range(1, length(p_name)+1), i -> ascii(p_name[i])::BIGINT)),
+        |    (a, c) -> (a * 31 + c) % 4294967296) + 2147483648) % 4294967296) - 2147483648 AS INT) AS hc_name
+        |FROM part ORDER BY p_partkey""".stripMargin),
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -117,30 +117,30 @@ object ScaleOps {
       .orderBy("c_mktsegment")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_part_prune" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_part_prune", partitionedWrite,
       """SELECT o_orderpriority, count(*) AS cnt, round(sum(o_totalprice), 2) AS total
         |FROM orders WHERE o_orderstatus = 'F'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q_join_skew" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q_join_skew", skewJoin,
       """SELECT l_returnflag, count(*) AS cnt, round(sum(o_totalprice), 2) AS total
         |FROM (SELECT CASE WHEN l_partkey % 10 < 3 THEN 1 ELSE l_orderkey END AS jk,
         |             l_returnflag FROM lineitem) l
         |JOIN orders ON jk = o_orderkey
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_join_salted" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q_join_salted", saltedJoin(_, _),
       """SELECT c_mktsegment, count(*) AS cnt, round(sum(o_totalprice), 2) AS total
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_stream_static_join" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q_stream_static_join", streamStaticJoin,
       """SELECT c_mktsegment, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_agg_sum0_native" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q_agg_sum0_native", sum0Native,
       """SELECT c_mktsegment, round(coalesce(sum(o_totalprice), 0), 2) AS sum0_total,
         | count(o_orderkey) AS cnt
         |FROM customer LEFT JOIN (SELECT * FROM orders WHERE o_totalprice > 450000) o
         | ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.VecOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -757,10 +757,10 @@ object Similarity {
         |SELECT qid, rank, vec_id, cos FROM rk WHERE rank <= 5
         |ORDER BY qid, rank""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_ann_negatives" -> negativesSql,
-    "q_ann_negatives_ix" -> negativesSql,
-    "q_train_triplets" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_ann_negatives", annHardNegatives, negativesSql),
+    Query("q_ann_negatives_ix", annHardNegativesIndexed, negativesSql),
+    Query("q_train_triplets", trainTriplets,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings),
         |q AS (SELECT vec_id AS qid, v AS qv, label AS ql FROM e WHERE vec_id < 5),
         |px AS (SELECT q.qid, q.ql, e.vec_id, e.label,
@@ -775,8 +775,8 @@ object Similarity {
         |  FROM px WHERE label <> ql) WHERE r <= 2)
         |SELECT pos.qid AS qid, pos_id, pos_cos, neg_rank, neg_id, neg_cos
         |FROM pos JOIN neg ON neg.qid = pos.qid
-        |ORDER BY pos.qid, neg_rank""".stripMargin,
-    "q_sparse_cosine" -> (graft.LlmOracles.pairsCte + """,
+        |ORDER BY pos.qid, neg_rank""".stripMargin),
+    Query("q_sparse_cosine", sparseCosinePairs, (graft.LlmOracles.pairsCte + """,
       |tfu AS (SELECT doc_id, tok, count(*) AS c
       |  FROM (SELECT doc_id, unnest(t) AS tok FROM toks) GROUP BY doc_id, tok),
       |nn AS (SELECT doc_id, sum(c*c) AS n2 FROM tfu GROUP BY doc_id),
@@ -788,8 +788,8 @@ object Similarity {
       |  round(dt.dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) AS cos
       |FROM dt JOIN nn na ON na.doc_id = dt.doc_a
       |        JOIN nn nb ON nb.doc_id = dt.doc_b
-      |ORDER BY doc_a, doc_b""".stripMargin),
-    "q_decontaminate_emb" ->
+      |ORDER BY doc_a, doc_b""".stripMargin)),
+    Query("q_decontaminate_emb", decontaminateEmb,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |ev AS (SELECT vec_id AS evid, v AS evv FROM e WHERE vec_id % 37 = 0),
         |co AS (SELECT vec_id, v FROM e WHERE vec_id % 37 <> 0),
@@ -802,7 +802,7 @@ object Similarity {
         |  FROM px)
         |SELECT vec_id, evid AS matched_eval, cos AS best_cos,
         |  cos >= 0.5 AS flagged
-        |FROM fl WHERE rk = 1 ORDER BY vec_id""".stripMargin,
+        |FROM fl WHERE rk = 1 ORDER BY vec_id""".stripMargin),
   )
 
   /** Embedding-space benchmark decontamination — the semantic twin of the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -356,8 +356,8 @@ object Sketches {
     } finally sig.unpersist(blocking = false)
   }
 
-  val sql: Map[String, String] = Map(
-    "q_sketch_overlap" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_sketch_overlap", sourceOverlap,
       """WITH tks AS (SELECT source, string_split(lower(text), ' ') AS t FROM documents),
         |tk AS (SELECT source, unnest(CASE WHEN len(t) < 3 THEN [] ELSE
         |   [t[i]||' '||t[i+1]||' '||t[i+2] FOR i IN range(1, len(t)-1)] END) AS tok FROM tks),
@@ -388,8 +388,8 @@ object Sketches {
         |  round(matched / CAST(k_union AS DOUBLE), 4) AS jac_est,
         |  coalesce(jac_exact, 0.0) AS jac_exact
         |FROM est LEFT JOIN exj ON ea = sa AND eb = sb
-        |ORDER BY sa, sb""".stripMargin,
-    "q_sketch_quantile" ->
+        |ORDER BY sa, sb""".stripMargin),
+    Query("q_sketch_quantile", quantileSketch,
       """WITH cents AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
         |bk AS (SELECT (length(bin(v)) - 1) * 16 +
         |   ((v >> greatest(length(bin(v)) - 1 - 4, 0)) & 15) AS bucket FROM cents),
@@ -410,8 +410,8 @@ object Sketches {
         |  FROM est e JOIN sorted s ON s.rn = e.target)
         |SELECT q, est_value, exact_value,
         |  round(abs(est_value - exact_value) / exact_value * 100, 2) AS rel_err_pct
-        |FROM ex ORDER BY q""".stripMargin,
-    "q_sketch_hll" ->
+        |FROM ex ORDER BY q""".stripMargin),
+    Query("q_sketch_hll", hllDistinct,
       """WITH tks AS (SELECT lang, string_split(lower(text), ' ') AS t FROM documents),
         |tk AS (SELECT lang, unnest(CASE WHEN len(t) < 3 THEN [] ELSE
         |   [t[i]||' '||t[i+1]||' '||t[i+2] FOR i IN range(1, len(t)-1)] END) AS tok FROM tks),
@@ -434,8 +434,8 @@ object Sketches {
         |  FROM agg)
         |SELECT lang, zero_regs, CAST(round(e) AS BIGINT) AS est_distinct, exact_distinct,
         |  round(abs(e - exact_distinct) / exact_distinct * 100, 2) AS err_pct
-        |FROM est JOIN ex USING (lang) ORDER BY lang""".stripMargin,
-    "q_sketch_kmv" ->
+        |FROM est JOIN ex USING (lang) ORDER BY lang""".stripMargin),
+    Query("q_sketch_kmv", kmvDistinct,
       """WITH tks AS (SELECT lang, string_split(lower(text), ' ') AS t FROM documents),
         |tk AS (SELECT lang, unnest(CASE WHEN len(t) < 3 THEN [] ELSE
         |   [t[i]||' '||t[i+1]||' '||t[i+2] FOR i IN range(1, len(t)-1)] END) AS tok FROM tks),
@@ -452,8 +452,8 @@ object Sketches {
         |SELECT lang, n_mins, kth_hash, CAST(round(e) AS BIGINT) AS est_distinct,
         |  exact_distinct,
         |  round(abs(e - exact_distinct) / exact_distinct * 100, 2) AS err_pct
-        |FROM est ORDER BY lang""".stripMargin,
-    "q_sketch_cms" ->
+        |FROM est ORDER BY lang""".stripMargin),
+    Query("q_sketch_cms", cmsHeavyHitters,
       """WITH tk AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
         |tf AS (SELECT tok, count(*) AS cnt FROM tk GROUP BY tok),
         |tb AS (SELECT tok, cnt, i,
@@ -464,11 +464,11 @@ object Sketches {
         |est AS (SELECT tok, CAST(min(c) AS BIGINT) AS est_cnt, CAST(min(cnt) AS BIGINT) AS exact_cnt
         |  FROM tb JOIN counters USING (i, b) GROUP BY tok)
         |SELECT tok, est_cnt, exact_cnt FROM est, thr
-        |WHERE est_cnt >= thr ORDER BY est_cnt DESC, tok""".stripMargin,
-    "q_sample_reservoir" ->
+        |WHERE est_cnt >= thr ORDER BY est_cnt DESC, tok""".stripMargin),
+    Query("q_sample_reservoir", reservoirSample,
       """SELECT doc_id, lang, source FROM (
         |  SELECT doc_id, lang, source, row_number() OVER (ORDER BY
         |    ('0x'||substr(md5('rsv:'||doc_id::VARCHAR),1,15))::UBIGINT) AS rn
-        |  FROM documents) WHERE rn <= 100 ORDER BY doc_id""".stripMargin,
+        |  FROM documents) WHERE rn <= 100 ORDER BY doc_id""".stripMargin),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL / DDL surface (SURVEY.md §2.11, §3.1): the reference's primary API
@@ -353,7 +353,7 @@ object SqlSurface {
     * with the DuckDB-flavor derivation as a CTE (Spark gets it as a temp
     * view in [[tpchQuery]]). */
   private val partsuppQueryNames = Seq("q_tpch_q2", "q_tpch_q11", "q_tpch_q16", "q_tpch_q20")
-  val partsuppOracles: Map[String, String] = partsuppQueryNames.map(n =>
+  private val partsuppOracles: Map[String, String] = partsuppQueryNames.map(n =>
     n -> s"WITH partsupp AS (\n$partsuppDuckSql\n)\n${tpch(n)}").toMap
 
   def tpchQuery(name: String)(s: SparkSession, dir: String): DataFrame = {
@@ -432,11 +432,11 @@ object SqlSurface {
     s.sql(asofPatternSql)
   }
 
-  val sql: Map[String, String] = Map(
-    "q_sql_q3" -> q3Sql,
-    "q_sql_subquery" -> subquerySql,
-    "q_sql_hints" -> hintSql,
-    "q_sql_asof_pattern" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_sql_q3", q3, q3Sql),
+    Query("q_sql_subquery", correlatedSubquery, subquerySql),
+    Query("q_sql_hints", sqlHints, hintSql),
+    Query("q_sql_asof_pattern", asofPattern,
       """SELECT user_id, p_id, p_ts, v_id FROM (
         | SELECT p.user_id, p.event_id AS p_id, p.t AS p_ts, v.event_id AS v_id,
         |  row_number() OVER (PARTITION BY p.event_id ORDER BY v.t DESC) AS rn
@@ -445,6 +445,8 @@ object SqlSurface {
         | JOIN (SELECT user_id AS v_user, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |       WHERE event_type = 'view') v
         |  ON p.user_id = v.v_user AND v.t <= p.t
-        |) WHERE rn = 1 ORDER BY user_id, p_id""".stripMargin,
-  ) ++ tpch ++ patterns ++ partsuppOracles
+        |) WHERE rn = 1 ORDER BY user_id, p_id""".stripMargin),
+  ) ++ (tpch ++ patterns).map { case (n, text) =>
+    Query(n, tpchQuery(n), partsuppOracles.getOrElse(n, text))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -59,8 +59,8 @@ object StatementSets {
       .orderBy("sink", "k")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_stmt_multi_sink" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_stmt_multi_sink", multiSink,
       """WITH shared AS (
         | SELECT l_suppkey, l_returnflag, count(*) AS cnt,
         |        sum(l_extendedprice * (1 - l_discount)) AS rev
@@ -75,6 +75,6 @@ object StatementSets {
         |        round(sum(rev), 2) AS total
         | FROM shared GROUP BY l_suppkey
         | ORDER BY round(sum(rev), 2) DESC, l_suppkey LIMIT 10)
-        |ORDER BY sink, k""".stripMargin,
+        |ORDER BY sink, k""".stripMargin),
   )
 }

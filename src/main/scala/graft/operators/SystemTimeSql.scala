@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -154,22 +155,22 @@ object SystemTimeSql {
       Map("latest_view" -> TemporalTableFunction(views, "v_ts", "v_user")))
   }
 
-  val sql: Map[String, String] = Map(
-    "q_sql_temporal_func" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_sql_temporal_func", temporalFuncJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |ASOF JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t
-        |ORDER BY p.user_id, p_id""".stripMargin,
-    "q_sql_system_time" ->
+        |ORDER BY p.user_id, p_id""".stripMargin),
+    Query("q_sql_system_time", systemTimeJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t
-        |ORDER BY p.user_id, p_id""".stripMargin,
+        |ORDER BY p.user_id, p_id""".stripMargin),
   )
 }

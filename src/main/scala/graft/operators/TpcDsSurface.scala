@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** TPC-DS-shaped SQL breadth (SURVEY.md §2.11; the reference's correctness
@@ -24,7 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TpcDsSurface {
 
-  val sql: Map[String, String] = Map(
+  private val texts: Map[String, String] = Map(
     // q3 shape: fact×date×item star agg by year and brand for one type
     "q_tpcds_q3_brand" ->
       """SELECT CAST(year(o_orderdate) AS INT) AS d_year, p_brand,
@@ -426,8 +426,11 @@ object TpcDsSurface {
         |ORDER BY g_seg, g_nat, c_mktsegment NULLS FIRST, n_name NULLS FIRST""".stripMargin,
   )
 
-  def query(name: String)(s: SparkSession, dir: String): DataFrame = {
+  /** Each text runs on Spark as written and is its own DuckDB oracle. */
+  val queries: Seq[Query] = texts.toSeq.map { case (n, text) => Query(n, run(text), text) }
+
+  private def run(text: String)(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir)
-    s.sql(sql(name))
+    s.sql(text)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -86,8 +86,8 @@ object TypeLattice {
       .orderBy("o_orderkey")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_type_time" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_type_time", timeLattice,
       """WITH t AS (SELECT event_type,
         |  CAST((epoch_us(CAST(ts AS TIMESTAMP)) % 86400000000) // 1000 AS INT) AS tod
         | FROM events)
@@ -96,13 +96,13 @@ object TypeLattice {
         |  CAST(min(tod) % 60000 // 1000 AS INT) AS min_tod_sec,
         |  CAST(sum(CASE WHEN tod >= 32400000 AND tod < 61200000 THEN 1 ELSE 0 END) AS BIGINT) AS n_business,
         |  CAST(sum(CASE WHEN (tod + 32400000) % 86400000 < tod THEN 1 ELSE 0 END) AS BIGINT) AS n_wrap
-        |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // the oracle replays the DECODED values — byte-level corruption in the
     // engine's kryo round trip would flip roundtrip_ok or the fields
-    "q_type_raw" ->
+    Query("q_type_raw", rawLattice,
       """SELECT o_orderkey, o_orderstatus AS status_rt,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents_rt,
         |  TRUE AS roundtrip_ok
         |FROM orders WHERE o_orderkey % 97 = 0
-        |ORDER BY o_orderkey""".stripMargin)
+        |ORDER BY o_orderkey""".stripMargin))
 }

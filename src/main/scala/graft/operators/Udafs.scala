@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -91,22 +91,22 @@ object Udafs {
       .orderBy("event_type", "rank")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_agg_firstlast" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_agg_firstlast", firstLast,
       """SELECT user_id,
         | arg_min(event_type, CAST(ts AS TIMESTAMP)) AS first_type,
         | arg_max(event_type, CAST(ts AS TIMESTAMP)) AS last_type,
         | round(arg_min(value, CAST(ts AS TIMESTAMP)), 2) AS first_value,
         | round(arg_max(value, CAST(ts AS TIMESTAMP)), 2) AS last_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_agg_single_value" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q_agg_single_value", singleValue,
       """SELECT o_orderkey, round(min(o_totalprice), 2) AS price
         |FROM orders WHERE o_orderkey < 100
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-    "q_tableagg_top2" ->
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin),
+    Query("q_tableagg_top2", tableAggTop2,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, round(value, 2) AS value
         |FROM (SELECT event_type, event_id, value,
         |  row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rn
-        | FROM events) WHERE rn <= 2 ORDER BY event_type, rn""".stripMargin,
+        | FROM events) WHERE rn <= 2 ORDER BY event_type, rn""".stripMargin),
   )
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -414,30 +414,30 @@ object CdcFormats {
        |        CASE WHEN hh < 4 THEN o_totalprice + 1000.0 ELSE o_totalprice END AS o_totalprice
        | FROM h WHERE hh <> 0)""".stripMargin
 
-  val sql: Map[String, String] = Map(
-    "q_fmt_debezium" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_fmt_debezium", debeziumKinds,
       s"""$duckKindEvents
          |SELECT kind, CAST(count(*) AS BIGINT) AS cnt,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
          |  round(sum(price), 2) AS total,
          |  CAST(max(ts) AS BIGINT) AS max_ts
-         |FROM ev GROUP BY kind ORDER BY kind""".stripMargin,
-    "q_cdc_materialize" ->
+         |FROM ev GROUP BY kind ORDER BY kind""".stripMargin),
+    Query("q_cdc_materialize", debeziumMaterialize,
       s"""$duckFinalState
          |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
          |  round(sum(o_totalprice), 2) AS total
-         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_fmt_canal" ->
+         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q_fmt_canal", canalKinds,
       s"""$duckKindEvents
          |SELECT kind, CAST(count(*) AS BIGINT) AS cnt,
          |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum,
          |  round(sum(price), 2) AS total
-         |FROM ev GROUP BY kind ORDER BY kind""".stripMargin,
-    "q_fmt_maxwell" ->
+         |FROM ev GROUP BY kind ORDER BY kind""".stripMargin),
+    Query("q_fmt_maxwell", maxwellMaterialize,
       s"""$duckFinalState
          |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
          |  CAST(sum(o_custkey) AS BIGINT) AS cust_sum,
          |  round(sum(o_totalprice), 2) AS total
-         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
   )
 }

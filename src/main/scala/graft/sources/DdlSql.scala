@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SQL DDL surface for table registration (SURVEY.md §2.11; ref
@@ -654,23 +655,23 @@ object DdlSql {
       .orderBy("user_id", "event_type")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_ddl_hive_udf" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_ddl_hive_udf", ddlHiveUdf,
       """SELECT p_size, bin(CAST(p_size AS BIGINT)) AS bin_size,
         | CAST(abs(p_size - 25) AS INT) AS abs_off,
         | CAST(count(*) AS BIGINT) AS cnt
-        |FROM part GROUP BY p_size ORDER BY p_size""".stripMargin,
-    "q_ddl_like" ->
+        |FROM part GROUP BY p_size ORDER BY p_size""".stripMargin),
+    Query("q_ddl_like", ddlLike,
       """SELECT user_id, event_type, event_id FROM (
         | SELECT user_id, event_type, event_id,
         |   row_number() OVER (PARTITION BY user_id, event_type
         |     ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
         | FROM events) t WHERE rn = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q_ddl_alter" ->
+        |ORDER BY user_id, event_type""".stripMargin),
+    Query("q_ddl_alter", ddlAlter,
       """SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ddl_function" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q_ddl_function", ddlFunction,
       """SELECT p_brand,
         | CAST(coalesce(sum(CASE WHEN regexp_full_match(p_type, '[0-9]+')
         |   THEN p_size END), 0) AS DOUBLE) AS sum0_dig,
@@ -682,8 +683,8 @@ object DdlSql {
         |     list_transform(range(1, length(p_name)+1), i -> ascii(p_name[i])::BIGINT)),
         |     (a, c) -> (a * 31 + c) % 4294967296) + 2147483648) % 4294967296) - 2147483648 AS INT)) % 1000), 0) AS BIGINT) AS sum0_hash,
         | count(*) AS cnt
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q_ddl_watermark" ->
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("q_ddl_watermark", ddlWatermark,
       """WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS t, value FROM events),
         |mx AS (SELECT max(t) AS mt FROM e)
         |SELECT CAST(date_trunc('day', t) AS TIMESTAMP) AS w_start,
@@ -691,18 +692,18 @@ object DdlSql {
         |  count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM e, mx
         |WHERE date_trunc('day', t) + INTERVAL 1 DAY <= mt - INTERVAL 10 SECOND
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_ddl_dedup" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_ddl_dedup", ddlDedup,
       """SELECT user_id, event_id, event_type FROM (
         | SELECT user_id, event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_ddl_view" ->
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Query("q_ddl_view", ddlView,
       """SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_ddl_use" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q_ddl_use", ddlUse,
       """SELECT n_regionkey, count(*) AS cnt, min(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
   )
 }

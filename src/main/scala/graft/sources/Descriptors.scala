@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,4 +83,23 @@ object Descriptors {
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
   }
+
+  /** q_descriptor_dedup: latest event per user through a descriptor that
+    * declares the PRIMARY KEY and the rowtime. */
+  def eventsByUser(s: SparkSession, dir: String): DataFrame = {
+    val d = TableDescriptor("events_desc", s"$dir/events.parquet",
+      primaryKey = Seq("user_id"), watermarkCol = Some("ts"), tsNanosAsLong = true)
+    dedupByPk(s, d, tieBreak = Seq("event_id"))
+      .select(col("user_id"), col("event_id"), col("event_type"))
+      .orderBy("user_id")
+  }
+
+  val queries: Seq[Query] = Seq(
+    Query("q_descriptor_dedup", eventsByUser,
+      """SELECT user_id, event_id, event_type FROM (
+        | SELECT user_id, event_id, event_type,
+        |  row_number() OVER (PARTITION BY user_id
+        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+  )
 }

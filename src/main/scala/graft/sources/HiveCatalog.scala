@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Hive-catalog proof (SURVEY §2.11; ref flink-connectors/
@@ -76,14 +76,14 @@ object HiveCatalog {
     materialized
   }
 
-  val sql: Map[String, String] = Map(
-    "q_ddl_insert_partition" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_ddl_insert_partition", insertPartition,
       """SELECT o_orderstatus AS status, count(*) AS cnt,
         | round(sum(CASE WHEN o_orderstatus = 'P' THEN o_totalprice + 1
         |               ELSE o_totalprice END), 2) AS total
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q_hive_catalog" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q_hive_catalog", hiveCatalog,
       """SELECT n_regionkey, count(*) AS cnt, min(n_name) AS first_nation
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
   )
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import java.sql.DriverManager
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -162,19 +163,19 @@ object JdbcDemo {
       .orderBy("user_id")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_jdbc_scan" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_jdbc_scan", scan,
       """SELECT c_mktsegment, count(*) AS cnt,
         | round(CAST(sum(c_acctbal) AS DOUBLE), 2) AS sum_bal
         |FROM customer
         |WHERE c_mktsegment IN ('BUILDING', 'MACHINERY', 'AUTOMOBILE')
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_jdbc_lookup" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q_jdbc_lookup", lookup,
       """SELECT e.event_id, e.user_id,
         | coalesce(c.c_mktsegment, 'UNKNOWN') AS segment
         |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |ORDER BY e.event_id""".stripMargin,
-    "q_jdbc_upsert" ->
+        |ORDER BY e.event_id""".stripMargin),
+    Query("q_jdbc_upsert", upsert,
       """SELECT user_id, max(event_id) AS event_id
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin))
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -70,13 +71,13 @@ object StateRead {
       .orderBy("user_id")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_state_agg_read" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_state_agg_read", aggStateRead,
       """SELECT user_id, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_state_dedup_read" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q_state_dedup_read", dedupStateRead,
       """SELECT user_id, CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
         | min(event_type) AS first_type, max(event_type) AS last_type
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
   )
 }

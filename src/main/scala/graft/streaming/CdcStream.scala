@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Query
 import graft.sources.CdcFormats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -89,11 +90,11 @@ object CdcStream {
       .orderBy("o_orderstatus")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_cdc_stream" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_cdc_stream", debeziumStream,
       s"""${CdcFormats.duckFinalStateSql}
          |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
          |  round(sum(o_totalprice), 2) AS total
-         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
   )
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, timestamp_micros, window}
 
@@ -2166,21 +2167,24 @@ object MatchRecognizeSql extends Serializable {
   /** q_sql_match_prev shares q_sql_match_nav's oracle verbatim: with
     * DOWN{2,}, the PREV spelling and the logical-navigation spelling are
     * the same query over contiguous matches (see [[matchPrevSql]]). */
-  lazy val sql: Map[String, String] =
-    sqlBase +
-      ("q_sql_match_prev" -> sqlBase("q_sql_match_nav")) +
+  lazy val queries: Seq[Query] =
+    baseQueries ++ Seq(
+      Query("q_sql_match_prev", matchPrev, Query.oracleOf(baseQueries, "q_sql_match_nav")),
       // batch-mode twins share the streaming statements' oracles verbatim
       // — the hash equality is the batch ≡ stream proof
-      ("q_sql_match_batch_nav" -> sqlBase("q_sql_match_nav")) +
-      ("q_sql_match_batch_rows" -> sqlBase("q_sql_match_rows")) +
+      Query("q_sql_match_batch_nav", matchNavBatch, Query.oracleOf(baseQueries, "q_sql_match_nav")),
+      Query("q_sql_match_batch_rows", matchAllRowsBatch,
+        Query.oracleOf(baseQueries, "q_sql_match_rows")),
       // r16: the full grammar joins the unified batch/stream proof —
       // PERMUTE and grouped repetition share their twins' oracles too
-      ("q_sql_match_batch_permute" -> sqlBase("q_sql_match_permute")) +
-      ("q_sql_match_batch_group" -> sqlBase("q_sql_match_multi")) +
+      Query("q_sql_match_batch_permute", matchPermuteBatch,
+        Query.oracleOf(baseQueries, "q_sql_match_permute")),
+      Query("q_sql_match_batch_group", matchMultiBatch,
+        Query.oracleOf(baseQueries, "q_sql_match_multi")),
       // ^: the opening non-purchase run closed by the FIRST purchase —
       // rows 1..prn-1 are non-purchase by the minimality of prn, so the
       // greedy A+ from the anchored start is exactly that prefix
-      ("q_sql_match_anchor" ->
+      Query("q_sql_match_anchor", matchAnchorStart,
         """WITH o AS (SELECT user_id, event_id, event_type,
           |        row_number() OVER (PARTITION BY user_id
           |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2191,11 +2195,11 @@ object MatchRecognizeSql extends Serializable {
           |SELECT p.user_id, CAST(p.prn - 1 AS BIGINT) AS n_lead, f.first_id
           |FROM p JOIN f ON f.user_id = p.user_id
           |WHERE p.prn >= 2
-          |ORDER BY p.user_id""".stripMargin) +
+          |ORDER BY p.user_id""".stripMargin),
       // $: the LAST purchase followed only by non-purchase rows through
       // end-of-partition (rows k+1..n are non-purchase by the maximality
       // of k); users whose final event IS the purchase have no B row
-      ("q_sql_match_anchor_end" ->
+      Query("q_sql_match_anchor_end", matchAnchorEnd,
         """WITH o AS (SELECT user_id, event_id, event_type,
           |        row_number() OVER (PARTITION BY user_id
           |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2208,19 +2212,19 @@ object MatchRecognizeSql extends Serializable {
           |SELECT a.user_id, a.a_id, CAST(mx.n - a.k AS BIGINT) AS n_tail
           |FROM a JOIN mx ON mx.user_id = a.user_id
           |WHERE mx.n > a.k
-          |ORDER BY a.user_id""".stripMargin) +
+          |ORDER BY a.user_id""".stripMargin),
       // ^ A+ $: the whole partition matches iff EVERY row is under the
       // threshold — i.e. the per-user max is
-      ("q_sql_match_anchor_both" ->
+      Query("q_sql_match_anchor_both", matchAnchorBoth,
         """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
           |FROM events GROUP BY user_id
           |HAVING max(value) < 200
-          |ORDER BY user_id""".stripMargin) +
+          |ORDER BY user_id""".stripMargin),
       // NEXT in batch: one match per maximal strictly-ascending run of
       // ≥ 3 rows — island derivation mirroring q_sql_match_nav's
       // descending twin; the island's last row is the peak (TOP), the
       // rows before it are the UP run (m − 1 of them)
-      ("q_sql_match_next" ->
+      Query("q_sql_match_next", matchNext,
         """WITH o AS (SELECT user_id, event_id, value,
           |        row_number() OVER (PARTITION BY user_id
           |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2237,11 +2241,11 @@ object MatchRecognizeSql extends Serializable {
           |SELECT user_id, strt_id, peak_id, CAST(m - 1 AS BIGINT) AS n_up,
           |       round(peak_val, 6) AS peak_val
           |FROM r WHERE m >= 3
-          |ORDER BY user_id, strt_id""".stripMargin)
+          |ORDER BY user_id, strt_id""".stripMargin))
 
-  private val sqlBase: Map[String, String] = Map(
+  private val baseQueries: Seq[Query] = Seq(
     // SUBSET-in-DEFINE: fixed-shape pattern, lead replay with the union sum
-    "q_sql_match_subset_def" ->
+    Query("q_sql_match_subset_def", matchSubsetDef,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
@@ -2252,9 +2256,9 @@ object MatchRecognizeSql extends Serializable {
         |SELECT user_id, a_id, round(v0 + v1 + v2, 6) AS u_sum, id3 AS c_id
         |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'click'
         |  AND et3 = 'purchase' AND v0 + v1 + v2 > 120
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // greedy optional B?: the B-present branch wins where both parses fit
-    "q_sql_match_qopt" ->
+    Query("q_sql_match_qopt", matchQOpt,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2267,9 +2271,9 @@ object MatchRecognizeSql extends Serializable {
         |  CASE WHEN v1 > 50 AND et2 = 'purchase' THEN id2 ELSE id1 END AS c_id
         |FROM sq WHERE et0 = 'view'
         |  AND ((v1 > 50 AND et2 = 'purchase') OR et1 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // reluctant optional B??: the B-absent branch wins where both fit
-    "q_sql_match_qopt_rel" ->
+    Query("q_sql_match_qopt_rel", matchQOptRel,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2282,9 +2286,9 @@ object MatchRecognizeSql extends Serializable {
         |  CASE WHEN et1 = 'purchase' THEN id1 ELSE id2 END AS c_id
         |FROM sq WHERE et0 = 'view'
         |  AND (et1 = 'purchase' OR (v1 > 50 AND et2 = 'purchase'))
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // A{2,3} greedy: disjoint DEFINEs make the branch data-determined
-    "q_sql_match_qrange" ->
+    Query("q_sql_match_qrange", matchQRange,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2297,9 +2301,9 @@ object MatchRecognizeSql extends Serializable {
         |  CASE WHEN et2 = 'view' AND et3 = 'purchase' THEN id3 ELSE id2 END AS c_id
         |FROM sq WHERE et0 = 'view' AND et1 = 'view'
         |  AND ((et2 = 'view' AND et3 = 'purchase') OR et2 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // A{2,3}? reluctant with A overlapping C: shortest repetition first
-    "q_sql_match_qrange_rel" ->
+    Query("q_sql_match_qrange_rel", matchQRangeRel,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2312,9 +2316,9 @@ object MatchRecognizeSql extends Serializable {
         |  CASE WHEN et2 = 'purchase' THEN id2 ELSE id3 END AS c_id
         |FROM sq WHERE et0 <> 'error' AND et1 <> 'error'
         |  AND (et2 = 'purchase' OR (et2 <> 'error' AND et3 = 'purchase'))
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // B{,2} greedy: as many clicks as the data has before the purchase
-    "q_sql_match_qupto" ->
+    Query("q_sql_match_qupto", matchQUpto,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2336,10 +2340,10 @@ object MatchRecognizeSql extends Serializable {
         |  AND ((et1 = 'click' AND et2 = 'click' AND et3 = 'purchase')
         |    OR (et1 = 'click' AND et2 = 'purchase')
         |    OR et1 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // A{2,} greedy: islands — every >= 2-view suffix of a view run whose
     // next row is a purchase
-    "q_sql_match_qopen" ->
+    Query("q_sql_match_qopen", matchQOpen,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id
         |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn FROM events),
@@ -2354,9 +2358,9 @@ object MatchRecognizeSql extends Serializable {
         |FROM v JOIN r ON r.user_id = v.user_id AND r.grp = v.grp
         |JOIN p ON p.user_id = v.user_id AND p.rn = r.end_rn + 1
         |WHERE r.end_rn - v.rn + 1 >= 2
-        |ORDER BY v.user_id, a_id""".stripMargin,
+        |ORDER BY v.user_id, a_id""".stripMargin),
     // MATCH_ROWTIME: the B row's timestamp surfaces as the measure
-    "q_sql_match_rowtime" ->
+    Query("q_sql_match_rowtime", matchRowtime,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2365,9 +2369,9 @@ object MatchRecognizeSql extends Serializable {
         | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
         |SELECT user_id, a_id, b_id, mrt FROM sq
         |WHERE et0 = 'view' AND et1 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
     // cascade: the same matches tumbled into epoch-aligned 1-day windows
-    "q_sql_match_cascade" ->
+    Query("q_sql_match_cascade", matchCascade,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_type AS et0,
@@ -2376,11 +2380,11 @@ object MatchRecognizeSql extends Serializable {
         |m AS (SELECT mrt FROM sq WHERE et0 = 'view' AND et1 = 'purchase')
         |SELECT make_timestamp((epoch_us(mrt) // 86400000000) * 86400000000) AS win_start,
         |  CAST(count(*) AS BIGINT) AS n_matches
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
     // V-pattern with logical offsets: one match per maximal strictly-
     // decreasing run (>= 3 rows) whose next row beats the run's
     // second-to-last value (see matchNavSql's derivation note)
-    "q_sql_match_nav" ->
+    Query("q_sql_match_nav", matchNav,
       """WITH o AS (SELECT user_id, event_id, value,
         |        row_number() OVER (PARTITION BY user_id
         |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2400,12 +2404,12 @@ object MatchRecognizeSql extends Serializable {
         |JOIN o p ON p.user_id = r.user_id AND p.rn = r.re - 1
         |JOIN o u ON u.user_id = r.user_id AND u.rn = r.re + 1
         |WHERE r.m >= 3 AND u.value > p.value
-        |ORDER BY r.user_id, r.strt_id""".stripMargin,
+        |ORDER BY r.user_id, r.strt_id""".stripMargin),
     // literal-RHS cross-variable aggregate: greedy A+ = the maximal view
     // run from each start; B = the immediately-following purchase; the
     // run's suffix-sum must beat the constant (same islands derivation as
     // q_sql_match_xvar with a literal bound)
-    "q_sql_match_xagg" ->
+    Query("q_sql_match_xagg", matchXagg,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            row_number() OVER (PARTITION BY user_id
         |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2425,12 +2429,12 @@ object MatchRecognizeSql extends Serializable {
         |       p.event_id AS b_id
         |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
         |WHERE v.ssum > 100
-        |ORDER BY v.user_id, a_first""".stripMargin,
+        |ORDER BY v.user_id, a_first""".stripMargin),
     // DISTINCT aggregations: greedy A+ with SKIP PAST LAST ROW = one match
     // per MAXIMAL non-purchase run whose next row is a purchase (no suffix
     // matches — a shorter A+ parse leaves B on a non-purchase row);
     // distinct aggregates replayed by DuckDB's DISTINCT verbatim
-    "q_sql_match_distinct" ->
+    Query("q_sql_match_distinct", matchDistinct,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            row_number() OVER (PARTITION BY user_id
         |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2448,12 +2452,12 @@ object MatchRecognizeSql extends Serializable {
         |SELECT v.user_id, v.a_first, v.n_a, v.n_dist, v.sum_dist,
         |       p.event_id AS b_id
         |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
-        |ORDER BY v.user_id, v.a_first""".stripMargin,
+        |ORDER BY v.user_id, v.a_first""".stripMargin),
     // exclusion {- A -} in ALL ROWS: view-click-purchase triples (disjoint
     // types ⇒ lead-derivation exact; SKIP PAST LAST ROW can't skip a
     // viable start — no triple begins inside another); only the B and C
     // rows are emitted, yet both carry the excluded view's measures
-    "q_sql_match_exclude" ->
+    Query("q_sql_match_exclude", matchExclude,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS id0, event_type AS et0,
@@ -2467,10 +2471,10 @@ object MatchRecognizeSql extends Serializable {
         |        CAST(1 AS BIGINT) AS n_a, id0 AS a_id FROM m
         | UNION ALL SELECT user_id, id2, 'C', 1, id0 FROM m)
         |SELECT user_id, event_id, cls, n_a, a_id FROM r
-        |ORDER BY user_id, event_id, cls, n_a, a_id""".stripMargin,
+        |ORDER BY user_id, event_id, cls, n_a, a_id""".stripMargin),
     // ALL ROWS + RUNNING measures: fixed-length disjoint-type pattern →
     // lead-based derivation exact; running sums unroll left-to-right
-    "q_sql_match_rows_measures" ->
+    Query("q_sql_match_rows_measures", matchAllRowsMeasures,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id,
@@ -2488,10 +2492,10 @@ object MatchRecognizeSql extends Serializable {
         | UNION ALL SELECT user_id, id2, 'B', 2, round(v0 + v1 + v2, 6) FROM m
         | UNION ALL SELECT user_id, id3, 'C', 2, round(v0 + v1 + v2 + v3, 6) FROM m)
         |SELECT user_id, event_id, cls, n_a, run_sum FROM r
-        |ORDER BY user_id, event_id, cls, n_a, run_sum""".stripMargin,
+        |ORDER BY user_id, event_id, cls, n_a, run_sum""".stripMargin),
     // FINAL vs RUNNING in ALL ROWS: running count climbs, FINAL count and
     // sum are the match totals on every row
-    "q_sql_match_rows_final" ->
+    Query("q_sql_match_rows_final", matchAllRowsFinal,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id,
@@ -2509,11 +2513,11 @@ object MatchRecognizeSql extends Serializable {
         | UNION ALL SELECT user_id, id2, 'B', 3, 4, tot FROM m
         | UNION ALL SELECT user_id, id3, 'C', 4, 4, tot FROM m)
         |SELECT user_id, event_id, cls, n_run, n_fin, total FROM r
-        |ORDER BY user_id, event_id, cls, n_run, n_fin, total""".stripMargin,
+        |ORDER BY user_id, event_id, cls, n_run, n_fin, total""".stripMargin),
     // prefixed PERMUTE + SKIP TO LAST B: disjoint DEFINE types make the
     // lead-based derivation exact (no row inside a match can start one,
     // and the skip-back target row can never satisfy S)
-    "q_sql_match_permute_skip" ->
+    Query("q_sql_match_permute_skip", matchPermuteSkip,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS s_id, event_type AS et0,
@@ -2526,11 +2530,11 @@ object MatchRecognizeSql extends Serializable {
         |FROM sq
         |WHERE et0 = 'purchase'
         |  AND ((et1 = 'view' AND et2 = 'click') OR (et1 = 'click' AND et2 = 'view'))
-        |ORDER BY user_id, s_id""".stripMargin,
+        |ORDER BY user_id, s_id""".stripMargin),
     // grouped repetition + SKIP TO FIRST B: overlapping matches — every
     // view of a maximal view/click alternating run with >= 2 rows after
     // it in the run matches greedily to the run's last odd position
-    "q_sql_match_rep_skip" ->
+    Query("q_sql_match_rep_skip", matchRepSkip,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            row_number() OVER (PARTITION BY user_id
         |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2553,8 +2557,8 @@ object MatchRecognizeSql extends Serializable {
         |JOIN g ce ON ce.user_id = m.user_id AND ce.rn = m.e
         |JOIN g bl ON bl.user_id = m.user_id AND bl.rn = m.e - 1
         |WHERE m.e >= m.p + 2
-        |ORDER BY m.user_id, m.a_first""".stripMargin,
-    "q_sql_match_xvar" ->
+        |ORDER BY m.user_id, m.a_first""".stripMargin),
+    Query("q_sql_match_xvar", matchXvar,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            row_number() OVER (PARTITION BY user_id
         |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2574,8 +2578,8 @@ object MatchRecognizeSql extends Serializable {
         |       p.event_id AS b_id, CAST(v.scnt AS BIGINT) AS n_a
         |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
         |WHERE v.ssum > p.value
-        |ORDER BY v.user_id, a_first""".stripMargin,
-    "q_sql_match_xvar_min" ->
+        |ORDER BY v.user_id, a_first""".stripMargin),
+    Query("q_sql_match_xvar_min", matchXvarMin,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_first, value AS v0, event_type AS et0,
@@ -2585,8 +2589,8 @@ object MatchRecognizeSql extends Serializable {
         |SELECT user_id, a_first, round(least(v0, v1), 6) AS a_min, b_id
         |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
         |  AND least(v0, v1) < 50
-        |ORDER BY user_id, a_first""".stripMargin,
-    "q_sql_match_subset" ->
+        |ORDER BY user_id, a_first""".stripMargin),
+    Query("q_sql_match_subset", matchSubset,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
@@ -2596,8 +2600,8 @@ object MatchRecognizeSql extends Serializable {
         |SELECT user_id, a_id AS u_first, b_id AS u_last,
         |  CAST(2 AS BIGINT) AS n_u, round(v0 + v1, 6) AS u_sum
         |FROM sq WHERE et0 = 'view' AND et1 = 'click'
-        |ORDER BY user_id, u_first""".stripMargin,
-    "q_sql_match_number" ->
+        |ORDER BY user_id, u_first""".stripMargin),
+    Query("q_sql_match_number", matchNumber,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, t,
@@ -2607,8 +2611,8 @@ object MatchRecognizeSql extends Serializable {
         |      WHERE et0 = 'view' AND et1 = 'purchase')
         |SELECT user_id, a_id, b_id,
         |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY t, a_id) AS BIGINT) AS mn
-        |FROM m ORDER BY user_id, a_id, b_id, mn""".stripMargin,
-    "q_sql_match_multi" ->
+        |FROM m ORDER BY user_id, a_id, b_id, mn""".stripMargin),
+    Query("q_sql_match_multi", matchMulti,
       """WITH RECURSIVE o AS (
         | SELECT user_id, event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
@@ -2631,8 +2635,8 @@ object MatchRecognizeSql extends Serializable {
         |FROM best b
         |JOIN o fa ON fa.user_id = b.user_id AND fa.rn = b.start_rn
         |JOIN o la ON la.user_id = b.user_id AND la.rn = b.end_rn
-        |ORDER BY b.user_id, a_first, a_last, n_a, n_b""".stripMargin,
-    "q_sql_match_multi_deep" ->
+        |ORDER BY b.user_id, a_first, a_last, n_a, n_b""".stripMargin),
+    Query("q_sql_match_multi_deep", matchMultiDeep,
       // always-true DEFINEs: the greedy loop eats each partition whole —
       // first match = the longest odd prefix (pattern length 2k+1), and on
       // even-sized partitions SKIP PAST LAST ROW leaves exactly one row,
@@ -2657,8 +2661,8 @@ object MatchRecognizeSql extends Serializable {
         |       JOIN o e ON e.user_id = l.user_id AND e.rn = l.n
         |       WHERE l.n % 2 = 0)
         |SELECT * FROM (SELECT * FROM m1 UNION ALL SELECT * FROM m2)
-        |ORDER BY user_id, a_first""".stripMargin,
-    "q_sql_match_permute" ->
+        |ORDER BY user_id, a_first""".stripMargin),
+    Query("q_sql_match_permute", matchPermute,
       """WITH o AS (SELECT user_id, event_id, event_type,
       |            CAST(ts AS TIMESTAMP) AS t FROM events),
       |sq AS (SELECT user_id, event_id AS id0, event_type AS et0,
@@ -2670,8 +2674,8 @@ object MatchRecognizeSql extends Serializable {
       |FROM sq
       |WHERE (et0 = 'view' AND et1 = 'click')
       |   OR (et0 = 'click' AND et1 = 'view')
-      |ORDER BY user_id, a_id""".stripMargin,
-    "q_sql_match_paren" ->
+      |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_sql_match_paren", matchParen,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
@@ -2679,8 +2683,8 @@ object MatchRecognizeSql extends Serializable {
         | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
         |SELECT user_id, a_id, b_id FROM sq
         |WHERE et0 IN ('view', 'click') AND NOT (v0 < 1) AND et1 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
-    "q_sql_match_agg_def" ->
+        |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_sql_match_agg_def", matchAggDef,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, value AS v0, event_type AS et0,
@@ -2690,8 +2694,8 @@ object MatchRecognizeSql extends Serializable {
         |SELECT user_id, a_id, round(v0 + v1, 6) AS a_sum, b_id
         |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
         |  AND v0 <= 150 AND v0 + v1 <= 150
-        |ORDER BY user_id, a_id""".stripMargin,
-    "q_sql_match_skip_last" ->
+        |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_sql_match_skip_last", matchSkipLast,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            row_number() OVER (PARTITION BY user_id
         |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
@@ -2706,8 +2710,8 @@ object MatchRecognizeSql extends Serializable {
         |SELECT v.user_id, v.event_id AS a_id, isl.b_first, isl.b_last, isl.n_b
         |FROM g v JOIN isl ON v.user_id = isl.user_id AND v.grp = isl.grp
         |WHERE v.event_type = 'view' AND v.net = 'click'
-        |ORDER BY v.user_id, a_id""".stripMargin,
-    "q_sql_match" ->
+        |ORDER BY v.user_id, a_id""".stripMargin),
+    Query("q_sql_match", matchPlus,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -2724,8 +2728,8 @@ object MatchRecognizeSql extends Serializable {
         |       CAST(s.j_rn - s.rn AS BIGINT) AS n_a
         |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
         |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin,
-    "q_sql_match_sum" ->
+        |ORDER BY s.user_id, a_id""".stripMargin),
+    Query("q_sql_match_sum", matchSum,
       """WITH o AS (SELECT user_id, event_id, event_type, value,
         |            CAST(ts AS TIMESTAMP) AS t FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, value AS v0, event_type AS et0,
@@ -2736,8 +2740,8 @@ object MatchRecognizeSql extends Serializable {
         | round((v0 + v1) / 2, 6) AS a_avg, round(v2, 6) AS b_val,
         | CAST(2 AS BIGINT) AS n_a
         |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
-    "q_sql_match_rows" ->
+        |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_sql_match_rows", matchAllRows,
       """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2750,8 +2754,8 @@ object MatchRecognizeSql extends Serializable {
         | SELECT user_id, a_id AS event_id, 'A' AS cls FROM m
         | UNION ALL SELECT user_id, b_id, 'B' FROM m
         | UNION ALL SELECT user_id, c_id, 'C' FROM m)
-        |ORDER BY user_id, event_id, cls""".stripMargin,
-    "q_sql_match_within" ->
+        |ORDER BY user_id, event_id, cls""".stripMargin),
+    Query("q_sql_match_within", matchWithin,
       """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, t AS t0,
@@ -2762,8 +2766,8 @@ object MatchRecognizeSql extends Serializable {
         |SELECT user_id, a_id, b_id, c_id FROM sq
         |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
         |  AND t2 - t0 <= INTERVAL 1 DAY
-        |ORDER BY user_id, a_id""".stripMargin,
-    "q_sql_match_strict" ->
+        |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_sql_match_strict", matchStrict,
       """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -2772,6 +2776,6 @@ object MatchRecognizeSql extends Serializable {
         | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
         |SELECT user_id, a_id, b_id, c_id FROM sq
         |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
   )
 }

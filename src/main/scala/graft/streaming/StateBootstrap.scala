@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Query
 import graft.streaming.StreamSource.Event
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -265,24 +266,24 @@ object StateBootstrap {
   def rescaleContinue(s: SparkSession, dir: String): DataFrame =
     rescaleRun(s, dir)._1
 
-  val sql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // the ENTIRE table, no cutoff: only a lossless batch→stream state
     // handoff reproduces it
-    "q_state_bootstrap" ->
+    Query("q_state_bootstrap", bootstrapContinue,
       """SELECT user_id, count(*) AS cnt,
         | round(sum(value), 4) AS total
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
     // rescale invariant: identical whole-table totals — green only if the
     // 8-partition savepoint redistributed losslessly into 32 stores
-    "q_state_rescale" ->
+    Query("q_state_rescale", rescaleContinue,
       """SELECT user_id, count(*) AS cnt,
         | round(sum(value), 4) AS total
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
     // the TRANSFORM contract: erased users (% 10 = 0) keep only their
     // post-cutoff events (their accumulated history was deleted from the
     // savepoint); everyone else aggregates the whole table. The cutoff is
     // the same integer-micros midpoint both engines compute.
-    "q_state_surgery" ->
+    Query("q_state_surgery", stateSurgery,
       """WITH b AS (SELECT min(epoch_us(CAST(ts AS TIMESTAMP))) AS mn,
         |                  max(epoch_us(CAST(ts AS TIMESTAMP))) AS mx FROM events),
         |cut AS (SELECT mn + (mx - mn) // 2 AS c FROM b)
@@ -290,5 +291,5 @@ object StateBootstrap {
         |  round(sum(value), 4) AS total
         |FROM events, cut
         |WHERE user_id % 10 != 0 OR epoch_us(CAST(ts AS TIMESTAMP)) >= c
-        |GROUP BY user_id ORDER BY user_id""".stripMargin)
+        |GROUP BY user_id ORDER BY user_id""".stripMargin))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.TextHashes
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -586,18 +586,18 @@ object StreamDedup {
       ppjoinStream(s, dir, 4).select(col("doc_a"), col("doc_b")),
       Tables(s, dir, "documents").select(col("doc_id")))
 
-  val sql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // the batch LSH pipeline from scratch: streaming banded state must
     // surface the SAME candidates, so the keep sets coincide
-    "q_stream_dedup_minhash" ->
+    Query("q_stream_dedup_minhash", minhashStreamKeep,
       (graft.LlmOracles.minhashPairCtes + """
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT doc_b FROM vpairs)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
     // streaming PPJoin: exact recall by construction (Lemma 1 under the
     // md5 universal order) — the oracle is the batch twin's brute
     // all-pairs SQL verbatim
-    "q_stream_ppjoin" ->
+    Query("q_stream_ppjoin", ppjoinStream(_, _),
       (graft.LlmOracles.shinglesCte + """
         |SELECT doc_a, doc_b, j FROM (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -605,21 +605,21 @@ object StreamDedup {
         |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         | WHERE len(a.s) > 0 AND len(b.s) > 0)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin,
+        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
     // TTL-bounded streaming LSH dedup: the deterministic horizon rule
     // (doc_id logical clock — a pair meets iff its distance fits the
     // horizon, proof in the scaladoc) makes the oracle the batch LSH
     // keep-set SQL with one distance predicate on the verified pairs
-    "q_stream_dedup_ttl" ->
+    Query("q_stream_dedup_ttl", minhashStreamKeepTtl(_, _),
       (graft.LlmOracles.minhashPairCtes + """
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT doc_b FROM vpairs WHERE doc_b - doc_a <= 200)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin)),
     // TTL-bounded streaming PPJoin: the deterministic horizon rule makes
     // the oracle exact — the batch brute-force SQL with one extra
     // predicate (pair distance within the dedup horizon). 200 splits the
     // sf0.01 pair set ~half/half (distances 4..429, median 192).
-    "q_stream_ppjoin_ttl" ->
+    Query("q_stream_ppjoin_ttl", ppjoinStreamTtl(_, _),
       (graft.LlmOracles.shinglesCte + """
         |SELECT doc_a, doc_b, j FROM (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -627,11 +627,11 @@ object StreamDedup {
         |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         | WHERE len(a.s) > 0 AND len(b.s) > 0 AND b.doc_id - a.doc_id <= 200)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin,
+        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
     // streaming keep-set: transitive closure over the SAME brute pair set
     // (the q_dedup_cluster_keep recursive-reachability derivation), then
     // keep every doc no smaller doc_id can reach
-    "q_stream_ppjoin_keep" ->
+    Query("q_stream_ppjoin_keep", ppjoinStreamKeep,
       (graft.LlmOracles.shinglesCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
         |vp AS (SELECT doc_a, doc_b FROM (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -647,5 +647,5 @@ object StreamDedup {
         |lbl AS (SELECT u, min(v) AS mv FROM reach GROUP BY u)
         |SELECT doc_id FROM documents
         |WHERE doc_id NOT IN (SELECT u FROM lbl WHERE mv < u)
-        |ORDER BY doc_id""").stripMargin)
+        |ORDER BY doc_id""").stripMargin))
 }

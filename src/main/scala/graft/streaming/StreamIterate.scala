@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -72,8 +73,8 @@ object StreamIterate {
       .orderBy("user_id")
   }
 
-  val sql: Map[String, String] = Map(
-    "q_stream_iterate" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_stream_iterate", userCountdown,
       """SELECT DISTINCT user_id, user_id % 5 + 1 AS steps FROM events
-        |ORDER BY user_id""".stripMargin)
+        |ORDER BY user_id""".stripMargin))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1047,13 +1048,14 @@ object StreamQueries {
 
   /** DuckDB oracles — batch-SQL statements equivalent to each streaming
     * operator's final drained output. */
-  private val sqlBase: Map[String, String] = Map(
+  private val baseQueries: Seq[Query] = Seq(
     // the batch weighted-sample oracle VERBATIM: per-shard reservoirs
     // merged at drain must equal the one-pass batch answer exactly
-    "q_stream_sample_weighted" -> graft.LlmOracles.sql("q_sample_weighted"),
+    Query("q_stream_sample_weighted", streamWeightedSample,
+      Query.oracleOf(graft.LlmOracles.queries, "q_sample_weighted")),
     // per-source char entropy: the drained (source, char) grid replayed
     // by one batch pass (monotone counts → max ≡ final)
-    "q_stream_entropy" ->
+    Query("q_stream_entropy", streamEntropy,
       """WITH ch AS (SELECT source, unnest(string_split(text, '')) AS ch FROM documents),
         |c AS (SELECT source, ch, count(*) AS c FROM ch WHERE length(ch) > 0 GROUP BY 1, 2),
         |n AS (SELECT source, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1),
@@ -1061,8 +1063,8 @@ object StreamQueries {
         |        c.c * CAST(round(ln(n.n / CAST(c.c AS DOUBLE)) * 1e6) AS BIGINT) AS term_u
         |      FROM c JOIN n ON n.source = c.source)
         |SELECT source, max(n) AS n_chars, CAST(sum(term_u) AS BIGINT) AS ent_u
-        |FROM t GROUP BY source ORDER BY source""".stripMargin,
-    "q_stream_ols" ->
+        |FROM t GROUP BY source ORDER BY source""".stripMargin),
+    Query("q_stream_ols", streamOls,
       """WITH b AS (SELECT event_type,
         |    CAST(dayofyear(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x,
         |    CAST(round(value * 100) AS BIGINT) AS y FROM events),
@@ -1075,8 +1077,8 @@ object StreamQueries {
         |  FROM st)
         |SELECT event_type, n, slope,
         |  round((syd - slope * sxd) / n, 4) AS intercept
-        |FROM m ORDER BY event_type""".stripMargin,
-    "q_stream_quantile" ->
+        |FROM m ORDER BY event_type""".stripMargin),
+    Query("q_stream_quantile", streamQuantile,
       """WITH cents AS (SELECT event_type,
         |  CAST(round(value * 100) AS BIGINT) AS v FROM events),
         |bk AS (SELECT event_type, (length(bin(v)) - 1) * 16 +
@@ -1102,21 +1104,21 @@ object StreamQueries {
         |  FROM est e JOIN sorted s ON s.event_type = e.event_type AND s.rn = e.target)
         |SELECT event_type, q, est_value, exact_value,
         |  round(abs(est_value - exact_value) / exact_value * 100, 2) AS rel_err_pct
-        |FROM ex ORDER BY event_type, q""".stripMargin,
-    "q_stream_drop_before" ->
+        |FROM ex ORDER BY event_type, q""".stripMargin),
+    Query("q_stream_drop_before", dropUpdateBefore,
       """WITH o AS (SELECT user_id, event_id, row_number() OVER w AS rn FROM events
         | WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id))
         |SELECT user_id, event_id, rowkind FROM (
         | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
         | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1)
-        |ORDER BY user_id, event_id, rowkind""".stripMargin,
-    "q_stream_outer_join" ->
+        |ORDER BY user_id, event_id, rowkind""".stripMargin),
+    Query("q_stream_outer_join", outerJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id FROM events WHERE event_type = 'purchase') p
         |LEFT JOIN (SELECT user_id, event_id FROM events WHERE event_type = 'view') v
         |  ON v.user_id = p.user_id
-        |ORDER BY p.user_id, p_id, v_id NULLS FIRST""".stripMargin,
-    "q_stream_evictor_delta" ->
+        |ORDER BY p.user_id, p_id, v_id NULLS FIRST""".stripMargin),
+    Query("q_stream_evictor_delta", tumbleDeltaEvictor,
       """WITH e AS (SELECT user_id, value, event_id, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |l AS (SELECT user_id, day, value AS lastv FROM (
@@ -1127,22 +1129,22 @@ object StreamQueries {
         |FROM e JOIN l ON l.user_id = e.user_id AND l.day = e.day
         |WHERE abs(e.value - l.lastv) < 50
         |GROUP BY e.day, e.user_id
-        |ORDER BY e.user_id, w_start""".stripMargin,
-    "q_proctime_dedup" ->
+        |ORDER BY e.user_id, w_start""".stripMargin),
+    Query("q_proctime_dedup", procTimeDedup,
       """SELECT user_id, event_id, event_type FROM (
         | SELECT user_id, event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_proctime_over" ->
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Query("q_proctime_over", procTimeOver,
       """SELECT user_id, event_id,
         | count(*) OVER w AS run_cnt,
         | round(sum(value) OVER w, 4) AS run_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_proctime_temporal" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_proctime_temporal", procTimeTemporal,
       """WITH p AS (SELECT user_id, event_id AS p_id, CAST(ts AS TIMESTAMP) AS p_t
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT user_id, event_id AS v_id, CAST(ts AS TIMESTAMP) AS v_t
@@ -1152,8 +1154,8 @@ object StreamQueries {
         |  row_number() OVER (PARTITION BY p.p_id ORDER BY v.v_t DESC, v.v_id DESC) AS rn
         | FROM p LEFT JOIN v ON v.user_id = p.user_id
         |  AND (v.v_t < p.p_t OR (v.v_t = p.p_t AND v.v_id < p.p_id))
-        |) WHERE rn = 1 ORDER BY user_id, p_id""".stripMargin,
-    "q_stream_retract_agg" ->
+        |) WHERE rn = 1 ORDER BY user_id, p_id""".stripMargin),
+    Query("q_stream_retract_agg", retractAgg,
       """WITH last AS (
         | SELECT user_id, event_type, value FROM (
         |  SELECT user_id, event_type, value,
@@ -1164,8 +1166,8 @@ object StreamQueries {
         | round(sum(value), 2) AS sum_value,
         | round(min(value), 2) AS min_value,
         | round(max(value), 2) AS max_value
-        |FROM last GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_stream_full_outer_join" ->
+        |FROM last GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q_stream_full_outer_join", fullOuterJoin,
       """SELECT coalesce(p.user_id, c.user_id) AS user_id,
         | p.event_id AS p_id, c.event_id AS c_id
         |FROM (SELECT user_id, event_id FROM events
@@ -1173,16 +1175,16 @@ object StreamQueries {
         |FULL JOIN (SELECT user_id, event_id FROM events
         |      WHERE event_type = 'click' AND value >= 90) c
         |  ON c.user_id = p.user_id
-        |ORDER BY user_id, p_id NULLS FIRST, c_id NULLS FIRST""".stripMargin,
-    "q_stream_right_outer_join" ->
+        |ORDER BY user_id, p_id NULLS FIRST, c_id NULLS FIRST""".stripMargin),
+    Query("q_stream_right_outer_join", rightOuterJoin,
       """SELECT c.user_id, p.event_id AS p_id, c.event_id AS c_id
         |FROM (SELECT user_id, event_id FROM events
         |      WHERE event_type = 'purchase' AND value >= 90) p
         |RIGHT JOIN (SELECT user_id, event_id FROM events
         |      WHERE event_type = 'click' AND value >= 90) c
         |  ON c.user_id = p.user_id
-        |ORDER BY c.user_id, p_id NULLS FIRST, c_id""".stripMargin,
-    "q_stream_count_slide" ->
+        |ORDER BY c.user_id, p_id NULLS FIRST, c_id""".stripMargin),
+    Query("q_stream_count_slide", countSlideWindow,
       """WITH o AS (SELECT user_id, value,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id) - 1 AS rn FROM events),
@@ -1191,15 +1193,15 @@ object StreamQueries {
         | FROM o)
         |SELECT user_id, win_id, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM x GROUP BY user_id, win_id HAVING count(*) = 4
-        |ORDER BY user_id, win_id""".stripMargin,
-    "q_stream_tumble_late" ->
+        |ORDER BY user_id, win_id""".stripMargin),
+    Query("q_stream_tumble_late", tumbleLate,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_stream_temporal_sort" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_stream_temporal_sort", temporalSortQuery,
       """SELECT user_id, event_id FROM events
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stream_evictor_time" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_stream_evictor_time", tumbleTimeEvictor,
       """WITH e AS (SELECT user_id, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |mx AS (SELECT user_id, day, max(t) AS mt FROM e GROUP BY user_id, day)
@@ -1207,16 +1209,16 @@ object StreamQueries {
         |FROM e JOIN mx ON mx.user_id = e.user_id AND mx.day = e.day
         |WHERE e.t > mt - INTERVAL 6 HOUR
         |GROUP BY e.day, e.user_id
-        |ORDER BY e.user_id, w_start""".stripMargin,
-    "q_stream_evictor" ->
+        |ORDER BY e.user_id, w_start""".stripMargin),
+    Query("q_stream_evictor", tumbleEvictor,
       """WITH e AS (SELECT user_id, value, event_id, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |r AS (SELECT *, row_number() OVER (PARTITION BY user_id, day
         |        ORDER BY t DESC, event_id DESC) AS rk FROM e)
         |SELECT day AS w_start, user_id, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM r WHERE rk <= 3 GROUP BY day, user_id
-        |ORDER BY user_id, w_start""".stripMargin,
-    "q_stream_trigger_cont" ->
+        |ORDER BY user_id, w_start""".stripMargin),
+    Query("q_stream_trigger_cont", triggerContinuous,
       """WITH e AS (SELECT user_id, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |k AS (SELECT unnest([1, 2, 3, 4]) AS k)
@@ -1226,8 +1228,8 @@ object StreamQueries {
         |FROM e, k
         |WHERE k = 4 OR t < day + k * (INTERVAL 6 HOUR)
         |GROUP BY day, user_id, k
-        |ORDER BY user_id, w_start, fire""".stripMargin,
-    "q_stream_trigger_purge" ->
+        |ORDER BY user_id, w_start, fire""".stripMargin),
+    Query("q_stream_trigger_purge", triggerPurging,
       """WITH e AS (SELECT user_id, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |c AS (SELECT *, least(CAST(floor(epoch_us(t - day) / 21600000000) AS INT) + 1, 4) AS k
@@ -1237,24 +1239,24 @@ object StreamQueries {
         |  count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM c
         |GROUP BY day, user_id, k
-        |ORDER BY user_id, w_start, fire""".stripMargin,
-    "q_stream_over_rows_b" ->
+        |ORDER BY user_id, w_start, fire""".stripMargin),
+    Query("q_stream_over_rows_b", overRowsBounded,
       """SELECT user_id, event_id,
         | count(*) OVER w AS w_cnt,
         | round(sum(value) OVER w, 4) AS w_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stream_over_range_b" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_stream_over_range_b", overRangeBounded,
       """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS t FROM events)
         |SELECT e.user_id, e.event_id, count(*) AS w_cnt, round(sum(x.value), 4) AS w_sum
         |FROM e JOIN e x ON x.user_id = e.user_id
         |  AND x.t >= e.t - INTERVAL 1 HOUR
         |  AND (x.t < e.t OR (x.t = e.t AND x.event_id <= e.event_id))
         |GROUP BY e.user_id, e.event_id
-        |ORDER BY e.user_id, e.event_id""".stripMargin,
-    "q_stream_cep_plus" ->
+        |ORDER BY e.user_id, e.event_id""".stripMargin),
+    Query("q_stream_cep_plus", cepPlus,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -1271,11 +1273,11 @@ object StreamQueries {
         |       CAST(s.j_rn - s.rn AS INT) AS n_a
         |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
         |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin,
+        |ORDER BY s.user_id, a_id""".stripMargin),
     // until(signup): same islands derivation as q_stream_cep_plus with the
     // island additionally split at the stop event (signup never enters the
     // loop, so no A-run or its closing purchase crosses one)
-    "q_stream_cep_until" ->
+    Query("q_stream_cep_until", cepUntil,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -1292,10 +1294,10 @@ object StreamQueries {
         |       CAST(s.j_rn - s.rn AS INT) AS n_a
         |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
         |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin,
+        |ORDER BY s.user_id, a_id""".stripMargin),
     // shuffled-replay twin of q_stream_cep_plus: same oracle — parked
     // quantified matches must resolve identically across micro-batches
-    "q_stream_cep_plus_ooo" ->
+    Query("q_stream_cep_plus_ooo", cepPlusOoo,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -1312,8 +1314,8 @@ object StreamQueries {
         |       CAST(s.j_rn - s.rn AS INT) AS n_a
         |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
         |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin,
-    "q_stream_cep_plus_rel" ->
+        |ORDER BY s.user_id, a_id""".stripMargin),
+    Query("q_stream_cep_plus_rel", cepPlusReluctant,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -1330,8 +1332,8 @@ object StreamQueries {
         |       CAST(s.j_rn - s.rn AS INT) AS n_a
         |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
         |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin,
-    "q_stream_cep_skip_past" ->
+        |ORDER BY s.user_id, a_id""".stripMargin),
+    Query("q_stream_cep_skip_past", cepSkipPast,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id,
         |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
@@ -1344,23 +1346,23 @@ object StreamQueries {
         |SELECT a.user_id, a.event_id AS a_id, b.event_id AS b_id
         |FROM v a JOIN v b ON b.user_id = a.user_id AND b.grp = a.grp AND b.k = a.k + 1
         |WHERE a.k % 2 = 1
-        |ORDER BY a.user_id, a_id""".stripMargin,
-    "q_stream_hop" ->
+        |ORDER BY a.user_id, a_id""".stripMargin),
+    Query("q_stream_hop", StreamWindowAggs.hop,
       """WITH e AS (SELECT event_type, value,
         |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
         | FROM events)
         |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
         |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin,
-    "q_stream_cumulate" ->
+        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+    Query("q_stream_cumulate", StreamWindowAggs.cumulate,
       """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
         |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
         |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
         |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
         |SELECT day AS w_start, make_timestamp(epoch_us(day) + k * 21600000000) AS w_end,
         | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_stream_dyn_session" ->
+        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    Query("q_stream_dyn_session", dynamicSession,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
         |  CASE WHEN event_type = 'error' THEN INTERVAL 30 MINUTE
         |       ELSE INTERVAL 60 MINUTE END AS gap FROM events),
@@ -1372,14 +1374,14 @@ object StreamQueries {
         |  ROWS UNBOUNDED PRECEDING) AS sid FROM br)
         |SELECT user_id, min(t) AS w_start, count(*) AS cnt,
         | round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-    "q_stream_upsert" ->
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    Query("q_stream_upsert", upsert,
       """SELECT user_id, event_id FROM (
         | SELECT user_id, event_id,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_stream_cep_any" ->
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Query("q_stream_cep_any", cepAny,
       """WITH a AS (SELECT user_id, event_id AS a_id, CAST(ts AS TIMESTAMP) AS at
         |           FROM events WHERE event_type = 'view'),
         |b AS (SELECT user_id, event_id AS b_id, CAST(ts AS TIMESTAMP) AS bt
@@ -1392,8 +1394,8 @@ object StreamQueries {
         |      AND b.bt <= a.at + INTERVAL 2 DAY
         |JOIN c ON c.user_id = a.user_id AND c.ct > b.bt
         |      AND c.ct <= a.at + INTERVAL 2 DAY
-        |ORDER BY a.user_id, a.a_id, b.b_id, c.c_id""".stripMargin,
-    "q_stream_cep_notnext" ->
+        |ORDER BY a.user_id, a.a_id, b.b_id, c.c_id""".stripMargin),
+    Query("q_stream_cep_notnext", cepNotNext,
       """WITH p AS (SELECT user_id, event_id AS p_id, CAST(ts AS TIMESTAMP) AS pt
         |           FROM events WHERE event_type = 'purchase'),
         |e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
@@ -1412,12 +1414,12 @@ object StreamQueries {
         |FROM c JOIN nxt ON nxt.user_id = c.user_id AND nxt.p_id = c.p_id
         | AND nxt.rn = 1 AND nxt.kind <> 'error'
         |WHERE c.rn = 1
-        |ORDER BY c.user_id, c.p_id""".stripMargin,
+        |ORDER BY c.user_id, c.p_id""".stripMargin),
     // timed-out partials: the declarative twin — views with no same-key
     // purchase strictly after them within the 7-day window (boundary
     // INCLUSIVE: a purchase AT the deadline completes, per the matcher's
     // strict > expiry); deadline = view time + 7 days
-    "q_stream_cep_timeout" ->
+    Query("q_stream_cep_timeout", cepTimedOut,
       """WITH o AS (SELECT user_id, event_id, event_type,
         |            CAST(ts AS TIMESTAMP) AS t FROM events)
         |SELECT v.user_id, v.event_id AS v_id,
@@ -1427,8 +1429,8 @@ object StreamQueries {
         |  AND NOT EXISTS (SELECT 1 FROM o p
         |    WHERE p.user_id = v.user_id AND p.event_type = 'purchase'
         |      AND p.t > v.t AND p.t <= v.t + INTERVAL 7 DAY)
-        |ORDER BY v.user_id, v_id""".stripMargin,
-    "q_stream_cep_not" ->
+        |ORDER BY v.user_id, v_id""".stripMargin),
+    Query("q_stream_cep_not", cepNot,
       """WITH p AS (SELECT user_id, event_id AS p_id, CAST(ts AS TIMESTAMP) AS pt
         |           FROM events WHERE event_type = 'purchase'),
         |x AS (SELECT user_id, event_id AS x_id, event_type AS kind,
@@ -1441,8 +1443,8 @@ object StreamQueries {
         |       AND x.t > p.pt AND x.t <= p.pt + INTERVAL 7 DAY)
         |SELECT user_id, p_id, x_id AS v_id
         |FROM c WHERE rn = 1 AND kind = 'view'
-        |ORDER BY user_id, p_id""".stripMargin,
-    "q_stream_cep_relaxed" ->
+        |ORDER BY user_id, p_id""".stripMargin),
+    Query("q_stream_cep_relaxed", cepRelaxed,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |a AS (SELECT user_id, event_id AS a_id, t AS a_t FROM e WHERE event_type = 'view'),
@@ -1459,41 +1461,41 @@ object StreamQueries {
         | (SELECT min(event_id) FROM e c WHERE c.user_id = abc.user_id
         |   AND c.event_type = 'purchase' AND c.t = abc.c_t) AS c_id
         |FROM abc
-        |WHERE c_t IS NOT NULL ORDER BY abc.user_id, a_id""".stripMargin,
-    "q_stream_semi_join" ->
+        |WHERE c_t IS NOT NULL ORDER BY abc.user_id, a_id""".stripMargin),
+    Query("q_stream_semi_join", semiJoin,
       """SELECT user_id, event_id AS p_id FROM events e
         |WHERE event_type = 'purchase' AND EXISTS (
         |  SELECT 1 FROM events v WHERE v.event_type = 'view' AND v.user_id = e.user_id)
-        |ORDER BY user_id, p_id""".stripMargin,
-    "q_stream_anti_join" ->
+        |ORDER BY user_id, p_id""".stripMargin),
+    Query("q_stream_anti_join", antiJoin,
       """SELECT user_id, event_id AS p_id FROM events e
         |WHERE event_type = 'purchase' AND NOT EXISTS (
         |  SELECT 1 FROM events v WHERE v.event_type = 'view' AND v.user_id = e.user_id)
-        |ORDER BY user_id, p_id""".stripMargin,
-    "q_stream_count_win" ->
+        |ORDER BY user_id, p_id""".stripMargin),
+    Query("q_stream_count_win", countWindow,
       """WITH o AS (SELECT user_id, value,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id) - 1 AS rn FROM events)
         |SELECT user_id, rn // 5 AS win_id, count(*) AS cnt,
         |  round(sum(value), 2) AS sum_value
         |FROM o GROUP BY user_id, rn // 5 HAVING count(*) = 5
-        |ORDER BY user_id, win_id""".stripMargin,
-    "q_stream_tumble" ->
+        |ORDER BY user_id, win_id""".stripMargin),
+    Query("q_stream_tumble", StreamWindowAggs.tumble,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_stream_cascade" ->
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q_stream_cascade", StreamWindowAggs.cascade,
       """WITH h AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hs,
         |  count(*) AS cnt, sum(value) AS sv FROM events GROUP BY 1)
         |SELECT date_trunc('day', hs) AS d_start, CAST(sum(cnt) AS BIGINT) AS cnt,
         | round(sum(sv), 2) AS sum_value
-        |FROM h GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_stream_tumble_all" ->
+        |FROM h GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q_stream_tumble_all", StreamWindowAggs.tumbleAll,
       """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value,
         | round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_stream_session" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q_stream_session", StreamWindowAggs.session,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
         |m AS (SELECT user_id, t, value,
         |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
@@ -1502,24 +1504,24 @@ object StreamQueries {
         |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
         |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
         | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-    "q_stream_interval_join" ->
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    Query("q_stream_interval_join", StreamWindowAggs.intervalJoin,
       """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
         |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'purchase') p
         |JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
         |      WHERE event_type = 'view') v
         |  ON p.user_id = v.user_id AND v.t <= p.t AND v.t >= p.t - INTERVAL 1 HOUR
-        |ORDER BY p.user_id, p_id, v_id""".stripMargin,
-    "q_stream_dedup_last" ->
+        |ORDER BY p.user_id, p_id, v_id""".stripMargin),
+    Query("q_stream_dedup_last", dedupLast,
       """SELECT user_id, event_id, event_type FROM (
         | SELECT user_id, event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
     // the _ooo twins run the shuffled multi-batch replay; same oracle as
     // the ordered run — the hash match IS the order-independence proof
-    "q_stream_changelog_ooo" ->
+    Query("q_stream_changelog_ooo", changelogOoo,
       """WITH o AS (SELECT user_id, event_id,
         |  row_number() OVER w AS rn, count(*) OVER (PARTITION BY user_id) AS mx
         | FROM events
@@ -1528,8 +1530,8 @@ object StreamQueries {
         | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
         | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1
         | UNION ALL SELECT user_id, event_id, '-U' FROM o WHERE rn < mx)
-        |ORDER BY user_id, event_id, rowkind""".stripMargin,
-    "q_stream_dyn_session_ooo" ->
+        |ORDER BY user_id, event_id, rowkind""".stripMargin),
+    Query("q_stream_dyn_session_ooo", dynSessionOoo,
       """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
         |  CASE WHEN event_type = 'error' THEN INTERVAL 30 MINUTE
         |       ELSE INTERVAL 60 MINUTE END AS gap FROM events),
@@ -1541,52 +1543,52 @@ object StreamQueries {
         |  ROWS UNBOUNDED PRECEDING) AS sid FROM br)
         |SELECT user_id, min(t) AS w_start, count(*) AS cnt,
         | round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin,
-    "q_stream_over_rows_b_ooo" ->
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+    Query("q_stream_over_rows_b_ooo", overRowsBoundedOoo,
       """SELECT user_id, event_id,
         | count(*) OVER w AS w_cnt,
         | round(sum(value) OVER w, 4) AS w_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stream_over_range_b_ooo" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_stream_over_range_b_ooo", overRangeBoundedOoo,
       """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS t FROM events)
         |SELECT e.user_id, e.event_id, count(*) AS w_cnt, round(sum(x.value), 4) AS w_sum
         |FROM e JOIN e x ON x.user_id = e.user_id
         |  AND x.t >= e.t - INTERVAL 1 HOUR
         |  AND (x.t < e.t OR (x.t = e.t AND x.event_id <= e.event_id))
         |GROUP BY e.user_id, e.event_id
-        |ORDER BY e.user_id, e.event_id""".stripMargin,
-    "q_stream_topn_retract_ooo" ->
+        |ORDER BY e.user_id, e.event_id""".stripMargin),
+    Query("q_stream_topn_retract_ooo", topNRetractOoo,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
         |FROM (SELECT event_type, event_id, user_id, value,
         |  row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin,
-    "q_stream_dedup_last_ooo" ->
+        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+    Query("q_stream_dedup_last_ooo", dedupLastOoo,
       """SELECT user_id, event_id, event_type FROM (
         | SELECT user_id, event_id, event_type,
         |  row_number() OVER (PARTITION BY user_id
         |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_stream_topn_ooo" ->
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+    Query("q_stream_topn_ooo", topNOoo,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
         |FROM (SELECT event_type, event_id, user_id, value,
         |  row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin,
-    "q_stream_over_ooo" ->
+        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+    Query("q_stream_over_ooo", overOoo,
       """SELECT user_id, event_id,
         | count(*) OVER w AS run_cnt,
         | round(sum(value) OVER w, 4) AS run_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stream_cep_ooo" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_stream_cep_ooo", cepOoo,
       """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -1595,29 +1597,29 @@ object StreamQueries {
         | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
         |SELECT user_id, a_id, b_id, c_id FROM sq
         |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
-    "q_stream_topn_retract" ->
+        |ORDER BY user_id, a_id""".stripMargin),
+    Query("q_stream_topn_retract", topNRetract,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
         |FROM (SELECT event_type, event_id, user_id, value,
         |  row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin,
-    "q_stream_topn" ->
+        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+    Query("q_stream_topn", topN,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
         |FROM (SELECT event_type, event_id, user_id, value,
         |  row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin,
-    "q_stream_topn_range" ->
+        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+    Query("q_stream_topn_range", topNRange,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
         |FROM (SELECT event_type, event_id, user_id, value,
         |  row_number() OVER (PARTITION BY event_type
         |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn BETWEEN 2 AND 4 ORDER BY event_type, rn""".stripMargin,
-    "q_stream_connect" ->
+        |WHERE rn BETWEEN 2 AND 4 ORDER BY event_type, rn""".stripMargin),
+    Query("q_stream_connect", connect,
       """WITH p AS (SELECT user_id, event_id AS p_id, CAST(ts AS TIMESTAMP) AS pt
         |           FROM events WHERE event_type = 'purchase'),
         | e AS (SELECT user_id, event_id AS e_id, CAST(ts AS TIMESTAMP) AS et
@@ -1629,16 +1631,16 @@ object StreamQueries {
         |        AND e.et > p.pt AND e.et <= p.pt + INTERVAL 1 HOUR)
         |SELECT p.user_id, p.p_id, c.e_id
         |FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.p_id = p.p_id AND c.rn = 1
-        |ORDER BY p.user_id, p.p_id""".stripMargin,
-    "q_stream_over" ->
+        |ORDER BY p.user_id, p.p_id""".stripMargin),
+    Query("q_stream_over", over,
       """SELECT user_id, event_id,
         | count(*) OVER w AS run_cnt,
         | round(sum(value) OVER w, 4) AS run_sum
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q_stream_changelog" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q_stream_changelog", changelog,
       """WITH o AS (SELECT user_id, event_id,
         |  row_number() OVER w AS rn, count(*) OVER (PARTITION BY user_id) AS mx
         | FROM events
@@ -1647,8 +1649,8 @@ object StreamQueries {
         | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
         | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1
         | UNION ALL SELECT user_id, event_id, '-U' FROM o WHERE rn < mx)
-        |ORDER BY user_id, event_id, rowkind""".stripMargin,
-    "q_stream_cep" ->
+        |ORDER BY user_id, event_id, rowkind""".stripMargin),
+    Query("q_stream_cep", cep,
       """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
         |           FROM events),
         |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
@@ -1657,15 +1659,15 @@ object StreamQueries {
         | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
         |SELECT user_id, a_id, b_id, c_id FROM sq
         |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin,
+        |ORDER BY user_id, a_id""".stripMargin),
   )
 
   /** ooo replays converge to the ordered run's answer — same oracles. */
-  val sql: Map[String, String] = sqlBase ++ Map(
-    "q_stream_cep_not_ooo" -> sqlBase("q_stream_cep_not"),
-    "q_stream_cep_any_ooo" -> sqlBase("q_stream_cep_any"),
-    "q_stream_connect_ooo" -> sqlBase("q_stream_connect"),
-    "q_stream_hll" ->
+  val queries: Seq[Query] = baseQueries ++ Seq(
+    Query("q_stream_cep_not_ooo", cepNotOoo, Query.oracleOf(baseQueries, "q_stream_cep_not")),
+    Query("q_stream_cep_any_ooo", cepAnyOoo, Query.oracleOf(baseQueries, "q_stream_cep_any")),
+    Query("q_stream_connect_ooo", connectOoo, Query.oracleOf(baseQueries, "q_stream_connect")),
+    Query("q_stream_hll", streamHll,
       """WITH hh AS (SELECT event_type,
         |   ('0x'||substr(md5('u:'||user_id::VARCHAR),1,15))::UBIGINT::BIGINT AS h FROM events),
         |rr AS (SELECT event_type, h & 255 AS bucket,
@@ -1688,8 +1690,8 @@ object StreamQueries {
         |SELECT event_type, zero_regs, CAST(round(e) AS BIGINT) AS est_distinct,
         |  exact_distinct,
         |  round(abs(e - exact_distinct) / exact_distinct * 100, 2) AS err_pct
-        |FROM est JOIN ex USING (event_type) ORDER BY event_type""".stripMargin,
-    "q_stream_hll_window" ->
+        |FROM est JOIN ex USING (event_type) ORDER BY event_type""".stripMargin),
+    Query("q_stream_hll_window", streamHllWindow,
       """WITH hh AS (SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
         |   ('0x'||substr(md5('u:'||user_id::VARCHAR),1,15))::UBIGINT::BIGINT AS h FROM events),
         |rr AS (SELECT w_start, event_type, h & 255 AS bucket,
@@ -1714,5 +1716,5 @@ object StreamQueries {
         |  exact_distinct,
         |  round(abs(e - exact_distinct) / exact_distinct * 100, 2) AS err_pct
         |FROM est JOIN ex USING (w_start, event_type)
-        |ORDER BY w_start, event_type""".stripMargin)
+        |ORDER BY w_start, event_type""".stripMargin))
 }

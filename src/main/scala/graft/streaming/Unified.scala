@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Query, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,4 +49,11 @@ object Unified {
         "unified_pipeline", "append")
       .where(col("event_type") =!= "__sentinel")
       .orderBy("w_start", "event_type")
+
+  val queries: Seq[Query] = Seq(
+    Query("q_unified_pipeline", batchRun,
+      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
+        | count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+  )
 }

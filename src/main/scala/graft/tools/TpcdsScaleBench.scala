@@ -38,7 +38,7 @@ object TpcdsScaleBench {
       graft.tpcds.TpcdsData.ensure(spark, tag)
       val genSec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[tpcds-scale] generate+register $tag: $genSec%.1fs")
-      val names = SparkEntry.queries.keys.filter(_.startsWith("q_tpcdsr_")).toSeq.sorted
+      val names = graft.tpcds.TpcdsReal.queries.map(_.name).sorted
         .filter(n => only.forall(_.contains(n)))
       val results = names.map { n =>
         spark.catalog.clearCache()

@@ -824,8 +824,8 @@ object TpcdsData {
   private val generated = new graft.Once[String, Unit]
 
   /** DuckDB oracle prelude: CTEs binding each referenced table to the
-    * parquet the generator wrote (correctness scale path — static because
-    * SparkEntry.oracleSql is a static map). */
+    * parquet the generator wrote (correctness scale path — fixed because
+    * a catalog oracle is plain text, not a function of the testdata dir). */
   def duckPrelude(tables: Seq[String]): String =
     tables.map(t => s"$t AS (SELECT * FROM read_parquet('$OraclePath/$t/*.parquet'))")
       .mkString(", ")

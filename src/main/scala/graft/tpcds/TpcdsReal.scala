@@ -1,5 +1,6 @@
 package graft.tpcds
 
+import graft.Query
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's correctness flagship, re-created: real TPC-DS query
@@ -596,12 +597,8 @@ object TpcdsReal {
       s"WITH $prelude $t"
   }
 
-  /** SparkEntry wiring: q_tpcdsr_q1 -> runner. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    texts.keys.map { n =>
-      s"q_tpcdsr_$n" -> ((s: SparkSession, dir: String) => run(s, dir, n))
-    }.toMap
-
-  val oracles: Map[String, String] =
-    texts.keys.map(n => s"q_tpcdsr_$n" -> duck(n)).toMap
+  /** The catalog's q_tpcdsr_<n> queries: Catalyst runs each text as
+    * written, DuckDB runs it behind the prelude. */
+  val queries: Seq[Query] =
+    texts.keys.toSeq.map(n => Query(s"q_tpcdsr_$n", run(_, _, n), duck(n)))
 }

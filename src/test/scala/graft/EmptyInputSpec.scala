@@ -20,14 +20,25 @@ package graft
   */
 class EmptyInputSpec extends SparkSpec {
 
+  private val emptyRoot = s"/tmp/graft-empty/${System.nanoTime()}"
+
   private lazy val emptyDir: String = {
-    val dir = s"/tmp/graft-empty/${System.nanoTime()}"
     Tables.all.foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet").limit(0)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
+        .coalesce(1).write.mode("overwrite").parquet(s"$emptyRoot/$t.parquet")
     }
-    dir
+    emptyRoot
   }
+
+  /** The corpus and the dirs the cross-process caches keyed on its path:
+    * no later run reads them. */
+  override def afterAll(): Unit =
+    try {
+      val key = emptyRoot.replaceAll("[^A-Za-z0-9.]", "_")
+      Seq(emptyRoot, s"/tmp/graft-docstream/v3-$key", s"/tmp/graft-docstream/v3src-$key",
+        s"/tmp/graft-sentinel/$key")
+        .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    } finally super.afterAll()
 
   private val queries = Seq(
     // the 21 formerly-crashing queries

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import graft.plans.{AsOfPatternRule, AsOfStrategy}
 
 /** The three owners in GraftSession: the session factory, the idempotent
@@ -26,6 +30,41 @@ class GraftSessionSpec extends SparkSpec {
       assert(spark.conf.get(setKey) === "12345")
       assert(!spark.conf.getAll.contains(unsetKey))
     } finally spark.conf.unset(setKey)
+  }
+
+  test("overlapping withConf windows from two threads leave the key as it was") {
+    val s = spark.newSession()
+    val key = "spark.sql.shuffle.partitions"
+    val before = s.conf.get(key)
+    val bEntered = new CountDownLatch(1)
+    val aLeft = new CountDownLatch(1)
+    val seen = new ConcurrentLinkedQueue[(String, String)]
+    // A enters first and would leave while B is inside; without one lock
+    // per session B then restores A's value after A has restored its own
+    val a = new Thread(() => {
+      GraftSession.withConf(s, key -> "8") {
+        bEntered.await(1, TimeUnit.SECONDS)
+        seen.add("a" -> s.conf.get(key))
+      }
+      aLeft.countDown()
+    })
+    val b = new Thread(() => {
+      while (s.conf.get(key) != "8") Thread.sleep(1)
+      GraftSession.withConf(s, key -> "32") {
+        bEntered.countDown()
+        aLeft.await(1, TimeUnit.SECONDS)
+        seen.add("b" -> s.conf.get(key))
+      }
+    })
+    a.start(); b.start(); a.join(10000); b.join(10000)
+    assert(seen.asScala.toSet === Set("a" -> "8", "b" -> "32"), "each window sees only its own value")
+    assert(s.conf.get(key) === before)
+    // a nested window on the same thread re-enters the session's lock
+    GraftSession.withConf(s, key -> "8") {
+      GraftSession.withConf(s, key -> "32")(assert(s.conf.get(key) === "32"))
+      assert(s.conf.get(key) === "8")
+    }
+    assert(s.conf.get(key) === before)
   }
 
   test("install twice leaves one AsOf strategy and one AsOf rule") {
