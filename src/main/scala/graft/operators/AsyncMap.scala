@@ -136,15 +136,17 @@ object AsyncMap {
     }.toDF("event_id", "user_id", "segment").orderBy("event_id")
   }
 
+  /** Each event with its customer segment, UNKNOWN when none. */
+  val lookupJoinOracle: String =
+    """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
+        |FROM events LEFT JOIN customer ON c_custkey = user_id
+        |ORDER BY event_id""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("q_lookup_join", lookupJoin,
-      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
-        |FROM events LEFT JOIN customer ON c_custkey = user_id
-        |ORDER BY event_id""".stripMargin),
+      lookupJoinOracle),
     Query("q_lookup_join_async", lookupJoinAsync,
-      """SELECT event_id, user_id, coalesce(c_mktsegment, 'UNKNOWN') AS segment
-        |FROM events LEFT JOIN customer ON c_custkey = user_id
-        |ORDER BY event_id""".stripMargin),
+      lookupJoinOracle),
   )
 }
 

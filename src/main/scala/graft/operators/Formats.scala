@@ -239,6 +239,12 @@ object Formats {
         max(col("k")).as("max_k"))
       .orderBy("user_id")
 
+  /** Supplier count, first name and balance total per nation. */
+  val supplierByNationOracle: String =
+    """SELECT s_nationkey, count(*) AS cnt, min(s_name) AS first_name,
+        | round(sum(s_acctbal), 2) AS total
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("q_fmt_csv", csvRoundtrip,
       """SELECT n_regionkey, count(*) AS cnt, min(n_name) AS first_name
@@ -254,9 +260,7 @@ object Formats {
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
     Query("q_fmt_avro", avroRoundtrip,
-      """SELECT s_nationkey, count(*) AS cnt, min(s_name) AS first_name,
-        | round(sum(s_acctbal), 2) AS total
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+      supplierByNationOracle),
     Query("q_fmt_csv_quirks", csvQuirks,
       """SELECT n_regionkey, count(*) AS cnt,
         | min(n_name || ',"q"' || chr(10) || 'L2') AS first_tricky,
@@ -267,9 +271,7 @@ object Formats {
         | max(s_suppkey) AS max_key, round(sum(s_acctbal), 2) AS total
         |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
     Query("q_fmt_seqfile", sequenceFileRoundtrip,
-      """SELECT s_nationkey, count(*) AS cnt, min(s_name) AS first_name,
-        | round(sum(s_acctbal), 2) AS total
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+      supplierByNationOracle),
     Query("q_fmt_gzip", gzipRoundtrip,
       """SELECT c_mktsegment, count(*) AS cnt, round(sum(c_acctbal), 2) AS total
         |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),

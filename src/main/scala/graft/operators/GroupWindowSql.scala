@@ -562,6 +562,14 @@ object GroupWindowSql {
       .orderBy("user_id", "w_start")
   }
 
+  /** Daily tumbling windows with their window_time. */
+  val windowTimeOracle: String =
+    """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
+        | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
+        |   - INTERVAL 1 MILLISECOND AS w_time,
+        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin
+
   /** DuckDB oracles — same derivations as the API-path window oracles.
     * The TVF queries share the group-window oracles verbatim: FLIP-145 is
     * new syntax over identical window semantics. */
@@ -577,18 +585,10 @@ object GroupWindowSql {
     // window_time = window_end − 1ms, derived the same way the oracle
     // derives *_ROWTIME elsewhere (q_sql_cascade's inner hour)
     Query("q_sql_tvf_window_time", tvfWindowTime,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
-        | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
-        |   - INTERVAL 1 MILLISECOND AS w_time,
-        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin),
+      windowTimeOracle),
     // streaming twin: identical window arithmetic over the same rows
     Query("q_sql_tvf_stream_window_time", tvfStreamWindowTime,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start,
-        | date_trunc('day', CAST(ts AS TIMESTAMP)) + INTERVAL 1 DAY
-        |   - INTERVAL 1 MILLISECOND AS w_time,
-        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 3""".stripMargin),
+      windowTimeOracle),
     // HOP window_time = each sliding window's end − 1ms (the q_sql_hop
     // derivation, end = start + 1 day)
     Query("q_sql_tvf_hop_time", tvfHopTime,
@@ -632,54 +632,18 @@ object GroupWindowSql {
         | CAST(sum(cnt) AS BIGINT) AS cnt, round(sum(sv), 2) AS sum_value
         |FROM h GROUP BY 1 ORDER BY 1""".stripMargin),
     Query("q_sql_tumble", tumble,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      graft.WindowOracles.tumbleOracle),
     Query("q_sql_hop", hop,
-      """WITH e AS (SELECT event_type, value,
-        |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
-        | FROM events)
-        |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+      graft.WindowOracles.hopOracle),
     Query("q_sql_stream_tumble", streamTumble,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      graft.WindowOracles.tumbleOracle),
     Query("q_sql_stream_hop", streamHop,
-      """WITH e AS (SELECT event_type, value,
-        |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
-        | FROM events)
-        |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+      graft.WindowOracles.hopOracle),
     Query("q_sql_stream_session", streamSession,
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
-        |m AS (SELECT user_id, t, value,
-        |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
-        |       THEN 0 ELSE 1 END AS brk FROM e),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-        |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+      graft.WindowOracles.sessionOracle),
     Query("q_sql_cumulate", cumulate,
-      """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
-        |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
-        |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
-        |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
-        |SELECT day AS w_start, make_timestamp(epoch_us(day) + k * 21600000000) AS w_end,
-        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+      graft.WindowOracles.cumulateOracle),
     Query("q_sql_session", session,
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
-        |m AS (SELECT user_id, t, value,
-        |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
-        |       THEN 0 ELSE 1 END AS brk FROM e),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-        |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+      graft.WindowOracles.sessionOracle),
   )
 }

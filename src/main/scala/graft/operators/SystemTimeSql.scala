@@ -165,12 +165,6 @@ object SystemTimeSql {
         |  ON p.user_id = v.user_id AND v.t <= p.t
         |ORDER BY p.user_id, p_id""".stripMargin),
     Query("q_sql_system_time", systemTimeJoin,
-      """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
-        |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
-        |      WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
-        |      WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND v.t <= p.t
-        |ORDER BY p.user_id, p_id""".stripMargin),
+      graft.WindowOracles.asOfOracle),
   )
 }

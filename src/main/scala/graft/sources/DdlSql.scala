@@ -655,6 +655,11 @@ object DdlSql {
       .orderBy("user_id", "event_type")
   }
 
+  /** Row count and value total per event_type. */
+  val eventTypeTotalsOracle: String =
+    """SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("q_ddl_hive_udf", ddlHiveUdf,
       """SELECT p_size, bin(CAST(p_size AS BIGINT)) AS bin_size,
@@ -669,8 +674,7 @@ object DdlSql {
         | FROM events) t WHERE rn = 1
         |ORDER BY user_id, event_type""".stripMargin),
     Query("q_ddl_alter", ddlAlter,
-      """SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      eventTypeTotalsOracle),
     Query("q_ddl_function", ddlFunction,
       """SELECT p_brand,
         | CAST(coalesce(sum(CASE WHEN regexp_full_match(p_type, '[0-9]+')
@@ -694,16 +698,10 @@ object DdlSql {
         |WHERE date_trunc('day', t) + INTERVAL 1 DAY <= mt - INTERVAL 10 SECOND
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     Query("q_ddl_dedup", ddlDedup,
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+      graft.streaming.StreamQueries.dedupLastOracle),
     Query("q_ddl_view", ddlView,
-      """SELECT event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      eventTypeTotalsOracle),
     Query("q_ddl_use", ddlUse,
-      """SELECT n_regionkey, count(*) AS cnt, min(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin),
+      Query.oracleOf(graft.operators.Formats.queries, "q_fmt_csv")),
   )
 }

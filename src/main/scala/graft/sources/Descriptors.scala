@@ -96,10 +96,6 @@ object Descriptors {
 
   val queries: Seq[Query] = Seq(
     Query("q_descriptor_dedup", eventsByUser,
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+      graft.streaming.StreamQueries.dedupLastOracle),
   )
 }

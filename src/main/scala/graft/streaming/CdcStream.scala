@@ -92,9 +92,6 @@ object CdcStream {
 
   val queries: Seq[Query] = Seq(
     Query("q_cdc_stream", debeziumStream,
-      s"""${CdcFormats.duckFinalStateSql}
-         |SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS cnt,
-         |  round(sum(o_totalprice), 2) AS total
-         |FROM fin GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+      Query.oracleOf(graft.sources.CdcFormats.queries, "q_cdc_materialize")),
   )
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * shared-buffer NFA and are a later-round stretch.
   *
   * State per key: L-1 events — O(1). Event-time order within batch is
-  * enforced by sorting the group iterator; compose with
-  * StatefulOps.temporalSort for out-of-order input.
+  * enforced by sorting the group iterator; run a matcher's step inside the
+  * watermark sorter (StatefulOps.sortedThen) for out-of-order input.
   */
 object Cep {
 
@@ -352,13 +352,11 @@ object Cep {
                       anchorStart: Boolean = false,
                       anchorEnd: Boolean = false): Dataset[Match] = {
     // Append: every match emits exactly once and is never revised
-    val timeoutConf = if (eventTimeFlush) GroupStateTimeout.EventTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepBuffer, Match](OutputMode.Append(), timeoutConf)(
-        matcherFn(alts, skip, quiesceMs, eventTimeFlush, withinMicros, group,
-          bounded, anchorStart, anchorEnd))
+    KeyedStep[CepBuffer, Match](
+      matcherFn(alts, skip, quiesceMs, eventTimeFlush, withinMicros, group,
+        bounded, anchorStart, anchorEnd),
+      timeout = if (eventTimeFlush) GroupStateTimeout.EventTimeTimeout()
+                else GroupStateTimeout.NoTimeout()).run(ds)
   }
 
   /** The matcher's per-key function (see [[matchRecognize]]). */
@@ -693,13 +691,10 @@ object Cep {
     * watermark-driven timeout path. */
   def matchRelaxedTimedOut(ds: Dataset[Event], steps: Seq[Event => Boolean],
                            withinMs: Long): Dataset[Match] = {
-    import ds.sparkSession.implicits._
     val L = steps.length
     val withinMicros = withinMs * 1000L
     require(L >= 2)
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[NfaState, Match](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+    KeyedStep[NfaState, Match]({
         (key: Long, rows: Iterator[Event], state: GroupState[NfaState]) =>
           var partials = state.getOption.map(_.partials.toList).getOrElse(Nil)
           val out = scala.collection.mutable.ArrayBuffer.empty[Match]
@@ -742,7 +737,7 @@ object Cep {
               math.max(nextDeadlineMs + 1, state.getCurrentWatermarkMs() + 1))
           }
           out.iterator
-      }
+      }, timeout = GroupStateTimeout.EventTimeTimeout()).run(ds)
   }
 
   def matchRelaxed(ds: Dataset[Event], steps: Seq[Event => Boolean],

@@ -2768,14 +2768,6 @@ object MatchRecognizeSql extends Serializable {
         |  AND t2 - t0 <= INTERVAL 1 DAY
         |ORDER BY user_id, a_id""".stripMargin),
     Query("q_sql_match_strict", matchStrict,
-      """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
-        |           FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id, c_id FROM sq
-        |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
+      StreamQueries.cepStrictOracle),
   )
 }

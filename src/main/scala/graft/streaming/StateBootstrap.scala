@@ -266,19 +266,21 @@ object StateBootstrap {
   def rescaleContinue(s: SparkSession, dir: String): DataFrame =
     rescaleRun(s, dir)._1
 
+  /** Row count and value total per user. */
+  val userTotalsOracle: String =
+    """SELECT user_id, count(*) AS cnt,
+        | round(sum(value), 4) AS total
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin
+
   val queries: Seq[Query] = Seq(
     // the ENTIRE table, no cutoff: only a lossless batch→stream state
     // handoff reproduces it
     Query("q_state_bootstrap", bootstrapContinue,
-      """SELECT user_id, count(*) AS cnt,
-        | round(sum(value), 4) AS total
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+      userTotalsOracle),
     // rescale invariant: identical whole-table totals — green only if the
     // 8-partition savepoint redistributed losslessly into 32 stores
     Query("q_state_rescale", rescaleContinue,
-      """SELECT user_id, count(*) AS cnt,
-        | round(sum(value), 4) AS total
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+      userTotalsOracle),
     // the TRANSFORM contract: erased users (% 10 = 0) keep only their
     // post-cutoff events (their accumulated history was deleted from the
     // savepoint); everyone else aggregates the whole table. The cutoff is

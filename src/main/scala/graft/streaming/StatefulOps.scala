@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom stateful streaming operators (SURVEY.md §7.1 "custom stateful
-  * operators" — the capabilities Spark lacks as built-ins, re-expressed as
-  * `flatMapGroupsWithState` functions over `KeyValueGroupedDataset`).
+  * operators" — the capabilities Spark lacks as built-ins). Each one is only
+  * a step body, a [[KeyedOp]] (a [[KeyedStep]] when keyed by user_id); a
+  * state with collections is held as codec bytes, and `KeyedOp.run` and
+  * [[sortedThen]] are the only places that call `flatMapGroupsWithState`.
   *
   * Reference analogs:
   *  - keepLast       → operators/deduplicate/ProcTimeDeduplicateKeepLastRowFunction.java
@@ -23,15 +25,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * micro-batch (we sort the group iterator); cross-batch order relies on the
   * source replaying in order, which holds for file replay and ordered test
   * feeds. Full out-of-order safety buffers rows until the watermark passes
-  * them (EventTimeTimeout + state buffer), at the cost of latency. The
-  * user_id-keyed operators are [[KeyedStep]]s, so `sortedThen` runs the
-  * watermark sorter and the operator as ONE stateful operator, with one
-  * shuffle and one state store per partition. Only the operators keyed by
-  * event_type (topNVersioned, topNChangelog) still run as a second
-  * operator after `sortedEvents`, behind a second shuffle.
+  * them (EventTimeTimeout + state buffer), at the cost of latency: that
+  * is [[sortedThen]], which runs the watermark sorter and a user_id-keyed
+  * step as ONE stateful operator, with one shuffle and one state store per
+  * partition. Only the operators keyed by event_type (topNVersioned,
+  * topNChangelog) still run as a second operator after `sortedEvents`,
+  * behind a second shuffle.
   *
   * Scale: state per key is O(1) (keepLast, runningAgg), O(N) (topN) or
-  * O(unflushed window) (temporalSort) — all bounded; keys shard across
+  * O(unflushed window) (the sorter) — all bounded; keys shard across
   * executors by groupByKey hash, the same keyed-state sharding the
   * reference uses.
   */
@@ -43,7 +45,15 @@ object StatefulOps {
   private[streaming] def micros(t: java.sql.Timestamp): Long =
     (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
 
-  private def ord(e: Event): (Long, Long) = (micros(e.ts), e.event_id)
+  /** The Timestamp of an event time in microseconds; inverse of [[micros]]. */
+  private[streaming] def tsOfMicros(m: Long): java.sql.Timestamp = {
+    val t = new java.sql.Timestamp(m / 1000L)
+    t.setNanos(((m % 1000000L) * 1000L).toInt)
+    t
+  }
+
+  /** A row's (event time, event_id) order. */
+  private[streaming] def ord(e: Event): (Long, Long) = (micros(e.ts), e.event_id)
 
   /** Keep-last-row-per-key dedup. Emits the new latest row for a key
     * whenever it changes — each emission is an immutable "the latest
@@ -70,31 +80,19 @@ object StatefulOps {
     * row arriving after its key expired is treated as new, even if an
     * older version preceded it. At 100 TB of keys this bound is what
     * keeps the state store finite. */
-  def keepLastWithTtl(ds: Dataset[Event], ttlMs: Long): Dataset[Event] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Event, Event](
-        OutputMode.Update(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rows: Iterator[Event], state: GroupState[Event]) =>
-          if (state.hasTimedOut) {
-            // idle horizon passed: forget the key entirely
-            state.remove()
-            Iterator.empty
-          } else {
-            val latestIn = rows.maxBy(ord)
-            val cur = state.getOption
-            val out =
-              if (cur.isEmpty || Ordering[(Long, Long)].gt(ord(latestIn), ord(cur.get))) {
-                state.update(latestIn)
-                Iterator.single(latestIn)
-              } else Iterator.empty
-            val lastMs = micros(state.get.ts) / 1000L
-            state.setTimeoutTimestamp(
-              math.max(lastMs + ttlMs, state.getCurrentWatermarkMs() + 1))
-            out
-          }
+  def keepLastWithTtl(ds: Dataset[Event], ttlMs: Long): Dataset[Event] =
+    KeyedStep[Event, Event]({ (key, rows, state) =>
+      if (state.hasTimedOut) {
+        // idle horizon passed: forget the key entirely
+        state.remove()
+        Iterator.empty
+      } else {
+        val out = keepLastStep.fn(key, rows, state)
+        val lastMs = micros(state.get.ts) / 1000L
+        state.setTimeoutTimestamp(math.max(lastMs + ttlMs, state.getCurrentWatermarkMs() + 1))
+        out
       }
-  }
+    }, timeout = GroupStateTimeout.EventTimeTimeout()).run(ds, OutputMode.Update())
 
   case class Ranked(event_type: String, rank: Int, event_id: Long,
                     user_id: Long, value: Double)
@@ -103,21 +101,11 @@ object StatefulOps {
     * Each batch emits the key's full current top-N (update semantics: the
     * sink's last emission per key is the answer; the reference's retract
     * variant maps to changelogNormalize-style -U/+U emission). */
-  def topN(ds: Dataset[Event], n: Int): Dataset[Ranked] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[List[Event], Ranked](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Event], state: GroupState[List[Event]]) =>
-          val merged = (state.getOption.getOrElse(Nil) ++ rows)
-            .sortBy(e => (-e.value, e.event_id))
-            .take(n)
-          state.update(merged)
-          merged.iterator.zipWithIndex.map { case (e, i) =>
-            Ranked(key, i + 1, e.event_id, e.user_id, e.value)
-          }
-      }
-  }
+  def topN(ds: Dataset[Event], n: Int): Dataset[Ranked] = topNRange(ds, 1, n)
+
+  /** The top `n` of a key's held and new rows by (value desc, event_id). */
+  private def top(held: List[Event], rows: Iterator[Event], n: Int): List[Event] =
+    (held ++ rows).sortBy(e => (-e.value, e.event_id)).take(n)
 
   /** Top-N with a rank RANGE — `WHERE rn BETWEEN rankStart AND rankEnd`
     * (ref operators/rank/AbstractTopNFunction.java: the reference plans any
@@ -126,22 +114,16 @@ object StatefulOps {
     * prefix is required to know which rows occupy ranks < rankStart — but
     * only ranks inside the range emit. Update semantics like [[topN]]. */
   def topNRange(ds: Dataset[Event], rankStart: Int, rankEnd: Int): Dataset[Ranked] = {
-    import ds.sparkSession.implicits._
     require(1 <= rankStart && rankStart <= rankEnd,
       s"invalid rank range [$rankStart, $rankEnd]")
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[List[Event], Ranked](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Event], state: GroupState[List[Event]]) =>
-          val merged = (state.getOption.getOrElse(Nil) ++ rows)
-            .sortBy(e => (-e.value, e.event_id))
-            .take(rankEnd)
-          state.update(merged)
-          merged.iterator.zipWithIndex.collect {
-            case (e, i) if i + 1 >= rankStart =>
-              Ranked(key, i + 1, e.event_id, e.user_id, e.value)
-          }
+    KeyedOp[String, Event, List[Event], Ranked](_.event_type) { (key, rows, state) =>
+      val merged = top(state.getOption.getOrElse(Nil), rows, rankEnd)
+      state.update(merged)
+      merged.iterator.zipWithIndex.collect {
+        case (e, i) if i + 1 >= rankStart =>
+          Ranked(key, i + 1, e.event_id, e.user_id, e.value)
       }
+    }.run(ds, OutputMode.Update())
   }
 
   case class RankedVer(event_type: String, rank: Int, event_id: Long,
@@ -154,23 +136,16 @@ object StatefulOps {
     * can chain after sortedEvents (all-append rule). The consumer keeps
     * each key's max-ver generation (the same upsert fold the update-mode
     * topN delegates to the memory sink). */
-  def topNVersioned(ds: Dataset[Event], n: Int): Dataset[RankedVer] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[TopNVerState, RankedVer](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Event], state: GroupState[TopNVerState]) =>
-          val st = state.getOption.getOrElse(TopNVerState(Nil, 0L))
-          val merged = (st.rows ++ rows)
-            .sortBy(e => (-e.value, e.event_id))
-            .take(n)
-          val ver = st.ver + 1
-          state.update(TopNVerState(merged, ver))
-          merged.iterator.zipWithIndex.map { case (e, i) =>
-            RankedVer(key, i + 1, e.event_id, e.user_id, e.value, ver)
-          }
+  def topNVersioned(ds: Dataset[Event], n: Int): Dataset[RankedVer] =
+    KeyedOp[String, Event, TopNVerState, RankedVer](_.event_type) { (key, rows, state) =>
+      val st = state.getOption.getOrElse(TopNVerState(Nil, 0L))
+      val merged = top(st.rows, rows, n)
+      val ver = st.ver + 1
+      state.update(TopNVerState(merged, ver))
+      merged.iterator.zipWithIndex.map { case (e, i) =>
+        RankedVer(key, i + 1, e.event_id, e.user_id, e.value, ver)
       }
-  }
+    }.run(ds)
 
   case class RankedChange(event_type: String, rank: Int, event_id: Long,
                           user_id: Long, value: Double, rowkind: String)
@@ -181,32 +156,27 @@ object StatefulOps {
     * occupied rank, -D for a vacated one. Consumers fold the changelog
     * (net > 0 per (key, rank, event_id)) to the current ranking; a sink
     * keyed on (key, rank) can apply it as upserts/deletes directly. */
-  def topNChangelog(ds: Dataset[Event], n: Int): Dataset[RankedChange] = {
-    import ds.sparkSession.implicits._
+  def topNChangelog(ds: Dataset[Event], n: Int): Dataset[RankedChange] =
     // -U/+U/-D/+I rows are immutable change facts (the consumer folds
     // net>0) — APPEND mode, chainable after sortedEvents
-    ds.groupByKey(_.event_type)
-      .flatMapGroupsWithState[List[Event], RankedChange](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[Event], state: GroupState[List[Event]]) =>
-          val old = state.getOption.getOrElse(Nil)
-          val cur = (old ++ rows).sortBy(e => (-e.value, e.event_id)).take(n)
-          state.update(cur)
-          val out = scala.collection.mutable.ArrayBuffer.empty[RankedChange]
-          def chg(e: Event, r: Int, kind: String): RankedChange =
-            RankedChange(key, r + 1, e.event_id, e.user_id, e.value, kind)
-          (0 until math.max(old.size, cur.size)).foreach { r =>
-            (old.lift(r), cur.lift(r)) match {
-              case (Some(o), Some(nw)) if o.event_id == nw.event_id => ()
-              case (Some(o), Some(nw)) => out += chg(o, r, "-U") += chg(nw, r, "+U")
-              case (None, Some(nw))    => out += chg(nw, r, "+I")
-              case (Some(o), None)     => out += chg(o, r, "-D")
-              case _ => ()
-            }
-          }
-          out.iterator
+    KeyedOp[String, Event, List[Event], RankedChange](_.event_type) { (key, rows, state) =>
+      val old = state.getOption.getOrElse(Nil)
+      val cur = top(old, rows, n)
+      state.update(cur)
+      val out = scala.collection.mutable.ArrayBuffer.empty[RankedChange]
+      def chg(e: Event, r: Int, kind: String): RankedChange =
+        RankedChange(key, r + 1, e.event_id, e.user_id, e.value, kind)
+      (0 until math.max(old.size, cur.size)).foreach { r =>
+        (old.lift(r), cur.lift(r)) match {
+          case (Some(o), Some(nw)) if o.event_id == nw.event_id => ()
+          case (Some(o), Some(nw)) => out += chg(o, r, "-U") += chg(nw, r, "+U")
+          case (None, Some(nw))    => out += chg(nw, r, "+I")
+          case (Some(o), None)     => out += chg(o, r, "-D")
+          case _ => ()
+        }
       }
-  }
+      out.iterator
+    }.run(ds)
 
   case class Running(user_id: Long, event_id: Long, run_cnt: Long, run_sum: Double)
   case class AggState(cnt: Long, sum: Double)
@@ -320,34 +290,24 @@ object StatefulOps {
 
   /** Proc-time dedup keep-FIRST: one emission per key, the first row to
     * ARRIVE; later rows are dropped without inspecting event time. */
-  def procTimeDedupKeepFirst(ds: Dataset[Event]): Dataset[Event] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Boolean, Event](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[Event], state: GroupState[Boolean]) =>
-          if (state.getOption.contains(true) || !rows.hasNext) Iterator.empty
-          else { state.update(true); Iterator.single(rows.next()) }
-      }
-  }
+  def procTimeDedupKeepFirst(ds: Dataset[Event]): Dataset[Event] =
+    KeyedStep[Boolean, Event] { (_, rows, state) =>
+      if (state.getOption.contains(true) || !rows.hasNext) Iterator.empty
+      else { state.update(true); Iterator.single(rows.next()) }
+    }.run(ds)
 
   /** Proc-time unbounded OVER: running count/sum in arrival order (no
     * per-batch event-time sort — contrast runningAgg above). */
-  def procTimeRunningAgg(ds: Dataset[Event]): Dataset[Running] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[AggState, Running](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[AggState]) =>
-          var st = state.getOption.getOrElse(AggState(0L, 0.0))
-          val out = rows.map { e =>
-            st = AggState(st.cnt + 1, st.sum + e.value)
-            Running(key, e.event_id, st.cnt, st.sum)
-          }.toList
-          state.update(st)
-          out.iterator
-      }
-  }
+  def procTimeRunningAgg(ds: Dataset[Event]): Dataset[Running] =
+    KeyedStep[AggState, Running] { (key, rows, state) =>
+      var st = state.getOption.getOrElse(AggState(0L, 0.0))
+      val out = rows.map { e =>
+        st = AggState(st.cnt + 1, st.sum + e.value)
+        Running(key, e.event_id, st.cnt, st.sum)
+      }.toList
+      state.update(st)
+      out.iterator
+    }.run(ds)
 
   case class ProcJoinOut(user_id: Long, p_id: Long, v_id: Option[Long])
 
@@ -358,23 +318,17 @@ object StatefulOps {
     * is kept, so a probe can never see a build row that arrives later
     * even if its event time is earlier. State per key: one build row. */
   def procTimeTemporalJoin(ds: Dataset[Event], probeType: String,
-                           buildType: String): Dataset[ProcJoinOut] = {
-    import ds.sparkSession.implicits._
-    ds.filter(e => e.event_type == probeType || e.event_type == buildType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, ProcJoinOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[Long]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[ProcJoinOut]
-          var cur = state.getOption
-          rows.foreach { e =>
-            if (e.event_type == buildType) cur = Some(e.event_id)
-            else out += ProcJoinOut(key, e.event_id, cur)
-          }
-          cur.foreach(state.update)
-          out.iterator
+                           buildType: String): Dataset[ProcJoinOut] =
+    KeyedStep[Long, ProcJoinOut]({ (key, rows, state) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[ProcJoinOut]
+      var cur = state.getOption
+      rows.foreach { e =>
+        if (e.event_type == buildType) cur = Some(e.event_id)
+        else out += ProcJoinOut(key, e.event_id, cur)
       }
-  }
+      cur.foreach(state.update)
+      out.iterator
+    }, keep = Some(e => e.event_type == probeType || e.event_type == buildType)).run(ds)
 
   case class ValChange(user_id: Long, event_id: Long, event_type: String,
                        value: Double, rowkind: String, seq: Long)
@@ -386,29 +340,24 @@ object StatefulOps {
     * consume the changelog (ref StreamExecChangelogNormalize emitting
     * RowKind-tagged full rows, not just keys). Append output is what lets
     * the retractable aggregate chain after it in one query. */
-  def valueChangelog(ds: Dataset[Event]): Dataset[ValChange] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastVal, ValChange](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[LastVal]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[ValChange]
-          var cur = state.getOption
-          rows.toSeq.sortBy(ord).foreach { e =>
-            val m = micros(e.ts)
-            cur match {
-              case None =>
-                out += ValChange(key, e.event_id, e.event_type, e.value, "+I", m)
-              case Some(p) =>
-                out += ValChange(key, p.event_id, p.event_type, p.value, "-U", p.ts)
-                out += ValChange(key, e.event_id, e.event_type, e.value, "+U", m)
-            }
-            cur = Some(LastVal(m, e.event_id, e.event_type, e.value))
-          }
-          cur.foreach(state.update)
-          out.iterator
+  def valueChangelog(ds: Dataset[Event]): Dataset[ValChange] =
+    KeyedStep[LastVal, ValChange] { (key, rows, state) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[ValChange]
+      var cur = state.getOption
+      rows.toSeq.sortBy(ord).foreach { e =>
+        val m = micros(e.ts)
+        cur match {
+          case None =>
+            out += ValChange(key, e.event_id, e.event_type, e.value, "+I", m)
+          case Some(p) =>
+            out += ValChange(key, p.event_id, p.event_type, p.value, "-U", p.ts)
+            out += ValChange(key, e.event_id, e.event_type, e.value, "+U", m)
+        }
+        cur = Some(LastVal(m, e.event_id, e.event_type, e.value))
       }
-  }
+      cur.foreach(state.update)
+      out.iterator
+    }.run(ds)
 
   case class RetractAggOut(event_type: String, cnt: Long, sum_value: Double,
                            min_value: Double, max_value: Double, ver: Long)
@@ -426,40 +375,30 @@ object StatefulOps {
     * Emits the group's refreshed aggregate once per batch tagged with a
     * monotone change version; the consumer keeps each group's max-version
     * row (upsert fold). State per group: one entry per DISTINCT live value. */
-  def retractableAgg(changes: Dataset[ValChange]): Dataset[RetractAggOut] = {
-    import changes.sparkSession.implicits._
-    changes.groupByKey(_.event_type)
-      .flatMapGroupsWithState[RetractAggState, RetractAggOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[ValChange], state: GroupState[RetractAggState]) =>
-          var st = state.getOption.getOrElse(RetractAggState(0L, 0.0, Map.empty, 0L))
-          rows.foreach { c =>
-            val retract = c.rowkind == "-U" || c.rowkind == "-D"
-            val d = if (retract) -1L else 1L
-            val nc = st.counts.getOrElse(c.value, 0L) + d
-            val counts = if (nc == 0L) st.counts - c.value
-                         else st.counts + (c.value -> nc)
-            st = RetractAggState(st.cnt + d,
-              if (retract) st.sum - c.value else st.sum + c.value,
-              counts, st.changes + 1)
-          }
-          state.update(st)
-          if (st.cnt > 0) {
-            val live = st.counts.collect { case (v, n) if n > 0 => v }
-            Iterator.single(RetractAggOut(key, st.cnt, st.sum,
-              live.min, live.max, st.changes))
-          } else Iterator.empty
-      }
-  }
+  def retractableAgg(changes: Dataset[ValChange]): Dataset[RetractAggOut] =
+    KeyedOp[String, ValChange, RetractAggState, RetractAggOut](_.event_type) {
+      (key, rows, state) =>
+        var st = state.getOption.getOrElse(RetractAggState(0L, 0.0, Map.empty, 0L))
+        rows.foreach { c =>
+          val retract = c.rowkind == "-U" || c.rowkind == "-D"
+          val d = if (retract) -1L else 1L
+          val nc = st.counts.getOrElse(c.value, 0L) + d
+          val counts = if (nc == 0L) st.counts - c.value
+                       else st.counts + (c.value -> nc)
+          st = RetractAggState(st.cnt + d,
+            if (retract) st.sum - c.value else st.sum + c.value,
+            counts, st.changes + 1)
+        }
+        state.update(st)
+        if (st.cnt > 0) {
+          val live = st.counts.collect { case (v, n) if n > 0 => v }
+          Iterator.single(RetractAggOut(key, st.cnt, st.sum,
+            live.min, live.max, st.changes))
+        } else Iterator.empty
+    }.run(changes)
 
   case class SessOut(user_id: Long, w_start: java.sql.Timestamp, cnt: Long, sum_value: Double)
   case class SessState(startMicros: Long, endMicros: Long, cnt: Long, sum: Double)
-
-  private def tsOfMicros(m: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(m / 1000L)
-    t.setNanos(((m % 1000000L) * 1000L).toInt)
-    t
-  }
 
   /** Session windows with a PER-EVENT gap (ref: dynamic-gap session
     * assigner, SessionWindowTimeGapExtractor): each event extends its
@@ -567,13 +506,16 @@ object StatefulOps {
     * set of state stores instead of two:
     *  - the timeout is set at the earliest held row's time;
     *  - the step runs only when a released row passes its `keep`, and it
-    *    never sees a timeout or the watermark;
+    *    never sees a timeout or the watermark (its [[StepState]] refuses
+    *    both, and a step declared with a timeout is rejected up front);
     *  - a key's state is removed only when it holds no rows and the step
     *    holds no state.
     * Being the query's only stateful operator, it also passes Spark's
     * global-watermark correctness check, which the two-operator form trips
     * (the sorter emits rows older than the watermark by design). */
   def sortedThen[S, O](ds: Dataset[Event], delay: String)(step: KeyedStep[S, O]): Dataset[O] = {
+    require(step.timeout == GroupStateTimeout.NoTimeout(),
+      "a step chained after the watermark sorter runs without timeouts")
     val fn = step.fn
     val keep = step.keep
     val codec = new StateCodec(step.stateEnc)
@@ -642,11 +584,11 @@ object StatefulOps {
           val out =
             if (!input.hasNext) Vector.empty[O]
             else {
-              val st = new StepState(codec, stepState, state)
+              val st = new StepState(codec, Option(stepState), state, chained = true)
               // drain the output before reading the step's state back: a
               // step may update its state lazily, as its output is consumed
               val o = fn(key, input, st).toVector
-              stepState = st.bytes
+              stepState = st.stored.orNull
               o
             }
           if (held == null && stepState == null) state.remove()
@@ -661,38 +603,22 @@ object StatefulOps {
   /** The watermark sorter on its own: [[sortedThen]] with a step that emits
     * the released rows unchanged. A stateful operator keyed by anything but
     * user_id (the topN family, keyed by event_type) still follows it as a
-    * second operator, behind a second shuffle; one keyed by user_id belongs
-    * in the sorter's own operator, through sortedThen. */
+    * second operator, behind a second shuffle, run by
+    * `StreamSource.runToTableChained`; one keyed by user_id belongs in the
+    * sorter's own operator, through sortedThen. */
   def sortedEvents(ds: Dataset[Event], delay: String = "10 minutes"): Dataset[Event] =
     sortedThen(ds, delay)(KeyedStep.passThrough)
 
   case class SortedOut(user_id: Long, event_id: Long, ts: java.sql.Timestamp)
-  case class SortBuf(rows: List[(Long, Long)]) // (tsMillis, event_id)
 
   /** Temporal sort (ref StreamExecTemporalSort): buffer out-of-order rows
-    * per key and emit them in event-time order once the watermark passes.
-    * EventTimeTimeout + state buffer — the production-grade ordering
-    * pattern the eager operators above trade away for latency. Rows at or
-    * beyond the final watermark stay buffered (correct for unbounded
-    * semantics; tests advance the watermark with a sentinel to drain). */
-  def temporalSort(ds: Dataset[Event]): Dataset[SortedOut] = {
-    import ds.sparkSession.implicits._
-    ds.withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SortBuf, SortedOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[SortBuf]) =>
-          val wm = state.getCurrentWatermarkMs()
-          val buf = state.getOption.map(_.rows).getOrElse(Nil) ++
-            rows.map(e => (e.ts.getTime, e.event_id))
-          val (ripe, hold) = buf.partition(_._1 <= wm)
-          if (hold.nonEmpty) {
-            state.update(SortBuf(hold))
-            state.setTimeoutTimestamp(hold.map(_._1).min)
-          } else state.remove()
-          ripe.sorted.iterator.map { case (t, id) =>
-            SortedOut(key, id, new java.sql.Timestamp(t))
-          }
-      }
-  }
+    * per key and emit them in event-time order once the watermark passes —
+    * the watermark sorter with a 10-minute delay and a step that keeps the
+    * row's millisecond event time. The production-grade ordering pattern
+    * the eager operators above trade away for latency. Rows at or beyond
+    * the final watermark stay buffered (correct for unbounded semantics;
+    * tests advance the watermark with a sentinel to drain). */
+  def temporalSort(ds: Dataset[Event]): Dataset[SortedOut] =
+    sortedThen(ds, "10 minutes")(KeyedStep[Long, SortedOut]((key, rows, _) =>
+      rows.map(e => SortedOut(key, e.event_id, new java.sql.Timestamp(e.ts.getTime)))))
 }

@@ -5,7 +5,8 @@ import graft.functions.TextHashes
 import graft.operators.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** Streaming near-dup curation — MinHash-LSH dedup run AS A STREAM: new
   * documents arrive in micro-batches and are checked against every
@@ -93,21 +94,57 @@ object StreamDedup {
 
   private val replays = new graft.Once[String, Unit]
 
+  /** The document replay of `dir` as a stream of doc_id and one more
+    * column, `maxFilesPerTrigger` segments per micro-batch. */
+  private[streaming] def docStream(s: SparkSession, dir: String, maxFilesPerTrigger: Int,
+                                   column: (String, DataType) = "text" -> StringType): DataFrame =
+    s.readStream
+      .schema(StructType(Seq(StructField("doc_id", LongType), StructField(column._1, column._2))))
+      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+      .option("pathGlobFilter", "seg-*.parquet")
+      .parquet(prepare(s, dir))
+
+  /** A candidate pair, smaller doc_id first. */
+  private def pair(a: Long, b: Long): CandPair = if (a < b) CandPair(a, b) else CandPair(b, a)
+
+  /** Each candidate pair of `drained` with both docs' shingle counts and
+    * the size of their intersection. The shingle table feeds both sides
+    * of the join and is a pure map (no exchange), so nothing would reuse
+    * it: one eager checkpoint runs the corpus-wide tokenize+shingle pass
+    * once (r16, guide §2.4/§1). */
+  private def pairOverlap(s: SparkSession, dir: String, drained: DataFrame): DataFrame = {
+    val withSh = Tables(s, dir, "documents")
+      .withColumn("toks", TextAnalysis.tokens(col("text")))
+      .withColumn("sh", Dedup.shingles(col("toks")))
+      .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
+      .transform(graft.Tables.materializeShared)
+    drained.select(col("doc_a"), col("doc_b")).distinct()
+      .join(withSh.select(col("doc_id").as("doc_a"),
+        col("sh").as("sha"), col("n_sh").as("na")), "doc_a")
+      .join(withSh.select(col("doc_id").as("doc_b"),
+        col("sh").as("shb"), col("n_sh").as("nb")), "doc_b")
+      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+  }
+
+  /** The keep set after a streamed LSH candidate set: every document that
+    * is not the later side of a candidate pair verified at J ≥ 0.5. */
+  private def keepUnverified(s: SparkSession, dir: String, drained: DataFrame): DataFrame = {
+    val verified = pairOverlap(s, dir, drained)
+      .where(col("inter").cast("double") /
+        (col("na") + col("nb") - col("inter")) >= 0.5)
+      .select(col("doc_b"))
+    Tables(s, dir, "documents").select(col("doc_id"))
+      .join(verified.select(col("doc_b").as("doc_id")), Seq("doc_id"), "left_anti")
+      .orderBy("doc_id")
+  }
+
   /** q_stream_dedup_minhash: keep-set after streaming LSH dedup — must
     * equal the batch keep (docs never appearing as the LATER side of a
     * verified pair), which the DuckDB oracle recomputes from scratch. */
   def minhashStreamKeep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.GraftSession.install(s)
-    val segDir = prepare(s, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "seg-*.parquet")
-      .parquet(segDir)
-    val bands = docs
+    val bands = docStream(s, dir, 1)
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .withColumn("sh", Dedup.shingles(col("toks")))
       .withColumn("mh", expr("minhash32(sh)"))
@@ -117,35 +154,29 @@ object StreamDedup {
       .select(col("doc_id"), col("bb.band"), col("bb.h1"), col("bb.h2"))
       .as[BandRow]
 
-    val candidates = bands.groupByKey(r => (r.band, r.h1, r.h2))
-      .flatMapGroupsWithState[Bucket, CandPair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Long, Long), rows: Iterator[BandRow], st: GroupState[Bucket]) =>
-          val prior = st.getOption.map(_.ids).getOrElse(Seq.empty)
-          val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-          // in-batch arrivals accumulate in a mutable buffer and the state
-          // value is rewritten ONCE per invocation (r15 ADVICE fix: the
-          // former `ids :+ d` per arrival copied the immutable Seq O(m²)
-          // inside a hot bucket's batch)
-          val acc = scala.collection.mutable.ArrayBuffer.empty[Long]
-          // ascending within the batch: first-seen-wins narrative and a
-          // deterministic cap whatever the shuffle order
-          rows.toSeq.map(_.doc_id).distinct.sorted.foreach { d =>
-            if (prior.size + acc.size < BucketCap) {
-              prior.foreach { p =>
-                out += (if (p < d) CandPair(p, d) else CandPair(d, p))
-              }
-              acc.foreach { p =>
-                out += (if (p < d) CandPair(p, d) else CandPair(d, p))
-              }
-              acc += d
-            }
-            // over-cap arrivals: bucket full — no emission, no growth
-            // (recall preserved via the doc's other 15 bands)
-          }
-          if (acc.nonEmpty) st.update(Bucket(prior ++ acc))
-          out.iterator
+    val candidates = KeyedOp[(Int, Long, Long), BandRow, Bucket, CandPair](
+        r => (r.band, r.h1, r.h2)) { (_, rows, st) =>
+      val prior = st.getOption.map(_.ids).getOrElse(Seq.empty)
+      val out = scala.collection.mutable.ListBuffer.empty[CandPair]
+      // in-batch arrivals accumulate in a mutable buffer and the state
+      // value is rewritten ONCE per invocation (r15 ADVICE fix: the
+      // former `ids :+ d` per arrival copied the immutable Seq O(m²)
+      // inside a hot bucket's batch)
+      val acc = scala.collection.mutable.ArrayBuffer.empty[Long]
+      // ascending within the batch: first-seen-wins narrative and a
+      // deterministic cap whatever the shuffle order
+      rows.toSeq.map(_.doc_id).distinct.sorted.foreach { d =>
+        if (prior.size + acc.size < BucketCap) {
+          prior.foreach(p => out += pair(p, d))
+          acc.foreach(p => out += pair(p, d))
+          acc += d
+        }
+        // over-cap arrivals: bucket full — no emission, no growth
+        // (recall preserved via the doc's other 15 bands)
       }
+      if (acc.nonEmpty) st.update(Bucket(prior ++ acc))
+      out.iterator
+    }.run(bands)
     // ~16 band rows per doc ⇒ state KEY count is 16× the corpus (mostly
     // singleton buckets). Measured at sf0.1 (800k keys): the default HDFS
     // map store wins here (9.2 s vs RocksDB's 10.3 — JNI + write amp cost
@@ -158,26 +189,7 @@ object StreamDedup {
     val drained = StreamSource.runToTable(s, candidates.toDF(),
       s"stream_dedup_${math.abs(dir.hashCode)}", "append",
       onDrained = recordStateRows)
-
-    // batch verification of the streamed candidate set (withSh checkpointed
-    // once — the verifyPairs r16 note: pure-map subtree, two consumers)
-    val withSh = Tables(s, dir, "documents")
-      .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("sh", Dedup.shingles(col("toks")))
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
-      .transform(graft.Tables.materializeShared)
-    val verified = drained.select(col("doc_a"), col("doc_b")).distinct()
-      .join(withSh.select(col("doc_id").as("doc_a"),
-        col("sh").as("sha"), col("n_sh").as("na")), "doc_a")
-      .join(withSh.select(col("doc_id").as("doc_b"),
-        col("sh").as("shb"), col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .where(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")) >= 0.5)
-      .select(col("doc_b"))
-    Tables(s, dir, "documents").select(col("doc_id"))
-      .join(verified.select(col("doc_b").as("doc_id")), Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
+    keepUnverified(s, dir, drained)
   }
 
   // TTL variant's band row: carries the watermarked event-time column
@@ -211,15 +223,7 @@ object StreamDedup {
                            maxFilesPerTrigger: Int): DataFrame = {
     import s.implicits._
     graft.GraftSession.install(s)
-    val segDir = prepare(s, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .option("pathGlobFilter", "seg-*.parquet")
-      .parquet(segDir)
-    val bands = docs
+    val bands = docStream(s, dir, maxFilesPerTrigger)
       .withColumn("ets", timestamp_seconds(col("doc_id") + lit(EtsBaseSec)))
       .withWatermark("ets", "0 seconds")
       .withColumn("toks", TextAnalysis.tokens(col("text")))
@@ -231,62 +235,40 @@ object StreamDedup {
       .select(col("doc_id"), col("bb.band"), col("bb.h1"), col("bb.h2"), col("ets"))
       .as[BandRowT]
     val horizonMs = horizonDocs * 1000L
-    val candidates = bands.groupByKey(r => (r.band, r.h1, r.h2))
-      .flatMapGroupsWithState[Bucket, CandPair](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: (Int, Long, Long), rows: Iterator[BandRowT], st: GroupState[Bucket]) =>
-          if (st.hasTimedOut) { st.remove(); Iterator.empty }
-          else {
-            val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-            // retained ascending (the append order); eviction = stale
-            // prefix drop, exactly the ppjoinStreamTtl discipline
-            val retained = scala.collection.mutable.ArrayBuffer.empty[Long]
-            retained ++= st.getOption.map(_.ids).getOrElse(Seq.empty)
-            rows.toSeq.map(_.doc_id).distinct.sorted.foreach { d =>
-              val cut = d - horizonDocs
-              var stale = 0
-              while (stale < retained.length && retained(stale) < cut) stale += 1
-              if (stale > 0) retained.dropInPlace(stale)
-              if (retained.size < BucketCap) {
-                retained.foreach { p =>
-                  out += (if (p < d) CandPair(p, d) else CandPair(d, p))
-                }
-                retained += d
-              }
-            }
-            if (retained.isEmpty) st.remove()
-            else {
-              st.update(Bucket(retained.toSeq))
-              st.setTimeoutTimestamp(math.max(
-                (retained.last + EtsBaseSec) * 1000L + horizonMs,
-                st.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
+    val candidates = KeyedOp[(Int, Long, Long), BandRowT, Bucket, CandPair](
+        r => (r.band, r.h1, r.h2), GroupStateTimeout.EventTimeTimeout()) { (_, rows, st) =>
+      if (st.hasTimedOut) { st.remove(); Iterator.empty }
+      else {
+        val out = scala.collection.mutable.ListBuffer.empty[CandPair]
+        // retained ascending (the append order); eviction = stale
+        // prefix drop, exactly the ppjoinStreamTtl discipline
+        val retained = scala.collection.mutable.ArrayBuffer.empty[Long]
+        retained ++= st.getOption.map(_.ids).getOrElse(Seq.empty)
+        rows.toSeq.map(_.doc_id).distinct.sorted.foreach { d =>
+          val cut = d - horizonDocs
+          var stale = 0
+          while (stale < retained.length && retained(stale) < cut) stale += 1
+          if (stale > 0) retained.dropInPlace(stale)
+          if (retained.size < BucketCap) {
+            retained.foreach(p => out += pair(p, d))
+            retained += d
           }
+        }
+        if (retained.isEmpty) st.remove()
+        else {
+          st.update(Bucket(retained.toSeq))
+          st.setTimeoutTimestamp(math.max(
+            (retained.last + EtsBaseSec) * 1000L + horizonMs,
+            st.getCurrentWatermarkMs() + 1))
+        }
+        out.iterator
       }
+    }.run(bands)
     lastStateRows = -1L // reset so a failed drain can't surface a prior run's count
     val drained = StreamSource.runToTable(s, candidates.toDF(),
       s"stream_dedup_ttl_${math.abs(dir.hashCode)}", "append",
       onDrained = recordStateRows)
-    // batch verification + keep set (the minhashStreamKeep convention;
-    // withSh checkpointed once — pure-map subtree, two consumers)
-    val withSh = Tables(s, dir, "documents")
-      .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("sh", Dedup.shingles(col("toks")))
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
-      .transform(graft.Tables.materializeShared)
-    val verified = drained.select(col("doc_a"), col("doc_b")).distinct()
-      .join(withSh.select(col("doc_id").as("doc_a"),
-        col("sh").as("sha"), col("n_sh").as("na")), "doc_a")
-      .join(withSh.select(col("doc_id").as("doc_b"),
-        col("sh").as("shb"), col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .where(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")) >= 0.5)
-      .select(col("doc_b"))
-    Tables(s, dir, "documents").select(col("doc_id"))
-      .join(verified.select(col("doc_b").as("doc_id")), Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
+    keepUnverified(s, dir, drained)
   }
 
   // state rows for the streaming PPJoin prefix index (public: encoder
@@ -342,15 +324,7 @@ object StreamDedup {
   def ppjoinStream(s: SparkSession, dir: String,
                    maxFilesPerTrigger: Int): DataFrame = {
     import s.implicits._
-    val segDir = prepare(s, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .option("pathGlobFilter", "seg-*.parquet")
-      .parquet(segDir)
-    val pref = docs
+    val pref = docStream(s, dir, maxFilesPerTrigger)
       .withColumn("toks", TextAnalysis.tokens(col("text")))
       .withColumn("sh", Dedup.shingles(col("toks")))
       .withColumn("n", size(col("sh")))
@@ -365,44 +339,41 @@ object StreamDedup {
         (col("pos") + 1).cast("int").as("rn"),
         expr("CAST(conv(substr(col.h, 1, 15), 16, 10) AS BIGINT)").as("tok"))
       .as[PrefRow]
-    val candidates = pref.groupByKey(_.tok)
-      .flatMapGroupsWithState[PrefBucket, CandPair](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[PrefRow], st: GroupState[PrefBucket]) =>
-          val prior = st.getOption.map(_.rows).getOrElse(Seq.empty)
-          val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-          def probe(p: PrefRow, d: PrefRow): Unit =
-            if (p.doc_id != d.doc_id) {
-              val sizeOk = 2 * math.min(p.n, d.n) >= math.max(p.n, d.n)
-              // Xiao 2008 §3.2 positional ubound at this matched token
-              val posOk =
-                1 + math.min(p.n - p.rn, d.n - d.rn) >= (p.n + d.n + 2) / 3
-              if (sizeOk && posOk)
-                out += (if (p.doc_id < d.doc_id) CandPair(p.doc_id, d.doc_id)
-                        else CandPair(d.doc_id, p.doc_id))
-            }
-          // in-batch arrivals accumulate in a mutable buffer; the state
-          // value is rewritten ONCE per invocation (r15 ADVICE fix — the
-          // former `posted :+ d` per arrival copied the immutable Seq
-          // O(m²) inside a hot bucket's batch, on top of the store's own
-          // per-batch full-value write)
-          val acc = scala.collection.mutable.ArrayBuffer.empty[PrefRow]
-          // ascending within the batch: in-batch pairs meet exactly once
-          rows.toSeq.sortBy(_.doc_id).foreach { d =>
-            prior.foreach(probe(_, d))
-            acc.foreach(probe(_, d))
-            acc += d
-          }
-          if (acc.nonEmpty) st.update(PrefBucket(prior ++ acc))
-          out.iterator
+    val candidates = KeyedOp[Long, PrefRow, PrefBucket, CandPair](_.tok) { (_, rows, st) =>
+      val prior = st.getOption.map(_.rows).getOrElse(Seq.empty)
+      val out = scala.collection.mutable.ListBuffer.empty[CandPair]
+      // in-batch arrivals accumulate in a mutable buffer; the state
+      // value is rewritten ONCE per invocation (r15 ADVICE fix — the
+      // former `posted :+ d` per arrival copied the immutable Seq
+      // O(m²) inside a hot bucket's batch, on top of the store's own
+      // per-batch full-value write)
+      val acc = scala.collection.mutable.ArrayBuffer.empty[PrefRow]
+      // ascending within the batch: in-batch pairs meet exactly once
+      rows.toSeq.sortBy(_.doc_id).foreach { d =>
+        prior.foreach(probe(_, d).foreach(out += _))
+        acc.foreach(probe(_, d).foreach(out += _))
+        acc += d
       }
+      if (acc.nonEmpty) st.update(PrefBucket(prior ++ acc))
+      out.iterator
+    }.run(pref)
     lastStateRows = -1L // reset so a failed drain can't surface a prior run's count
     val drained = StreamSource.runToTable(s, candidates.toDF(),
       s"stream_ppjoin_${math.abs(dir.hashCode)}", "append",
       onDrained = recordStateRows)
     verifyPairs(s, dir, drained)
   }
+
+  /** The candidate pair of posted row `p` and arriving row `d` of one
+    * prefix token, if it passes the size bound and the positional ubound
+    * (Xiao 2008 §3.2) at this matched token. */
+  private def probe(p: PrefRow, d: PrefRow): Option[CandPair] =
+    if (p.doc_id == d.doc_id) None
+    else {
+      val sizeOk = 2 * math.min(p.n, d.n) >= math.max(p.n, d.n)
+      val posOk = 1 + math.min(p.n - p.rn, d.n - d.rn) >= (p.n + d.n + 2) / 3
+      if (sizeOk && posOk) Some(pair(p.doc_id, d.doc_id)) else None
+    }
 
   /** Final state-store row count of the last drained PPJoin stream — the
     * before/after handle for the TTL-bound demonstration (read by
@@ -417,28 +388,13 @@ object StreamDedup {
   /** Batch verification of a streamed candidate set (exact filters
     * upstream mean this only REMOVES sub-threshold pairs, never misses). */
   private def verifyPairs(s: SparkSession, dir: String,
-                          drained: DataFrame): DataFrame = {
-    // r16 optimization (guide §2.4/§1): withSh feeds BOTH sides of the
-    // verify join; the subtree is a pure map (no exchange), so nothing is
-    // reused and the corpus-wide tokenize+shingle pass ran twice. One
-    // eager checkpoint runs it once.
-    val withSh = Tables(s, dir, "documents")
-      .withColumn("toks", TextAnalysis.tokens(col("text")))
-      .withColumn("sh", Dedup.shingles(col("toks")))
-      .select(col("doc_id"), col("sh"), size(col("sh")).as("n_sh"))
-      .transform(graft.Tables.materializeShared)
-    drained.select(col("doc_a"), col("doc_b")).distinct()
-      .join(withSh.select(col("doc_id").as("doc_a"),
-        col("sh").as("sha"), col("n_sh").as("na")), "doc_a")
-      .join(withSh.select(col("doc_id").as("doc_b"),
-        col("sh").as("shb"), col("n_sh").as("nb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
+                          drained: DataFrame): DataFrame =
+    pairOverlap(s, dir, drained)
       .withColumn("j", round(col("inter").cast("double") /
         (col("na") + col("nb") - col("inter")), 4))
       .where(col("j") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("j"))
       .orderBy("doc_a", "doc_b")
-  }
 
   /** Default dedup horizon (in doc_ids ≙ seconds of synthetic event time)
     * for [[ppjoinStreamTtl]]: at sf0.01 the true pair distances run
@@ -482,15 +438,7 @@ object StreamDedup {
   def ppjoinStreamTtl(s: SparkSession, dir: String, horizonDocs: Long,
                       maxFilesPerTrigger: Int): DataFrame = {
     import s.implicits._
-    val segDir = prepare(s, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .option("pathGlobFilter", "seg-*.parquet")
-      .parquet(segDir)
-    val pref = docs
+    val pref = docStream(s, dir, maxFilesPerTrigger)
       // synthetic event time: doc_id seconds, offset a day above epoch —
       // monotone with the replay order so the watermark advances one
       // segment at a time; the offset keeps doc_id 0 strictly ABOVE the
@@ -512,52 +460,40 @@ object StreamDedup {
         col("ets"))
       .as[PrefRowT]
     val horizonMs = horizonDocs * 1000L
-    val candidates = pref.groupByKey(_.tok)
-      .flatMapGroupsWithState[PrefBucket, CandPair](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        (_: Long, rowsT: Iterator[PrefRowT], st: GroupState[PrefBucket]) =>
-          if (st.hasTimedOut) {
-            // idle bucket: no arrival in a full horizon — state cleared
-            st.remove(); Iterator.empty
-          } else {
-            val out = scala.collection.mutable.ListBuffer.empty[CandPair]
-            def probe(p: PrefRow, d: PrefRow): Unit =
-              if (p.doc_id != d.doc_id) {
-                val sizeOk = 2 * math.min(p.n, d.n) >= math.max(p.n, d.n)
-                val posOk =
-                  1 + math.min(p.n - p.rn, d.n - d.rn) >= (p.n + d.n + 2) / 3
-                if (sizeOk && posOk)
-                  out += (if (p.doc_id < d.doc_id) CandPair(p.doc_id, d.doc_id)
-                          else CandPair(d.doc_id, p.doc_id))
-              }
-            // retained postings stay ascending (prior was written ascending,
-            // arrivals process ascending), so horizon eviction is a stale
-            // PREFIX drop — O(evicted), not O(bucket) per arrival
-            val retained = scala.collection.mutable.ArrayBuffer.empty[PrefRow]
-            retained ++= st.getOption.map(_.rows).getOrElse(Seq.empty)
-            val rows = rowsT.map(r => PrefRow(r.doc_id, r.n, r.rn, r.tok))
-            rows.toSeq.sortBy(_.doc_id).foreach { d =>
-              val cut = d.doc_id - horizonDocs
-              var stale = 0
-              while (stale < retained.length && retained(stale).doc_id < cut)
-                stale += 1
-              if (stale > 0) retained.dropInPlace(stale)
-              retained.foreach(probe(_, d))
-              retained += d
-            }
-            if (retained.isEmpty) st.remove()
-            else {
-              st.update(PrefBucket(retained.toSeq))
-              // arm the idle-bucket timeout at newest + horizon (kept
-              // strictly ahead of the watermark, as the API requires)
-              st.setTimeoutTimestamp(math.max(
-                (retained.last.doc_id + EtsBaseSec) * 1000L + horizonMs,
-                st.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
+    val candidates = KeyedOp[Long, PrefRowT, PrefBucket, CandPair](
+        _.tok, GroupStateTimeout.EventTimeTimeout()) { (_, rowsT, st) =>
+      if (st.hasTimedOut) {
+        // idle bucket: no arrival in a full horizon — state cleared
+        st.remove(); Iterator.empty
+      } else {
+        val out = scala.collection.mutable.ListBuffer.empty[CandPair]
+        // retained postings stay ascending (prior was written ascending,
+        // arrivals process ascending), so horizon eviction is a stale
+        // PREFIX drop — O(evicted), not O(bucket) per arrival
+        val retained = scala.collection.mutable.ArrayBuffer.empty[PrefRow]
+        retained ++= st.getOption.map(_.rows).getOrElse(Seq.empty)
+        val rows = rowsT.map(r => PrefRow(r.doc_id, r.n, r.rn, r.tok))
+        rows.toSeq.sortBy(_.doc_id).foreach { d =>
+          val cut = d.doc_id - horizonDocs
+          var stale = 0
+          while (stale < retained.length && retained(stale).doc_id < cut)
+            stale += 1
+          if (stale > 0) retained.dropInPlace(stale)
+          retained.foreach(probe(_, d).foreach(out += _))
+          retained += d
+        }
+        if (retained.isEmpty) st.remove()
+        else {
+          st.update(PrefBucket(retained.toSeq))
+          // arm the idle-bucket timeout at newest + horizon (kept
+          // strictly ahead of the watermark, as the API requires)
+          st.setTimeoutTimestamp(math.max(
+            (retained.last.doc_id + EtsBaseSec) * 1000L + horizonMs,
+            st.getCurrentWatermarkMs() + 1))
+        }
+        out.iterator
       }
+    }.run(pref)
     lastStateRows = -1L // reset so a failed drain can't surface a prior run's count
     val drained = StreamSource.runToTable(s, candidates.toDF(),
       s"stream_ppjoin_ttl_${math.abs(dir.hashCode)}", "append",
@@ -598,14 +534,7 @@ object StreamDedup {
     // md5 universal order) — the oracle is the batch twin's brute
     // all-pairs SQL verbatim
     Query("q_stream_ppjoin", ppjoinStream(_, _),
-      (graft.LlmOracles.shinglesCte + """
-        |SELECT doc_a, doc_b, j FROM (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  round(len(list_intersect(a.s, b.s))::DOUBLE /
-        |        (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))), 4) AS j
-        | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        | WHERE len(a.s) > 0 AND len(b.s) > 0)
-        |WHERE j >= 0.5 ORDER BY doc_a, doc_b""").stripMargin),
+      Query.oracleOf(graft.LlmOracles.queries, "q_dedup_ppjoin")),
     // TTL-bounded streaming LSH dedup: the deterministic horizon rule
     // (doc_id logical clock — a pair meets iff its distance fits the
     // horizon, proof in the scaladoc) makes the oracle the batch LSH

@@ -29,59 +29,51 @@ object StreamJoins {
   case class SemiState(buildSeen: Boolean, pendingProbes: List[Long])
 
   /** probe ∈ events[event_type=probeType], build ∈ events[buildType]. */
-  def semiJoin(ds: Dataset[Event], probeType: String, buildType: String): Dataset[SemiOut] = {
-    import ds.sparkSession.implicits._
-    ds.filter(e => e.event_type == probeType || e.event_type == buildType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SemiState, SemiOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[SemiState]) =>
-          var st = state.getOption.getOrElse(SemiState(false, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SemiOut]
-          rows.foreach { e =>
-            if (e.event_type == buildType) {
-              if (!st.buildSeen) {
-                st.pendingProbes.reverse.foreach(p => out += SemiOut(key, p))
-                st = SemiState(buildSeen = true, Nil)
-              }
-            } else { // probe
-              if (st.buildSeen) out += SemiOut(key, e.event_id)
-              else st = st.copy(pendingProbes = e.event_id :: st.pendingProbes)
-            }
+  def semiJoin(ds: Dataset[Event], probeType: String, buildType: String): Dataset[SemiOut] =
+    KeyedStep[SemiState, SemiOut]({ (key, rows, state) =>
+      var st = state.getOption.getOrElse(SemiState(false, Nil))
+      val out = scala.collection.mutable.ArrayBuffer.empty[SemiOut]
+      rows.foreach { e =>
+        if (e.event_type == buildType) {
+          if (!st.buildSeen) {
+            st.pendingProbes.reverse.foreach(p => out += SemiOut(key, p))
+            st = SemiState(buildSeen = true, Nil)
           }
-          state.update(st)
-          out.iterator
+        } else { // probe
+          if (st.buildSeen) out += SemiOut(key, e.event_id)
+          else st = st.copy(pendingProbes = e.event_id :: st.pendingProbes)
+        }
       }
-  }
+      state.update(st)
+      out.iterator
+    }, keep = Some(either(probeType, buildType))).run(ds)
+
+  /** Rows of either event type. */
+  private def either(a: String, b: String): Event => Boolean =
+    e => e.event_type == a || e.event_type == b
 
   case class AntiState(buildSeen: Boolean, emitted: List[Long])
 
   /** Anti join changelog: +I per probe with no build match so far, -D
     * retractions when a build row invalidates earlier emissions. */
-  def antiJoin(ds: Dataset[Event], probeType: String, buildType: String): Dataset[AntiOut] = {
-    import ds.sparkSession.implicits._
-    ds.filter(e => e.event_type == probeType || e.event_type == buildType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AntiState, AntiOut](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[AntiState]) =>
-          var st = state.getOption.getOrElse(AntiState(false, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[AntiOut]
-          rows.foreach { e =>
-            if (e.event_type == buildType) {
-              if (!st.buildSeen) {
-                st.emitted.reverse.foreach(p => out += AntiOut(key, p, "-D"))
-                st = AntiState(buildSeen = true, Nil)
-              }
-            } else if (!st.buildSeen) {
-              out += AntiOut(key, e.event_id, "+I")
-              st = st.copy(emitted = e.event_id :: st.emitted)
-            }
+  def antiJoin(ds: Dataset[Event], probeType: String, buildType: String): Dataset[AntiOut] =
+    KeyedStep[AntiState, AntiOut]({ (key, rows, state) =>
+      var st = state.getOption.getOrElse(AntiState(false, Nil))
+      val out = scala.collection.mutable.ArrayBuffer.empty[AntiOut]
+      rows.foreach { e =>
+        if (e.event_type == buildType) {
+          if (!st.buildSeen) {
+            st.emitted.reverse.foreach(p => out += AntiOut(key, p, "-D"))
+            st = AntiState(buildSeen = true, Nil)
           }
-          state.update(st)
-          out.iterator
+        } else if (!st.buildSeen) {
+          out += AntiOut(key, e.event_id, "+I")
+          st = st.copy(emitted = e.event_id :: st.emitted)
+        }
       }
-  }
+      state.update(st)
+      out.iterator
+    }, keep = Some(either(probeType, buildType))).run(ds, OutputMode.Update())
 
   case class ConnOut(user_id: Long, p_id: Long, e_id: Option[Long], rowkind: String)
   case class ConnState(pending: List[(Long, Long)])
@@ -121,40 +113,37 @@ object StreamJoins {
   def connectStep(probeType: String, matchType: String,
                   windowSec: Long = 3600): KeyedStep[ConnState, ConnOut] = {
     val winUs = windowSec * 1000000L
-    KeyedStep[ConnState, ConnOut]({
-        (key: Long, rows: Iterator[Event], state: GroupState[ConnState]) =>
-          var pending = state.getOption.map(_.pending).getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[ConnOut]
-          // within a micro-batch the file replay preserves event order for a
-          // key; sort defensively on (ts, id) so ties are deterministic
-          // full microsecond precision: getTime alone truncates to millis,
-          // which would blur the strict `error after purchase` comparison
-          def us(e: Event): Long =
-            (e.ts.getTime / 1000L) * 1000000L + e.ts.getNanos / 1000L
-          rows.toSeq.sortBy(e => (us(e), e.event_id)).foreach { e =>
-            val tUs = us(e)
-            // every in-order event's time bounds the past: expired probes
-            // keep their null row and leave state — pruning on BOTH branches
-            // keeps state window-dense even for keys whose match stream is
-            // silent (a probe-only key would otherwise accumulate forever)
-            pending = pending.filterNot { case (_, pUs) => pUs + winUs < tUs }
-            if (e.event_type == probeType) {
-              out += ConnOut(key, e.event_id, None, "+I")
-              pending = (e.event_id, tUs) :: pending
-            } else {
-              val (matched, rest) = pending.partition {
-                case (_, pUs) => pUs < tUs && tUs <= pUs + winUs
-              }
-              matched.sortBy(_._1).foreach { case (pId, _) =>
-                out += ConnOut(key, pId, None, "-D")
-                out += ConnOut(key, pId, Some(e.event_id), "+I")
-              }
-              pending = rest
-            }
+    KeyedStep[ConnState, ConnOut]({ (key, rows, state) =>
+      var pending = state.getOption.map(_.pending).getOrElse(Nil)
+      val out = scala.collection.mutable.ArrayBuffer.empty[ConnOut]
+      // within a micro-batch the file replay preserves event order for a
+      // key; sort defensively on (ts, id) so ties are deterministic, at
+      // full microsecond precision: getTime alone truncates to millis,
+      // which would blur the strict `error after purchase` comparison
+      rows.toSeq.sortBy(StatefulOps.ord).foreach { e =>
+        val tUs = StatefulOps.micros(e.ts)
+        // every in-order event's time bounds the past: expired probes
+        // keep their null row and leave state — pruning on BOTH branches
+        // keeps state window-dense even for keys whose match stream is
+        // silent (a probe-only key would otherwise accumulate forever)
+        pending = pending.filterNot { case (_, pUs) => pUs + winUs < tUs }
+        if (e.event_type == probeType) {
+          out += ConnOut(key, e.event_id, None, "+I")
+          pending = (e.event_id, tUs) :: pending
+        } else {
+          val (matched, rest) = pending.partition {
+            case (_, pUs) => pUs < tUs && tUs <= pUs + winUs
           }
-          state.update(ConnState(pending))
-          out.iterator
-      }, keep = Some(e => e.event_type == probeType || e.event_type == matchType))
+          matched.sortBy(_._1).foreach { case (pId, _) =>
+            out += ConnOut(key, pId, None, "-D")
+            out += ConnOut(key, pId, Some(e.event_id), "+I")
+          }
+          pending = rest
+        }
+      }
+      state.update(ConnState(pending))
+      out.iterator
+    }, keep = Some(either(probeType, matchType)))
   }
 
   case class OuterOut(user_id: Long, p_id: Long, v_id: Option[Long], rowkind: String)
@@ -178,49 +167,49 @@ object StreamJoins {
     * un-watermarked stream-join bound. */
   def leftOuterJoin(ds: Dataset[Event], probeType: String,
                     buildType: String,
-                    stateTtlMs: Option[Long] = None): Dataset[OuterOut] = {
-    import ds.sparkSession.implicits._
-    val timeoutConf = if (stateTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    ds.filter(e => e.event_type == probeType || e.event_type == buildType)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[OuterState, OuterOut](
-        OutputMode.Update(), timeoutConf) {
-        (key: Long, rows: Iterator[Event], state: GroupState[OuterState]) =>
-          if (state.hasTimedOut) {
-            // retention cleanup drops the key silently (the reference's
-            // onTimer state.clear() — no retractions are emitted)
-            state.remove()
-            Iterator.empty
+                    stateTtlMs: Option[Long] = None): Dataset[OuterOut] =
+    KeyedStep[OuterState, OuterOut]({ (key, rows, state) =>
+      if (state.hasTimedOut) {
+        // retention cleanup drops the key silently (the reference's
+        // onTimer state.clear() — no retractions are emitted)
+        state.remove()
+        Iterator.empty
+      } else {
+        var st = state.getOption.getOrElse(OuterState(Nil, Nil))
+        val out = scala.collection.mutable.ArrayBuffer.empty[OuterOut]
+        var lastMs = 0L // key's last activity in event time — the TTL anchor
+        rows.foreach { e =>
+          lastMs = math.max(lastMs, StatefulOps.micros(e.ts) / 1000L)
+          if (e.event_type == buildType) {
+            if (st.builds.isEmpty)
+              st.probes.foreach(p => out += OuterOut(key, p, None, "-D"))
+            st.probes.foreach(p => out += OuterOut(key, p, Some(e.event_id), "+I"))
+            st = st.copy(builds = e.event_id :: st.builds)
           } else {
-          var st = state.getOption.getOrElse(OuterState(Nil, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[OuterOut]
-          var lastMs = 0L // key's last activity in event time — the TTL anchor
-          rows.foreach { e =>
-            lastMs = math.max(lastMs, StatefulOps.micros(e.ts) / 1000L)
-            if (e.event_type == buildType) {
-              if (st.builds.isEmpty)
-                st.probes.foreach(p => out += OuterOut(key, p, None, "-D"))
-              st.probes.foreach(p => out += OuterOut(key, p, Some(e.event_id), "+I"))
-              st = st.copy(builds = e.event_id :: st.builds)
-            } else {
-              if (st.builds.isEmpty) out += OuterOut(key, e.event_id, None, "+I")
-              else st.builds.foreach(b => out += OuterOut(key, e.event_id, Some(b), "+I"))
-              st = st.copy(probes = e.event_id :: st.probes)
-            }
+            if (st.builds.isEmpty) out += OuterOut(key, e.event_id, None, "+I")
+            else st.builds.foreach(b => out += OuterOut(key, e.event_id, Some(b), "+I"))
+            st = st.copy(probes = e.event_id :: st.probes)
           }
-          state.update(st)
-          stateTtlMs.foreach { ttl =>
-            // expire TTL past the key's last event-time activity; the
-            // max() keeps the timer legal (strictly ahead of the watermark)
-            try state.setTimeoutTimestamp(
-              math.max(lastMs, state.getCurrentWatermarkMs() + 1) + ttl)
-            catch { case _: UnsupportedOperationException => () } // batch: no timers
-          }
-          out.iterator
-          }
+        }
+        state.update(st)
+        armTtl(state, lastMs, stateTtlMs)
+        out.iterator
       }
-  }
+    }, keep = Some(either(probeType, buildType)), timeout = ttlTimeout(stateTtlMs))
+      .run(ds, OutputMode.Update())
+
+  private def ttlTimeout(stateTtlMs: Option[Long]): GroupStateTimeout =
+    if (stateTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
+    else GroupStateTimeout.NoTimeout()
+
+  /** Expires the key `ttl` past its last event-time activity; the max()
+    * keeps the timer legal (strictly ahead of the watermark). */
+  private def armTtl(state: GroupState[_], lastMs: Long, stateTtlMs: Option[Long]): Unit =
+    stateTtlMs.foreach { ttl =>
+      try state.setTimeoutTimestamp(
+        math.max(lastMs, state.getCurrentWatermarkMs() + 1) + ttl)
+      catch { case _: UnsupportedOperationException => () } // batch: no timers
+    }
 
   case class FullOuterOut(user_id: Long, l_id: Option[Long], r_id: Option[Long],
                           rowkind: String)
@@ -241,51 +230,40 @@ object StreamJoins {
   def outerJoinChangelog(ds: Dataset[Event],
                          leftPred: Event => Boolean, rightPred: Event => Boolean,
                          padLeft: Boolean, padRight: Boolean,
-                         stateTtlMs: Option[Long] = None): Dataset[FullOuterOut] = {
-    import ds.sparkSession.implicits._
-    val timeoutConf = if (stateTtlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-                      else GroupStateTimeout.NoTimeout()
-    ds.filter(e => leftPred(e) || rightPred(e))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TwoSideState, FullOuterOut](
-        OutputMode.Update(), timeoutConf) {
-        (key: Long, rows: Iterator[Event], state: GroupState[TwoSideState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty } else {
-          var st = state.getOption.getOrElse(TwoSideState(Nil, Nil))
-          val out = scala.collection.mutable.ArrayBuffer.empty[FullOuterOut]
-          var lastMs = 0L
-          rows.foreach { e =>
-            lastMs = math.max(lastMs, StatefulOps.micros(e.ts) / 1000L)
-            if (leftPred(e)) {
-              if (st.rights.isEmpty) {
-                if (padLeft) out += FullOuterOut(key, Some(e.event_id), None, "+I")
-              } else {
-                if (st.lefts.isEmpty && padRight)
-                  st.rights.foreach(r => out += FullOuterOut(key, None, Some(r), "-D"))
-                st.rights.foreach(r => out += FullOuterOut(key, Some(e.event_id), Some(r), "+I"))
-              }
-              st = st.copy(lefts = e.event_id :: st.lefts)
+                         stateTtlMs: Option[Long] = None): Dataset[FullOuterOut] =
+    KeyedStep[TwoSideState, FullOuterOut]({ (key, rows, state) =>
+      if (state.hasTimedOut) { state.remove(); Iterator.empty } else {
+        var st = state.getOption.getOrElse(TwoSideState(Nil, Nil))
+        val out = scala.collection.mutable.ArrayBuffer.empty[FullOuterOut]
+        var lastMs = 0L
+        rows.foreach { e =>
+          lastMs = math.max(lastMs, StatefulOps.micros(e.ts) / 1000L)
+          if (leftPred(e)) {
+            if (st.rights.isEmpty) {
+              if (padLeft) out += FullOuterOut(key, Some(e.event_id), None, "+I")
             } else {
-              if (st.lefts.isEmpty) {
-                if (padRight) out += FullOuterOut(key, None, Some(e.event_id), "+I")
-              } else {
-                if (st.rights.isEmpty && padLeft)
-                  st.lefts.foreach(l => out += FullOuterOut(key, Some(l), None, "-D"))
-                st.lefts.foreach(l => out += FullOuterOut(key, Some(l), Some(e.event_id), "+I"))
-              }
-              st = st.copy(rights = e.event_id :: st.rights)
+              if (st.lefts.isEmpty && padRight)
+                st.rights.foreach(r => out += FullOuterOut(key, None, Some(r), "-D"))
+              st.rights.foreach(r => out += FullOuterOut(key, Some(e.event_id), Some(r), "+I"))
             }
+            st = st.copy(lefts = e.event_id :: st.lefts)
+          } else {
+            if (st.lefts.isEmpty) {
+              if (padRight) out += FullOuterOut(key, None, Some(e.event_id), "+I")
+            } else {
+              if (st.rights.isEmpty && padLeft)
+                st.lefts.foreach(l => out += FullOuterOut(key, Some(l), None, "-D"))
+              st.lefts.foreach(l => out += FullOuterOut(key, Some(l), Some(e.event_id), "+I"))
+            }
+            st = st.copy(rights = e.event_id :: st.rights)
           }
-          state.update(st)
-          stateTtlMs.foreach { ttl =>
-            try state.setTimeoutTimestamp(
-              math.max(lastMs, state.getCurrentWatermarkMs() + 1) + ttl)
-            catch { case _: UnsupportedOperationException => () } // batch: no timers
-          }
-          out.iterator
-          }
+        }
+        state.update(st)
+        armTtl(state, lastMs, stateTtlMs)
+        out.iterator
       }
-  }
+    }, keep = Some(e => leftPred(e) || rightPred(e)), timeout = ttlTimeout(stateTtlMs))
+      .run(ds, OutputMode.Update())
 
   case class CountWin(user_id: Long, win_id: Long, cnt: Long, sum_value: Double)
   case class CountWinState(winId: Long, cnt: Long, sum: Double)
@@ -293,23 +271,18 @@ object StreamJoins {
   /** Tumbling COUNT window: per key, every `n` rows (event-time order
     * within batch) form a window; fires exactly when full — incomplete
     * windows never fire (reference purging count-trigger semantics). */
-  def countTumbling(ds: Dataset[Event], n: Int): Dataset[CountWin] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CountWinState, CountWin](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, rows: Iterator[Event], state: GroupState[CountWinState]) =>
-          var st = state.getOption.getOrElse(CountWinState(0L, 0L, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CountWin]
-          rows.toSeq.sortBy(e => (StatefulOps.micros(e.ts), e.event_id)).foreach { e =>
-            st = CountWinState(st.winId, st.cnt + 1, st.sum + e.value)
-            if (st.cnt == n) {
-              out += CountWin(key, st.winId, st.cnt, st.sum)
-              st = CountWinState(st.winId + 1, 0L, 0.0)
-            }
-          }
-          state.update(st)
-          out.iterator
+  def countTumbling(ds: Dataset[Event], n: Int): Dataset[CountWin] =
+    KeyedStep[CountWinState, CountWin] { (key, rows, state) =>
+      var st = state.getOption.getOrElse(CountWinState(0L, 0L, 0.0))
+      val out = scala.collection.mutable.ArrayBuffer.empty[CountWin]
+      rows.toSeq.sortBy(StatefulOps.ord).foreach { e =>
+        st = CountWinState(st.winId, st.cnt + 1, st.sum + e.value)
+        if (st.cnt == n) {
+          out += CountWin(key, st.winId, st.cnt, st.sum)
+          st = CountWinState(st.winId + 1, 0L, 0.0)
+        }
       }
-  }
+      state.update(st)
+      out.iterator
+    }.run(ds)
 }

@@ -975,19 +975,10 @@ object StreamQueries {
     * a total order. */
   def streamWeightedSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val segDir = StreamDedup.prepare(s, dir)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      // w = n_chars, the SAME weight column as the batch twin and the
-      // oracle (r14 ADVICE fix: length(text) only coincides on ASCII)
-      org.apache.spark.sql.types.StructField("n_chars",
-        org.apache.spark.sql.types.LongType)))
-    val docs = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "seg-*.parquet")
-      .parquet(segDir)
+    // w = n_chars, the SAME weight column as the batch twin and the
+    // oracle (r14 ADVICE fix: length(text) only coincides on ASCII)
+    val docs = StreamDedup.docStream(s, dir, 1,
+      "n_chars" -> org.apache.spark.sql.types.LongType)
     val keyed = docs
       .select(col("doc_id"), col("n_chars").as("w"))
       .withColumn("u9",
@@ -998,21 +989,19 @@ object StreamQueries {
       .select(expr("cast(doc_id % 8 AS INT)").as("shard"),
         col("doc_id"), col("w"), col("key_u"))
       .as[(Int, Long, Long, Long)]
-    val perShard = keyed.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Seq[(Long, Long, Long)]), (Int, Long, Seq[Long], Seq[Long], Seq[Long])](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard: Int, rows: Iterator[(Int, Long, Long, Long)],
-         st: GroupState[(Long, Seq[(Long, Long, Long)])]) =>
-          val (seen0, top0) = st.getOption.getOrElse((0L, Seq.empty))
-          var seen = seen0
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          buf ++= top0
-          rows.foreach { r => seen += 1; buf += ((r._4, r._2, r._3)) } // (key_u, doc_id, w)
-          val top = buf.sortBy { case (k, id, _) => (-k, id) }.take(100).toSeq
-          st.update((seen, top))
-          Iterator.single((shard, seen,
-            top.map(_._1), top.map(_._2), top.map(_._3)))
-      }.toDF("shard", "n_seen", "keys", "ids", "ws")
+    val perShard = KeyedOp[Int, (Int, Long, Long, Long), (Long, Seq[(Long, Long, Long)]),
+        (Int, Long, Seq[Long], Seq[Long], Seq[Long])](_._1) { (shard, rows, st) =>
+      val (seen0, top0) = st.getOption.getOrElse((0L, Seq.empty))
+      var seen = seen0
+      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      buf ++= top0
+      rows.foreach { r => seen += 1; buf += ((r._4, r._2, r._3)) } // (key_u, doc_id, w)
+      val top = buf.sortBy { case (k, id, _) => (-k, id) }.take(100).toSeq
+      st.update((seen, top))
+      Iterator.single((shard, seen,
+        top.map(_._1), top.map(_._2), top.map(_._3)))
+    }.run(keyed, org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF("shard", "n_seen", "keys", "ids", "ws")
     val drained = StreamSource.runToTable(s, perShard, "stream_wsample", "update")
       .groupBy("shard")
       .agg(max_by(struct(col("keys"), col("ids"), col("ws")), col("n_seen")).as("m"))
@@ -1045,6 +1034,112 @@ object StreamQueries {
       .select(col("event_type"), col("n"), col("slope"), col("intercept"))
       .orderBy("event_type")
   }
+
+  /** The last row of each user by (ts, event_id): keep-last dedup. */
+  val dedupLastOracle: String =
+    """SELECT user_id, event_id, event_type FROM (
+        | SELECT user_id, event_id, event_type,
+        |  row_number() OVER (PARTITION BY user_id
+        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
+        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin
+
+  /** Running count and sum per user in (ts, event_id) order. */
+  val overOracle: String =
+    """SELECT user_id, event_id,
+        | count(*) OVER w AS run_cnt,
+        | round(sum(value) OVER w, 4) AS run_sum
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, event_id""".stripMargin
+
+  /** Strict view, click, purchase runs per user. */
+  val cepStrictOracle: String =
+    """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
+        |           FROM events),
+        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
+        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
+        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id
+        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
+        |SELECT user_id, a_id, b_id, c_id FROM sq
+        |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
+        |ORDER BY user_id, a_id""".stripMargin
+
+  /** A+ B matches per user. */
+  val cepPlusOracle: String =
+    """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
+        |o AS (SELECT user_id, event_id, event_type,
+        |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
+        |        CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
+        |      FROM e),
+        |g AS (SELECT *, sum(is_err) OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
+        |a AS (SELECT * FROM g WHERE is_err = 0),
+        |s AS (SELECT user_id, grp, rn, event_id,
+        |        max(CASE WHEN event_type = 'purchase' THEN rn END) OVER
+        |          (PARTITION BY user_id, grp ORDER BY rn
+        |           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS j_rn
+        |      FROM a)
+        |SELECT s.user_id, s.event_id AS a_id, b.event_id AS b_id,
+        |       CAST(s.j_rn - s.rn AS INT) AS n_a
+        |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
+        |WHERE s.j_rn IS NOT NULL
+        |ORDER BY s.user_id, a_id""".stripMargin
+
+  /** The +I/-U/+U changelog of each user's rows. */
+  val changelogOracle: String =
+    """WITH o AS (SELECT user_id, event_id,
+        |  row_number() OVER w AS rn, count(*) OVER (PARTITION BY user_id) AS mx
+        | FROM events
+        | WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id))
+        |SELECT user_id, event_id, rowkind FROM (
+        | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
+        | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1
+        | UNION ALL SELECT user_id, event_id, '-U' FROM o WHERE rn < mx)
+        |ORDER BY user_id, event_id, rowkind""".stripMargin
+
+  /** Sessions per user with a per-event gap. */
+  val dynSessionOracle: String =
+    """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
+        |  CASE WHEN event_type = 'error' THEN INTERVAL 30 MINUTE
+        |       ELSE INTERVAL 60 MINUTE END AS gap FROM events),
+        |m AS (SELECT *, max(t + gap) OVER (PARTITION BY user_id ORDER BY t
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM e),
+        |br AS (SELECT *, CASE WHEN prev_end IS NULL OR t > prev_end
+        |  THEN 1 ELSE 0 END AS brk FROM m),
+        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
+        |  ROWS UNBOUNDED PRECEDING) AS sid FROM br)
+        |SELECT user_id, min(t) AS w_start, count(*) AS cnt,
+        | round(sum(value), 2) AS sum_value
+        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin
+
+  /** Count and sum over each row's 20-minute RANGE frame. */
+  val overRangeBoundedOracle: String =
+    """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS t FROM events)
+        |SELECT e.user_id, e.event_id, count(*) AS w_cnt, round(sum(x.value), 4) AS w_sum
+        |FROM e JOIN e x ON x.user_id = e.user_id
+        |  AND x.t >= e.t - INTERVAL 1 HOUR
+        |  AND (x.t < e.t OR (x.t = e.t AND x.event_id <= e.event_id))
+        |GROUP BY e.user_id, e.event_id
+        |ORDER BY e.user_id, e.event_id""".stripMargin
+
+  /** Count and sum over each row's 2-preceding ROWS frame. */
+  val overRowsBoundedOracle: String =
+    """SELECT user_id, event_id,
+        | count(*) OVER w AS w_cnt,
+        | round(sum(value) OVER w, 4) AS w_sum
+        |FROM events
+        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        |ORDER BY user_id, event_id""".stripMargin
+
+  /** The top 3 rows by value per event_type. */
+  val topNOracle: String =
+    """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
+        | round(value, 2) AS value
+        |FROM (SELECT event_type, event_id, user_id, value,
+        |  row_number() OVER (PARTITION BY event_type
+        |    ORDER BY value DESC, event_id) AS rn FROM events)
+        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin
 
   /** DuckDB oracles — batch-SQL statements equivalent to each streaming
     * operator's final drained output. */
@@ -1137,13 +1232,7 @@ object StreamQueries {
         |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
         | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
     Query("q_proctime_over", procTimeOver,
-      """SELECT user_id, event_id,
-        | count(*) OVER w AS run_cnt,
-        | round(sum(value) OVER w, 4) AS run_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+      overOracle),
     Query("q_proctime_temporal", procTimeTemporal,
       """WITH p AS (SELECT user_id, event_id AS p_id, CAST(ts AS TIMESTAMP) AS p_t
         |           FROM events WHERE event_type = 'purchase'),
@@ -1195,9 +1284,7 @@ object StreamQueries {
         |FROM x GROUP BY user_id, win_id HAVING count(*) = 4
         |ORDER BY user_id, win_id""".stripMargin),
     Query("q_stream_tumble_late", tumbleLate,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      graft.WindowOracles.tumbleOracle),
     Query("q_stream_temporal_sort", temporalSortQuery,
       """SELECT user_id, event_id FROM events
         |ORDER BY user_id, event_id""".stripMargin),
@@ -1241,39 +1328,11 @@ object StreamQueries {
         |GROUP BY day, user_id, k
         |ORDER BY user_id, w_start, fire""".stripMargin),
     Query("q_stream_over_rows_b", overRowsBounded,
-      """SELECT user_id, event_id,
-        | count(*) OVER w AS w_cnt,
-        | round(sum(value) OVER w, 4) AS w_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+      overRowsBoundedOracle),
     Query("q_stream_over_range_b", overRangeBounded,
-      """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS t FROM events)
-        |SELECT e.user_id, e.event_id, count(*) AS w_cnt, round(sum(x.value), 4) AS w_sum
-        |FROM e JOIN e x ON x.user_id = e.user_id
-        |  AND x.t >= e.t - INTERVAL 1 HOUR
-        |  AND (x.t < e.t OR (x.t = e.t AND x.event_id <= e.event_id))
-        |GROUP BY e.user_id, e.event_id
-        |ORDER BY e.user_id, e.event_id""".stripMargin),
+      overRangeBoundedOracle),
     Query("q_stream_cep_plus", cepPlus,
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
-        |o AS (SELECT user_id, event_id, event_type,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
-        |        CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
-        |      FROM e),
-        |g AS (SELECT *, sum(is_err) OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |a AS (SELECT * FROM g WHERE is_err = 0),
-        |s AS (SELECT user_id, grp, rn, event_id,
-        |        max(CASE WHEN event_type = 'purchase' THEN rn END) OVER
-        |          (PARTITION BY user_id, grp ORDER BY rn
-        |           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS j_rn
-        |      FROM a)
-        |SELECT s.user_id, s.event_id AS a_id, b.event_id AS b_id,
-        |       CAST(s.j_rn - s.rn AS INT) AS n_a
-        |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
-        |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin),
+      cepPlusOracle),
     // until(signup): same islands derivation as q_stream_cep_plus with the
     // island additionally split at the stop event (signup never enters the
     // loop, so no A-run or its closing purchase crosses one)
@@ -1298,23 +1357,7 @@ object StreamQueries {
     // shuffled-replay twin of q_stream_cep_plus: same oracle — parked
     // quantified matches must resolve identically across micro-batches
     Query("q_stream_cep_plus_ooo", cepPlusOoo,
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
-        |o AS (SELECT user_id, event_id, event_type,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
-        |        CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
-        |      FROM e),
-        |g AS (SELECT *, sum(is_err) OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |a AS (SELECT * FROM g WHERE is_err = 0),
-        |s AS (SELECT user_id, grp, rn, event_id,
-        |        max(CASE WHEN event_type = 'purchase' THEN rn END) OVER
-        |          (PARTITION BY user_id, grp ORDER BY rn
-        |           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS j_rn
-        |      FROM a)
-        |SELECT s.user_id, s.event_id AS a_id, b.event_id AS b_id,
-        |       CAST(s.j_rn - s.rn AS INT) AS n_a
-        |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
-        |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin),
+      cepPlusOracle),
     Query("q_stream_cep_plus_rel", cepPlusReluctant,
       """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
         |o AS (SELECT user_id, event_id, event_type,
@@ -1348,33 +1391,11 @@ object StreamQueries {
         |WHERE a.k % 2 = 1
         |ORDER BY a.user_id, a_id""".stripMargin),
     Query("q_stream_hop", StreamWindowAggs.hop,
-      """WITH e AS (SELECT event_type, value,
-        |  make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 43200000000) * 43200000000) AS s0
-        | FROM events)
-        |SELECT ws AS w_start, event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM (SELECT unnest([s0, s0 - INTERVAL 12 HOUR]) AS ws, event_type, value FROM e)
-        |GROUP BY ws, event_type ORDER BY ws, event_type""".stripMargin),
+      graft.WindowOracles.hopOracle),
     Query("q_stream_cumulate", StreamWindowAggs.cumulate,
-      """WITH e AS (SELECT event_type, value, CAST(ts AS TIMESTAMP) AS t,
-        |  date_trunc('day', CAST(ts AS TIMESTAMP)) AS day FROM events),
-        |kk AS (SELECT *, CAST(floor((epoch_us(t) - epoch_us(day)) / 21600000000.0) AS INT) + 1 AS k0 FROM e),
-        |x AS (SELECT event_type, value, day, unnest(range(k0, 5)) AS k FROM kk)
-        |SELECT day AS w_start, make_timestamp(epoch_us(day) + k * 21600000000) AS w_end,
-        | event_type, count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM x GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+      graft.WindowOracles.cumulateOracle),
     Query("q_stream_dyn_session", dynamicSession,
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
-        |  CASE WHEN event_type = 'error' THEN INTERVAL 30 MINUTE
-        |       ELSE INTERVAL 60 MINUTE END AS gap FROM events),
-        |m AS (SELECT *, max(t + gap) OVER (PARTITION BY user_id ORDER BY t
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM e),
-        |br AS (SELECT *, CASE WHEN prev_end IS NULL OR t > prev_end
-        |  THEN 1 ELSE 0 END AS brk FROM m),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM br)
-        |SELECT user_id, min(t) AS w_start, count(*) AS cnt,
-        | round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+      dynSessionOracle),
     Query("q_stream_upsert", upsert,
       """SELECT user_id, event_id FROM (
         | SELECT user_id, event_id,
@@ -1481,9 +1502,7 @@ object StreamQueries {
         |FROM o GROUP BY user_id, rn // 5 HAVING count(*) = 5
         |ORDER BY user_id, win_id""".stripMargin),
     Query("q_stream_tumble", StreamWindowAggs.tumble,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      graft.WindowOracles.tumbleOracle),
     Query("q_stream_cascade", StreamWindowAggs.cascade,
       """WITH h AS (SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hs,
         |  count(*) AS cnt, sum(value) AS sv FROM events GROUP BY 1)
@@ -1496,122 +1515,35 @@ object StreamQueries {
         | round(min(value), 2) AS min_value, round(max(value), 2) AS max_value
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
     Query("q_stream_session", StreamWindowAggs.session,
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
-        |m AS (SELECT user_id, t, value,
-        |  CASE WHEN t - lag(t) OVER (PARTITION BY user_id ORDER BY t) <= INTERVAL 1 HOUR
-        |       THEN 0 ELSE 1 END AS brk FROM e),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |       ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-        |SELECT min(t) AS w_start, max(t) + INTERVAL 1 HOUR AS w_end, user_id,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+      graft.WindowOracles.sessionOracle),
     Query("q_stream_interval_join", StreamWindowAggs.intervalJoin,
-      """SELECT p.user_id, p.event_id AS p_id, v.event_id AS v_id
-        |FROM (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
-        |      WHERE event_type = 'purchase') p
-        |JOIN (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t FROM events
-        |      WHERE event_type = 'view') v
-        |  ON p.user_id = v.user_id AND v.t <= p.t AND v.t >= p.t - INTERVAL 1 HOUR
-        |ORDER BY p.user_id, p_id, v_id""".stripMargin),
+      graft.WindowOracles.intervalJoinOracle),
     Query("q_stream_dedup_last", dedupLast,
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+      dedupLastOracle),
     // the _ooo twins run the shuffled multi-batch replay; same oracle as
     // the ordered run — the hash match IS the order-independence proof
     Query("q_stream_changelog_ooo", changelogOoo,
-      """WITH o AS (SELECT user_id, event_id,
-        |  row_number() OVER w AS rn, count(*) OVER (PARTITION BY user_id) AS mx
-        | FROM events
-        | WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id))
-        |SELECT user_id, event_id, rowkind FROM (
-        | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
-        | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1
-        | UNION ALL SELECT user_id, event_id, '-U' FROM o WHERE rn < mx)
-        |ORDER BY user_id, event_id, rowkind""".stripMargin),
+      changelogOracle),
     Query("q_stream_dyn_session_ooo", dynSessionOoo,
-      """WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value,
-        |  CASE WHEN event_type = 'error' THEN INTERVAL 30 MINUTE
-        |       ELSE INTERVAL 60 MINUTE END AS gap FROM events),
-        |m AS (SELECT *, max(t + gap) OVER (PARTITION BY user_id ORDER BY t
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end FROM e),
-        |br AS (SELECT *, CASE WHEN prev_end IS NULL OR t > prev_end
-        |  THEN 1 ELSE 0 END AS brk FROM m),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY t
-        |  ROWS UNBOUNDED PRECEDING) AS sid FROM br)
-        |SELECT user_id, min(t) AS w_start, count(*) AS cnt,
-        | round(sum(value), 2) AS sum_value
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, w_start""".stripMargin),
+      dynSessionOracle),
     Query("q_stream_over_rows_b_ooo", overRowsBoundedOoo,
-      """SELECT user_id, event_id,
-        | count(*) OVER w AS w_cnt,
-        | round(sum(value) OVER w, 4) AS w_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+      overRowsBoundedOracle),
     Query("q_stream_over_range_b_ooo", overRangeBoundedOoo,
-      """WITH e AS (SELECT user_id, event_id, value, CAST(ts AS TIMESTAMP) AS t FROM events)
-        |SELECT e.user_id, e.event_id, count(*) AS w_cnt, round(sum(x.value), 4) AS w_sum
-        |FROM e JOIN e x ON x.user_id = e.user_id
-        |  AND x.t >= e.t - INTERVAL 1 HOUR
-        |  AND (x.t < e.t OR (x.t = e.t AND x.event_id <= e.event_id))
-        |GROUP BY e.user_id, e.event_id
-        |ORDER BY e.user_id, e.event_id""".stripMargin),
+      overRangeBoundedOracle),
     Query("q_stream_topn_retract_ooo", topNRetractOoo,
-      """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
-        | round(value, 2) AS value
-        |FROM (SELECT event_type, event_id, user_id, value,
-        |  row_number() OVER (PARTITION BY event_type
-        |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+      topNOracle),
     Query("q_stream_dedup_last_ooo", dedupLastOoo,
-      """SELECT user_id, event_id, event_type FROM (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        | FROM events) WHERE rn = 1 ORDER BY user_id""".stripMargin),
+      dedupLastOracle),
     Query("q_stream_topn_ooo", topNOoo,
-      """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
-        | round(value, 2) AS value
-        |FROM (SELECT event_type, event_id, user_id, value,
-        |  row_number() OVER (PARTITION BY event_type
-        |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+      topNOracle),
     Query("q_stream_over_ooo", overOoo,
-      """SELECT user_id, event_id,
-        | count(*) OVER w AS run_cnt,
-        | round(sum(value) OVER w, 4) AS run_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+      overOracle),
     Query("q_stream_cep_ooo", cepOoo,
-      """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
-        |           FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id, c_id FROM sq
-        |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
+      cepStrictOracle),
     Query("q_stream_topn_retract", topNRetract,
-      """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
-        | round(value, 2) AS value
-        |FROM (SELECT event_type, event_id, user_id, value,
-        |  row_number() OVER (PARTITION BY event_type
-        |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+      topNOracle),
     Query("q_stream_topn", topN,
-      """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
-        | round(value, 2) AS value
-        |FROM (SELECT event_type, event_id, user_id, value,
-        |  row_number() OVER (PARTITION BY event_type
-        |    ORDER BY value DESC, event_id) AS rn FROM events)
-        |WHERE rn <= 3 ORDER BY event_type, rn""".stripMargin),
+      topNOracle),
     Query("q_stream_topn_range", topNRange,
       """SELECT event_type, CAST(rn AS INT) AS rank, event_id, user_id,
         | round(value, 2) AS value
@@ -1633,33 +1565,11 @@ object StreamQueries {
         |FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.p_id = p.p_id AND c.rn = 1
         |ORDER BY p.user_id, p.p_id""".stripMargin),
     Query("q_stream_over", over,
-      """SELECT user_id, event_id,
-        | count(*) OVER w AS run_cnt,
-        | round(sum(value) OVER w, 4) AS run_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin),
+      overOracle),
     Query("q_stream_changelog", changelog,
-      """WITH o AS (SELECT user_id, event_id,
-        |  row_number() OVER w AS rn, count(*) OVER (PARTITION BY user_id) AS mx
-        | FROM events
-        | WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id))
-        |SELECT user_id, event_id, rowkind FROM (
-        | SELECT user_id, event_id, '+I' AS rowkind FROM o WHERE rn = 1
-        | UNION ALL SELECT user_id, event_id, '+U' FROM o WHERE rn > 1
-        | UNION ALL SELECT user_id, event_id, '-U' FROM o WHERE rn < mx)
-        |ORDER BY user_id, event_id, rowkind""".stripMargin),
+      changelogOracle),
     Query("q_stream_cep", cep,
-      """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
-        |           FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id, c_id FROM sq
-        |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
+      cepStrictOracle),
   )
 
   /** ooo replays converge to the ordered run's answer — same oracles. */

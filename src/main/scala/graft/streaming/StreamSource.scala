@@ -139,9 +139,9 @@ object StreamSource {
     * Spark's global-watermark correctness check flags any stateful op
     * downstream of one that emits rows older than the watermark, because
     * a downstream op with watermark-based eviction COULD silently drop
-    * them as late. The downstream stages here are NoTimeout
-    * flatMapGroupsWithState over un-watermarked (operator-generated)
-    * columns — they have no late-row predicate, so nothing is dropped;
+    * them as late. The downstream stages here are NoTimeout `KeyedOp`s
+    * (`KeyedOp.run`) over un-watermarked (operator-generated) columns —
+    * they have no late-row predicate, so nothing is dropped;
     * the DuckDB oracle hash (exact row set) re-proves it per run. The
     * check is consulted only during query PLANNING (the unsupported-
     * operation walk at start()), so the flag is off only in

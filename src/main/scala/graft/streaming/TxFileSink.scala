@@ -408,18 +408,20 @@ object TxFileSink {
   private val sinkOuts = new graft.Once[String, String](
     o => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(o)))
 
+  /** Row count and event_id total per day. */
+  val dailyEventsOracle: String =
+    """SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
+        | count(*) AS cnt, CAST(sum(event_id) AS BIGINT) AS sum_eid
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+
   val queries: Seq[Query] = Seq(
     Query("q_topic_exactly_once", exactlyOnce,
       """SELECT CAST(user_id AS VARCHAR) AS key, count(*) AS cnt,
         | CAST(sum(event_id) AS BIGINT) AS sum_eid
         |FROM events GROUP BY user_id ORDER BY key""".stripMargin),
     Query("q_stream_file_sink", rollingSink,
-      """SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-        | count(*) AS cnt, CAST(sum(event_id) AS BIGINT) AS sum_eid
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+      dailyEventsOracle),
     // compaction preserves content exactly — same oracle as the sink
     Query("q_stream_file_compact", compactedSink,
-      """SELECT strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day,
-        | count(*) AS cnt, CAST(sum(event_id) AS BIGINT) AS sum_eid
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin))
+      dailyEventsOracle))
 }

@@ -52,8 +52,6 @@ object Unified {
 
   val queries: Seq[Query] = Seq(
     Query("q_unified_pipeline", batchRun,
-      """SELECT date_trunc('day', CAST(ts AS TIMESTAMP)) AS w_start, event_type,
-        | count(*) AS cnt, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+      graft.WindowOracles.tumbleOracle),
   )
 }
