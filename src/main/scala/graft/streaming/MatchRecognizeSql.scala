@@ -1,78 +1,93 @@
 package graft.streaming
 
-import graft.Query
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, timestamp_micros, window}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.analysis.{SimpleAnalyzer, UnresolvedAttribute,
+  UnresolvedFunction, UnresolvedStar}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference,
+  AttributeSeq, BindReferences, CommonExpressionRef, Expression, GenericInternalRow, Literal,
+  Or, With}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, Last}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType,
+  TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL text surface for MATCH_RECOGNIZE, routed onto Cep.matchRecognize —
   * the reference exposes CEP through SQL (StreamExecMatch translating the
   * MATCH_RECOGNIZE relational node onto the CEP operator,
   * flink-table-planner-blink/.../stream/StreamExecMatch.scala:68; grammar
   * docs/dev/table/sql/queries.md:366). Spark's parser has no
-  * MATCH_RECOGNIZE production, so this module accepts the SQL text
-  * directly — the same position the reference's parser occupies — and
-  * compiles it onto the streaming matcher.
+  * MATCH_RECOGNIZE production, so this module splits the statement into
+  * its clauses itself and hands every expression in them to Spark's
+  * expression parser.
   *
-  * Supported subset (documented contract, spec-pinned):
-  *   SELECT <partition col and/or measure aliases> FROM events
+  * Statement (documented contract, spec-pinned):
+  *   SELECT <items> FROM events
   *   MATCH_RECOGNIZE (
   *     PARTITION BY user_id
   *     ORDER BY ts
-  *     MEASURES { FIRST(V.f [, n]) | LAST(V.f [, n]) | V.f | COUNT(V.*)
-  *              | SUM(V.value) | MIN(V.value) | MAX(V.value)
-  *              | AVG(V.value) | MATCH_NUMBER()
-  *              | MATCH_ROWTIME() } AS alias, ...  -- rowtime: ONE ROW mode
-  *                                               -- f ∈ event_id, value
-  *                                               -- doubles rounded to 6
-  *                                               -- n = logical offset
-  *                                               -- (r13); out of range
-  *                                               -- → NULL
-  *     [ONE ROW PER MATCH]
+  *     MEASURES [FINAL|RUNNING] <measure> AS alias, ...
+  *     [ONE ROW PER MATCH | ALL ROWS PER MATCH]
   *     AFTER MATCH SKIP { TO NEXT ROW | PAST LAST ROW
   *                      | TO FIRST <var> | TO LAST <var> }
-  *     PATTERN (V[+|*|?|{n}|{n,}|{n,m}|{,m}][?] ...)  -- trailing ? =
-  *                                         -- reluctant (r13: full SQL:2016
-  *                                         -- quantifier set incl. ?? and
-  *                                         -- {n,m}?, both in the
-  *                                         -- reference's unsupported list)
-  *       | PATTERN (PERMUTE(V1, V2[, V3]))
-  *       | PATTERN ((V1 V2)[*|+] V3 ...)   -- grouped repetition; a var may
-  *                                         -- recur (multi-occurrence), e.g.
-  *                                         -- (A B)* A; repetitions UNCAPPED
-  *                                         -- (Cep.matchRecognizeGroup loop)
-  *     [SUBSET U = (V1, V2[, ...]), ...]  -- union variables for MEASURES
-  *     DEFINE V AS <pred> [, ...]
+  *     PATTERN (<pattern>) [WITHIN INTERVAL 'n' {DAY|HOUR|MINUTE|SECOND}]
+  *     [SUBSET U = (V1, V2[, ...]), ...]
+  *     DEFINE V AS <condition> [, ...]
   *   )
-  * where <pred> is a full boolean expression — AND/OR/NOT with
-  * parentheses — over comparisons `field op literal` (fields
-  * event_type/value/user_id/event_id), TRUE, RUNNING aggregate
-  * conjuncts `{SUM|COUNT|MIN|MAX|AVG}(W.value|W.*) op {n | V.field}`
-  * (top-level AND position only) where W is ANY pattern variable — the
-  * cross-variable form reads the rows W has matched so far in the partial
-  * match (the reference evaluates DEFINE against the shared buffer,
-  * flink-cep nfa/sharedbuffer/SharedBuffer.java), e.g.
-  * `DEFINE B AS SUM(A.value) > B.value`; the RHS field reference must be
-  * the defined variable itself (= the current row) — and, r13,
-  * LOGICAL-OFFSET NAVIGATION in any boolean position (ref
-  * match_recognize.md:718-750, whose flagship V-pattern at :538-545 now
-  * runs): comparisons `term op term` and `nav IS [NOT] NULL` where term ∈
-  * { [k *] LAST(W.f [, n]) | [k *] FIRST(W.f [, n]) | W.f | field |
-  * number } (f numeric). LAST(W.f, n) reads the n-th-from-last row mapped
-  * to W in the partial match — the candidate row counts as the latest
-  * when W is the variable being defined; a qualified `W.f` is the current
-  * row when W is the defining variable, LAST(W.f, 0) otherwise. Out of
-  * range → SQL NULL: comparisons false, IS NULL true. An aggregate over a
-  * variable that has matched no rows yet is SQL NULL — the comparison is
-  * false (COUNT is 0, not NULL). A pattern
-  * variable without a DEFINE matches any row (SQL default). `V.event_id`
-  * in MEASURES means LAST(V.event_id) (the standard's ONE ROW PER MATCH
-  * semantics). SKIP TO FIRST/LAST of a variable that matched no rows, or
-  * that would resume on the match's own start row, raises (the
+  *
+  * <pattern> is a sequence of variables, each with an optional SQL:2016
+  * quantifier + * ? {n} {n,} {n,m} {,m} and a trailing ? for reluctant;
+  * or PERMUTE(V1, V2[, ...]) between unquantified fixed variables; or a
+  * leading grouped repetition (V1 V2)* / (V1 V2)+ before unquantified tail
+  * variables, where a variable may recur, e.g. (A B)* A (repetitions
+  * uncapped). Variables inside {- X -} are matched but left out of ALL
+  * ROWS output. Anchors ^ and $ pin the match to the partition's first and
+  * last row and, like NEXT, need a bounded input ([[runBatch]]).
+  *
+  * DEFINE <condition> is any Spark SQL boolean expression (parsed by
+  * Spark's expression parser, then resolved, coerced and bound by Spark's
+  * analyzer) over the current row's columns event_id, ts, user_id,
+  * event_type and value, plus these calls, each read by the matcher into
+  * one typed column:
+  *   V.f               the current row when V is the defined variable (or
+  *                     a SUBSET holding it), else LAST(V.f)
+  *   LAST(V.f [, n])   n-th row counting back from the last row mapped to
+  *                     V so far; the candidate counts as V's latest when V
+  *                     holds the defined variable
+  *   FIRST(V.f [, n])  n-th row counting from V's first row
+  *   PREV([V.]f [, n]) the row n (default 1) before the candidate in input
+  *                     order, whatever variable it mapped to
+  *   NEXT([V.]f [, n]) the row n after it (bounded input only)
+  *   SUM|MIN|MAX|AVG([DISTINCT] V.value), COUNT([DISTINCT] V.* | V.f)
+  *                     running aggregate over V's rows so far
+  * A SUBSET name reads its members' rows merged in partition order. Off
+  * the rows there are, a call is NULL (COUNT is 0), and the condition
+  * follows SQL's three-valued logic: a row matches when it is TRUE, so
+  * `NOT (LAST(A.value, 5) > 3)` is NULL, not TRUE, while A has fewer than
+  * six rows. A variable without a DEFINE matches any row. Loud rejects:
+  * an aggregate under OR, or beside another call in its AND conjunct; a
+  * conjunct mixing PREV/NEXT with a call over the matched rows; a
+  * PREV/NEXT qualifier other than the defined variable; NEXT and anchors
+  * on the streaming path.
+  *
+  * MEASURES: FIRST|LAST(V.f [, n]), V.f (= LAST(V.f)), COUNT(...),
+  * SUM|MIN|MAX|AVG([DISTINCT] V.value), MATCH_NUMBER() and MATCH_ROWTIME()
+  * (ONE ROW PER MATCH only), with f ∈ event_id, value; doubles are rounded
+  * to 6 decimals. In ALL ROWS mode each row sees RUNNING values, and
+  * FINAL ones when declared so. SELECT takes the partition column and
+  * measure aliases, plus event_id, value, CLASSIFIER() and MATCH_NUMBER()
+  * in ALL ROWS mode. SKIP TO FIRST/LAST of a variable that matched no
+  * rows, or that would resume on the match's own start row, raises (the
   * reference's infinite-loop guard). */
 // Serializable: compiled DEFINE predicates are closures that call the
 // object's helper methods from executor tasks; a Scala object serializes
 // as a marker and readResolves back to the singleton.
-object MatchRecognizeSql extends Serializable {
+object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
   import StreamSource.Event
 
   sealed trait Measure { def variable: String; def alias: String }
@@ -138,7 +153,7 @@ object MatchRecognizeSql extends Serializable {
                   anchorStart: Boolean = false,
                   anchorEnd: Boolean = false)
 
-  // ---------------------------------------------------------------- parsing
+  // ------------------------------------------------------ clause splitting
 
   private val mrRe =
     "(?is)^\\s*SELECT\\s+(.*?)\\s+FROM\\s+(\\w+)\\s+MATCH_RECOGNIZE\\s*\\((.*)\\)\\s*$".r
@@ -154,13 +169,6 @@ object MatchRecognizeSql extends Serializable {
   private val withinRe =
     "(?is)PATTERN\\s*\\((?:[^()]|\\([^)]*\\))*\\)\\s*WITHIN\\s+INTERVAL\\s+'(\\d+)'\\s+(DAY|HOUR|MINUTE|SECOND)S?".r
   private val defineRe = "(?is)DEFINE\\s+(.*)$".r
-  private val measureRe =
-    ("(?is)^(?:(FINAL|RUNNING)\\s+)?(?:(FIRST|LAST|COUNT|SUM|MIN|MAX|AVG)" +
-      "\\s*\\(\\s*)?(?:(DISTINCT)\\s+)?(\\w+)\\.(event_id|value|\\*)\\s*(?:,\\s*(\\d+)\\s*)?\\)?\\s+AS\\s+(\\w+)$").r
-  private val matchNumRe =
-    "(?is)^MATCH_NUMBER\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)$".r
-  private val matchRowtimeRe =
-    "(?is)^MATCH_ROWTIME\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)$".r
   // quantifiers (ref match_recognize.md:352-359): + * ? {n} {n,} {n,m}
   // {,m}, each with an optional reluctant '?' suffix. The reference
   // rejects the reluctant optional (`A??`, match_recognize.md:1113) and
@@ -169,7 +177,6 @@ object MatchRecognizeSql extends Serializable {
   // (superset, spec-pinned).
   private val tokenRe =
     "([A-Za-z]\\w*)(\\+\\?|\\*\\?|\\+|\\*|\\?\\?|\\?|\\{\\s*(\\d*)\\s*(,?)\\s*(\\d*)\\s*\\}(\\?)?)?".r
-  private val cmpRe = "(?s)^(\\w+)\\s*(<>|!=|<=|>=|=|<|>)\\s*(?:'([^']*)'|([-0-9.eE]+))$".r
 
   def parse(sqlText: String): Spec = parse(sqlText, boundedInput = false)
 
@@ -180,7 +187,6 @@ object MatchRecognizeSql extends Serializable {
     * (runBatch); the streaming entry parses with the default and keeps
     * the loud reject on both features. */
   def parse(sqlText: String, boundedInput: Boolean): Spec = {
-    val allowNext = boundedInput
     val (selectList, table, body) = sqlText match {
       case mrRe(sel, tbl, b) => (sel, tbl, b)
       case _ => throw new IllegalArgumentException(
@@ -200,49 +206,28 @@ object MatchRecognizeSql extends Serializable {
     // RUNNING (the default there) the value as of the current row; in ONE
     // ROW mode both coincide with the final row's value, so the flag only
     // matters for ALL ROWS (tracked by alias in finalAliases).
-    val finalAliasB = Set.newBuilder[String]
-    val measures = measuresRe.findFirstMatchIn(body)
-      .map(_.group(1)).toSeq
+    val items = measuresRe.findFirstMatchIn(body).map(_.group(1)).toSeq
       .flatMap(splitCommas) // paren-aware: LAST(V.f, n) carries a comma
-      .map(_.trim).filter(_.nonEmpty)
-      .map {
-        case matchNumRe(alias) => MatchNumM(alias)
-        case matchRowtimeRe(alias) => MatchRowtimeM(alias)
-        case measureRe(sem, fn, dist, v, field, off, alias) =>
-          if (Option(sem).exists(_.equalsIgnoreCase("FINAL")))
-            finalAliasB += alias.toLowerCase
-          val f = Option(fn).map(_.toUpperCase).getOrElse("LAST")
-          val offset = Option(off).map(_.toInt).getOrElse(0)
-          require(offset == 0 || f == "FIRST" || f == "LAST",
-            s"logical offset applies to FIRST/LAST only, got $f")
-          // DISTINCT aggregations (r14 — last aggregation row of the
-          // reference's unsupported list, match_recognize.md:1126): over
-          // the variable's matched VALUES; FIRST/LAST take no DISTINCT
-          val distinct = dist != null
-          require(!distinct || Set("COUNT", "SUM", "MIN", "MAX", "AVG")(f),
-            s"DISTINCT applies to aggregates only, got $f")
-          require(!distinct || field == "value",
-            s"DISTINCT aggregates over the value field, got $field")
-          f match {
-            case "COUNT" => CountM(v, alias, distinct)
-            case "SUM" | "MIN" | "MAX" | "AVG" =>
-              require(field == "value", s"$f expects a value field, got $field")
-              ValAggM(f, v, alias, distinct)
-            case "FIRST" =>
-              require(field != "*", "FIRST expects a field")
-              FirstM(v, alias, field, offset)
-            case _ =>
-              require(field != "*", "LAST expects a field")
-              LastM(v, alias, field, offset)
-          }
-        case m => throw new IllegalArgumentException(s"unsupported measure: $m")
+      .map { item =>
+        item.split("\\s+", 2) match {
+          case Array(w, rest) if w.equalsIgnoreCase("FINAL") => (true, rest)
+          case Array(w, rest) if w.equalsIgnoreCase("RUNNING") => (false, rest)
+          case _ => (false, item)
+        }
       }
-    val finalAliases = finalAliasB.result()
+    val measures = items.map { case (_, text) =>
+      parseExpr(text) match {
+        case Alias(e, alias) => measureOf(e, alias)
+        case _ => throw new IllegalArgumentException(s"unsupported measure: $text")
+      }
+    }
+    val finalAliases = items.zip(measures).collect {
+      case ((true, _), m) => m.alias.toLowerCase }.toSet
 
     // SUBSET U = (A, B): union variables usable in MEASURES and (r13)
-    // in DEFINE aggregate/navigation atoms — the union's rows are the
-    // members' occurrences, merged into partition order. SUBSET is in
-    // the reference's OWN unsupported list (match_recognize.md:1119).
+    // in DEFINE — the union's rows are the members' occurrences, merged
+    // into partition order. SUBSET is in the reference's OWN unsupported
+    // list (match_recognize.md:1119).
     val subsetRe = "(?is)SUBSET\\s+(\\w+)\\s*=\\s*\\(([^)]*)\\)".r
     val subsets: Map[String, Seq[String]] =
       subsetRe.findAllMatchIn(body).map { m =>
@@ -259,12 +244,12 @@ object MatchRecognizeSql extends Serializable {
 
     val defines: Map[String, CompiledDefine] =
       defineRe.findFirstMatchIn(body).map(_.group(1)).toSeq
-        .flatMap(splitTopLevel)
+        .flatMap(splitCommas)
         .map { d =>
           val kv = d.split("(?is)\\s+AS\\s+", 2)
           require(kv.length == 2, s"bad DEFINE entry: $d")
           val varName = kv(0).trim.toUpperCase
-          varName -> compileDefine(varName, kv(1).trim, subsets, allowNext)
+          varName -> compileDefine(varName, kv(1).trim, subsets, boundedInput)
         }.toMap
 
     val patternBodyRaw = patternRe.findFirstMatchIn(body).map(_.group(1))
@@ -295,7 +280,7 @@ object MatchRecognizeSql extends Serializable {
     val patternBody = patternBody0.stripPrefix("^").stripSuffix("$").trim
     require(!patternBody.contains("^") && !patternBody.contains("$"),
       "anchors are supported only at the pattern's ends")
-    require(allowNext || (!anchorStart && !anchorEnd),
+    require(boundedInput || (!anchorStart && !anchorEnd),
       "anchors ^/$ are out of subset on the streaming path (a stream has " +
         "no first or last row to pin to — the reference's own argument); " +
         "run the statement in BATCH mode (runBatch)")
@@ -421,22 +406,14 @@ object MatchRecognizeSql extends Serializable {
     measures.foreach {
       case _: MatchNumM => ()
       case _: MatchRowtimeM => ()
-      case m => require(
-        patVars.contains(m.variable.toUpperCase) ||
-          subsets.contains(m.variable.toUpperCase),
+      case m => require(patVars.contains(m.variable) || subsets.contains(m.variable),
         s"measure references undefined pattern variable ${m.variable}")
     }
-    require(!measures.exists(_.isInstanceOf[MatchRowtimeM]) ||
-      allRowsRe.findFirstIn(body).isEmpty,
+    val allRows = allRowsRe.findFirstIn(body).isDefined
+    require(!measures.exists(_.isInstanceOf[MatchRowtimeM]) || !allRows,
       "MATCH_ROWTIME() is a ONE ROW PER MATCH measure in this subset")
 
     val selectCols = selectList.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val allRows = allRowsRe.findFirstIn(body).isDefined
-    // ALL ROWS PER MATCH + MEASURES: the standard's default RUNNING
-    // semantics (each emitted row sees aggregates over the match's rows up
-    // to and including itself); a FINAL prefix (r12, finalAliases →
-    // matchAllRowsFinalSql / q_sql_match_rows_final) substitutes the
-    // match-final value on every row instead.
     val within = withinRe.findFirstMatchIn(body).map { m =>
       m.group(1).toLong * (m.group(2).toUpperCase match {
         case "DAY" => 86400000000L
@@ -459,11 +436,6 @@ object MatchRecognizeSql extends Serializable {
       require(patVars.exists(v => !excluded.contains(v)),
         "a pattern may not exclude every variable")
     }
-    // r16: anchors compose with the FULL bounded grammar — the PERMUTE /
-    // grouped-repetition branches forward anchorStart/anchorEnd into the
-    // bounded matchers (matchRecognizeBoundedAlts/BoundedGroup), so the
-    // former sequential-subset require here is gone; the streaming path
-    // is still gated above on the bounded-features flag.
     Spec(selectCols, table, partitionCol.toLowerCase, orderCol.toLowerCase,
       measures, skipPast, pattern, allRows, within, skipTo, isPermute, groupRep,
       subsets,
@@ -497,262 +469,94 @@ object MatchRecognizeSql extends Serializable {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  private def splitTopLevel(s: String): Seq[String] = splitCommas(s)
+  // ------------------------------------------------ expressions (Catalyst)
 
-  // -------------------------------------------- DEFINE predicate language
-  //
-  // Recursive-descent boolean expressions (ref parser grammar,
-  // docs/dev/table/sql/queries.md:366 DEFINE):
-  //   expr  := and (OR and)*
-  //   and   := unary (AND unary)*
-  //   unary := NOT unary | '(' expr ')' | atom
-  //   atom  := TRUE | field op literal | SUM(V.value)|COUNT(V.*) op number
-  // Aggregate atoms are RUNNING aggregates over the variable's own rows
-  // and — documented subset — may only appear as top-level AND conjuncts
-  // of that same variable's DEFINE (the reference additionally allows
-  // cross-variable references through the shared buffer).
+  /** Spark's expression parser; a parse error is a reject of the statement. */
+  private def parseExpr(text: String): Expression = catalyst(text)(
+    CatalystSqlParser.parseExpression(text))
 
-  private sealed trait Px
-  private case class RowCmp(f: Event => Boolean) extends Px
-  /** Aggregate conjunct `fn([DISTINCT] variable.value) op (lit |
-    * rhsField-of-self)`: `lit` xor `rhsField` is set; `rhsField` reads the
-    * CURRENT row (the defined variable's candidate). `distinct` (r14)
-    * aggregates the variable's DISTINCT values — always the x-path (the
-    * incremental (cnt, sum) fast fold can't dedup). */
-  private case class AggCmp(fn: String, variable: String, op: String,
-                            lit: Option[Double], rhsField: Option[String],
-                            distinct: Boolean = false) extends Px
-  private case class PAnd(l: Px, r: Px) extends Px
-  private case class POr(l: Px, r: Px) extends Px
-  private case class PNot(p: Px) extends Px
-
-  // ---- logical-offset navigation terms (SQL:2016 / ref
-  // docs/dev/table/streaming/match_recognize.md:718-750): LAST(V.field, n)
-  // reads the n-th-from-last row mapped to V in the PARTIAL match (the
-  // candidate row counts as LAST(..., 0) when V is the variable being
-  // defined); FIRST(V.field, n) the n-th from the front. Out of range →
-  // SQL NULL: comparisons are false, IS NULL is true. A bare qualified
-  // field `W.field` means LAST(W.field, 0) when W is another variable and
-  // the CURRENT row when W is the defining variable (the reference's
-  // cross-variable row references — its flagship V-pattern at
-  // match_recognize.md:538-545 uses both forms). Terms may carry a
-  // `k * LAST(...)` numeric scale (the doc's `2 * LAST(B.price, 2)`).
-  private sealed trait NavTerm
-  private case class NavLit(x: Double) extends NavTerm
-  /** Field of the CURRENT candidate row (bare, or qualified by the
-    * defining variable — resolved in compileDefine). */
-  private case class NavCur(field: String) extends NavTerm
-  /** Unresolved qualified field `W.field` — compileDefine resolves it to
-    * NavCur (W = defining var) or NavOf LAST 0 (cross-variable). */
-  private case class NavQual(variable: String, field: String) extends NavTerm
-  private case class NavOf(fn: String, variable: String, field: String,
-                           n: Int, scale: Double = 1.0) extends NavTerm
-  /** Physical offset `PREV([V.]field [, n])` (r14 — ref match_recognize.md:
-    * 1121-1122, unsupported there): the row n BEFORE the candidate in the
-    * partition's INPUT order, whatever variable (if any) it mapped to —
-    * contrast NavOf, which walks only the rows a variable matched. Off the
-    * partition start → SQL NULL. The qualifier, when present, must name
-    * the defining variable (the standard's own DEFINE idiom). NEXT stays
-    * out of subset: forward lookahead against unarrived rows is the same
-    * anti-streaming shape as anchors, and the matcher rejects it loudly. */
-  private case class NavPrev(field: String, n: Int, scale: Double = 1.0,
-                             qual: Option[String] = None) extends NavTerm
-  /** Physical FORWARD offset `NEXT([V.]field [, n])` (r15 — BATCH mode
-    * only): the row n AFTER the candidate in the partition's input order.
-    * On a bounded partition forward lookahead is free — every row is in
-    * the buffer when the single atEnd drain runs — which is exactly the
-    * reference's own argument inverted: its docs reject NEXT because a
-    * stream's later rows haven't arrived (match_recognize.md:1121-1122),
-    * an argument void in batch. Past the partition end → SQL NULL. The
-    * STREAMING path keeps the loud reject (parse with allowNext=false). */
-  private case class NavNext(field: String, n: Int, scale: Double = 1.0,
-                             qual: Option[String] = None) extends NavTerm
-  private case class NavCmpPx(l: NavTerm, op: String, r: NavTerm) extends Px
-  private case class NavNullPx(t: NavTerm, negated: Boolean) extends Px
-
-  private val aggAtomRe =
-    ("(?is)^(SUM|COUNT|MIN|MAX|AVG)\\s*\\(\\s*(?:(DISTINCT)\\s+)?(\\w+)\\.(value|\\*)\\s*\\)\\s*" +
-      "(<=|>=|<>|!=|<|>|=)\\s*(?:([-0-9.eE]+)|(\\w+)\\.(value|user_id|event_id))").r
-  private val navFnRe =
-    ("(?is)^(?:([-0-9.]+(?:[eE]-?\\d+)?)\\s*\\*\\s*)?(LAST|FIRST)\\s*\\(\\s*" +
-      "(\\w+)\\.(value|event_id|user_id)\\s*(?:,\\s*(\\d+)\\s*)?\\)$").r
-  private val physPrevRe =
-    ("(?is)^(?:([-0-9.]+(?:[eE]-?\\d+)?)\\s*\\*\\s*)?PREV\\s*\\(\\s*" +
-      "(?:(\\w+)\\.)?(value|event_id|user_id)\\s*(?:,\\s*(\\d+)\\s*)?\\)$").r
-  private val physNextRe =
-    ("(?is)^(?:([-0-9.]+(?:[eE]-?\\d+)?)\\s*\\*\\s*)?NEXT\\s*\\(\\s*" +
-      "(?:(\\w+)\\.)?(value|event_id|user_id)\\s*(?:,\\s*(\\d+)\\s*)?\\)$").r
-  private val qualFieldRe = "(?is)^(\\w+)\\.(value|event_id|user_id)$".r
-  private val navNullRe = "(?is)^(.*?)\\s+IS\\s+(NOT\\s+)?NULL$".r
-  private val cmpSplitRe = "(?s)^(.*?)\\s*(<=|>=|<>|!=|=|<|>)\\s*(.*)$".r
-
-  /** Parse one comparison term of the navigation grammar; None if the text
-    * is not a term (caller falls back to the plain row-comparison path). */
-  private def parseNavTerm(t: String): Option[NavTerm] = t.trim match {
-    case navFnRe(scale, fn, v, field, n) =>
-      Some(NavOf(fn.toUpperCase, v.toUpperCase, field.toLowerCase,
-        Option(n).map(_.toInt).getOrElse(0),
-        Option(scale).map(_.toDouble).getOrElse(1.0)))
-    // SQL:2016 default physical offset is 1 (PREV(f) = the row just before)
-    case physPrevRe(scale, q, field, n) =>
-      Some(NavPrev(field.toLowerCase, Option(n).map(_.toInt).getOrElse(1),
-        Option(scale).map(_.toDouble).getOrElse(1.0),
-        Option(q).map(_.toUpperCase)))
-    case physNextRe(scale, q, field, n) =>
-      Some(NavNext(field.toLowerCase, Option(n).map(_.toInt).getOrElse(1),
-        Option(scale).map(_.toDouble).getOrElse(1.0),
-        Option(q).map(_.toUpperCase)))
-    case qualFieldRe(v, field) => Some(NavQual(v.toUpperCase, field.toLowerCase))
-    case s if s.matches("(?i)value|user_id|event_id") => Some(NavCur(s.toLowerCase))
-    case s if s.matches("[-0-9.eE]+") &&
-      scala.util.Try(s.toDouble).isSuccess => Some(NavLit(s.toDouble))
-    case _ => None
-  }
-
-  private def navMentioned(t: String, allowNext: Boolean = false): Boolean = {
-    // streaming keeps the loud reject (the reference's own anti-streaming
-    // argument); BATCH parses with allowNext = true, where the whole
-    // partition is buffered and forward lookahead is decidable (r15)
-    require(allowNext || "(?is)\\bNEXT\\s*\\(".r.findFirstIn(t).isEmpty,
-      "NEXT physical offset is out of subset on the streaming path (forward " +
-        "lookahead against unarrived rows — the anchors argument); run the " +
-        "statement in BATCH mode (runBatch) or use PREV from a later row")
-    "(?is)(LAST|FIRST|PREV|NEXT)\\s*\\(".r.findFirstIn(t).isDefined ||
-      "(?is)\\b\\w+\\.(value|event_id|user_id)\\b".r.findFirstIn(t).isDefined
-  }
-
-  private class PredParser(text: String, allowNext: Boolean = false) {
-    private var rest = text.trim
-    private def ws(): Unit = { rest = rest.dropWhile(_.isWhitespace) }
-    private def eat(kw: String): Boolean = {
-      ws()
-      if (rest.regionMatches(true, 0, kw, 0, kw.length) &&
-          (kw.length >= rest.length || !rest.charAt(kw.length).isLetterOrDigit ||
-            !kw.last.isLetterOrDigit)) {
-        rest = rest.substring(kw.length); true
-      } else false
+  private def catalyst[T](text: String)(f: => T): T =
+    try f catch {
+      case e: AnalysisException =>
+        throw new IllegalArgumentException(s"unsupported expression `$text`: ${e.getMessage}", e)
     }
-    def parse(): Px = { val p = expr(); ws(); require(rest.isEmpty, s"trailing: $rest"); p }
-    private def expr(): Px = {
-      var l = and()
-      while (eat("OR")) l = POr(l, and())
-      l
-    }
-    private def and(): Px = {
-      var l = unary()
-      while (eat("AND")) l = PAnd(l, unary())
-      l
-    }
-    private def unary(): Px = {
-      ws()
-      if (eat("NOT")) PNot(unary())
-      else if (rest.startsWith("(")) {
-        rest = rest.substring(1)
-        val p = expr()
-        ws()
-        require(rest.startsWith(")"), s"expected ) at: $rest")
-        rest = rest.substring(1)
-        p
-      } else atom()
-    }
-    private def atom(): Px = {
-      ws()
-      aggAtomRe.findFirstMatchIn(rest) match {
-        case Some(m) =>
-          rest = rest.substring(m.end)
-          val (lit, rhsField) =
-            if (m.group(6) != null) (Some(m.group(6).toDouble), None)
-            else {
-              // RHS `W.field` reads the CURRENT row; the parser records the
-              // qualifier for compileDefine to check against the defined var
-              (None, Some((m.group(7).toUpperCase, m.group(8).toLowerCase)))
-            }
-          val distinct = m.group(2) != null
-          require(!distinct || m.group(4).equalsIgnoreCase("value"),
-            "DISTINCT aggregates over the value field in DEFINE")
-          return AggCmp(m.group(1).toUpperCase, m.group(3).toUpperCase,
-            m.group(5), lit, rhsField.map { case (q, f) => s"$q.$f" }, distinct)
-        case None => ()
+
+  /** A function call as (upper-case name, arguments, DISTINCT); the
+    * parser builds a one-argument FIRST/LAST as Spark's own aggregate. */
+  private object Call {
+    def unapply(e: Expression): Option[(String, Seq[Expression], Boolean)] = e match {
+      case f: UnresolvedFunction => Some((f.nameParts.last.toUpperCase, f.arguments, f.isDistinct))
+      case a: AggregateExpression => a.aggregateFunction match {
+        case f: First if !f.ignoreNulls => Some(("FIRST", Seq(f.child), a.isDistinct))
+        case l: Last if !l.ignoreNulls => Some(("LAST", Seq(l.child), a.isDistinct))
+        case _ => None
       }
-      if (eat("TRUE")) return RowCmp(_ => true)
-      // a comparison runs to the next top-level AND/OR/closing paren
-      val endIdx = {
-        var i = 0; var depth = 0; var stop = -1
-        while (i < rest.length && stop < 0) {
-          val c = rest.charAt(i)
-          if (c == '(') depth += 1
-          else if (c == ')') { if (depth == 0) stop = i else depth -= 1 }
-          else if (depth == 0 &&
-            (rest.regionMatches(true, i, " AND ", 0, 5) ||
-             rest.regionMatches(true, i, " OR ", 0, 4))) stop = i
-          i += 1
-        }
-        if (stop < 0) rest.length else stop
-      }
-      val t = rest.substring(0, endIdx).trim
-      rest = rest.substring(endIdx)
-      compileAtom(t, allowNext)
+      case _ => None
     }
   }
 
-  /** Compile one comparison token: navigation forms (LAST/FIRST(V.f, n),
-    * qualified fields, IS [NOT] NULL) when present, else the plain
-    * row-comparison path (bare field vs literal — keeps string
-    * comparisons like event_type = 'view'). */
-  private def compileAtom(t: String, allowNext: Boolean = false): Px = {
-    t match {
-      case navNullRe(term, not) if navMentioned(term, allowNext) =>
-        val nav = parseNavTerm(term).getOrElse(
-          throw new IllegalArgumentException(s"bad IS NULL term: $term"))
-        require(!nav.isInstanceOf[NavLit], s"IS NULL of a literal: $term")
-        return NavNullPx(nav, negated = not != null)
-      case _ => ()
-    }
-    if (navMentioned(t, allowNext)) t match {
-      case cmpSplitRe(lhs, op, rhs) =>
-        val l = parseNavTerm(lhs).getOrElse(throw new IllegalArgumentException(
-          s"unsupported navigation term: $lhs"))
-        val r = parseNavTerm(rhs).getOrElse(throw new IllegalArgumentException(
-          s"unsupported navigation term: $rhs"))
-        NavCmpPx(l, op, r)
-      case _ => throw new IllegalArgumentException(s"unsupported predicate term: $t")
-    } else RowCmp(compileCmp(t))
+  /** `V.f` → (V, f) and `V.*` → (V, "*"), V upper-cased. */
+  private def qualified(e: Expression): (String, String) = e match {
+    case UnresolvedAttribute(Seq(v, f)) => (v.toUpperCase, f.toLowerCase)
+    case UnresolvedStar(Some(Seq(v))) => (v.toUpperCase, "*")
+    case _ => throw new IllegalArgumentException(s"expected a qualified V.field, got $e")
   }
 
-  private def cmpNum(op: String): (Double, Double) => Boolean = op match {
-    case "="         => _ == _
-    case "<>" | "!=" => _ != _
-    case "<"         => _ < _
-    case "<="        => _ <= _
-    case ">"         => _ > _
-    case ">="        => _ >= _
+  /** The optional offset argument of a navigation call. */
+  private def offset(args: Seq[Expression], default: Int): Int = args match {
+    case Seq() => default
+    case Seq(Literal(n: Int, IntegerType)) if n >= 0 => n
+    case _ => throw new IllegalArgumentException(
+      s"a navigation offset is one non-negative integer literal, got ${args.mkString(", ")}")
   }
 
-  private def compileCmp(t: String): Event => Boolean = {
-    t match {
-      case cmpRe(field, op, strLit, numLit) =>
-        val fl = field.toLowerCase
-        if (strLit != null) {
-          require(fl == "event_type", s"string comparison on non-string field $field")
-          op match {
-            case "="         => e => e.event_type == strLit
-            case "<>" | "!=" => e => e.event_type != strLit
-            case _ => throw new IllegalArgumentException(s"unsupported string op $op")
-          }
-        } else {
-          val x = numLit.toDouble
-          val get: Event => Double = fl match {
-            case "value"    => _.value
-            case "user_id"  => _.user_id.toDouble
-            case "event_id" => _.event_id.toDouble
-            case _ => throw new IllegalArgumentException(s"unknown numeric field $field")
-          }
-          val c = cmpNum(op)
-          e => c(get(e), x)
-        }
-      case _ => throw new IllegalArgumentException(s"unsupported predicate term: $t")
+  private def measureOf(e: Expression, alias: String): Measure = {
+    def nav(fn: String, arg: Expression, n: Seq[Expression], distinct: Boolean): Measure = {
+      require(!distinct, s"DISTINCT applies to aggregates only, got $fn")
+      val (v, f) = qualified(arg)
+      require(f == "event_id" || f == "value", s"$fn measures read event_id or value, got $f")
+      if (fn == "FIRST") FirstM(v, alias, f, offset(n, 0)) else LastM(v, alias, f, offset(n, 0))
+    }
+    e match {
+      case Call("MATCH_NUMBER", Seq(), false) => MatchNumM(alias)
+      case Call("MATCH_ROWTIME", Seq(), false) => MatchRowtimeM(alias)
+      case Call(fn @ ("FIRST" | "LAST"), arg +: n, distinct) => nav(fn, arg, n, distinct)
+      case Call(fn @ ("COUNT" | "SUM" | "MIN" | "MAX" | "AVG"), Seq(arg), distinct) =>
+        val (v, f) = qualified(arg)
+        require(fn == "COUNT" && !distinct || f == "value",
+          s"$fn${if (distinct) " DISTINCT" else ""} aggregates over the value field, got $f")
+        if (fn == "COUNT") CountM(v, alias, distinct) else ValAggM(fn, v, alias, distinct)
+      case UnresolvedAttribute(Seq(_, _)) => nav("LAST", e, Nil, distinct = false)
+      case _ => throw new IllegalArgumentException(s"unsupported measure: $e AS $alias")
     }
   }
+
+  /** The events columns a DEFINE reads, in row order. */
+  private val columns: Seq[(String, DataType)] = Seq("event_id" -> LongType,
+    "ts" -> TimestampType, "user_id" -> LongType, "event_type" -> StringType,
+    "value" -> DoubleType)
+
+  /** Column `f` of `e` in Catalyst's internal representation. */
+  private def cell(e: Event, f: String): Any = f match {
+    case "event_id"   => e.event_id
+    case "ts"         => DateTimeUtils.fromJavaTimestamp(e.ts)
+    case "user_id"    => e.user_id
+    case "event_type" => UTF8String.fromString(e.event_type)
+    case _            => e.value
+  }
+
+  private def columnType(f: String): DataType = columns.collectFirst {
+    case (`f`, t) => t
+  }.getOrElse(throw new IllegalArgumentException(s"unknown events column: $f"))
+
+  /** A navigation call of a DEFINE, read by the matcher into one column. */
+  private sealed trait Slot
+  /** FIRST/LAST(V.f, n) over the rows V has matched so far. */
+  private case class Nav(first: Boolean, variable: String, field: String, n: Int) extends Slot
+  /** A running aggregate over the values of V's rows so far. */
+  private case class Agg(fn: String, variable: String, distinct: Boolean) extends Slot
+  /** PREV (offset −n) / NEXT (offset +n): a row of the input buffer. */
+  private case class Phys(offset: Int, field: String) extends Slot
 
   /** Compiled DEFINE body: row predicate + optional same-variable running
     * aggregate (the fast path the matcher folds incrementally) + optional
@@ -766,308 +570,181 @@ object MatchRecognizeSql extends Serializable {
                             phys: Option[(IndexedSeq[Event], Int, Event) => Boolean] = None,
                             physDepth: Int = 0)
 
-  /** Compile one DEFINE body. The engine-internal sentinel row never
-    * matches. Same-variable SUM/COUNT against a literal keep the
-    * incremental (cnt, sum) fast path; aggregates over ANOTHER variable,
-    * MIN/MAX/AVG, and field-valued RHS go through the cross-variable path
-    * reading the partial match's per-variable rows (ref NFA.java DEFINE
-    * evaluation against SharedBuffer.java's partial-match rows). */
+  /** Compile one DEFINE body into one Catalyst predicate over the event
+    * columns plus one column per navigation call (the slots), and split
+    * its AND conjuncts by what their slots read: none → `rowPred`; only
+    * the variable's own running SUM/COUNT → `agg`, the matcher's
+    * incremental (count, sum) fold; PREV/NEXT → `phys`, the input buffer;
+    * the rest → `xagg`, the partial match's per-variable rows (ref NFA.java
+    * DEFINE evaluation against SharedBuffer.java's partial-match rows).
+    * The engine-internal sentinel row never matches. */
   def compileDefine(varName: String, text: String,
                     subsets: Map[String, Seq[String]] = Map.empty,
                     allowNext: Boolean = false): CompiledDefine = {
-    val ast = new PredParser(text, allowNext).parse()
-    // SUBSET union resolution inside DEFINE (r13 — SUBSET itself is in the
-    // reference's unsupported list, match_recognize.md:1119, which names
-    // "using those groups in the DEFINE and MEASURES clauses" as the
-    // feature): a subset name reads the CONCATENATION of its members' rows
-    // matched so far, merged into partition order (ts, event_id) so
-    // navigation offsets over the union are well-defined.
-    def rowsOf(vars: Map[String, IndexedSeq[Event]], v: String): IndexedSeq[Event] =
-      subsets.get(v) match {
+    val slots = scala.collection.mutable.ArrayBuffer.empty[(Slot, AttributeReference)]
+    def slot(s: Slot): AttributeReference = slots.find(_._1 == s).map(_._2).getOrElse {
+      val t = s match {
+        case Agg("COUNT", _, _) => LongType
+        case _: Agg => DoubleType
+        case Nav(_, _, f, _) => columnType(f)
+        case Phys(_, f) => columnType(f)
+      }
+      val a = AttributeReference(s"__slot${slots.size}", t)()
+      slots += s -> a
+      a
+    }
+    val rowAttrs = columns.map { case (n, t) => AttributeReference(n, t)() }
+    def column(f: String) = rowAttrs(columns.indexWhere(_._1 == f.toLowerCase) match {
+      case -1 => throw new IllegalArgumentException(s"unknown events column: $f")
+      case i => i
+    })
+    val withSlots = parseExpr(text).transformDown {
+      case Call(fn @ ("FIRST" | "LAST"), arg +: n, false) =>
+        val (v, f) = qualified(arg)
+        slot(Nav(fn == "FIRST", v, f, offset(n, 0)))
+      case Call(fn @ ("PREV" | "NEXT"), arg +: n, false) =>
+        // streaming keeps the loud reject (the reference's own
+        // anti-streaming argument); BATCH parses with allowNext = true,
+        // where the whole partition is buffered and lookahead is decidable
+        require(fn == "PREV" || allowNext,
+          "NEXT physical offset is out of subset on the streaming path (forward " +
+            "lookahead against unarrived rows — the anchors argument); run the " +
+            "statement in BATCH mode (runBatch) or use PREV from a later row")
+        val f = arg match {
+          case UnresolvedAttribute(Seq(f)) => f.toLowerCase
+          case _ =>
+            val (v, f) = qualified(arg)
+            require(v == varName,
+              s"$fn qualifier $v inside DEFINE $varName must name the defined variable")
+            f
+        }
+        val k = offset(n, 1) // SQL:2016 default physical offset is 1
+        slot(Phys(if (fn == "PREV") -k else k, f))
+      case Call(fn @ ("SUM" | "COUNT" | "MIN" | "MAX" | "AVG"), Seq(arg), distinct) =>
+        val (v, f) = qualified(arg)
+        require(fn == "COUNT" && !distinct || f == "value",
+          s"$fn${if (distinct) " DISTINCT" else ""} aggregates over the value field in DEFINE")
+        slot(Agg(fn, v, distinct))
+      case UnresolvedAttribute(Seq(v, f)) if v.toUpperCase == varName => column(f)
+      case a @ UnresolvedAttribute(Seq(_, _)) =>
+        val (v, f) = qualified(a)
+        slot(Nav(first = false, v, f, 0))
+      // Spark's stock analyzer resolves case-sensitively; columns do not
+      case UnresolvedAttribute(Seq(f)) => column(f)
+    }
+    val attrs = rowAttrs ++ slots.map(_._2)
+    val cond = catalyst(text)(ReplaceExpressions(SimpleAnalyzer.executeAndCheck(
+      Filter(withSlots, LocalRelation(attrs)), new QueryPlanningTracker(None)))
+      .asInstanceOf[Filter].condition)
+      // a replaced expression may share a subterm through `With` (BETWEEN
+      // does), which only the optimizer rewrites: inline it
+      .transformUp { case With(c, defs) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        c.transform { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
+      }
+    require(cond.deterministic, s"DEFINE $varName must be deterministic: $text")
+
+    val slotOf = slots.map { case (s, a) => a.exprId -> s }.toMap
+    def slotsIn(c: Expression): Seq[Slot] = c.references.toSeq.flatMap(a => slotOf.get(a.exprId))
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def aggUnderOr(e: Expression, underOr: Boolean): Boolean = e match {
+      case a: AttributeReference => underOr && slotOf.get(a.exprId).exists(_.isInstanceOf[Agg])
+      case _ => e.children.exists(aggUnderOr(_, underOr || e.isInstanceOf[Or]))
+    }
+    val (physC, matchC) = conjuncts(cond).partition(slotsIn(_).exists(_.isInstanceOf[Phys]))
+    physC.foreach(c => require(slotsIn(c).forall(_.isInstanceOf[Phys]),
+      s"DEFINE $varName: PREV/NEXT read the input rows, so they cannot share a conjunct " +
+        s"with LAST/FIRST, a cross-variable field or an aggregate: ${c.sql}"))
+    matchC.filter(slotsIn(_).exists(_.isInstanceOf[Agg])).foreach { c =>
+      require(!aggUnderOr(c, underOr = false),
+        "aggregate DEFINE terms are supported only as top-level AND conjuncts")
+      require(slotsIn(c).forall(_.isInstanceOf[Agg]),
+        s"a DEFINE $varName conjunct holding an aggregate may compare it only with " +
+          s"the current row: ${c.sql}")
+    }
+    val (fastC, restC) = matchC.partition { c =>
+      val ss = slotsIn(c)
+      ss.nonEmpty && c.references.size == ss.size && ss.forall {
+        case Agg(fn, v, false) => v == varName && (fn == "SUM" || fn == "COUNT")
+        case _ => false
+      }
+    }
+    val (rowC, xC) = restC.partition(slotsIn(_).isEmpty)
+
+    // one evaluator per conjunct group: the group's conjuncts ANDed and
+    // bound to (event columns ++ slots), fed only the columns it reads
+    def test(cs: Seq[Expression]): Option[(Event, Slot => Any) => Boolean] =
+      cs.reduceOption(And).map { c =>
+        val p = BindReferences.bindReference(c, AttributeSeq(attrs))
+        val used = attrs.indices.filter(i => c.references.contains(attrs(i))).toArray
+        val width = attrs.length
+        val slotAt = slots.map(_._1).toVector
+        (e: Event, value: Slot => Any) => {
+          val row = new GenericInternalRow(width)
+          used.foreach { i =>
+            row.update(i,
+              if (i < columns.length) cell(e, columns(i)._1)
+              else value(slotAt(i - columns.length)))
+          }
+          p.eval(row) == true
+        }
+      }
+    // the rows a call over matched rows reads: the variable's rows so far
+    // (a SUBSET's members' rows merged in partition order), plus the
+    // candidate when the defined variable is among them
+    def rowsOf(vars: Map[String, IndexedSeq[Event]], v: String, e: Event): IndexedSeq[Event] = {
+      val matched = subsets.get(v) match {
         case Some(members) =>
-          members.flatMap(vars.apply)
-            .sortBy(ev => (ev.ts.getTime, ev.event_id)).toIndexedSeq
+          members.flatMap(vars.apply).sortBy(r => (r.ts.getTime, r.event_id)).toIndexedSeq
         case None => vars(v)
       }
-    // the candidate row counts as the latest when the reference names the
-    // defining variable — directly or through a subset containing it
-    def includesSelf(v: String): Boolean =
-      v == varName || subsets.get(v).exists(_.contains(varName))
-    // aggregates: only top-level AND conjuncts of the variable's DEFINE
-    def split(p: Px): (List[Px], List[AggCmp]) = p match {
-      case PAnd(l, r) =>
-        val (rl, al) = split(l); val (rr, ar) = split(r)
-        (rl ++ rr, al ++ ar)
-      case a: AggCmp => (Nil, List(a))
-      case other =>
-        require(!containsAgg(other),
-          "aggregate DEFINE terms are supported only as top-level AND conjuncts")
-        (List(other), Nil)
+      if (v == varName || subsets.get(v).exists(_.contains(varName))) matched :+ e else matched
     }
-    def containsAgg(p: Px): Boolean = p match {
-      case _: AggCmp => true
-      case PAnd(l, r) => containsAgg(l) || containsAgg(r)
-      case POr(l, r) => containsAgg(l) || containsAgg(r)
-      case PNot(x) => containsAgg(x)
-      case _ => false
-    }
-    // navigation atoms participate in FULL boolean positions (the
-    // reference's flagship DEFINE puts LAST(...) under OR) — they need the
-    // partial match's per-variable rows, so any sub-expression containing
-    // one routes through the xagg evaluation slot
-    def containsNav(p: Px): Boolean = p match {
-      case _: NavCmpPx | _: NavNullPx => true
-      case PAnd(l, r) => containsNav(l) || containsNav(r)
-      case POr(l, r) => containsNav(l) || containsNav(r)
-      case PNot(x) => containsNav(x)
-      case _ => false
-    }
-    def navVarsOf(p: Px): Set[String] = {
-      def ofTerm(t: NavTerm): Set[String] = t match {
-        case NavOf(_, v, _, _, _) => Set(v)
-        case NavQual(v, _) if v != varName => Set(v)
-        case _ => Set.empty
-      }
-      p match {
-        case NavCmpPx(l, _, r) => ofTerm(l) ++ ofTerm(r)
-        case NavNullPx(t, _) => ofTerm(t)
-        case PAnd(l, r) => navVarsOf(l) ++ navVarsOf(r)
-        case POr(l, r) => navVarsOf(l) ++ navVarsOf(r)
-        case PNot(x) => navVarsOf(x)
-        case _ => Set.empty
-      }
-    }
-    def evalRow(p: Px, e: Event): Boolean = p match {
-      case RowCmp(f) => f(e)
-      case PAnd(l, r) => evalRow(l, e) && evalRow(r, e)
-      case POr(l, r) => evalRow(l, e) || evalRow(r, e)
-      case PNot(x) => !evalRow(x, e)
-      case _: AggCmp => true // stripped into the agg predicates
-      case _ => throw new IllegalStateException("nav atom on the row-only path")
-    }
-    // resolve qualified fields: the defining variable's own qualifier is
-    // the current row; any other variable is LAST(W.field, 0) over the
-    // rows W has matched so far (the reference's running semantics)
-    def resolveTerm(t: NavTerm): NavTerm = t match {
-      case NavQual(v, f) if v == varName => NavCur(f)
-      case NavQual(v, f) => NavOf("LAST", v, f, 0)
-      case other => other
-    }
-    def fieldOf(e: Event, f: String): Double = f match {
-      case "value" => e.value
-      case "user_id" => e.user_id.toDouble
-      case _ => e.event_id.toDouble
-    }
-    // NULL-aware term evaluation: None = SQL NULL (offset out of range)
-    def evalTerm(t: NavTerm, vars: Map[String, IndexedSeq[Event]],
-                 e: Event): Option[Double] = resolveTerm(t) match {
-      case NavLit(x) => Some(x)
-      case NavCur(f) => Some(fieldOf(e, f))
-      case NavOf(fn, v, f, n, scale) =>
-        // the candidate row counts as the variable's latest row when the
-        // navigation targets the variable being defined (ref semantics:
-        // LAST(A.price, 0) inside DEFINE A is the current row)
-        val rows = if (includesSelf(v)) rowsOf(vars, v) :+ e else rowsOf(vars, v)
-        val idx = if (fn == "LAST") rows.length - 1 - n else n
-        if (idx >= 0 && idx < rows.length) Some(scale * fieldOf(rows(idx), f))
-        else None
-      case q: NavQual => throw new IllegalStateException(s"unresolved $q")
-      // physical offsets never reach this path: containsPhys routes any
-      // conjunct holding one to the (buffer, index) evaluation slot
-      case _: NavPrev | _: NavNext =>
-        throw new IllegalStateException("physical offset on the logical path")
-    }
-    def evalX(p: Px, vars: Map[String, IndexedSeq[Event]], e: Event): Boolean =
-      p match {
-        case RowCmp(f) => f(e)
-        case NavCmpPx(l, op, r) =>
-          (evalTerm(l, vars, e), evalTerm(r, vars, e)) match {
-            case (Some(a), Some(b)) => cmpNum(op)(a, b)
-            case _ => false // NULL comparison is UNKNOWN → false
-          }
-        case NavNullPx(t, neg) =>
-          val isNull = evalTerm(t, vars, e).isEmpty
-          if (neg) !isNull else isNull
-        case PAnd(l, r) => evalX(l, vars, e) && evalX(r, vars, e)
-        case POr(l, r) => evalX(l, vars, e) || evalX(r, vars, e)
-        case PNot(x) => !evalX(x, vars, e)
-        case _: AggCmp => true
-      }
-    // physical offsets: a sub-expression containing a PREV atom routes to
-    // the (buffer, index) evaluation slot; it may mix current-row fields
-    // and literals but NOT logical navigation or cross-variable terms —
-    // those live in different evaluation contexts (kept as separate
-    // top-level conjuncts they compose freely)
-    def isPhysTerm(t: NavTerm): Boolean =
-      t.isInstanceOf[NavPrev] || t.isInstanceOf[NavNext]
-    def containsPhys(p: Px): Boolean = p match {
-      case NavCmpPx(l, _, r) => isPhysTerm(l) || isPhysTerm(r)
-      case NavNullPx(t, _) => isPhysTerm(t)
-      case PAnd(l, r) => containsPhys(l) || containsPhys(r)
-      case POr(l, r) => containsPhys(l) || containsPhys(r)
-      case PNot(x) => containsPhys(x)
-      case _ => false
-    }
-    def physDepthOf(p: Px): Int = {
-      def ofTerm(t: NavTerm): Int = t match {
-        case NavPrev(_, n, _, q) =>
-          q.foreach(v => require(v == varName,
-            s"PREV qualifier $v inside DEFINE $varName must name the defined variable"))
-          n
-        // NEXT reads FORWARD — no decided-row history to retain across
-        // drains (and batch mode's single drain never truncates anyway);
-        // only the qualifier needs validating
-        case NavNext(_, _, _, q) =>
-          q.foreach(v => require(v == varName,
-            s"NEXT qualifier $v inside DEFINE $varName must name the defined variable"))
-          0
-        case _ => 0
-      }
-      p match {
-        case NavCmpPx(l, _, r) => math.max(ofTerm(l), ofTerm(r))
-        case NavNullPx(t, _) => ofTerm(t)
-        case PAnd(l, r) => math.max(physDepthOf(l), physDepthOf(r))
-        case POr(l, r) => math.max(physDepthOf(l), physDepthOf(r))
-        case PNot(x) => physDepthOf(x)
-        case _ => 0
-      }
-    }
-    def evalPhysTerm(t: NavTerm, buf: IndexedSeq[Event], idx: Int,
-                     e: Event): Option[Double] = t match {
-      case NavLit(x) => Some(x)
-      case NavCur(f) => Some(fieldOf(e, f))
-      case NavQual(v, f) =>
-        require(v == varName,
-          s"cross-variable field $v.$f cannot share a conjunct with PREV")
-        Some(fieldOf(e, f))
-      case NavPrev(f, n, scale, _) =>
-        // idx is the candidate's position in the retained buffer; rows
-        // before buf(0) are before the partition start (the matcher keeps
-        // physDepth decided rows of history across drains)
-        if (idx - n >= 0) Some(scale * fieldOf(buf(idx - n), f)) else None
-      case NavNext(f, n, scale, _) =>
-        // batch mode: the single atEnd drain holds the WHOLE partition,
-        // so buf past idx is the partition's actual future; off the
-        // partition end → SQL NULL (mirror of PREV off the start)
-        if (idx + n < buf.length) Some(scale * fieldOf(buf(idx + n), f)) else None
-      case o: NavOf => throw new IllegalArgumentException(
-        s"logical navigation ${o.fn} cannot share a conjunct with PREV/NEXT")
-    }
-    def evalPhys(p: Px, buf: IndexedSeq[Event], idx: Int, e: Event): Boolean =
-      p match {
-        case RowCmp(f) => f(e)
-        case NavCmpPx(l, op, r) =>
-          (evalPhysTerm(l, buf, idx, e), evalPhysTerm(r, buf, idx, e)) match {
-            case (Some(a), Some(b)) => cmpNum(op)(a, b)
-            case _ => false // NULL comparison is UNKNOWN → false
-          }
-        case NavNullPx(t, neg) =>
-          val isNull = evalPhysTerm(t, buf, idx, e).isEmpty
-          if (neg) !isNull else isNull
-        case PAnd(l, r) => evalPhys(l, buf, idx, e) && evalPhys(r, buf, idx, e)
-        case POr(l, r) => evalPhys(l, buf, idx, e) || evalPhys(r, buf, idx, e)
-        case PNot(x) => !evalPhys(x, buf, idx, e)
-        case _: AggCmp => true
-      }
-    val (rowParts0, aggParts) = split(ast)
-    val (navParts0, rowParts) = rowParts0.partition(containsNav)
-    val (physParts, navParts) = navParts0.partition(containsPhys)
-    aggParts.foreach { a =>
-      a.rhsField.foreach { rf =>
-        val q = rf.split("\\.")(0)
-        require(q == varName,
-          s"aggregate RHS field $rf inside DEFINE $varName must reference the " +
-            "defined variable (the current row) in this subset")
-      }
-    }
-    val (fastParts, xParts) = aggParts.partition(a =>
-      a.variable == varName && a.lit.isDefined && !a.distinct &&
-        (a.fn == "SUM" || a.fn == "COUNT"))
-    val rowPred: Event => Boolean = { e =>
-      e.event_type != "__sentinel" && rowParts.forall(evalRow(_, e))
-    }
-    val agg: Option[(Int, Double, Event) => Boolean] =
-      if (fastParts.isEmpty) None
-      else Some { (cnt, sum, e) =>
-        fastParts.forall { a =>
-          val c = cmpNum(a.op)
-          a.fn match {
-            case "SUM" => c(sum + e.value, a.lit.get)
-            case _     => c(cnt + 1.0, a.lit.get) // COUNT incl. the candidate
-          }
+    def overRows(vars: Map[String, IndexedSeq[Event]], e: Event)(s: Slot): Any = s match {
+      case Nav(first, v, f, n) =>
+        val rows = rowsOf(vars, v, e)
+        val i = if (first) n else rows.length - 1 - n
+        if (i >= 0 && i < rows.length) cell(rows(i), f) else null
+      case Agg(fn, v, distinct) =>
+        val vals = rowsOf(vars, v, e).map(_.value)
+        val xs = if (distinct) vals.distinct else vals
+        fn match {
+          case "COUNT" => xs.length.toLong
+          case _ if xs.isEmpty => null
+          case "SUM" => xs.sum
+          case "MIN" => xs.min
+          case "MAX" => xs.max
+          case _ => xs.sum / xs.length
         }
-      }
-    val xaggAgg: Option[(Map[String, IndexedSeq[Event]], Event) => Boolean] =
-      if (xParts.isEmpty) None
-      else Some { (vars, e) =>
-        xParts.forall { a =>
-          val rows0 = rowsOf(vars, a.variable)
-          // own-variable aggregates are RUNNING: include the candidate row
-          // (directly or through a subset containing the defined variable)
-          val rows = if (includesSelf(a.variable)) rows0 :+ e else rows0
-          val rhs: Double = a.lit.getOrElse(a.rhsField.get.split("\\.")(1) match {
-            case "value"    => e.value
-            case "user_id"  => e.user_id.toDouble
-            case _          => e.event_id.toDouble
-          })
-          val c = cmpNum(a.op)
-          // DISTINCT (r14): aggregate the variable's distinct VALUES
-          def vals = { val v = rows.map(_.value); if (a.distinct) v.distinct else v }
-          a.fn match {
-            case "COUNT"            => c(vals.length.toDouble, rhs)
-            // SUM/MIN/MAX/AVG of no rows is SQL NULL: comparison is false
-            case _ if rows.isEmpty  => false
-            case "SUM"              => c(vals.sum, rhs)
-            case "MIN"              => c(vals.min, rhs)
-            case "MAX"              => c(vals.max, rhs)
-            case _                  => c(vals.sum / vals.length, rhs)
-          }
-        }
-      }
-    // navigation conjuncts evaluate the FULL sub-expression (row atoms
-    // included — they share OR/NOT structure with the nav atoms)
-    val xnav: Option[(Map[String, IndexedSeq[Event]], Event) => Boolean] =
-      if (navParts.isEmpty) None
-      else Some { (vars, e) => navParts.forall(evalX(_, vars, e)) }
-    val xagg: Option[(Map[String, IndexedSeq[Event]], Event) => Boolean] =
-      (xaggAgg, xnav) match {
-        case (None, None) => None
-        case (a, b) => Some((vars, e) =>
-          a.forall(_(vars, e)) && b.forall(_(vars, e)))
-      }
-    // physical-offset conjuncts: validate the WHOLE shape at compile time
-    // (the subset's loud-reject convention — a bad DEFINE must fail at
-    // parse, not inside an executor task): no logical navigation and no
-    // cross-variable fields may share a conjunct with PREV, and a PREV
-    // qualifier must name the defining variable (physDepthOf checks it)
-    def validatePhysTerm(t: NavTerm): Unit = t match {
-      case o: NavOf => throw new IllegalArgumentException(
-        s"logical navigation ${o.fn} cannot share a conjunct with PREV")
-      case NavQual(v, f) => require(v == varName,
-        s"cross-variable field $v.$f cannot share a conjunct with PREV")
-      case _ => ()
+      case p: Phys => throw new IllegalStateException(s"$p read outside the input buffer")
     }
-    def validatePhys(p: Px): Unit = p match {
-      case NavCmpPx(l, _, r) => validatePhysTerm(l); validatePhysTerm(r)
-      case NavNullPx(t, _) => validatePhysTerm(t)
-      case PAnd(l, r) => validatePhys(l); validatePhys(r)
-      case POr(l, r) => validatePhys(l); validatePhys(r)
-      case PNot(x) => validatePhys(x)
-      case _ => ()
-    }
-    physParts.foreach(validatePhys)
-    val pDepth = physParts.map(physDepthOf).foldLeft(0)(math.max)
-    val phys: Option[(IndexedSeq[Event], Int, Event) => Boolean] =
-      if (physParts.isEmpty) None
-      else Some { (buf, idx, e) => physParts.forall(evalPhys(_, buf, idx, e)) }
-    CompiledDefine(rowPred, agg, xagg,
-      aggParts.map(_.variable).toSet ++ navParts.flatMap(navVarsOf),
-      phys = phys, physDepth = pDepth)
+    val rowTest = test(rowC)
+    CompiledDefine(
+      rowPred = e => e.event_type != "__sentinel" && rowTest.forall(_(e, _ => null)),
+      agg = test(fastC).map(t => (cnt: Int, sum: Double, e: Event) => t(e, {
+        case Agg("SUM", _, _) => sum + e.value
+        case _ => cnt + 1L // COUNT incl. the candidate
+      })),
+      xagg = test(xC).map(t => (vars: Map[String, IndexedSeq[Event]], e: Event) =>
+        t(e, overRows(vars, e))),
+      aggVars = slots.map(_._1).collect {
+        case Nav(_, v, _, _) => v
+        case Agg(_, v, _) => v
+      }.toSet,
+      // idx is the candidate's position in the retained buffer: rows
+      // before buf(0) are off the partition start (the matcher keeps
+      // physDepth decided rows as history), rows past the end off its end
+      phys = test(physC).map(t => (buf: IndexedSeq[Event], idx: Int, e: Event) =>
+        t(e, {
+          case Phys(off, f) if idx + off >= 0 && idx + off < buf.length => cell(buf(idx + off), f)
+          case _ => null
+        })),
+      physDepth = slots.map(_._1).collect { case Phys(off, _) if off < 0 => -off }
+        .foldLeft(0)(math.max))
   }
-
-  /** Back-compat shim for row-only predicates (parser spec entry point). */
-  private[streaming] def compilePred(text: String): Event => Boolean =
-    compileDefine("_", text).rowPred
 
   // ---------------------------------------------------------------- running
 
@@ -1095,8 +772,6 @@ object MatchRecognizeSql extends Serializable {
     require(spec.table.equalsIgnoreCase("events"),
       s"unsupported table ${spec.table}")
     val steps = spec.pattern.map(_._2)
-    val varIdx = spec.pattern.map(_._1).zipWithIndex.toMap
-    val measures = spec.measures
     // PERMUTE: one alternative per permutation of the listed variables,
     // expanded lexicographically (the standard's order), with any fixed
     // prefix/suffix variables pinned around them; Match.alt then tells
@@ -1166,87 +841,146 @@ object MatchRecognizeSql extends Serializable {
           StreamSource.eventsTypedWithSentinel(s, dir), steps, skipPolicy,
           withinMicros = spec.withinMicros)
     }
-    if (spec.allRows) return runAllRows(s, spec, out, sqlText, altOrderOf, batch)
-    // ONE ROW PER MATCH: evaluate each measure from the match's rows and
-    // the per-step segmentation (counts). FIRST/LAST/aggregates on an
-    // empty optional variable are NULL, per the standard. Long-valued and
-    // double-valued measures land in two parallel arrays; `slots` records
-    // each measure's (array, index).
-    val isDouble: Measure => Boolean = {
-      case _: ValAggM               => true
-      case FirstM(_, _, "value", _) => true
-      case LastM(_, _, "value", _)  => true
-      case _                        => false
+    // each measure's (double array?, index): long- and double-valued
+    // measures travel two parallel arrays
+    val place: Seq[(Boolean, Int)] = spec.measures.indices.map { i =>
+      val d = isDouble(spec.measures(i))
+      (d, spec.measures.take(i).count(isDouble(_) == d))
     }
-    val slots: Seq[(String, Int)] = {
-      var li = 0; var di = 0
-      measures.map { mm =>
-        if (isDouble(mm)) { val r = ("__d", di); di += 1; r }
-        else { val r = ("__m", li); li += 1; r }
+    // measure indexes declared FINAL: their ALL ROWS emission shows the
+    // match-final value (= the running value at the LAST row) on every row
+    val finals = spec.measures.indices.filter(i =>
+      spec.finalAliases.contains(spec.measures(i).alias.toLowerCase))
+    // ONE ROW PER MATCH: one row per match carrying the match-final
+    // measures. ALL ROWS PER MATCH: one row per matched input row — its
+    // event_id/value, CLASSIFIER() (the pattern variable that matched it)
+    // and RUNNING measures; an event in several overlapping matches
+    // appears once per match, per the standard.
+    val rows = out.flatMap { m0 =>
+      val m = m0.copy(ids = m0.ids.toIndexedSeq, vals = m0.vals.toIndexedSeq)
+      // classifier names follow the alternative that actually matched —
+      // under PERMUTE a non-first permutation reorders the variables
+      val order = altOrderOf(m.alt)
+      val cls = m.counts.zipWithIndex.flatMap { case (c, i) => Seq.fill(c)(order(i)) }
+        .toIndexedSeq
+      val values = measureValues(spec, m, cls, everyRow = spec.allRows)
+      val (finL, finD) = values.last
+      if (!spec.allRows)
+        Iterator.single((m.user_id, m.ids.last, m.vals.last, cls.last, m.seq, finL, finD))
+      // exclusion {- X -} (r14): excluded variables' rows participated in
+      // the match and in every RUNNING/FINAL measure — they are only
+      // suppressed from the OUTPUT here
+      else cls.indices.iterator.filter(j => !spec.excluded.contains(cls(j))).map { j =>
+        val (lo, db) = finals.foldLeft(values(j)) { case ((lo, db), i) =>
+          place(i) match {
+            case (true, k) => (lo, db.updated(k, finD(k)))
+            case (false, k) => (lo.updated(k, finL(k)), db)
+          }
+        }
+        (m.user_id, m.ids(j), m.vals(j), cls(j), m.seq, lo, db)
       }
+    }.toDF("__pk", "__row_id", "__val", "__cls", "__mn", "__ml", "__md")
+    val name = "sql_match_" + Integer.toHexString(sqlText.hashCode)
+    val drained =
+      if (batch) rows else StreamSource.runToTable(s, rows, name, "append")
+    val measureAt = spec.measures.zip(place).map { case (mm, p) =>
+      mm.alias.toLowerCase -> (mm, p) }.toMap
+    val cols = spec.selectCols.map { item =>
+      val (e, alias) = parseExpr(item) match {
+        case Alias(c, a) => (c, a)
+        case c => (c, item)
+      }
+      val c = e match {
+        case UnresolvedAttribute(Seq(n)) if n.equalsIgnoreCase(spec.partitionCol) => col("__pk")
+        case UnresolvedAttribute(Seq(n)) if spec.allRows && n.equalsIgnoreCase("event_id") =>
+          col("__row_id")
+        case UnresolvedAttribute(Seq(n)) if spec.allRows && n.equalsIgnoreCase("value") =>
+          col("__val")
+        case Call("CLASSIFIER", Seq(), false) if spec.allRows => col("__cls")
+        case Call("MATCH_NUMBER", Seq(), false) if spec.allRows => col("__mn")
+        case UnresolvedAttribute(Seq(n)) if measureAt.contains(n.toLowerCase) =>
+          val (mm, (d, k)) = measureAt(n.toLowerCase)
+          val raw = col(if (d) "__md" else "__ml").getItem(k)
+          // MATCH_ROWTIME travels the long array as micros; surface a timestamp
+          if (mm.isInstanceOf[MatchRowtimeM]) timestamp_micros(raw) else raw
+        case _ => throw new IllegalArgumentException(
+          s"SELECT item $item is not the partition key or a measure alias" +
+            (if (spec.allRows) ", event_id, value, CLASSIFIER() or MATCH_NUMBER()" else ""))
+      }
+      (c.as(alias), col(alias))
     }
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = out.map { m =>
-      val offs = m.counts.scanLeft(0)(_ + _)
+    drained.select(cols.map(_._1): _*).orderBy(cols.map(_._2): _*)
+  }
+
+  private def isDouble(mm: Measure): Boolean = mm match {
+    case _: ValAggM               => true
+    case FirstM(_, _, "value", _) => true
+    case LastM(_, _, "value", _)  => true
+    case _                        => false
+  }
+
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** RUNNING measure values of match `m` (SQL:2016, the ALL ROWS default):
+    * entry j holds every measure over the match's rows 0..j, split into a
+    * long and a double array. With `everyRow` false only the last entry —
+    * the match-final values ONE ROW PER MATCH reports. FIRST/LAST and
+    * aggregates over a variable with no rows (yet) are NULL. */
+  private def measureValues(spec: Spec, m: Cep.Match, cls: IndexedSeq[String],
+                            everyRow: Boolean)
+      : IndexedSeq[(Seq[Option[Long]], Seq[Option[Double]])] = {
+    val ms = spec.measures
+    // a measure variable may be a SUBSET name: its rows are any member's
+    val names = ms.map(mm => spec.subsets.getOrElse(mm.variable, Seq(mm.variable)).toSet)
+    val rows = ms.map(_ => scala.collection.mutable.ArrayBuffer.empty[Int])
+    val sums = Array.fill(ms.size)(0.0)
+    val mins = Array.fill(ms.size)(Double.MaxValue)
+    val maxs = Array.fill(ms.size)(Double.MinValue)
+    def emit(): (Seq[Option[Long]], Seq[Option[Double]]) = {
       val longs = Seq.newBuilder[Option[Long]]
       val dbls = Seq.newBuilder[Option[Double]]
-      // variable positions follow the alternative that actually matched;
-      // under a grouped repetition a variable occupies SEVERAL positions —
-      // its measure segments are the concatenation across occurrences
-      val altOrder = altOrderOf(m.alt)
-      measures.foreach { meas =>
-        // a measure variable may be a SUBSET name: match any member
-        val names: Set[String] = spec.subsets.getOrElse(
-          meas.variable.toUpperCase, Seq(meas.variable.toUpperCase)).toSet
-        val poss = altOrder.zipWithIndex.collect {
-          case (v, i) if names(v) => i }
-        val cnt = poss.map(m.counts(_)).sum
-        def idSeg = poss.flatMap(i => m.ids.slice(offs(i), offs(i) + m.counts(i)))
-        def valSeg = poss.flatMap(i => m.vals.slice(offs(i), offs(i) + m.counts(i)))
-        meas match {
+      ms.indices.foreach { i =>
+        val rs = rows(i)
+        def at(k: Int): Option[Int] = if (k >= 0 && k < rs.length) Some(rs(k)) else None
+        def distinctVals = rs.map(m.vals).distinct
+        ms(i) match {
           case _: MatchNumM => longs += Some(m.seq)
           case _: MatchRowtimeM => longs += Some(m.lastTsMicros)
-          case CountM(_, _, dist) =>
-            longs += Some(if (dist) valSeg.distinct.size.toLong else cnt.toLong)
-          // logical offsets (FIRST/LAST(V.f, n)): out of range → NULL
-          case FirstM(_, _, "value", off) =>
-            dbls += (if (off >= cnt) None else Some(round6(valSeg(off))))
-          case LastM(_, _, "value", off) =>
-            dbls += (if (off >= cnt) None else Some(round6(valSeg(cnt - 1 - off))))
-          case FirstM(_, _, _, off) =>
-            longs += (if (off >= cnt) None else Some(idSeg(off)))
-          case LastM(_, _, _, off) =>
-            longs += (if (off >= cnt) None else Some(idSeg(cnt - 1 - off)))
-          case ValAggM(fn, _, _, dist) =>
-            val vs = if (dist) valSeg.distinct else valSeg
-            dbls += (if (cnt == 0) None else Some(round6(fn match {
-              case "SUM" => vs.sum
-              case "MIN" => vs.min
-              case "MAX" => vs.max
-              case _     => vs.sum / vs.size // AVG
+          case CountM(_, _, d) =>
+            longs += Some(if (d) distinctVals.size.toLong else rs.length.toLong)
+          case FirstM(_, _, "value", n) => dbls += at(n).map(j => round6(m.vals(j)))
+          case LastM(_, _, "value", n) =>
+            dbls += at(rs.length - 1 - n).map(j => round6(m.vals(j)))
+          case FirstM(_, _, _, n) => longs += at(n).map(m.ids)
+          case LastM(_, _, _, n) => longs += at(rs.length - 1 - n).map(m.ids)
+          case ValAggM(fn, _, _, d) =>
+            dbls += (if (rs.isEmpty) None else Some(round6((fn, d) match {
+              case ("SUM", true) => distinctVals.sum
+              case ("AVG", true) => val vs = distinctVals; vs.sum / vs.size
+              case ("SUM", _) => sums(i)
+              case ("MIN", _) => mins(i)
+              case ("MAX", _) => maxs(i)
+              case _ => sums(i) / rs.length
             })))
         }
       }
-      (m.user_id, longs.result(), dbls.result())
-    }.toDF("__pk", "__m", "__d")
-    val name = "sql_match_" + Integer.toHexString(sqlText.hashCode).takeWhile(_ != '-')
-    val drained =
-      if (batch) rows else StreamSource.runToTable(s, rows, name, "append")
-    val cols = spec.selectCols.map { c =>
-      if (c.equalsIgnoreCase(spec.partitionCol)) col("__pk").as(c)
-      else {
-        val mi = measures.indexWhere(_.alias.equalsIgnoreCase(c))
-        require(mi >= 0, s"SELECT column $c is neither the partition key nor a measure")
-        val (arr, idx) = slots(mi)
-        val raw = col(arr).getItem(idx)
-        // MATCH_ROWTIME travels the long array as micros; surface a timestamp
-        if (measures(mi).isInstanceOf[MatchRowtimeM])
-          timestamp_micros(raw).as(c)
-        else raw.as(c)
-      }
+      (longs.result(), dbls.result())
     }
-    drained.select(cols: _*).orderBy(spec.selectCols.map(col): _*)
+    val out = IndexedSeq.newBuilder[(Seq[Option[Long]], Seq[Option[Double]])]
+    cls.indices.foreach { j =>
+      ms.indices.foreach { i =>
+        if (names(i)(cls(j))) {
+          val v = m.vals(j)
+          rows(i) += j
+          sums(i) += v
+          mins(i) = math.min(mins(i), v)
+          maxs(i) = math.max(maxs(i), v)
+        }
+      }
+      if (everyRow || j == cls.length - 1) out += emit()
+    }
+    out.result()
   }
 
   /** Bounded events source for batch mode: the batch table (ts already
@@ -1261,1513 +995,4 @@ object MatchRecognizeSql extends Serializable {
         col("event_type"), col("value"))
       .as[StreamSource.Event]
   }
-
-  private val classifierRe = "(?i)^CLASSIFIER\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)$".r
-  private val matchNumSelRe = "(?i)^MATCH_NUMBER\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)$".r
-
-  /** ALL ROWS PER MATCH: one output row per matched input row — the row's
-    * event_id/value plus CLASSIFIER() (the pattern variable that matched
-    * it) and MATCH_NUMBER() (the match's per-partition sequence number).
-    * An event matched by several overlapping matches appears once per
-    * match, per the standard. */
-  private def aliasOf(mm: Measure): String = mm match {
-    case FirstM(_, a, _, _)  => a
-    case LastM(_, a, _, _)   => a
-    case CountM(_, a, _)     => a
-    case ValAggM(_, _, a, _) => a
-    case MatchNumM(a)        => a
-    case MatchRowtimeM(a)    => a
-  }
-
-  private def runAllRows(s: SparkSession, spec: Spec,
-                         out: org.apache.spark.sql.Dataset[Cep.Match],
-                         sqlText: String,
-                         altOrderOf: Int => Seq[String],
-                         batch: Boolean = false): DataFrame = {
-    import s.implicits._
-    val measures = spec.measures
-    val isDouble: Measure => Boolean = {
-      case _: ValAggM               => true
-      case FirstM(_, _, "value", _) => true
-      case LastM(_, _, "value", _)  => true
-      case _                        => false
-    }
-    val slots: Seq[(Boolean, Int)] = {
-      var li = 0; var di = 0
-      measures.map { mm =>
-        if (isDouble(mm)) { val r = (true, di); di += 1; r }
-        else { val r = (false, li); li += 1; r }
-      }
-    }
-    val subsets = spec.subsets
-    // measure indexes declared FINAL: their ALL ROWS emission shows the
-    // match-final value (= the running value at the LAST row) on every row
-    val finals: Seq[Int] = measures.zipWithIndex.collect {
-      case (mm, i) if spec.finalAliases.contains(aliasOf(mm).toLowerCase) => i
-    }
-    def round6(x: Double): Double =
-      BigDecimal(x).setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-    val rows = out.flatMap { m =>
-      // classifier names follow the alternative that actually matched —
-      // under PERMUTE a non-first permutation reorders the variables.
-      val varNames = altOrderOf(m.alt)
-      val classifiers = m.counts.zipWithIndex.flatMap { case (c, i) =>
-        Seq.fill(c)(varNames(i)) }
-      // RUNNING measures (the ALL ROWS default, SQL:2016 / ref semantics):
-      // row j sees each measure over the match's rows 0..j
-      val nameSets: Seq[Set[String]] = measures.map {
-        case _: MatchNumM => Set.empty[String]
-        case mm => subsets.getOrElse(mm.variable.toUpperCase,
-          Seq(mm.variable.toUpperCase)).toSet
-      }
-      val k = measures.length
-      val cnts = Array.fill(k)(0L)
-      // per-measure (id, value) rows seen so far — RUNNING navigation
-      // (FIRST/LAST with logical offsets) reads positions from this list
-      val seen = Array.fill(k)(
-        scala.collection.mutable.ArrayBuffer.empty[(Long, Double)])
-      val sums = Array.fill(k)(0.0)
-      val mins = Array.fill(k)(Double.MaxValue)
-      val maxs = Array.fill(k)(Double.MinValue)
-      val emissions = m.ids.indices.map { j =>
-        val cls = classifiers(j)
-        measures.indices.foreach { i =>
-          if (nameSets(i)(cls)) {
-            cnts(i) += 1
-            seen(i) += ((m.ids(j), m.vals(j)))
-            sums(i) += m.vals(j)
-            mins(i) = math.min(mins(i), m.vals(j))
-            maxs(i) = math.max(maxs(i), m.vals(j))
-          }
-        }
-        val longs = Seq.newBuilder[Option[Long]]
-        val dbls = Seq.newBuilder[Option[Double]]
-        measures.zipWithIndex.foreach { case (mm, i) =>
-          def at(idx: Int): Option[(Long, Double)] =
-            if (idx >= 0 && idx < seen(i).length) Some(seen(i)(idx)) else None
-          mm match {
-            case _: MatchRowtimeM => throw new IllegalStateException(
-              "MATCH_ROWTIME is parse-rejected in ALL ROWS mode")
-            case _: MatchNumM => longs += Some(m.seq)
-            case CountM(_, _, dist) =>
-              longs += Some(if (dist) seen(i).map(_._2).distinct.size.toLong
-                            else cnts(i))
-            case FirstM(_, _, "value", off) => dbls += at(off).map(p => round6(p._2))
-            case LastM(_, _, "value", off) =>
-              dbls += at(seen(i).length - 1 - off).map(p => round6(p._2))
-            case FirstM(_, _, _, off) => longs += at(off).map(_._1)
-            case LastM(_, _, _, off) =>
-              longs += at(seen(i).length - 1 - off).map(_._1)
-            case ValAggM(fn, _, _, dist) =>
-              // RUNNING DISTINCT reads the rows-seen-so-far buffer the
-              // navigation offsets already carry (the "state the matcher
-              // already carries" — VERDICT r13 #4)
-              def vs = seen(i).map(_._2).distinct
-              dbls += (if (cnts(i) == 0) None
-                       else Some(round6((fn, dist) match {
-                         case ("SUM", true)  => vs.sum
-                         case ("AVG", true)  => vs.sum / vs.size
-                         case ("SUM", _) => sums(i)
-                         case ("MIN", _) => mins(i)
-                         case ("MAX", _) => maxs(i)
-                         case _          => sums(i) / cnts(i)
-                       })))
-          }
-        }
-        (longs.result(), dbls.result())
-      }
-      // FINAL measures: substitute the last row's (= the match-final)
-      // value into every row's emission at that measure's slot
-      val finL = emissions.lastOption.map(_._1).getOrElse(Seq.empty)
-      val finD = emissions.lastOption.map(_._2).getOrElse(Seq.empty)
-      // exclusion {- X -} (r14): excluded variables' rows participated in
-      // the match and in every RUNNING/FINAL measure above — they are
-      // only suppressed from the OUTPUT here
-      m.ids.indices.iterator
-        .filter(j => !spec.excluded.contains(classifiers(j)))
-        .map { j =>
-        var lo = emissions(j)._1
-        var db = emissions(j)._2
-        finals.foreach { i =>
-          val (isD, slot) = slots(i)
-          if (isD) db = db.updated(slot, finD(slot))
-          else lo = lo.updated(slot, finL(slot))
-        }
-        (m.user_id, m.ids(j), m.vals(j), classifiers(j), m.seq, lo, db)
-      }
-    }.toDF("__pk", "__row_id", "__val", "__cls", "__mn", "__ml", "__md")
-    val name = "sql_matchr_" + Integer.toHexString(sqlText.hashCode).takeWhile(_ != '-')
-    val drained =
-      if (batch) rows else StreamSource.runToTable(s, rows, name, "append")
-    val aliasSlot: Map[String, (Boolean, Int)] =
-      measures.zip(slots).map { case (mm, sl) => aliasOf(mm).toLowerCase -> sl }.toMap
-    val pairs = spec.selectCols.map {
-      case classifierRe(alias) => (col("__cls").as(alias), alias)
-      case matchNumSelRe(alias) => (col("__mn").as(alias), alias)
-      case c if c.equalsIgnoreCase(spec.partitionCol) => (col("__pk").as(c), c)
-      case c if c.equalsIgnoreCase("event_id") => (col("__row_id").as(c), c)
-      case c if c.equalsIgnoreCase("value") => (col("__val").as(c), c)
-      case c if aliasSlot.contains(c.toLowerCase) =>
-        val (d, i) = aliasSlot(c.toLowerCase)
-        (org.apache.spark.sql.functions.element_at(
-          col(if (d) "__md" else "__ml"), i + 1).as(c), c)
-      case c => throw new IllegalArgumentException(
-        s"ALL ROWS PER MATCH select supports the partition key, event_id, value, CLASSIFIER(), MATCH_NUMBER(), and measure aliases; got $c")
-    }
-    drained.select(pairs.map(_._1): _*).orderBy(pairs.map(p => col(p._2)): _*)
-  }
-
-  // ------------------------------------------------------------- queries
-
-  /** PATTERN (A+ B) greedy with SKIP TO NEXT ROW — the SQL text form of
-    * the programmatic cepPlus query. */
-  val matchPlusSql: String =
-    """SELECT user_id, a_id, b_id, n_a FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, LAST(B.event_id) AS b_id,
-      |           COUNT(A.*) AS n_a
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A+ B)
-      |  DEFINE A AS event_type <> 'error', B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Strict PATTERN (A B C) funnel in SQL. */
-  val matchStrictSql: String =
-    """SELECT user_id, a_id, b_id, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id, C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** PATTERN (A{2} B) with value-aggregate measures over the A pair. */
-  val matchSumSql: String =
-    """SELECT user_id, a_id, a_sum, a_avg, b_val, n_a FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, SUM(A.value) AS a_sum,
-      |           AVG(A.value) AS a_avg, LAST(B.value) AS b_val,
-      |           COUNT(A.*) AS n_a
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2} B)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Strict funnel bounded by WITHIN: the view→click→purchase triple must
-    * complete inside 1 day of event time (ref Pattern#within / the SQL
-    * WITHIN clause — also the matcher's state-pruning bound). */
-  val matchWithinSql: String =
-    """SELECT user_id, a_id, b_id, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id, C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B C) WITHIN INTERVAL '1' DAY
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Strict funnel in ALL ROWS PER MATCH mode with CLASSIFIER(). */
-  val matchAllRowsSql: String =
-    """SELECT user_id, event_id, CLASSIFIER() AS cls FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  ALL ROWS PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** ALL ROWS PER MATCH with RUNNING MEASURES (r12 — the reference allows
-    * both clauses together; the standard's ALL ROWS default is RUNNING
-    * semantics): every emitted row carries COUNT(A.*) and SUM over the
-    * SUBSET union as seen up to that row. */
-  val matchAllRowsMeasuresSql: String =
-    """SELECT user_id, event_id, CLASSIFIER() AS cls, n_a, run_sum FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES COUNT(A.*) AS n_a, SUM(U.value) AS run_sum
-      |  ALL ROWS PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (A{2} B C)
-      |  SUBSET U = (A, B, C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** FINAL vs RUNNING prefixes in ALL ROWS mode (r12): the running count
-    * climbs 1..4 down the match while the FINAL twin shows 4 on every
-    * row, and the FINAL sum is the whole match's total everywhere. */
-  val matchAllRowsFinalSql: String =
-    """SELECT user_id, event_id, CLASSIFIER() AS cls, n_run, n_fin, total FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES RUNNING COUNT(U.*) AS n_run, FINAL COUNT(U.*) AS n_fin,
-      |           FINAL SUM(U.value) AS total
-      |  ALL ROWS PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (A{2} B C)
-      |  SUBSET U = (A, B, C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Parenthesized + negated DEFINE predicates (grammar depth: the
-    * reference's DEFINE accepts full boolean expressions). */
-  val matchParenSql: String =
-    """SELECT user_id, a_id, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B)
-      |  DEFINE A AS (event_type = 'view' OR event_type = 'click') AND NOT (value < 1),
-      |         B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Running aggregate in DEFINE: each A row must keep SUM(A.value)
-    * within the bound (ref: DEFINE evaluated against the partial match's
-    * shared buffer — aggregates see the rows matched so far). */
-  val matchAggDefSql: String =
-    """SELECT user_id, a_id, a_sum, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, SUM(A.value) AS a_sum,
-      |           B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2} B)
-      |  DEFINE A AS event_type = 'view' AND SUM(A.value) <= 150,
-      |         B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** AFTER MATCH SKIP TO LAST B: the scan resumes AT the last B row.
-    * With disjoint A/B predicates the emitted set equals per-start
-    * evaluation with maximal B runs (the overlap-sensitive cases are
-    * pinned by fixture in MatchRecognizeSqlSpec). */
-  val matchSkipLastSql: String =
-    """SELECT user_id, a_id, b_first, b_last, n_b FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, FIRST(B.event_id) AS b_first,
-      |           LAST(B.event_id) AS b_last, COUNT(B.*) AS n_b
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO LAST B
-      |  PATTERN (A B+)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click'
-      |)""".stripMargin
-
-  /** PATTERN (PERMUTE(A, B)): the two variables in either order. */
-  val matchPermuteSql: String =
-    """SELECT user_id, a_id, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (PERMUTE(A, B))
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click'
-      |)""".stripMargin
-
-  /** MATCH_NUMBER() in MEASURES: each view→purchase pair numbered
-    * sequentially within its partition in match-start order. */
-  val matchNumberSql: String =
-    """SELECT user_id, a_id, b_id, mn FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id,
-      |           MATCH_NUMBER() AS mn
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Multi-occurrence pattern variables: PATTERN ((A B)* A) — A appears in
-    * both the group body and the tail; greedy maximal alternating
-    * view(click view)* run from each start row. */
-  val matchMultiSql: String =
-    """SELECT user_id, a_first, a_last, n_a, n_b FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, LAST(A.event_id) AS a_last,
-      |           COUNT(A.*) AS n_a, COUNT(B.*) AS n_b
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN ((A B)* A)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click'
-      |)""".stripMargin
-
-  /** Grouped repetition DEEP: always-true DEFINEs make the greedy loop
-    * consume a whole partition — the largest sf0.01 key has 86 events, so
-    * the first match runs 42 group repetitions, far past any fixed cap
-    * (VERDICT r8 task 2's planted >12-repetition witness; the r8 engine
-    * would have truncated this at 12). SKIP PAST LAST ROW then matches the
-    * single leftover row on even-sized partitions. */
-  val matchMultiDeepSql: String =
-    """SELECT user_id, a_first, a_last, n_a, n_b FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, LAST(A.event_id) AS a_last,
-      |           COUNT(A.*) AS n_a, COUNT(B.*) AS n_b
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN ((A B)* A)
-      |  DEFINE A AS value >= 0, B AS value >= 0
-      |)""".stripMargin
-
-  /** Cross-variable DEFINE aggregate: B's predicate reads SUM over A's
-    * matched rows (ref NFA.java DEFINE evaluation against the shared
-    * buffer) — a purchase closes the view run only if the run's value
-    * total exceeds the purchase's own value. */
-  val matchXvarSql: String =
-    """SELECT user_id, a_first, a_sum, b_id, n_a FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, SUM(A.value) AS a_sum,
-      |           B.event_id AS b_id, COUNT(A.*) AS n_a
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A+ B)
-      |  DEFINE A AS event_type = 'view',
-      |         B AS event_type = 'purchase' AND SUM(A.value) > B.value
-      |)""".stripMargin
-
-  /** Cross-variable MIN against a literal — exercises the non-SUM branch
-    * and the own-variable form routed through the shared-rows path. */
-  val matchXvarMinSql: String =
-    """SELECT user_id, a_first, a_min, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, MIN(A.value) AS a_min,
-      |           B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2} B)
-      |  DEFINE A AS event_type = 'view',
-      |         B AS event_type = 'purchase' AND MIN(A.value) < 50
-      |)""".stripMargin
-
-  /** SUBSET union variable: U = (A, B) aggregated across both members. */
-  val matchSubsetSql: String =
-    """SELECT user_id, u_first, u_last, n_u, u_sum FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(U.event_id) AS u_first, LAST(U.event_id) AS u_last,
-      |           COUNT(U.*) AS n_u, SUM(U.value) AS u_sum
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B)
-      |  SUBSET U = (A, B)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click'
-      |)""".stripMargin
-
-  /** The reference's FLAGSHIP V-pattern (match_recognize.md:538-545 /
-    * the overview example at :180-260, re-keyed onto the events table):
-    * a price down-run then an up-tick, expressed entirely with
-    * logical-offset navigation — `LAST(DOWN.value, 1) IS NULL` opens the
-    * run, cross-variable `DOWN.value < STRT.value` anchors it to the
-    * start row, and UP closes it against the run's second-to-last value.
-    * AFTER MATCH SKIP TO LAST UP resumes AT the up row (it can start the
-    * next match as STRT — the reference's own skip choice there).
-    *
-    * Oracle derivation (declarative, exact): STRT is un-DEFINEd and DOWN
-    * is greedy, so a match exists exactly once per maximal strictly-
-    * decreasing run x_1..x_m (per user, (ts, event_id) order) with m >= 3
-    * whose following row u satisfies u.value > x_{m-1}.value — interior
-    * starts repeat the same final condition and are either consumed by
-    * the covering match or fail with it, and backtracking below the
-    * maximal run length can never satisfy UP (the run is decreasing). */
-  val matchNavSql: String =
-    """SELECT user_id, strt_id, bottom_id, n_down, penult, up_val FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES STRT.event_id AS strt_id, LAST(DOWN.event_id) AS bottom_id,
-      |           COUNT(DOWN.*) AS n_down, LAST(DOWN.value, 1) AS penult,
-      |           UP.value AS up_val
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO LAST UP
-      |  PATTERN (STRT DOWN+ UP)
-      |  DEFINE DOWN AS (LAST(DOWN.value, 1) IS NULL AND DOWN.value < STRT.value)
-      |                 OR DOWN.value < LAST(DOWN.value, 1),
-      |         UP AS UP.value > LAST(DOWN.value, 1)
-      |)""".stripMargin
-
-  /** Cross-variable aggregate conjunct against a LITERAL (r13, VERDICT
-    * r12 task 5): B's DEFINE reads SUM over A's matched rows compared to
-    * a constant (ref SharedBuffer.java — the literal-RHS twin of
-    * matchXvarSql's field-RHS form). */
-  val matchXaggSql: String =
-    """SELECT user_id, a_first, n_a, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, COUNT(A.*) AS n_a,
-      |           B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A+ B)
-      |  DEFINE A AS event_type = 'view',
-      |         B AS event_type = 'purchase' AND SUM(A.value) > 100
-      |)""".stripMargin
-
-  /** MATCH_ROWTIME() in MEASURES (r13 stretch — EXCEEDS the reference,
-    * whose docs list the time-attribute output as wanted-but-unsupported,
-    * match_recognize.md:1123): each view→purchase match carries the event
-    * time of its last row as a real timestamp column. */
-  val matchRowtimeSql: String =
-    """SELECT user_id, a_id, b_id, mrt FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id,
-      |           MATCH_ROWTIME() AS mrt
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  def matchRowtime(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchRowtimeSql)
-
-  /** The CASCADE the reference's docs wish for: MATCH_RECOGNIZE output
-    * windowed downstream — matches (from the streaming matcher) tumbled
-    * into 1-day event-time windows keyed on MATCH_ROWTIME(). The window
-    * consumes the drained match table (the standard handoff for a second
-    * aggregation stage); window arithmetic is Spark's epoch-aligned
-    * `window()`, replayed exactly by the oracle's integer-micros tumble. */
-  def matchCascade(s: SparkSession, dir: String): DataFrame = {
-    val m = run(s, dir, matchRowtimeSql)
-    m.groupBy(window(col("mrt"), "1 day").as("w"))
-      .agg(count(lit(1)).as("n_matches"))
-      .select(col("w.start").as("win_start"), col("n_matches"))
-      .orderBy("win_start")
-  }
-
-  def matchNav(s: SparkSession, dir: String): DataFrame = run(s, dir, matchNavSql)
-  def matchXagg(s: SparkSession, dir: String): DataFrame = run(s, dir, matchXaggSql)
-
-  /** DISTINCT aggregations in MEASURES (r14 — the LAST aggregation row of
-    * the reference's unsupported list, match_recognize.md:1126-1127):
-    * COUNT(DISTINCT A.value) and SUM(DISTINCT A.value) over each maximal
-    * non-purchase run closed by a purchase. A matches ANY non-purchase
-    * row so runs are long enough that the fixture's value column
-    * genuinely repeats inside them (4 matches at sf0.01 have
-    * n_dist < n_a — the DISTINCT is load-bearing, not trivially equal;
-    * MatchRecognizeSqlSpec additionally pins the semantics on planted
-    * duplicates). */
-  val matchDistinctSql: String =
-    """SELECT user_id, a_first, n_a, n_dist, sum_dist, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, COUNT(A.*) AS n_a,
-      |           COUNT(DISTINCT A.value) AS n_dist,
-      |           SUM(DISTINCT A.value) AS sum_dist,
-      |           B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (A+ B)
-      |  DEFINE A AS event_type <> 'purchase',
-      |         B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Pattern exclusion `{- A -}` in ALL ROWS PER MATCH (r14 — ref
-    * match_recognize.md:1111-1112, "will be looked for but will not
-    * participate in the output"): the view gates every match and feeds
-    * the measures (n_a = 1, a_id = the view's id on every emitted row),
-    * but only the click and purchase rows are output. */
-  val matchExcludeSql: String =
-    """SELECT user_id, event_id, CLASSIFIER() AS cls, n_a, a_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES COUNT(A.*) AS n_a, FIRST(A.event_id) AS a_id
-      |  ALL ROWS PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN ({- A -} B C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  def matchDistinct(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchDistinctSql)
-  def matchExclude(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchExcludeSql)
-
-  /** Physical offsets in DEFINE (r14 — PREV is on the reference's
-    * unsupported list, match_recognize.md:1121-1122): the SQL:2016
-    * ticker idiom, the flagship V-pattern spelled with PREV instead of
-    * logical navigation. PREV walks the partition's INPUT rows whatever
-    * variable they mapped to: at a DOWN candidate PREV(DOWN.value) is the
-    * physically previous row (the prior DOWN, or STRT at the first), and
-    * at the UP candidate PREV(UP.value, 2) reaches back across the last
-    * DOWN to the penultimate one. Matches here are contiguous, so with
-    * DOWN{2,} this query is row-for-row the logical-navigation
-    * matchNavSql — the shared oracle IS the equivalence proof (and
-    * MatchRecognizeSqlSpec pins the boundary case where PREV and LAST
-    * genuinely differ). NEXT stays out of subset (forward lookahead —
-    * the anchors argument), rejected loudly at parse. */
-  val matchPrevSql: String =
-    """SELECT user_id, strt_id, bottom_id, n_down, penult, up_val FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES STRT.event_id AS strt_id, LAST(DOWN.event_id) AS bottom_id,
-      |           COUNT(DOWN.*) AS n_down, LAST(DOWN.value, 1) AS penult,
-      |           UP.value AS up_val
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO LAST UP
-      |  PATTERN (STRT DOWN{2,} UP)
-      |  DEFINE DOWN AS DOWN.value < PREV(DOWN.value),
-      |         UP AS UP.value > PREV(UP.value, 2)
-      |)""".stripMargin
-
-  def matchPrev(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchPrevSql)
-
-  /** NEXT physical offsets in BATCH mode (r15 — completes the reference's
-    * physical-navigation row, match_recognize.md:1121-1122: the docs
-    * reject NEXT because a stream's later rows haven't arrived, an
-    * argument void on a bounded partition where the single atEnd drain
-    * holds every row). The SQL:2016 ascending-run idiom: UP matches while
-    * the PHYSICALLY next row is larger, so greedy UP{2,} consumes a
-    * maximal strictly-ascending run's rows up to (excluding) its peak and
-    * TOP lands exactly on the peak — one match per maximal ascending run
-    * of ≥ 3 rows, NEXT off the partition end evaluating to SQL NULL (the
-    * run's last row never extends past end-of-data). Streaming keeps the
-    * loud reject (MatchRecognizeSqlSpec pin unchanged); Round15Spec pins
-    * the batch semantics and the end-of-partition NULL. */
-  val matchNextSql: String =
-    """SELECT user_id, strt_id, peak_id, n_up, peak_val FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(UP.event_id) AS strt_id, TOP.event_id AS peak_id,
-      |           COUNT(UP.*) AS n_up, TOP.value AS peak_val
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (UP{2,} TOP)
-      |  DEFINE UP AS UP.value < NEXT(UP.value)
-      |)""".stripMargin
-
-  def matchNext(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchNextSql)
-
-  /** Unified batch/stream MATCH_RECOGNIZE (r15): the flagship V-pattern
-    * (logical navigation, ONE ROW) and the CLASSIFIER funnel (ALL ROWS)
-    * executed in BATCH mode over the bounded events table — the SAME
-    * statements as their streaming twins, sharing those twins' oracles
-    * verbatim. The shared oracle IS the batch ≡ stream equivalence proof
-    * for the whole measure/emission layer (the reference's unified
-    * planner runs MATCH_RECOGNIZE over bounded and unbounded inputs the
-    * same way; here the bounded form additionally skips the sentinel and
-    * memory-sink machinery — one atEnd drain, plain batch DataFrame out). */
-  def matchNavBatch(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchNavSql)
-  def matchAllRowsBatch(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchAllRowsSql)
-
-  /** Full-grammar unified batch/stream (r16 — closes the r15 "plain
-    * sequential subset" carve-out): PERMUTE and uncapped grouped
-    * repetition executed in BATCH mode, sharing their streaming twins'
-    * oracles verbatim (the q_sql_match_batch_nav proof pattern — the
-    * hash equality IS the batch ≡ stream equivalence proof for the
-    * alternation and loop machinery). */
-  def matchPermuteBatch(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchPermuteSql)
-  def matchMultiBatch(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchMultiSql)
-
-  /** Anchors in BATCH mode (r15 — the last open row of the reference's
-    * unsupported list, match_recognize.md:1109-1110: anchors "do not make
-    * sense in the streaming context", an argument void on a bounded
-    * partition). `^`: each user's OPENING engagement run — the partition
-    * must START with non-purchase rows, closed by the first purchase; a
-    * user whose first event is a purchase matches nothing, and no later
-    * run can match (the anchor ends the scan). */
-  val matchAnchorStartSql: String =
-    """SELECT user_id, n_lead, first_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES COUNT(A.*) AS n_lead, FIRST(A.event_id) AS first_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (^ A+ B)
-      |  DEFINE A AS event_type <> 'purchase', B AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** `$`: each user's TRAILING unconverted run — the LAST purchase
-    * followed only by non-purchase rows through the partition's end.
-    * Earlier purchases fail the anchor (their B+ run stops at the next
-    * purchase, short of end-of-partition), so exactly the final-purchase
-    * row anchors the match. */
-  val matchAnchorEndSql: String =
-    """SELECT user_id, a_id, n_tail FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, COUNT(B.*) AS n_tail
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (A B+ $)
-      |  DEFINE A AS event_type = 'purchase', B AS event_type <> 'purchase'
-      |)""".stripMargin
-
-  /** Both anchors at once — the WHOLE-partition match `^ A+ $`: the
-    * pattern must consume every row of the partition, here selecting the
-    * users whose every event stays under the value threshold (one
-    * over-threshold row anywhere breaks A+ before the end anchor, and
-    * the start anchor forbids resuming past it). The fixture splits
-    * ~40/60 on the 200 bound (per-user max(value) median ≈ 222), so the
-    * anchors are load-bearing, not vacuously empty or vacuously full. */
-  val matchAnchorBothSql: String =
-    """SELECT user_id, n_events FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES COUNT(A.*) AS n_events
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP PAST LAST ROW
-      |  PATTERN (^ A+ $)
-      |  DEFINE A AS value < 200
-      |)""".stripMargin
-
-  def matchAnchorStart(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchAnchorStartSql)
-  def matchAnchorEnd(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchAnchorEndSql)
-  def matchAnchorBoth(s: SparkSession, dir: String): DataFrame =
-    runBatch(s, dir, matchAnchorBothSql)
-
-  // ---- r13: the full SQL:2016 quantifier set (ref match_recognize.md:
-  // 352-359). B's predicate OVERLAPS C's so greedy-vs-reluctant is
-  // load-bearing (29 rows differ at sf0.01, not just branch order).
-
-  /** Greedy optional `B?`: prefer the B-present parse — a view, then
-    * (greedily) one value>50 row IF a purchase follows it, else the
-    * purchase directly. */
-  val matchQOptSql: String =
-    """SELECT user_id, a_id, b_id, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, B.event_id AS b_id, C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B? C)
-      |  DEFINE A AS event_type = 'view', B AS value > 50,
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Reluctant optional `B??` — in the reference's OWN unsupported list
-    * (match_recognize.md:1113): prefer the B-absent parse. Same DEFINEs as
-    * [[matchQOptSql]]; the two differ exactly where both parses are viable
-    * (view, value>50 purchase, purchase). */
-  val matchQOptRelSql: String = matchQOptSql.replace("(A B? C)", "(A B?? C)")
-
-  /** Closed range `A{2,3}` greedy: three views before the purchase when
-    * the data allows, two otherwise (disjoint DEFINEs — the branch is
-    * data-determined). */
-  val matchQRangeSql: String =
-    """SELECT user_id, a_id, n_a, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, COUNT(A.*) AS n_a,
-      |           C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2,3} C)
-      |  DEFINE A AS event_type = 'view', C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Reluctant closed range `A{2,3}?` with an A-predicate that overlaps
-    * C's (any non-error row): take the SHORTEST repetition that lets the
-    * purchase close the match — 2 rows when row 3 is already a purchase,
-    * 3 only otherwise. */
-  val matchQRangeRelSql: String =
-    """SELECT user_id, a_id, n_a, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, COUNT(A.*) AS n_a,
-      |           C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2,3}? C)
-      |  DEFINE A AS event_type <> 'error', C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Zero-to-m range `B{,2}` greedy: up to two clicks between the view and
-    * the purchase, as many as the data has; LAST(B.event_id) is NULL on
-    * the zero-click parse (empty optional variable → SQL NULL). */
-  val matchQUptoSql: String =
-    """SELECT user_id, a_id, n_b, b_last, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES A.event_id AS a_id, COUNT(B.*) AS n_b,
-      |           LAST(B.event_id) AS b_last, C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A B{,2} C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** Open range `A{2,}` greedy: the maximal view run (≥ 2) from each start
-    * row, closed by the purchase immediately after the run — the {n,}
-    * twin of the A+ family, SKIP TO NEXT ROW so every suffix of the run
-    * with ≥ 2 views matches. */
-  val matchQOpenSql: String =
-    """SELECT user_id, a_id, n_a, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, COUNT(A.*) AS n_a,
-      |           C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2,} C)
-      |  DEFINE A AS event_type = 'view', C AS event_type = 'purchase'
-      |)""".stripMargin
-
-  /** SUBSET union referenced in DEFINE (r13 — a second layer on the
-    * SUBSET exceeds-reference row): the closing purchase is gated by the
-    * running SUM over the (A, B) union's rows. */
-  val matchSubsetDefSql: String =
-    """SELECT user_id, a_id, u_sum, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_id, SUM(U.value) AS u_sum,
-      |           C.event_id AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO NEXT ROW
-      |  PATTERN (A{2} B C)
-      |  SUBSET U = (A, B)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'purchase' AND SUM(U.value) > 120
-      |)""".stripMargin
-
-  def matchSubsetDef(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchSubsetDefSql)
-
-  def matchQOpt(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQOptSql)
-  def matchQOptRel(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQOptRelSql)
-  def matchQRange(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQRangeSql)
-  def matchQRangeRel(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQRangeRelSql)
-  def matchQUpto(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQUptoSql)
-  def matchQOpen(s: SparkSession, dir: String): DataFrame = run(s, dir, matchQOpenSql)
-
-  def matchSubset(s: SparkSession, dir: String): DataFrame = run(s, dir, matchSubsetSql)
-  def matchXvar(s: SparkSession, dir: String): DataFrame = run(s, dir, matchXvarSql)
-  def matchXvarMin(s: SparkSession, dir: String): DataFrame = run(s, dir, matchXvarMinSql)
-
-  def matchNumber(s: SparkSession, dir: String): DataFrame = run(s, dir, matchNumberSql)
-  def matchMulti(s: SparkSession, dir: String): DataFrame = run(s, dir, matchMultiSql)
-  def matchMultiDeep(s: SparkSession, dir: String): DataFrame = run(s, dir, matchMultiDeepSql)
-
-  /** SKIP TO LAST over a prefixed PERMUTE (r12 — the lifted subset edge):
-    * a purchase followed by view+click in either order; after each match
-    * the scan resumes at that match's click row, wherever the fired
-    * permutation put it. The three DEFINE types are disjoint, so no
-    * skipped-back-to row can start a new match and the declarative oracle
-    * is exact; the output-visible chaining case (an un-DEFINEd prefix)
-    * and the reference-faithful loop error (SKIP TO LAST B on a
-    * whole-pattern PERMUTE when the B-first permutation fires) are pinned
-    * in MatchRecognizeSqlSpec. */
-  val matchPermuteSkipSql: String =
-    """SELECT user_id, s_id, a_id, b_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES S.event_id AS s_id, A.event_id AS a_id, B.event_id AS b_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO LAST B
-      |  PATTERN (S PERMUTE(A, B))
-      |  DEFINE S AS event_type = 'purchase', A AS event_type = 'view',
-      |         B AS event_type = 'click'
-      |)""".stripMargin
-
-  /** SKIP TO FIRST inside a grouped repetition (r12): greedy alternating
-    * (view click)+ view; resuming at the FIRST click makes every view of
-    * an alternating run start its own (overlapping) match — output-visibly
-    * different from SKIP PAST LAST ROW, and exactly replayable: per
-    * maximal view/click alternating run, each view with ≥2 rows after it
-    * in the run emits a match reaching the run's last odd position. */
-  val matchRepSkipSql: String =
-    """SELECT user_id, a_first, n_b, b_last, c_id FROM events
-      |MATCH_RECOGNIZE (
-      |  PARTITION BY user_id
-      |  ORDER BY ts
-      |  MEASURES FIRST(A.event_id) AS a_first, COUNT(B.*) AS n_b,
-      |           LAST(B.event_id) AS b_last, LAST(C.event_id) AS c_id
-      |  ONE ROW PER MATCH
-      |  AFTER MATCH SKIP TO FIRST B
-      |  PATTERN ((A B)+ C)
-      |  DEFINE A AS event_type = 'view', B AS event_type = 'click',
-      |         C AS event_type = 'view'
-      |)""".stripMargin
-
-  def matchPermuteSkip(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchPermuteSkipSql)
-  def matchRepSkip(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchRepSkipSql)
-
-  def matchPermute(s: SparkSession, dir: String): DataFrame = run(s, dir, matchPermuteSql)
-
-  def matchParen(s: SparkSession, dir: String): DataFrame = run(s, dir, matchParenSql)
-  def matchAggDef(s: SparkSession, dir: String): DataFrame = run(s, dir, matchAggDefSql)
-  def matchSkipLast(s: SparkSession, dir: String): DataFrame = run(s, dir, matchSkipLastSql)
-
-  def matchPlus(s: SparkSession, dir: String): DataFrame = run(s, dir, matchPlusSql)
-  def matchStrict(s: SparkSession, dir: String): DataFrame = run(s, dir, matchStrictSql)
-  def matchSum(s: SparkSession, dir: String): DataFrame = run(s, dir, matchSumSql)
-  def matchAllRows(s: SparkSession, dir: String): DataFrame = run(s, dir, matchAllRowsSql)
-  def matchAllRowsMeasures(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchAllRowsMeasuresSql)
-  def matchAllRowsFinal(s: SparkSession, dir: String): DataFrame =
-    run(s, dir, matchAllRowsFinalSql)
-  def matchWithin(s: SparkSession, dir: String): DataFrame = run(s, dir, matchWithinSql)
-
-  /** DuckDB oracles (no MATCH_RECOGNIZE there either — expressed with
-    * window functions, same derivations as the programmatic CEP oracles). */
-  /** q_sql_match_prev shares q_sql_match_nav's oracle verbatim: with
-    * DOWN{2,}, the PREV spelling and the logical-navigation spelling are
-    * the same query over contiguous matches (see [[matchPrevSql]]). */
-  lazy val queries: Seq[Query] =
-    baseQueries ++ Seq(
-      Query("q_sql_match_prev", matchPrev, Query.oracleOf(baseQueries, "q_sql_match_nav")),
-      // batch-mode twins share the streaming statements' oracles verbatim
-      // — the hash equality is the batch ≡ stream proof
-      Query("q_sql_match_batch_nav", matchNavBatch, Query.oracleOf(baseQueries, "q_sql_match_nav")),
-      Query("q_sql_match_batch_rows", matchAllRowsBatch,
-        Query.oracleOf(baseQueries, "q_sql_match_rows")),
-      // r16: the full grammar joins the unified batch/stream proof —
-      // PERMUTE and grouped repetition share their twins' oracles too
-      Query("q_sql_match_batch_permute", matchPermuteBatch,
-        Query.oracleOf(baseQueries, "q_sql_match_permute")),
-      Query("q_sql_match_batch_group", matchMultiBatch,
-        Query.oracleOf(baseQueries, "q_sql_match_multi")),
-      // ^: the opening non-purchase run closed by the FIRST purchase —
-      // rows 1..prn-1 are non-purchase by the minimality of prn, so the
-      // greedy A+ from the anchored start is exactly that prefix
-      Query("q_sql_match_anchor", matchAnchorStart,
-        """WITH o AS (SELECT user_id, event_id, event_type,
-          |        row_number() OVER (PARTITION BY user_id
-          |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-          |      FROM events),
-          |p AS (SELECT user_id, min(rn) AS prn FROM o
-          |      WHERE event_type = 'purchase' GROUP BY user_id),
-          |f AS (SELECT user_id, event_id AS first_id FROM o WHERE rn = 1)
-          |SELECT p.user_id, CAST(p.prn - 1 AS BIGINT) AS n_lead, f.first_id
-          |FROM p JOIN f ON f.user_id = p.user_id
-          |WHERE p.prn >= 2
-          |ORDER BY p.user_id""".stripMargin),
-      // $: the LAST purchase followed only by non-purchase rows through
-      // end-of-partition (rows k+1..n are non-purchase by the maximality
-      // of k); users whose final event IS the purchase have no B row
-      Query("q_sql_match_anchor_end", matchAnchorEnd,
-        """WITH o AS (SELECT user_id, event_id, event_type,
-          |        row_number() OVER (PARTITION BY user_id
-          |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-          |      FROM events),
-          |mx AS (SELECT user_id, max(rn) AS n FROM o GROUP BY user_id),
-          |lp AS (SELECT user_id, max(rn) AS k FROM o
-          |       WHERE event_type = 'purchase' GROUP BY user_id),
-          |a AS (SELECT o.user_id, o.event_id AS a_id, lp.k
-          |      FROM o JOIN lp ON o.user_id = lp.user_id AND o.rn = lp.k)
-          |SELECT a.user_id, a.a_id, CAST(mx.n - a.k AS BIGINT) AS n_tail
-          |FROM a JOIN mx ON mx.user_id = a.user_id
-          |WHERE mx.n > a.k
-          |ORDER BY a.user_id""".stripMargin),
-      // ^ A+ $: the whole partition matches iff EVERY row is under the
-      // threshold — i.e. the per-user max is
-      Query("q_sql_match_anchor_both", matchAnchorBoth,
-        """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-          |FROM events GROUP BY user_id
-          |HAVING max(value) < 200
-          |ORDER BY user_id""".stripMargin),
-      // NEXT in batch: one match per maximal strictly-ascending run of
-      // ≥ 3 rows — island derivation mirroring q_sql_match_nav's
-      // descending twin; the island's last row is the peak (TOP), the
-      // rows before it are the UP run (m − 1 of them)
-      Query("q_sql_match_next", matchNext,
-        """WITH o AS (SELECT user_id, event_id, value,
-          |        row_number() OVER (PARTITION BY user_id
-          |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-          |      FROM events),
-          |b AS (SELECT *, CASE WHEN value > lag(value)
-          |        OVER (PARTITION BY user_id ORDER BY rn)
-          |      THEN 0 ELSE 1 END AS brk FROM o),
-          |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY rn) AS grp
-          |      FROM b),
-          |r AS (SELECT user_id, grp, count(*) AS m,
-          |        arg_min(event_id, rn) AS strt_id, arg_max(event_id, rn) AS peak_id,
-          |        arg_max(value, rn) AS peak_val
-          |      FROM g GROUP BY user_id, grp)
-          |SELECT user_id, strt_id, peak_id, CAST(m - 1 AS BIGINT) AS n_up,
-          |       round(peak_val, 6) AS peak_val
-          |FROM r WHERE m >= 3
-          |ORDER BY user_id, strt_id""".stripMargin))
-
-  private val baseQueries: Seq[Query] = Seq(
-    // SUBSET-in-DEFINE: fixed-shape pattern, lead replay with the union sum
-    Query("q_sql_match_subset_def", matchSubsetDef,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
-        |  lead(event_type,1) OVER w AS et1, lead(value,1) OVER w AS v1,
-        |  lead(event_type,2) OVER w AS et2, lead(value,2) OVER w AS v2,
-        |  lead(event_type,3) OVER w AS et3, lead(event_id,3) OVER w AS id3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, round(v0 + v1 + v2, 6) AS u_sum, id3 AS c_id
-        |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'click'
-        |  AND et3 = 'purchase' AND v0 + v1 + v2 > 120
-        |ORDER BY user_id, a_id""".stripMargin),
-    // greedy optional B?: the B-present branch wins where both parses fit
-    Query("q_sql_match_qopt", matchQOpt,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1, lead(event_id,1) OVER w AS id1,
-        |  lead(value,1) OVER w AS v1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id,
-        |  CASE WHEN v1 > 50 AND et2 = 'purchase' THEN id1 ELSE NULL END AS b_id,
-        |  CASE WHEN v1 > 50 AND et2 = 'purchase' THEN id2 ELSE id1 END AS c_id
-        |FROM sq WHERE et0 = 'view'
-        |  AND ((v1 > 50 AND et2 = 'purchase') OR et1 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin),
-    // reluctant optional B??: the B-absent branch wins where both fit
-    Query("q_sql_match_qopt_rel", matchQOptRel,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1, lead(event_id,1) OVER w AS id1,
-        |  lead(value,1) OVER w AS v1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id,
-        |  CASE WHEN et1 = 'purchase' THEN NULL ELSE id1 END AS b_id,
-        |  CASE WHEN et1 = 'purchase' THEN id1 ELSE id2 END AS c_id
-        |FROM sq WHERE et0 = 'view'
-        |  AND (et1 = 'purchase' OR (v1 > 50 AND et2 = 'purchase'))
-        |ORDER BY user_id, a_id""".stripMargin),
-    // A{2,3} greedy: disjoint DEFINEs make the branch data-determined
-    Query("q_sql_match_qrange", matchQRange,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2,
-        |  lead(event_type,3) OVER w AS et3, lead(event_id,3) OVER w AS id3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id,
-        |  CAST(CASE WHEN et2 = 'view' AND et3 = 'purchase' THEN 3 ELSE 2 END AS BIGINT) AS n_a,
-        |  CASE WHEN et2 = 'view' AND et3 = 'purchase' THEN id3 ELSE id2 END AS c_id
-        |FROM sq WHERE et0 = 'view' AND et1 = 'view'
-        |  AND ((et2 = 'view' AND et3 = 'purchase') OR et2 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin),
-    // A{2,3}? reluctant with A overlapping C: shortest repetition first
-    Query("q_sql_match_qrange_rel", matchQRangeRel,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2,
-        |  lead(event_type,3) OVER w AS et3, lead(event_id,3) OVER w AS id3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id,
-        |  CAST(CASE WHEN et2 = 'purchase' THEN 2 ELSE 3 END AS BIGINT) AS n_a,
-        |  CASE WHEN et2 = 'purchase' THEN id2 ELSE id3 END AS c_id
-        |FROM sq WHERE et0 <> 'error' AND et1 <> 'error'
-        |  AND (et2 = 'purchase' OR (et2 <> 'error' AND et3 = 'purchase'))
-        |ORDER BY user_id, a_id""".stripMargin),
-    // B{,2} greedy: as many clicks as the data has before the purchase
-    Query("q_sql_match_qupto", matchQUpto,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1, lead(event_id,1) OVER w AS id1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2,
-        |  lead(event_type,3) OVER w AS et3, lead(event_id,3) OVER w AS id3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id,
-        |  CAST(CASE WHEN et1 = 'click' AND et2 = 'click' AND et3 = 'purchase' THEN 2
-        |            WHEN et1 = 'click' AND et2 = 'purchase' THEN 1
-        |            ELSE 0 END AS BIGINT) AS n_b,
-        |  CASE WHEN et1 = 'click' AND et2 = 'click' AND et3 = 'purchase' THEN id2
-        |       WHEN et1 = 'click' AND et2 = 'purchase' THEN id1
-        |       ELSE NULL END AS b_last,
-        |  CASE WHEN et1 = 'click' AND et2 = 'click' AND et3 = 'purchase' THEN id3
-        |       WHEN et1 = 'click' AND et2 = 'purchase' THEN id2
-        |       ELSE id1 END AS c_id
-        |FROM sq WHERE et0 = 'view'
-        |  AND ((et1 = 'click' AND et2 = 'click' AND et3 = 'purchase')
-        |    OR (et1 = 'click' AND et2 = 'purchase')
-        |    OR et1 = 'purchase')
-        |ORDER BY user_id, a_id""".stripMargin),
-    // A{2,} greedy: islands — every >= 2-view suffix of a view run whose
-    // next row is a purchase
-    Query("q_sql_match_qopen", matchQOpen,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |        row_number() OVER (PARTITION BY user_id
-        |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn FROM events),
-        |v AS (SELECT user_id, event_id, rn,
-        |        rn - row_number() OVER (PARTITION BY user_id ORDER BY rn) AS grp
-        |      FROM o WHERE event_type = 'view'),
-        |r AS (SELECT user_id, grp, max(rn) AS end_rn FROM v GROUP BY 1, 2),
-        |p AS (SELECT user_id, rn, event_id FROM o WHERE event_type = 'purchase')
-        |SELECT v.user_id, v.event_id AS a_id,
-        |       CAST(r.end_rn - v.rn + 1 AS BIGINT) AS n_a,
-        |       p.event_id AS c_id
-        |FROM v JOIN r ON r.user_id = v.user_id AND r.grp = v.grp
-        |JOIN p ON p.user_id = v.user_id AND p.rn = r.end_rn + 1
-        |WHERE r.end_rn - v.rn + 1 >= 2
-        |ORDER BY v.user_id, a_id""".stripMargin),
-    // MATCH_ROWTIME: the B row's timestamp surfaces as the measure
-    Query("q_sql_match_rowtime", matchRowtime,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(t, 1) OVER w AS mrt
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id, mrt FROM sq
-        |WHERE et0 = 'view' AND et1 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
-    // cascade: the same matches tumbled into epoch-aligned 1-day windows
-    Query("q_sql_match_cascade", matchCascade,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(t, 1) OVER w AS mrt
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT mrt FROM sq WHERE et0 = 'view' AND et1 = 'purchase')
-        |SELECT make_timestamp((epoch_us(mrt) // 86400000000) * 86400000000) AS win_start,
-        |  CAST(count(*) AS BIGINT) AS n_matches
-        |FROM m GROUP BY 1 ORDER BY 1""".stripMargin),
-    // V-pattern with logical offsets: one match per maximal strictly-
-    // decreasing run (>= 3 rows) whose next row beats the run's
-    // second-to-last value (see matchNavSql's derivation note)
-    Query("q_sql_match_nav", matchNav,
-      """WITH o AS (SELECT user_id, event_id, value,
-        |        row_number() OVER (PARTITION BY user_id
-        |          ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |      FROM events),
-        |b AS (SELECT *, CASE WHEN value < lag(value)
-        |        OVER (PARTITION BY user_id ORDER BY rn)
-        |      THEN 0 ELSE 1 END AS brk FROM o),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY rn) AS grp
-        |      FROM b),
-        |r AS (SELECT user_id, grp, count(*) AS m, max(rn) AS re,
-        |        arg_min(event_id, rn) AS strt_id, arg_max(event_id, rn) AS bottom_id
-        |      FROM g GROUP BY user_id, grp)
-        |SELECT r.user_id, r.strt_id, r.bottom_id,
-        |       CAST(r.m - 1 AS BIGINT) AS n_down,
-        |       round(p.value, 6) AS penult, round(u.value, 6) AS up_val
-        |FROM r
-        |JOIN o p ON p.user_id = r.user_id AND p.rn = r.re - 1
-        |JOIN o u ON u.user_id = r.user_id AND u.rn = r.re + 1
-        |WHERE r.m >= 3 AND u.value > p.value
-        |ORDER BY r.user_id, r.strt_id""".stripMargin),
-    // literal-RHS cross-variable aggregate: greedy A+ = the maximal view
-    // run from each start; B = the immediately-following purchase; the
-    // run's suffix-sum must beat the constant (same islands derivation as
-    // q_sql_match_xvar with a literal bound)
-    Query("q_sql_match_xagg", matchXagg,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            row_number() OVER (PARTITION BY user_id
-        |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |           FROM events),
-        |g AS (SELECT *, sum(CASE WHEN event_type = 'view' THEN 0 ELSE 1 END)
-        |        OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |v AS (SELECT user_id, grp, rn, event_id,
-        |        sum(value) OVER (PARTITION BY user_id, grp ORDER BY rn
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS ssum,
-        |        count(*) OVER (PARTITION BY user_id, grp ORDER BY rn
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS scnt,
-        |        max(rn) OVER (PARTITION BY user_id, grp) AS end_rn
-        |      FROM g WHERE event_type = 'view'),
-        |p AS (SELECT user_id, rn, event_id FROM o
-        |      WHERE event_type = 'purchase')
-        |SELECT v.user_id, v.event_id AS a_first, CAST(v.scnt AS BIGINT) AS n_a,
-        |       p.event_id AS b_id
-        |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
-        |WHERE v.ssum > 100
-        |ORDER BY v.user_id, a_first""".stripMargin),
-    // DISTINCT aggregations: greedy A+ with SKIP PAST LAST ROW = one match
-    // per MAXIMAL non-purchase run whose next row is a purchase (no suffix
-    // matches — a shorter A+ parse leaves B on a non-purchase row);
-    // distinct aggregates replayed by DuckDB's DISTINCT verbatim
-    Query("q_sql_match_distinct", matchDistinct,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            row_number() OVER (PARTITION BY user_id
-        |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |           FROM events),
-        |g AS (SELECT *, sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |v AS (SELECT user_id, grp, max(rn) AS end_rn,
-        |        arg_min(event_id, rn) AS a_first,
-        |        CAST(count(*) AS BIGINT) AS n_a,
-        |        CAST(count(DISTINCT value) AS BIGINT) AS n_dist,
-        |        round(sum(DISTINCT value), 6) AS sum_dist
-        |      FROM g WHERE event_type <> 'purchase' GROUP BY user_id, grp),
-        |p AS (SELECT user_id, rn, event_id FROM o
-        |      WHERE event_type = 'purchase')
-        |SELECT v.user_id, v.a_first, v.n_a, v.n_dist, v.sum_dist,
-        |       p.event_id AS b_id
-        |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
-        |ORDER BY v.user_id, v.a_first""".stripMargin),
-    // exclusion {- A -} in ALL ROWS: view-click-purchase triples (disjoint
-    // types ⇒ lead-derivation exact; SKIP PAST LAST ROW can't skip a
-    // viable start — no triple begins inside another); only the B and C
-    // rows are emitted, yet both carry the excluded view's measures
-    Query("q_sql_match_exclude", matchExclude,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS id0, event_type AS et0,
-        |  lead(event_type,1) OVER w AS et1, lead(event_id,1) OVER w AS id1,
-        |  lead(event_type,2) OVER w AS et2, lead(event_id,2) OVER w AS id2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT * FROM sq WHERE et0 = 'view' AND et1 = 'click'
-        |      AND et2 = 'purchase'),
-        |r AS (
-        | SELECT user_id, id1 AS event_id, 'B' AS cls,
-        |        CAST(1 AS BIGINT) AS n_a, id0 AS a_id FROM m
-        | UNION ALL SELECT user_id, id2, 'C', 1, id0 FROM m)
-        |SELECT user_id, event_id, cls, n_a, a_id FROM r
-        |ORDER BY user_id, event_id, cls, n_a, a_id""".stripMargin),
-    // ALL ROWS + RUNNING measures: fixed-length disjoint-type pattern →
-    // lead-based derivation exact; running sums unroll left-to-right
-    Query("q_sql_match_rows_measures", matchAllRowsMeasures,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id,
-        |  event_id AS id0, value AS v0, event_type AS et0,
-        |  lead(event_id,1) OVER w AS id1, lead(value,1) OVER w AS v1, lead(event_type,1) OVER w AS et1,
-        |  lead(event_id,2) OVER w AS id2, lead(value,2) OVER w AS v2, lead(event_type,2) OVER w AS et2,
-        |  lead(event_id,3) OVER w AS id3, lead(value,3) OVER w AS v3, lead(event_type,3) OVER w AS et3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT * FROM sq WHERE et0 = 'view' AND et1 = 'view'
-        |      AND et2 = 'click' AND et3 = 'purchase'),
-        |r AS (
-        | SELECT user_id, id0 AS event_id, 'A' AS cls, CAST(1 AS BIGINT) AS n_a,
-        |        round(v0, 6) AS run_sum FROM m
-        | UNION ALL SELECT user_id, id1, 'A', 2, round(v0 + v1, 6) FROM m
-        | UNION ALL SELECT user_id, id2, 'B', 2, round(v0 + v1 + v2, 6) FROM m
-        | UNION ALL SELECT user_id, id3, 'C', 2, round(v0 + v1 + v2 + v3, 6) FROM m)
-        |SELECT user_id, event_id, cls, n_a, run_sum FROM r
-        |ORDER BY user_id, event_id, cls, n_a, run_sum""".stripMargin),
-    // FINAL vs RUNNING in ALL ROWS: running count climbs, FINAL count and
-    // sum are the match totals on every row
-    Query("q_sql_match_rows_final", matchAllRowsFinal,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id,
-        |  event_id AS id0, value AS v0, event_type AS et0,
-        |  lead(event_id,1) OVER w AS id1, lead(value,1) OVER w AS v1, lead(event_type,1) OVER w AS et1,
-        |  lead(event_id,2) OVER w AS id2, lead(value,2) OVER w AS v2, lead(event_type,2) OVER w AS et2,
-        |  lead(event_id,3) OVER w AS id3, lead(value,3) OVER w AS v3, lead(event_type,3) OVER w AS et3
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT *, round(v0 + v1 + v2 + v3, 6) AS tot FROM sq
-        |      WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'click' AND et3 = 'purchase'),
-        |r AS (
-        | SELECT user_id, id0 AS event_id, 'A' AS cls, CAST(1 AS BIGINT) AS n_run,
-        |        CAST(4 AS BIGINT) AS n_fin, tot AS total FROM m
-        | UNION ALL SELECT user_id, id1, 'A', 2, 4, tot FROM m
-        | UNION ALL SELECT user_id, id2, 'B', 3, 4, tot FROM m
-        | UNION ALL SELECT user_id, id3, 'C', 4, 4, tot FROM m)
-        |SELECT user_id, event_id, cls, n_run, n_fin, total FROM r
-        |ORDER BY user_id, event_id, cls, n_run, n_fin, total""".stripMargin),
-    // prefixed PERMUTE + SKIP TO LAST B: disjoint DEFINE types make the
-    // lead-based derivation exact (no row inside a match can start one,
-    // and the skip-back target row can never satisfy S)
-    Query("q_sql_match_permute_skip", matchPermuteSkip,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS s_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS id1,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS id2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, s_id,
-        |  CASE WHEN et1 = 'view' THEN id1 ELSE id2 END AS a_id,
-        |  CASE WHEN et1 = 'click' THEN id1 ELSE id2 END AS b_id
-        |FROM sq
-        |WHERE et0 = 'purchase'
-        |  AND ((et1 = 'view' AND et2 = 'click') OR (et1 = 'click' AND et2 = 'view'))
-        |ORDER BY user_id, s_id""".stripMargin),
-    // grouped repetition + SKIP TO FIRST B: overlapping matches — every
-    // view of a maximal view/click alternating run with >= 2 rows after
-    // it in the run matches greedily to the run's last odd position
-    Query("q_sql_match_rep_skip", matchRepSkip,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            row_number() OVER (PARTITION BY user_id
-        |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |           FROM events),
-        |b AS (SELECT *, CASE WHEN event_type IN ('view','click')
-        |        AND lag(event_type) OVER w IN ('view','click')
-        |        AND event_type <> lag(event_type) OVER w
-        |      THEN 0 ELSE 1 END AS brk
-        |   FROM o WINDOW w AS (PARTITION BY user_id ORDER BY rn)),
-        |g AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM b),
-        |gr AS (SELECT user_id, grp, max(rn) AS re FROM g
-        |       WHERE event_type IN ('view','click') GROUP BY user_id, grp),
-        |m AS (SELECT v.user_id, v.rn AS p, v.event_id AS a_first,
-        |        CASE WHEN (gr.re - v.rn) % 2 = 0 THEN gr.re ELSE gr.re - 1 END AS e
-        |      FROM g v JOIN gr ON v.user_id = gr.user_id AND v.grp = gr.grp
-        |      WHERE v.event_type = 'view')
-        |SELECT m.user_id, m.a_first, CAST((m.e - m.p) // 2 AS BIGINT) AS n_b,
-        |   bl.event_id AS b_last, ce.event_id AS c_id
-        |FROM m
-        |JOIN g ce ON ce.user_id = m.user_id AND ce.rn = m.e
-        |JOIN g bl ON bl.user_id = m.user_id AND bl.rn = m.e - 1
-        |WHERE m.e >= m.p + 2
-        |ORDER BY m.user_id, m.a_first""".stripMargin),
-    Query("q_sql_match_xvar", matchXvar,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            row_number() OVER (PARTITION BY user_id
-        |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |           FROM events),
-        |g AS (SELECT *, sum(CASE WHEN event_type = 'view' THEN 0 ELSE 1 END)
-        |        OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |v AS (SELECT user_id, grp, rn, event_id, value,
-        |        sum(value) OVER (PARTITION BY user_id, grp ORDER BY rn
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS ssum,
-        |        count(*) OVER (PARTITION BY user_id, grp ORDER BY rn
-        |          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS scnt,
-        |        max(rn) OVER (PARTITION BY user_id, grp) AS end_rn
-        |      FROM g WHERE event_type = 'view'),
-        |p AS (SELECT user_id, rn, event_id, value FROM o
-        |      WHERE event_type = 'purchase')
-        |SELECT v.user_id, v.event_id AS a_first, round(v.ssum, 6) AS a_sum,
-        |       p.event_id AS b_id, CAST(v.scnt AS BIGINT) AS n_a
-        |FROM v JOIN p ON p.user_id = v.user_id AND p.rn = v.end_rn + 1
-        |WHERE v.ssum > p.value
-        |ORDER BY v.user_id, a_first""".stripMargin),
-    Query("q_sql_match_xvar_min", matchXvarMin,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_first, value AS v0, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(value, 1) OVER w AS v1,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS b_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_first, round(least(v0, v1), 6) AS a_min, b_id
-        |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
-        |  AND least(v0, v1) < 50
-        |ORDER BY user_id, a_first""".stripMargin),
-    Query("q_sql_match_subset", matchSubset,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(value, 1) OVER w AS v1
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id AS u_first, b_id AS u_last,
-        |  CAST(2 AS BIGINT) AS n_u, round(v0 + v1, 6) AS u_sum
-        |FROM sq WHERE et0 = 'view' AND et1 = 'click'
-        |ORDER BY user_id, u_first""".stripMargin),
-    Query("q_sql_match_number", matchNumber,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, t,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT user_id, a_id, b_id, t FROM sq
-        |      WHERE et0 = 'view' AND et1 = 'purchase')
-        |SELECT user_id, a_id, b_id,
-        |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY t, a_id) AS BIGINT) AS mn
-        |FROM m ORDER BY user_id, a_id, b_id, mn""".stripMargin),
-    Query("q_sql_match_multi", matchMulti,
-      """WITH RECURSIVE o AS (
-        | SELECT user_id, event_id, event_type,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        | FROM events),
-        |walk(user_id, start_rn, cur_rn, n_a) AS (
-        | SELECT user_id, rn, rn, 1 FROM o WHERE event_type = 'view'
-        | UNION ALL
-        | SELECT w.user_id, w.start_rn, v.rn, w.n_a + 1
-        | FROM walk w
-        | JOIN o c ON c.user_id = w.user_id AND c.rn = w.cur_rn + 1
-        |         AND c.event_type = 'click'
-        | JOIN o v ON v.user_id = w.user_id AND v.rn = w.cur_rn + 2
-        |         AND v.event_type = 'view'),
-        |best AS (SELECT user_id, start_rn, max(n_a) AS n_a,
-        |                max(cur_rn) AS end_rn
-        |         FROM walk GROUP BY user_id, start_rn)
-        |SELECT b.user_id, fa.event_id AS a_first, la.event_id AS a_last,
-        |  CAST(b.n_a AS BIGINT) AS n_a, CAST(b.n_a - 1 AS BIGINT) AS n_b
-        |FROM best b
-        |JOIN o fa ON fa.user_id = b.user_id AND fa.rn = b.start_rn
-        |JOIN o la ON la.user_id = b.user_id AND la.rn = b.end_rn
-        |ORDER BY b.user_id, a_first, a_last, n_a, n_b""".stripMargin),
-    Query("q_sql_match_multi_deep", matchMultiDeep,
-      // always-true DEFINEs: the greedy loop eats each partition whole —
-      // first match = the longest odd prefix (pattern length 2k+1), and on
-      // even-sized partitions SKIP PAST LAST ROW leaves exactly one row,
-      // matched as a bare tail A (k=0). Closed form per partition.
-      """WITH o AS (
-        | SELECT user_id, event_id,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn,
-        |  count(*) OVER (PARTITION BY user_id) AS n
-        | FROM events),
-        |L AS (SELECT DISTINCT user_id, n,
-        |        CASE WHEN n % 2 = 1 THEN n ELSE n - 1 END AS len FROM o),
-        |m1 AS (SELECT l.user_id, fa.event_id AS a_first, la.event_id AS a_last,
-        |        CAST((l.len + 1) // 2 AS BIGINT) AS n_a,
-        |        CAST((l.len - 1) // 2 AS BIGINT) AS n_b
-        |       FROM L l
-        |       JOIN o fa ON fa.user_id = l.user_id AND fa.rn = 1
-        |       JOIN o la ON la.user_id = l.user_id AND la.rn = l.len),
-        |m2 AS (SELECT l.user_id, e.event_id AS a_first, e.event_id AS a_last,
-        |        CAST(1 AS BIGINT) AS n_a, CAST(0 AS BIGINT) AS n_b
-        |       FROM L l
-        |       JOIN o e ON e.user_id = l.user_id AND e.rn = l.n
-        |       WHERE l.n % 2 = 0)
-        |SELECT * FROM (SELECT * FROM m1 UNION ALL SELECT * FROM m2)
-        |ORDER BY user_id, a_first""".stripMargin),
-    Query("q_sql_match_permute", matchPermute,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-      |            CAST(ts AS TIMESTAMP) AS t FROM events),
-      |sq AS (SELECT user_id, event_id AS id0, event_type AS et0,
-      |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS id1
-      | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-      |SELECT user_id,
-      |  CASE WHEN et0 = 'view' THEN id0 ELSE id1 END AS a_id,
-      |  CASE WHEN et0 = 'view' THEN id1 ELSE id0 END AS b_id
-      |FROM sq
-      |WHERE (et0 = 'view' AND et1 = 'click')
-      |   OR (et0 = 'click' AND et1 = 'view')
-      |ORDER BY user_id, a_id""".stripMargin),
-    Query("q_sql_match_paren", matchParen,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, value AS v0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id FROM sq
-        |WHERE et0 IN ('view', 'click') AND NOT (v0 < 1) AND et1 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
-    Query("q_sql_match_agg_def", matchAggDef,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, value AS v0, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(value, 1) OVER w AS v1,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS b_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, round(v0 + v1, 6) AS a_sum, b_id
-        |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
-        |  AND v0 <= 150 AND v0 + v1 <= 150
-        |ORDER BY user_id, a_id""".stripMargin),
-    Query("q_sql_match_skip_last", matchSkipLast,
-      """WITH o AS (SELECT user_id, event_id, event_type,
-        |            row_number() OVER (PARTITION BY user_id
-        |              ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |           FROM events),
-        |g AS (SELECT *, sum(CASE WHEN event_type = 'click' THEN 0 ELSE 1 END)
-        |        OVER (PARTITION BY user_id ORDER BY rn) AS grp,
-        |        lead(event_type) OVER (PARTITION BY user_id ORDER BY rn) AS net
-        |      FROM o),
-        |isl AS (SELECT user_id, grp, arg_min(event_id, rn) AS b_first,
-        |         arg_max(event_id, rn) AS b_last, CAST(count(*) AS BIGINT) AS n_b
-        |        FROM g WHERE event_type = 'click' GROUP BY user_id, grp)
-        |SELECT v.user_id, v.event_id AS a_id, isl.b_first, isl.b_last, isl.n_b
-        |FROM g v JOIN isl ON v.user_id = isl.user_id AND v.grp = isl.grp
-        |WHERE v.event_type = 'view' AND v.net = 'click'
-        |ORDER BY v.user_id, a_id""".stripMargin),
-    Query("q_sql_match", matchPlus,
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
-        |o AS (SELECT user_id, event_id, event_type,
-        |        row_number() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn,
-        |        CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS is_err
-        |      FROM e),
-        |g AS (SELECT *, sum(is_err) OVER (PARTITION BY user_id ORDER BY rn) AS grp FROM o),
-        |a AS (SELECT * FROM g WHERE is_err = 0),
-        |s AS (SELECT user_id, grp, rn, event_id,
-        |        max(CASE WHEN event_type = 'purchase' THEN rn END) OVER
-        |          (PARTITION BY user_id, grp ORDER BY rn
-        |           ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS j_rn
-        |      FROM a)
-        |SELECT s.user_id, s.event_id AS a_id, b.event_id AS b_id,
-        |       CAST(s.j_rn - s.rn AS BIGINT) AS n_a
-        |FROM s JOIN a b ON b.user_id = s.user_id AND b.rn = s.j_rn
-        |WHERE s.j_rn IS NOT NULL
-        |ORDER BY s.user_id, a_id""".stripMargin),
-    Query("q_sql_match_sum", matchSum,
-      """WITH o AS (SELECT user_id, event_id, event_type, value,
-        |            CAST(ts AS TIMESTAMP) AS t FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, value AS v0, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(value, 1) OVER w AS v1,
-        |  lead(event_type, 2) OVER w AS et2, lead(value, 2) OVER w AS v2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, round(v0 + v1, 6) AS a_sum,
-        | round((v0 + v1) / 2, 6) AS a_avg, round(v2, 6) AS b_val,
-        | CAST(2 AS BIGINT) AS n_a
-        |FROM sq WHERE et0 = 'view' AND et1 = 'view' AND et2 = 'purchase'
-        |ORDER BY user_id, a_id""".stripMargin),
-    Query("q_sql_match_rows", matchAllRows,
-      """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
-        |           FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)),
-        |m AS (SELECT user_id, a_id, b_id, c_id FROM sq
-        |      WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase')
-        |SELECT user_id, event_id, cls FROM (
-        | SELECT user_id, a_id AS event_id, 'A' AS cls FROM m
-        | UNION ALL SELECT user_id, b_id, 'B' FROM m
-        | UNION ALL SELECT user_id, c_id, 'C' FROM m)
-        |ORDER BY user_id, event_id, cls""".stripMargin),
-    Query("q_sql_match_within", matchWithin,
-      """WITH o AS (SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t
-        |           FROM events),
-        |sq AS (SELECT user_id, event_id AS a_id, event_type AS et0, t AS t0,
-        |  lead(event_type, 1) OVER w AS et1, lead(event_id, 1) OVER w AS b_id,
-        |  lead(event_type, 2) OVER w AS et2, lead(event_id, 2) OVER w AS c_id,
-        |  lead(t, 2) OVER w AS t2
-        | FROM o WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id))
-        |SELECT user_id, a_id, b_id, c_id FROM sq
-        |WHERE et0 = 'view' AND et1 = 'click' AND et2 = 'purchase'
-        |  AND t2 - t0 <= INTERVAL 1 DAY
-        |ORDER BY user_id, a_id""".stripMargin),
-    Query("q_sql_match_strict", matchStrict,
-      StreamQueries.cepStrictOracle),
-  )
 }

@@ -12,6 +12,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileAlreadyExistsException, Pat
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The contract Spark's streaming metadata logs and state stores rely on
@@ -20,12 +21,25 @@ import org.scalatest.funsuite.AnyFunSuite
   * FileAlreadyExistsException on a non-overwriting rename (HDFSMetadataLog's
   * concurrent-writer check), 0644 files and 0755 dirs, and Spark's stock
   * code for every other scheme. */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class LocalCheckpointFileManagerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val conf = new Configuration()
 
-  private def fresh(): (java.nio.file.Path, LocalCheckpointFileManager) = {
+  private val dirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
+
+  /** A fresh `graft-lcfm-*` temp dir, deleted when the suite ends. */
+  private def tempDir(): java.nio.file.Path = {
     val dir = Files.createTempDirectory("graft-lcfm-")
+    dirs += dir
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try dirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    finally super.afterAll()
+
+  private def fresh(): (java.nio.file.Path, LocalCheckpointFileManager) = {
+    val dir = tempDir()
     (dir, new LocalCheckpointFileManager(new Path(dir.toUri), conf))
   }
 
@@ -127,7 +141,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val c = new Configuration()
     c.set("fs.counting.impl", classOf[CountingFs].getName)
     c.setBoolean("fs.counting.impl.disable.cache", true)
-    val dir = Files.createTempDirectory("graft-lcfm-")
+    val dir = tempDir()
     val root = new Path(s"counting://${dir.toAbsolutePath}")
     val fm = new LocalCheckpointFileManager(root, c)
     val before = CountingFs.calls.get()

@@ -930,6 +930,64 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     intercept[IllegalArgumentException](stepsOf("B.value > PREV(A.value)"))
   }
 
+  test("NOT of an out-of-range navigation comparison is NULL, so the row does not match") {
+    // three-valued logic, as in the DuckDB oracles:
+    //   SELECT NOT (NULL > 3)  →  NULL
+    // LAST(A.value, 5) is NULL until A holds six rows, so NOT (... > 3) is
+    // NULL, not TRUE, and the candidate is refused
+    val t = new java.sql.Timestamp(0L)
+    def e(id: Long, v: Double) = StreamSource.Event(id, t, 1L, "view", v)
+    val d = MatchRecognizeSql.compileDefine("A", "NOT (LAST(A.value, 5) > 3)")
+    val none = Map.empty[String, IndexedSeq[StreamSource.Event]]
+      .withDefaultValue(IndexedSeq.empty)
+    assert(!d.xagg.get(none, e(1, 1.0)), "NOT NULL must not match")
+    // in range the negation decides as usual
+    val five = Map("A" -> (1L to 5L).map(i => e(i, i.toDouble)))
+      .withDefaultValue(IndexedSeq.empty[StreamSource.Event])
+    assert(d.xagg.get(five, e(6, 6.0)))   // LAST(A.value, 5) = 1: NOT (1 > 3)
+    val big = Map("A" -> (1L to 5L).map(i => e(i, 10.0 * i)))
+      .withDefaultValue(IndexedSeq.empty[StreamSource.Event])
+    assert(!d.xagg.get(big, e(6, 6.0)))   // LAST(A.value, 5) = 10: NOT (10 > 3)
+  }
+
+  test("CASE, BETWEEN, IN and arithmetic on navigation match their AND/OR twins") {
+    import spark.implicits._
+    def ev(id: Long, et: String, v: Double) =
+      StreamSource.Event(id, new java.sql.Timestamp(id * 1000L), 1L, et, v)
+    val types = Seq("view", "view", "click", "purchase", "view", "error", "click")
+    val events = spark.createDataset((1L to 80L).map(i =>
+      ev(i, types((i % types.length).toInt), ((i * 37) % 23).toDouble)))
+    def matches(defineB: String): Seq[Seq[Long]] = {
+      val steps = MatchRecognizeSql.parse(
+        s"""SELECT user_id, n FROM events
+           |MATCH_RECOGNIZE (
+           |  PARTITION BY user_id ORDER BY ts
+           |  MEASURES COUNT(A.*) AS n
+           |  AFTER MATCH SKIP TO NEXT ROW
+           |  PATTERN (A+ B)
+           |  DEFINE A AS event_type = 'view', B AS $defineB
+           |)""".stripMargin).pattern.map(_._2)
+      Cep.matchRecognizeOrderedSkip(events, steps, Cep.SkipToNextRow)
+        .collect().map(_.ids).toSeq.sortBy(_.head)
+    }
+    val all = matches("TRUE")
+    Seq(
+      "CASE WHEN event_type = 'click' THEN B.value > LAST(A.value) " +
+        "ELSE B.value < LAST(A.value) END" ->
+        ("(event_type = 'click' AND B.value > LAST(A.value)) OR " +
+          "(event_type <> 'click' AND B.value < LAST(A.value))"),
+      "B.value BETWEEN LAST(A.value) AND 2 * FIRST(A.value)" ->
+        "B.value >= LAST(A.value) AND B.value <= 2 * FIRST(A.value)",
+      "event_type IN ('click', 'purchase')" ->
+        "event_type = 'click' OR event_type = 'purchase'",
+      "B.value - 2 * LAST(A.value, 1) > 0" -> "B.value > 2 * LAST(A.value, 1)"
+    ).foreach { case (form, twin) =>
+      val got = matches(form)
+      assert(got === matches(twin), s"$form differs from $twin")
+      assert(got.nonEmpty && got.length < all.length, s"$form is not load-bearing")
+    }
+  }
+
   test("SQL value measures equal the window-function derivation") {
     val viaSql = MatchRecognizeSql.matchSum(spark, sf).collect().map(_.toSeq)
     Tables.registerAll(spark, sf)

@@ -169,7 +169,7 @@ class OperatorsSpec extends SparkSpec {
     // of >= w+k-1 = 8 tokens must share at least one selected fingerprint,
     // even when the run sits at different offsets
     val shared = "alpha beta gamma delta epsilon zeta eta theta"
-    val tmp = java.nio.file.Files.createTempDirectory("winnow").toString
+    val tmp = tempDir("winnow")
     Seq((1L, s"$shared tail one two", "en", "t", 0L),
         (2L, s"prefix words here then $shared", "en", "t", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -86,7 +86,7 @@ class Round14Spec extends SparkSpec {
     // exactly one representative. Corpus: 40 byte-identical payloads (one
     // aHash cluster) + 5 distinct singletons, written as a documents table.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("phash-sat").toString
+    val dir = tempDir("phash-sat")
     val dup = (0L until 40L).map(i =>
       (i, "the same payload re-encoded byte for byte identical every time " * 3))
     // singletons: per-doc pseudo-random byte content so their aHashes are

@@ -26,8 +26,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     ck.path
   }
 
+  private val tempDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
+  /** A fresh `Files.createTempDirectory(prefix)`, deleted when the suite ends. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs += d
+    d.toString
+  }
+
   override def afterAll(): Unit =
     // keep the session for the next suite (getOrCreate reuses it)
-    try checkpoints.synchronized(checkpoints.foreach(_.delete()))
-    finally super.afterAll()
+    try {
+      checkpoints.synchronized(checkpoints.foreach(_.delete()))
+      tempDirs.synchronized(tempDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    } finally super.afterAll()
 }

@@ -16,7 +16,7 @@ class StateBootstrapSpec extends SparkSpec {
 
   test("seeded keys are in the checkpoint before the stream, and resume continues them") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-bootstrap-spec").toString
+    val root = tempDir("graft-bootstrap-spec")
     val src = s"$root/src"
     val ckpt = s"$root/ckpt"
 

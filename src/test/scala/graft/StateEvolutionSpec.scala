@@ -16,7 +16,7 @@ class StateEvolutionSpec extends SparkSpec {
 
   test("old checkpoint resumes after the state class gains a field; counts continue") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val root = tempDir("graft-evolve")
     val src = s"$root/src"
     val ckpt = s"$root/ckpt"
     val schema = Encoders.product[StreamSource.Event].schema
