@@ -5,14 +5,15 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
 import org.apache.spark.sql.catalyst.analysis.{SimpleAnalyzer, UnresolvedAttribute,
   UnresolvedFunction, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference,
-  AttributeSeq, BindReferences, CommonExpressionRef, Expression, GenericInternalRow, Literal,
-  Or, With}
+  AttributeSeq, BaseGenericInternalRow, BindReferences, CommonExpressionRef, Expression,
+  Literal, Or, With}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, Last}
-import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.optimizer.{ConstantFolding, ReplaceExpressions}
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType,
   TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -69,7 +70,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the rows there are, a call is NULL (COUNT is 0), and the condition
   * follows SQL's three-valued logic: a row matches when it is TRUE, so
   * `NOT (LAST(A.value, 5) > 3)` is NULL, not TRUE, while A has fewer than
-  * six rows. A variable without a DEFINE matches any row. Loud rejects:
+  * six rows. Division by zero and a failed CAST are NULL too, never a
+  * failed query (Spark's non-ANSI rules; DuckDB's x / 0 is NULL as
+  * well). A variable without a DEFINE matches any row. Loud rejects:
   * an aggregate under OR, or beside another call in its AND conjunct; a
   * conjunct mixing PREV/NEXT with a call over the matched rows; a
   * PREV/NEXT qualifier other than the defined variable; NEXT and anchors
@@ -481,6 +484,15 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
         throw new IllegalArgumentException(s"unsupported expression `$text`: ${e.getMessage}", e)
     }
 
+  /** Runs `f` under the active SQL conf with ANSI mode off, so that a
+    * DEFINE built in it evaluates a division by zero or a failed CAST to
+    * NULL, as the DuckDB oracles do, instead of failing the query. */
+  private def nonAnsi[T](f: => T): T = {
+    val conf = SQLConf.get.clone()
+    conf.setConf(SQLConf.ANSI_ENABLED, false)
+    SQLConf.withExistingConf(conf)(f)
+  }
+
   /** A function call as (upper-case name, arguments, DISTINCT); the
     * parser builds a one-argument FIRST/LAST as Spark's own aggregate. */
   private object Call {
@@ -532,31 +544,61 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
   }
 
   /** The events columns a DEFINE reads, in row order. */
-  private val columns: Seq[(String, DataType)] = Seq("event_id" -> LongType,
+  private val columns: IndexedSeq[(String, DataType)] = Vector("event_id" -> LongType,
     "ts" -> TimestampType, "user_id" -> LongType, "event_type" -> StringType,
     "value" -> DoubleType)
 
-  /** Column `f` of `e` in Catalyst's internal representation. */
-  private def cell(e: Event, f: String): Any = f match {
-    case "event_id"   => e.event_id
-    case "ts"         => DateTimeUtils.fromJavaTimestamp(e.ts)
-    case "user_id"    => e.user_id
-    case "event_type" => UTF8String.fromString(e.event_type)
-    case _            => e.value
+  private def columnIndex(f: String): Int = columns.indexWhere(_._1 == f.toLowerCase) match {
+    case -1 => throw new IllegalArgumentException(s"unknown events column: $f")
+    case i => i
   }
 
-  private def columnType(f: String): DataType = columns.collectFirst {
-    case (`f`, t) => t
-  }.getOrElse(throw new IllegalArgumentException(s"unknown events column: $f"))
+  /** Column `i` of `e` in Catalyst's internal representation. */
+  private def cell(e: Event, i: Int): Any = i match {
+    case 0 => e.event_id
+    case 1 => if (e.ts == null) null else DateTimeUtils.fromJavaTimestamp(e.ts)
+    case 2 => e.user_id
+    case 3 => utf8(e.event_type)
+    case _ => e.value
+  }
+
+  /** The Catalyst strings of the event types seen so far, so that a DEFINE
+    * call reads a type without converting it again; past a bound (event
+    * types are a handful) a string is converted on each read. */
+  private val utf8s = new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
+  private def utf8(s: String): UTF8String =
+    if (s == null) null
+    else utf8s.get(s) match {
+      case null =>
+        val u = UTF8String.fromString(s)
+        if (utf8s.size < 1024) utf8s.put(s, u)
+        u
+      case u => u
+    }
+
+  /** An event followed by its slot values, as the Catalyst row a bound
+    * DEFINE predicate reads: each column is converted only when read. */
+  private final class EventRow(e: Event, slots: Array[Any]) extends BaseGenericInternalRow {
+    protected def genericGet(i: Int): Any =
+      if (i < columns.length) cell(e, i) else slots(i - columns.length)
+    override def isNullAt(i: Int): Boolean = i match {
+      case 1 => e.ts == null
+      case 3 => e.event_type == null
+      case _ => i >= columns.length && slots(i - columns.length) == null
+    }
+    def numFields: Int = columns.length + slots.length
+    def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
+    def update(i: Int, value: Any): Unit = throw new UnsupportedOperationException
+  }
 
   /** A navigation call of a DEFINE, read by the matcher into one column. */
   private sealed trait Slot
   /** FIRST/LAST(V.f, n) over the rows V has matched so far. */
-  private case class Nav(first: Boolean, variable: String, field: String, n: Int) extends Slot
+  private case class Nav(first: Boolean, variable: String, col: Int, n: Int) extends Slot
   /** A running aggregate over the values of V's rows so far. */
   private case class Agg(fn: String, variable: String, distinct: Boolean) extends Slot
   /** PREV (offset −n) / NEXT (offset +n): a row of the input buffer. */
-  private case class Phys(offset: Int, field: String) extends Slot
+  private case class Phys(offset: Int, col: Int) extends Slot
 
   /** Compiled DEFINE body: row predicate + optional same-variable running
     * aggregate (the fast path the matcher folds incrementally) + optional
@@ -586,22 +628,19 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
       val t = s match {
         case Agg("COUNT", _, _) => LongType
         case _: Agg => DoubleType
-        case Nav(_, _, f, _) => columnType(f)
-        case Phys(_, f) => columnType(f)
+        case Nav(_, _, c, _) => columns(c)._2
+        case Phys(_, c) => columns(c)._2
       }
       val a = AttributeReference(s"__slot${slots.size}", t)()
       slots += s -> a
       a
     }
     val rowAttrs = columns.map { case (n, t) => AttributeReference(n, t)() }
-    def column(f: String) = rowAttrs(columns.indexWhere(_._1 == f.toLowerCase) match {
-      case -1 => throw new IllegalArgumentException(s"unknown events column: $f")
-      case i => i
-    })
-    val withSlots = parseExpr(text).transformDown {
+    def column(f: String) = rowAttrs(columnIndex(f))
+    val withSlots = nonAnsi(parseExpr(text)).transformDown {
       case Call(fn @ ("FIRST" | "LAST"), arg +: n, false) =>
         val (v, f) = qualified(arg)
-        slot(Nav(fn == "FIRST", v, f, offset(n, 0)))
+        slot(Nav(fn == "FIRST", v, columnIndex(f), offset(n, 0)))
       case Call(fn @ ("PREV" | "NEXT"), arg +: n, false) =>
         // streaming keeps the loud reject (the reference's own
         // anti-streaming argument); BATCH parses with allowNext = true,
@@ -619,7 +658,7 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
             f
         }
         val k = offset(n, 1) // SQL:2016 default physical offset is 1
-        slot(Phys(if (fn == "PREV") -k else k, f))
+        slot(Phys(if (fn == "PREV") -k else k, columnIndex(f)))
       case Call(fn @ ("SUM" | "COUNT" | "MIN" | "MAX" | "AVG"), Seq(arg), distinct) =>
         val (v, f) = qualified(arg)
         require(fn == "COUNT" && !distinct || f == "value",
@@ -628,14 +667,14 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
       case UnresolvedAttribute(Seq(v, f)) if v.toUpperCase == varName => column(f)
       case a @ UnresolvedAttribute(Seq(_, _)) =>
         val (v, f) = qualified(a)
-        slot(Nav(first = false, v, f, 0))
+        slot(Nav(first = false, v, columnIndex(f), 0))
       // Spark's stock analyzer resolves case-sensitively; columns do not
       case UnresolvedAttribute(Seq(f)) => column(f)
     }
     val attrs = rowAttrs ++ slots.map(_._2)
-    val cond = catalyst(text)(ReplaceExpressions(SimpleAnalyzer.executeAndCheck(
-      Filter(withSlots, LocalRelation(attrs)), new QueryPlanningTracker(None)))
-      .asInstanceOf[Filter].condition)
+    val cond = nonAnsi(catalyst(text)(ConstantFolding(ReplaceExpressions(
+      SimpleAnalyzer.executeAndCheck(Filter(withSlots, LocalRelation(attrs)),
+        new QueryPlanningTracker(None)))).asInstanceOf[Filter].condition))
       // a replaced expression may share a subterm through `With` (BETWEEN
       // does), which only the optimizer rewrites: inline it
       .transformUp { case With(c, defs) =>
@@ -674,22 +713,18 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
     }
     val (rowC, xC) = restC.partition(slotsIn(_).isEmpty)
 
-    // one evaluator per conjunct group: the group's conjuncts ANDed and
-    // bound to (event columns ++ slots), fed only the columns it reads
+    // one evaluator per conjunct group: the group's conjuncts ANDed, bound
+    // to (event columns ++ slots) and fed the event plus the slots it reads
     def test(cs: Seq[Expression]): Option[(Event, Slot => Any) => Boolean] =
       cs.reduceOption(And).map { c =>
         val p = BindReferences.bindReference(c, AttributeSeq(attrs))
-        val used = attrs.indices.filter(i => c.references.contains(attrs(i))).toArray
-        val width = attrs.length
-        val slotAt = slots.map(_._1).toVector
+        val slotAt = slots.map(_._1).toArray
+        val read = slots.indices.filter(k => c.references.contains(slots(k)._2)).toArray
+        val noSlots = new Array[Any](slotAt.length) // read by none, never written
         (e: Event, value: Slot => Any) => {
-          val row = new GenericInternalRow(width)
-          used.foreach { i =>
-            row.update(i,
-              if (i < columns.length) cell(e, columns(i)._1)
-              else value(slotAt(i - columns.length)))
-          }
-          p.eval(row) == true
+          val vs = if (read.isEmpty) noSlots else new Array[Any](slotAt.length)
+          read.foreach(k => vs(k) = value(slotAt(k)))
+          p.eval(new EventRow(e, vs)).asInstanceOf[Boolean] // NULL does not match
         }
       }
     // the rows a call over matched rows reads: the variable's rows so far
@@ -704,10 +739,10 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
       if (v == varName || subsets.get(v).exists(_.contains(varName))) matched :+ e else matched
     }
     def overRows(vars: Map[String, IndexedSeq[Event]], e: Event)(s: Slot): Any = s match {
-      case Nav(first, v, f, n) =>
+      case Nav(first, v, c, n) =>
         val rows = rowsOf(vars, v, e)
         val i = if (first) n else rows.length - 1 - n
-        if (i >= 0 && i < rows.length) cell(rows(i), f) else null
+        if (i >= 0 && i < rows.length) cell(rows(i), c) else null
       case Agg(fn, v, distinct) =>
         val vals = rowsOf(vars, v, e).map(_.value)
         val xs = if (distinct) vals.distinct else vals
@@ -723,7 +758,10 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
     }
     val rowTest = test(rowC)
     CompiledDefine(
-      rowPred = e => e.event_type != "__sentinel" && rowTest.forall(_(e, _ => null)),
+      rowPred = rowTest match {
+        case Some(t) => e => e.event_type != "__sentinel" && t(e, null)
+        case None => e => e.event_type != "__sentinel"
+      },
       agg = test(fastC).map(t => (cnt: Int, sum: Double, e: Event) => t(e, {
         case Agg("SUM", _, _) => sum + e.value
         case _ => cnt + 1L // COUNT incl. the candidate
@@ -739,7 +777,7 @@ object MatchRecognizeSql extends MatchRecognizeQueries with Serializable {
       // physDepth decided rows as history), rows past the end off its end
       phys = test(physC).map(t => (buf: IndexedSeq[Event], idx: Int, e: Event) =>
         t(e, {
-          case Phys(off, f) if idx + off >= 0 && idx + off < buf.length => cell(buf(idx + off), f)
+          case Phys(off, c) if idx + off >= 0 && idx + off < buf.length => cell(buf(idx + off), c)
           case _ => null
         })),
       physDepth = slots.map(_._1).collect { case Phys(off, _) if off < 0 => -off }

@@ -988,6 +988,39 @@ class MatchRecognizeSqlSpec extends SparkSpec {
     }
   }
 
+  test("division by zero and a failed CAST in DEFINE are NULL, not a failed query") {
+    // as in the DuckDB oracles:  SELECT 5.0 / 0  →  NULL
+    // (Spark's ANSI mode would raise DIVIDE_BY_ZERO inside the task)
+    import spark.implicits._
+    def ev(id: Long, et: String, v: Double) =
+      StreamSource.Event(id, new java.sql.Timestamp(id * 1000L), 1L, et, v)
+    val types = Seq("view", "click", "view", "7", "view", "click")
+    val events = spark.createDataset((1L to 60L).map(i =>
+      ev(i, types((i % types.length).toInt), (i % 4).toDouble)))
+    def matches(defineB: String): Seq[Seq[Long]] = {
+      val steps = MatchRecognizeSql.parse(
+        s"""SELECT user_id, n FROM events
+           |MATCH_RECOGNIZE (
+           |  PARTITION BY user_id ORDER BY ts
+           |  MEASURES COUNT(A.*) AS n
+           |  AFTER MATCH SKIP TO NEXT ROW
+           |  PATTERN (A B)
+           |  DEFINE A AS event_type = 'view', B AS $defineB
+           |)""".stripMargin).pattern.map(_._2)
+      Cep.matchRecognizeOrderedSkip(events, steps, Cep.SkipToNextRow)
+        .collect().map(_.ids).toSeq.sortBy(_.head)
+    }
+    val all = matches("TRUE")
+    Seq(
+      "B.value / LAST(A.value) >= 1" -> "LAST(A.value) <> 0 AND B.value >= LAST(A.value)",
+      "CAST(event_type AS INT) > 0" -> "event_type = '7'"
+    ).foreach { case (form, twin) =>
+      val got = matches(form)
+      assert(got === matches(twin), s"$form differs from $twin")
+      assert(got.nonEmpty && got.length < all.length, s"$form is not load-bearing")
+    }
+  }
+
   test("SQL value measures equal the window-function derivation") {
     val viaSql = MatchRecognizeSql.matchSum(spark, sf).collect().map(_.toSeq)
     Tables.registerAll(spark, sf)

@@ -4,12 +4,8 @@ graft.Verify, run the oracle SQL in DuckDB over the same parquet tables and
 compare values (columns sorted by name, rows sorted, exact match).
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
-
-The oracle queries run in a process pool of os.cpu_count() workers, each
-with its own DuckDB connection; the per-query lines print in name order.
 """
 import sys, json, glob, os
-from concurrent.futures import ProcessPoolExecutor
 import duckdb
 import pandas as pd
 
@@ -28,64 +24,57 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     out = df.apply(lambda c: c.map(cell))
     return out.sort_values(by=list(out.columns), kind="mergesort").reset_index(drop=True)
 
-def _open(sf_dir):
-    global _con
-    _con = duckdb.connect()
-    for t in TABLES:
-        _con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
-def check_one(job):
-    """Compare one query's Spark dump with its oracle in this worker's
-    DuckDB; returns (passed, the lines to print)."""
-    name, qdir, oracle_sql = job
-    files = glob.glob(os.path.join(qdir, "*.parquet"))
-    if not files:
-        return False, [f"FAIL {name}: no spark output"]
-    spark_df = pd.concat([pd.read_parquet(f) for f in sorted(files)], ignore_index=True)
-    try:
-        duck_df = _con.execute(oracle_sql).fetchdf()
-    except Exception as e:
-        return False, [f"FAIL {name}: oracle error: {e}"]
-    a, b = norm(spark_df), norm(duck_df)
-    if list(a.columns) != list(b.columns):
-        return False, [f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}"]
-    # the driver hashes RAW values, so int64 1786 vs float64 1786.0 is a
-    # hash mismatch even though %.9g strings compare equal — fail here on
-    # any int-vs-float dtype CLASS disagreement per column (r9's
-    # q_sketch_cms failure mode: DuckDB HUGEINT -> pandas float64)
-    def kind(dtype):
-        k = getattr(dtype, "kind", "O")
-        return "int" if k in "iu" else "float" if k == "f" else "other"
-    dt_bad = [c for c in spark_df.columns
-              if {kind(spark_df[c].dtype), kind(duck_df[c].dtype)} == {"int", "float"}]
-    if dt_bad:
-        return False, [f"FAIL {name}: dtype class mismatch (int vs float) in {dt_bad}: "
-                       f"spark {[str(spark_df[c].dtype) for c in dt_bad]} vs "
-                       f"duck {[str(duck_df[c].dtype) for c in dt_bad]}"]
-    if len(a) != len(b):
-        return False, [f"FAIL {name}: rows {len(a)} vs {len(b)}"]
-    if not a.equals(b):
-        diff = (a != b).any(axis=1)
-        lines = [f"FAIL {name}: value mismatch, first rows:"]
-        for i in diff[diff].index[:3]:
-            lines += [f"  spark: {a.loc[i].to_dict()}", f"  duck : {b.loc[i].to_dict()}"]
-        return False, lines
-    return True, [f"PASS {name} ({len(a)} rows)"]
-
 def main(sf_dir, out_dir):
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = 0
-    no_oracle = []
-    # one DuckDB per worker process; results print in name order
-    jobs = [(name, os.path.join(out_dir, name), oracle[name]) for name in sorted(oracle)]
-    with ProcessPoolExecutor(max_workers=os.cpu_count(), initializer=_open,
-                             initargs=(sf_dir,)) as pool:
-        for passed, lines in pool.map(check_one, jobs):
-            print("\n".join(lines), flush=True)
-            if passed:
-                n_pass += 1
-            else:
-                n_fail += 1
+    missing_dump, no_oracle = [], []
+    for name in sorted(oracle):
+        qdir = os.path.join(out_dir, name)
+        files = glob.glob(os.path.join(qdir, "*.parquet"))
+        if not files:
+            missing_dump.append(name); n_fail += 1
+            print(f"FAIL {name}: no spark output"); continue
+        spark_df = pd.concat([pd.read_parquet(f) for f in sorted(files)], ignore_index=True)
+        try:
+            duck_df = con.execute(oracle[name]).fetchdf()
+        except Exception as e:
+            n_fail += 1; print(f"FAIL {name}: oracle error: {e}"); continue
+        a, b = norm(spark_df), norm(duck_df)
+        if list(a.columns) != list(b.columns):
+            n_fail += 1
+            print(f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}"); continue
+        # the driver hashes RAW values, so int64 1786 vs float64 1786.0 is a
+        # hash mismatch even though %.9g strings compare equal — fail here on
+        # any int-vs-float dtype CLASS disagreement per column (r9's
+        # q_sketch_cms failure mode: DuckDB HUGEINT -> pandas float64)
+        def kind(dtype):
+            k = getattr(dtype, "kind", "O")
+            return "int" if k in "iu" else "float" if k == "f" else "other"
+        dt_bad = [c for c in spark_df.columns
+                  if {kind(spark_df[c].dtype), kind(duck_df[c].dtype)} == {"int", "float"}]
+        if dt_bad:
+            n_fail += 1
+            print(f"FAIL {name}: dtype class mismatch (int vs float) in {dt_bad}: "
+                  f"spark {[str(spark_df[c].dtype) for c in dt_bad]} vs "
+                  f"duck {[str(duck_df[c].dtype) for c in dt_bad]}")
+            continue
+        if len(a) != len(b):
+            n_fail += 1
+            print(f"FAIL {name}: rows {len(a)} vs {len(b)}"); continue
+        if not a.equals(b):
+            n_fail += 1
+            diff = (a != b).any(axis=1)
+            idx = diff[diff].index[:3]
+            print(f"FAIL {name}: value mismatch, first rows:")
+            for i in idx:
+                print("  spark:", a.loc[i].to_dict())
+                print("  duck :", b.loc[i].to_dict())
+            continue
+        n_pass += 1
+        print(f"PASS {name} ({len(a)} rows)")
     # queries with no oracle (rows-only check)
     for qdir in sorted(glob.glob(os.path.join(out_dir, "*"))):
         name = os.path.basename(qdir)
