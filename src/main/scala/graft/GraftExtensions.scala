@@ -22,6 +22,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftSession.sizeCodegenCache()
     GraftSession.functions.foreach(e.injectFunction)
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
     // SQL-pattern recognition: ROW_NUMBER-over-versions as-of shape →

@@ -5,6 +5,8 @@ import graft.plans.{AsOfPatternRule, AsOfStrategy}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 
 /** The one place a graft engine is set up (the reference's
   * `TableEnvironment.create(EnvironmentSettings)` plus its `TableConfig`):
@@ -13,6 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - [[install]] puts the custom functions and the AsOf planner pieces
   *    into any session, from the same [[functions]] table that
   *    [[GraftExtensions]] injects;
+  *  - [[sizeCodegenCache]] sizes Spark's generated-class cache for graft;
   *  - [[withConf]] scopes session settings to a block. */
 object GraftSession {
 
@@ -69,6 +72,7 @@ object GraftSession {
     * whatever session they are handed (sessions built outside graft
     * included). */
   def install(s: SparkSession): Unit = {
+    sizeCodegenCache()
     val reg = s.sessionState.functionRegistry
     functions.foreach { case (id, info, build) => reg.registerFunction(id, info, build) }
     val x = s.experimental
@@ -78,6 +82,33 @@ object GraftSession {
       if (!x.extraOptimizations.contains(AsOfPatternRule))
         x.extraOptimizations = x.extraOptimizations :+ AsOfPatternRule
     }
+  }
+
+  /** Entries of Spark's generated-class cache. Spark's default of 100 is
+    * below graft's working set: one pass over the eight verbatim TPC-DS
+    * queries of perfbench's `tpcds` workload cycles through 115 generated
+    * classes, and with 100 every warm pass recompiled 56-60 of them
+    * (NOTES.md). 1000 holds that set several times over. */
+  private val CodegenCacheEntries = 1000
+
+  /** Size Spark's JVM-wide generated-class cache to [[CodegenCacheEntries]].
+    * The cache reads the static `spark.sql.codegen.cache.maxEntries` once,
+    * from `SQLConf.get`, when `CodeGenerator` initializes; this initializes
+    * it under a conf holding graft's size, so no session config is needed
+    * and a session built outside graft gets the same cache. It runs once
+    * per JVM and is free to repeat.
+    *
+    * It does nothing once `CodeGenerator` has initialized: a query compiled
+    * before the first call leaves the cache at the size it read then. So
+    * every graft entry point calls it before it plans anything:
+    * [[install]] (and so [[local]]), [[GraftExtensions]], each builder of
+    * [[SparkEntry.queries]], `TpcdsData.ensure` and `OooReplay.prepare`. */
+  def sizeCodegenCache(): Unit = codegenCacheSized
+
+  private lazy val codegenCacheSized: Unit = {
+    val conf = new SQLConf
+    conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
+    SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
   }
 
   /** Run `body` with `conf` set on `s`, then give each key back exactly what

@@ -36,8 +36,15 @@ object SparkEntry {
     DataQuality.queries, StateBootstrap.queries, MultisetOps.queries,
     StreamDedup.queries, TypeLattice.queries, Retrieval.queries)
 
+  /** Each builder sizes Spark's codegen cache before it plans
+    * ([[GraftSession.sizeCodegenCache]]), whatever built the session. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map(q => q.name -> q.build).toMap
+    catalog.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
+        GraftSession.sizeCodegenCache()
+        q.build(s, dir)
+      }
+    }.toMap
 
   lazy val oracleSql: Map[String, String] = catalog.map(q => q.name -> q.oracle).toMap
 

@@ -44,8 +44,10 @@ object OooReplay {
 
   /** Build (once per events dir, cross-process reusable) the segmented
     * replay; returns (replayDir, watermarkDelaySeconds). */
-  def prepare(s: SparkSession, dir: String): (String, Long) =
+  def prepare(s: SparkSession, dir: String): (String, Long) = {
+    graft.GraftSession.sizeCodegenCache()
     prepared(dir)(doPrepare(s, dir))
+  }
 
   /** Bump when the replay layout/sentinel changes — keys the cache dir so
     * stale fixtures from an older generator never feed a new run.
@@ -128,57 +130,60 @@ object OooReplay {
     // loser interleave half-written segments into the winner's build)
     val staging = new java.io.File(
       s"$replayDir.inprogress-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    staging.mkdirs()
-    val t0 = System.currentTimeMillis() - 4 * 3600 * 1000L
-    def place(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
-      val tmp = new java.io.File(staging, s"tmp-$idx")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-      val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-      val tgt = new java.io.File(staging, f"seg-$idx%02d.parquet")
-      java.nio.file.Files.move(part.toPath, tgt.toPath)
-      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-      // file-stream source picks oldest-modTime first: pin arrival order
-      tgt.setLastModified(t0 + idx * 60000L)
-    }
-    emit.zipWithIndex.foreach { case (b, i) =>
-      place(withBlk.where(col("__blk") === b).drop("__blk"), i)
-    }
-    // per-key FLUSH segment: one pattern-breaking row per user at +35d
-    // of event time — released by the sorter after every real row for
-    // its key, so a NoTimeout CEP matcher downstream resolves trailing
-    // parked attempts at true end-of-data (the matchRecognizeOrdered
-    // contract: "drive stream end with a pattern-breaking row per key").
-    // Non-CEP consumers filter FlushType out before the sorter.
-    val flushMicros = stats.map(_._3).max + 35L * 86400L * 1000000L
-    val flushCols = schema.fields.map { f =>
-      f.name match {
-        case "event_id"   => "CAST(-(1000000 + user_id) AS BIGINT) AS event_id"
-        case "ts"         => s"CAST($flushMicros AS BIGINT) AS ts"
-        case "user_id"    => "user_id"
-        case "event_type" => s"'$FlushType' AS event_type"
-        case "value"      => "CAST(0.0 AS DOUBLE) AS value"
-        case other        => s"CAST(NULL AS ${f.dataType.sql}) AS $other"
+    // a build that throws deletes its staging dir; a published one was
+    // renamed away, so the delete is then a no-op
+    try {
+      staging.mkdirs()
+      val t0 = System.currentTimeMillis() - 4 * 3600 * 1000L
+      def place(df: org.apache.spark.sql.DataFrame, idx: Int): Unit = {
+        val tmp = new java.io.File(staging, s"tmp-$idx")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
+        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+        val tgt = new java.io.File(staging, f"seg-$idx%02d.parquet")
+        java.nio.file.Files.move(part.toPath, tgt.toPath)
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
+        // file-stream source picks oldest-modTime first: pin arrival order
+        tgt.setLastModified(t0 + idx * 60000L)
       }
-    }
-    place(raw.select(col("user_id")).distinct().selectExpr(flushCols.toIndexedSeq: _*),
-      emit.length)
-    val sentinelVals: Array[Any] = schema.fields.map(_.name).map {
-      case "event_id"   => -1L
-      case "ts"         => sentinelMicros
-      case "user_id"    => -1L
-      case "event_type" => "__sentinel"
-      case "value"      => 0.0
-      case _            => null
-    }
-    place(s.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(sentinelVals: _*)), schema),
-      emit.length + 1)
-    java.nio.file.Files.write(new java.io.File(staging, "_delay_sec").toPath,
-      delaySec.toString.getBytes)
-    // atomic publish (concurrent Verify/test JVMs race to the same dir)
-    if (!staging.renameTo(root) && !meta.isFile)
-      throw new java.io.IOException(s"failed to publish OOO replay $replayDir")
-    org.apache.commons.io.FileUtils.deleteQuietly(staging)
+      emit.zipWithIndex.foreach { case (b, i) =>
+        place(withBlk.where(col("__blk") === b).drop("__blk"), i)
+      }
+      // per-key FLUSH segment: one pattern-breaking row per user at +35d
+      // of event time — released by the sorter after every real row for
+      // its key, so a NoTimeout CEP matcher downstream resolves trailing
+      // parked attempts at true end-of-data (the matchRecognizeOrdered
+      // contract: "drive stream end with a pattern-breaking row per key").
+      // Non-CEP consumers filter FlushType out before the sorter.
+      val flushMicros = stats.map(_._3).max + 35L * 86400L * 1000000L
+      val flushCols = schema.fields.map { f =>
+        f.name match {
+          case "event_id"   => "CAST(-(1000000 + user_id) AS BIGINT) AS event_id"
+          case "ts"         => s"CAST($flushMicros AS BIGINT) AS ts"
+          case "user_id"    => "user_id"
+          case "event_type" => s"'$FlushType' AS event_type"
+          case "value"      => "CAST(0.0 AS DOUBLE) AS value"
+          case other        => s"CAST(NULL AS ${f.dataType.sql}) AS $other"
+        }
+      }
+      place(raw.select(col("user_id")).distinct().selectExpr(flushCols.toIndexedSeq: _*),
+        emit.length)
+      val sentinelVals: Array[Any] = schema.fields.map(_.name).map {
+        case "event_id"   => -1L
+        case "ts"         => sentinelMicros
+        case "user_id"    => -1L
+        case "event_type" => "__sentinel"
+        case "value"      => 0.0
+        case _            => null
+      }
+      place(s.createDataFrame(
+        java.util.Arrays.asList(org.apache.spark.sql.Row(sentinelVals: _*)), schema),
+        emit.length + 1)
+      java.nio.file.Files.write(new java.io.File(staging, "_delay_sec").toPath,
+        delaySec.toString.getBytes)
+      // atomic publish (concurrent Verify/test JVMs race to the same dir)
+      if (!staging.renameTo(root) && !meta.isFile)
+        throw new java.io.IOException(s"failed to publish OOO replay $replayDir")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(staging)
     val d = new String(java.nio.file.Files.readAllBytes(meta.toPath)).trim.toLong
     (replayDir, d)
   }

@@ -168,6 +168,18 @@ object StreamSource {
     * read from the query's hadoop conf by `CheckpointFileManager.create`). */
   private[graft] val FileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Artifact isolation off. With it on, every session clone, and so
+    * every stream start, runs its tasks under a class loader of its own,
+    * and Spark's generated-class cache is keyed by class loader as well as
+    * by code text: on a session built without Hive support (isolation is
+    * on there; Spark turns it off for Hive sessions such as
+    * [[graft.GraftSession.local]]'s), each start of
+    * `q_stream_over_range_b_ooo` recompiled all 22 of its classes,
+    * identical text included (NOTES.md). Isolation separates the jars and
+    * classes that Spark Connect clients upload; graft adds none. */
+  private[graft] val SharedClassLoader: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
+
   /** Shuffle partitions of graft's streaming queries. Measured at sf0.1,
     * the replay-driven queries spend their time in per-partition
     * state-store lifecycle (one store load and commit per stateful op per
@@ -187,10 +199,15 @@ object StreamSource {
       * inside start(). A file source's log reads the file manager from the
       * caller's session when the stream thread builds its sources, after
       * start() returns, so the settings are held until the query has
-      * initialized. */
+      * initialized.
+      *
+      * Artifact isolation is off in the window ([[SharedClassLoader]]), so
+      * the stream's cloned session runs its jobs under the caller's class
+      * loader, not a new one per start. */
     def start[T](w: DataStreamWriter[T], conf: (String, String)*): StreamingQuery =
       graft.GraftSession.withConf(s,
-          (FileManagerKey -> classOf[LocalCheckpointFileManager].getName) +: conf: _*) {
+          Seq(FileManagerKey -> classOf[LocalCheckpointFileManager].getName,
+            SharedClassLoader) ++ conf: _*) {
         val q = w.option("checkpointLocation", path).start()
         q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(Long.MaxValue)
         q

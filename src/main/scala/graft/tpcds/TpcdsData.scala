@@ -804,6 +804,7 @@ object TpcdsData {
     * ([[graft.Tables.bindView]]: `customer` is also a TPC-H fixture view).
     * The steady-state cost is 24 map lookups. */
   def ensure(s: SparkSession, sfDir: String): String = {
+    graft.GraftSession.sizeCodegenCache()
     val root = rootFor(sfDir)
     generated(root) {
       val marker = new java.io.File(s"$root/_SUCCESS")
